@@ -10,6 +10,11 @@ spills, AQE handles skew; no loser tree needed:
 - deduplicate  (DeduplicateMergeFunction.java:32): keep the row with
   max sequence per key; a trailing ``-D`` removes the key.
 - first_row    (FirstRowMergeFunction.java:32): keep the first row.
+  Both run ONE winner fold, ``fold_winner`` (whole-row struct
+  ``max_by``/``min_by`` by effective sequence), for reads and for full
+  and universal compaction. It is deterministic, so key predicates
+  push through it into the parquet scan; the price is that a narrow
+  consumer still reads the full row.
 - partial-update (PartialUpdateMergeFunction.java:65-107): non-null
   fields overwrite, per sequence-group version columns.
 - aggregation  (AggregateMergeFunction.java:49): per-field aggregate
@@ -138,35 +143,43 @@ def seq_order_exprs(df: DataFrame, schema: TableSchema, fields: list[str]):
     return out
 
 
+def _effective_seq(df: DataFrame, schema: TableSchema) -> tuple[DataFrame, str]:
+    """The merge order column every fold sorts by: ``_SEQUENCE_NUMBER``,
+    or with ``sequence.field`` (CoreOptions.java:882-894, T12) the
+    struct(user version columns..., ``_SEQUENCE_NUMBER``) — a user
+    column defines the version order, input sequence breaks ties.
+    Spark orders structs lexicographically, so every engine can treat
+    it as THE sequence. Returns ``(df, name of the order column)``."""
+    seq_field = schema.options.get("sequence.field")
+    if not seq_field:
+        return df, SEQUENCE_NUMBER
+    fields = [c.strip() for c in seq_field.split(",")]
+    df = df.withColumn(
+        _EFF_SEQ,
+        F.struct(*seq_order_exprs(df, schema, fields), F.col(SEQUENCE_NUMBER)),
+    )
+    return df, _EFF_SEQ
+
+
 def merge_view(
     df: DataFrame, schema: TableSchema, group_extra: list[str] | None = None
 ) -> DataFrame:
-    # sequence.field (CoreOptions.java:882-894, T12): a user column
-    # defines the version order; input sequence breaks ties. Expressed
-    # as a struct column — Spark orders structs lexicographically, so
-    # every engine can treat it as THE sequence.
-    #
     # ``group_extra``: extra grouping columns that are FUNCTIONALLY
     # DEPENDENT on the key (e.g. the bucket hash) — adding them cannot
     # split a key's group, but it lets a caller that pre-shuffled on a
     # subset (partition, bucket) run the fold with NO further exchange
     # and carry the columns through to the writer (r12 one-shuffle
     # compaction, guide §2.4).
-    seq_field = schema.options.get("sequence.field")
-    seq_col = SEQUENCE_NUMBER
-    if seq_field:
-        fields = [c.strip() for c in seq_field.split(",")]
-        df = df.withColumn(
-            _EFF_SEQ,
-            F.struct(*seq_order_exprs(df, schema, fields), F.col(SEQUENCE_NUMBER)),
-        )
-        seq_col = _EFF_SEQ
     extra = list(group_extra or [])
     engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
-    if engine == ENGINE_DEDUPLICATE:
-        return _dedup(df, schema, descending=True, seq_col=seq_col, extra=extra)
-    if engine == ENGINE_FIRST_ROW:
-        return _dedup(df, schema, descending=False, seq_col=seq_col, extra=extra)
+    if engine in (ENGINE_DEDUPLICATE, ENGINE_FIRST_ROW):
+        # a retract winner (-D or -U) hides the record: merged reads
+        # wrap in DropDeleteReader, which keeps only RowKind.isAdd rows
+        merged = fold_winner(df, schema, extra)
+        return merged.where(~F.col(VALUE_KIND).isin(*UNFOLDABLE_KINDS)).drop(
+            VALUE_KIND
+        )
+    df, seq_col = _effective_seq(df, schema)
     if engine == ENGINE_PARTIAL_UPDATE:
         return _partial_update(df, schema, seq_col=seq_col, extra=extra)
     if engine == ENGINE_AGGREGATION:
@@ -179,43 +192,50 @@ def _key_cols(schema: TableSchema) -> list[str]:
     return list(schema.partition_keys) + schema.trimmed_primary_keys()
 
 
-def _dedup(
+def fold_winner(
     df: DataFrame,
     schema: TableSchema,
-    descending: bool,
-    seq_col: str = SEQUENCE_NUMBER,
     extra: list[str] = (),
+    keep_system: bool = False,
 ) -> DataFrame:
-    """PER-COLUMN ``max_by(col, seq)`` per key rather than one
-    ``max_by(struct(payload), seq)`` (r12 optimization round, guide §6):
-    Catalyst prunes UNREFERENCED aggregate expressions, so a consumer
-    that projects two columns narrows ReadSchema at the parquet scan to
-    (keys, those columns, system cols) — the struct form dragged every
-    column through the fold for any consumer. Winners stay atomic: the
-    ordering key appends a per-row projected tiebreak to the sequence,
-    making it a TOTAL order, so every column's max_by picks the SAME
-    row even if two concurrent CAS writers staged overlapping sequence
-    ranges (tied effective sequences; the tie winner was arbitrary
-    under the struct form too — it just could not tear). The partial
-    aggregate still combines map-side — the exchange carries ~one row
-    per key per map partition regardless of LSM overlap."""
+    """The deduplicate / first-row fold (DeduplicateMergeFunction.java,
+    FirstRowMergeFunction.java) for reads, full and universal
+    compaction: per key plus the functionally dependent ``extra``
+    columns, the WHOLE row with the max (deduplicate) / min (first-row)
+    effective sequence, as one ``max_by(struct(payload), seq)``.
+
+    Returns the data columns, the winner's ``_VALUE_KIND`` (retract
+    winners included: reads and whole-bucket rewrites drop them, a
+    partial rewrite keeps them to cancel older runs), its
+    ``_SEQUENCE_NUMBER`` when ``keep_system`` (a partial rewrite must
+    still merge against older runs), then ``extra``.
+
+    A struct winner is atomic: writers that staged the same sequence
+    numbers tie, and the tie goes to one arbitrary row, never to a mix
+    of two. The fold is deterministic, so key predicates push through
+    it into the parquet scan; the price is that a narrow consumer still
+    reads the full row. The partial aggregate combines map-side, so the
+    exchange carries ~one row per key per map partition regardless of
+    LSM overlap."""
+    engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
     keys = _key_cols(schema) + list(extra)
-    payload = [c for c in schema.field_names() if c not in keys]
-    # projected BEFORE the aggregate: Spark forbids nondeterministic
-    # expressions inside aggregate functions, but an attribute holding
-    # one is fine. No I/O cost; every max_by references the same value.
-    df = df.withColumn("__tb", F.monotonically_increasing_id())
-    order = F.struct(F.col(seq_col), F.col("__tb"))
-    pick = F.max_by if descending else F.min_by
-    aggs = [pick(F.col(c), order).alias(c) for c in payload]
-    aggs.append(pick(F.col(VALUE_KIND), order).alias("__wk"))
-    merged = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    # a retract winner (-D or -U) hides the record: merged reads wrap
-    # in DropDeleteReader, which keeps only RowKind.isAdd rows
-    out = merged.where(~F.col("__wk").isin(*UNFOLDABLE_KINDS))
-    return out.select(
-        *[F.col(c) for c in schema.field_names()],
-        *[F.col(c) for c in extra],
+    carry = [VALUE_KIND] + ([SEQUENCE_NUMBER] if keep_system else [])
+    payload = [c for c in schema.field_names() if c not in keys] + carry
+    df, seq_col = _effective_seq(df, schema)
+    pick = F.max_by if engine == ENGINE_DEDUPLICATE else F.min_by
+    winner = pick(F.struct(*[F.col(c) for c in payload]), F.col(seq_col))
+    w = F.col("__w")
+    return (
+        df.groupBy(*[F.col(k) for k in keys])
+        .agg(winner.alias("__w"))
+        .select(
+            *[
+                F.col(c) if c in keys else w.getField(c).alias(c)
+                for c in schema.field_names()
+            ],
+            *[w.getField(c).alias(c) for c in carry],
+            *[F.col(c) for c in extra],
+        )
     )
 
 
@@ -918,9 +938,9 @@ def fold_supported(schema: TableSchema) -> bool:
     newest runs only, so universal compaction may rewrite a partial run
     prefix (UniversalCompaction.java picks; MergeTreeCompactRewriter
     dropDelete=false). deduplicate/first-row always qualify (their fold
-    is the winner row by effective sequence, handled directly by the
-    compactor); partial-update and aggregation qualify when every field
-    function is newest-prefix associative. A user ``sequence.field``
+    is ``fold_winner``, the winner row by effective sequence);
+    partial-update and aggregation qualify when every field function
+    is newest-prefix associative. A user ``sequence.field``
     re-attributes folded last-non-null fields at the folded row's
     version, which is wrong ONLY when an unselected older run holds an
     intermediate version — per-bucket file stats decide that at pick
@@ -967,43 +987,6 @@ def _fold_safe_func(func: str, ftype: str) -> bool:
     return func in _FOLD_SAFE_AGGS
 
 
-def fold_winner(df: DataFrame, schema: TableSchema, bucket_col: str) -> DataFrame:
-    """Winner-row fold for deduplicate/first-row universal compaction:
-    per key keep the row with max (dedup) / min (first-row) EFFECTIVE
-    sequence — struct(sequence.field columns..., seq), exactly the
-    order merge_view uses (T12 NULL ordering included) — PRESERVING
-    ``_VALUE_KIND`` and ``_SEQUENCE_NUMBER`` so the output still merges
-    against untouched older runs (merge_view drops both for final
-    reads, which is why this is a separate fold)."""
-    engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
-    keys = _key_cols(schema)
-    payload = [c for c in schema.field_names() if c not in keys]
-    cols = ", ".join(f"`{c}`" for c in payload + [VALUE_KIND, SEQUENCE_NUMBER])
-    seq_field = schema.options.get("sequence.field")
-    if seq_field:
-        fields = [c.strip() for c in seq_field.split(",")]
-        ord_col = F.struct(
-            *seq_order_exprs(df, schema, fields), F.col(SEQUENCE_NUMBER)
-        )
-    else:
-        ord_col = F.col(SEQUENCE_NUMBER)
-    fn = F.max_by if engine == ENGINE_DEDUPLICATE else F.min_by
-    winner = fn(F.expr(f"struct({cols})"), ord_col).alias("__w")
-    return (
-        df.groupBy(*[F.col(k) for k in keys], F.col(bucket_col))
-        .agg(winner)
-        .select(
-            *[
-                F.col(k) if k in keys else F.col(f"__w.{k}").alias(k)
-                for k in schema.field_names()
-            ],
-            F.col(f"__w.{VALUE_KIND}").alias(VALUE_KIND),
-            F.col(f"__w.{SEQUENCE_NUMBER}").alias(SEQUENCE_NUMBER),
-            F.col(bucket_col),
-        )
-    )
-
-
 def fold_runs(df: DataFrame, schema: TableSchema, bucket_col: str) -> DataFrame:
     """Partial fold of the NEWEST LSM runs for the partial-update /
     aggregation engines — universal compaction's rewrite body.
@@ -1023,19 +1006,11 @@ def fold_runs(df: DataFrame, schema: TableSchema, bucket_col: str) -> DataFrame:
 
     engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
     keys = _key_cols(schema) + [bucket_col]
-    # sequence.field: fold in EFFECTIVE order struct(version..., seq),
-    # exactly like merge_view — the compactor's stats guard (or a
-    # whole-bucket pick) has already established that the selection is
-    # a true suffix of that order relative to unselected runs
-    seq_field = schema.options.get("sequence.field")
-    seq_col = SEQUENCE_NUMBER
-    if seq_field:
-        fields = [c.strip() for c in seq_field.split(",")]
-        df = df.withColumn(
-            _EFF_SEQ,
-            F.struct(*seq_order_exprs(df, schema, fields), F.col(SEQUENCE_NUMBER)),
-        )
-        seq_col = _EFF_SEQ
+    # sequence.field: fold in EFFECTIVE order, exactly like merge_view
+    # — the compactor's stats guard (or a whole-bucket pick) has already
+    # established that the selection is a true suffix of that order
+    # relative to unselected runs
+    df, seq_col = _effective_seq(df, schema)
     if engine == ENGINE_PARTIAL_UPDATE:
         # -U is a retract for partial update too (silently ignored
         # without groups, a group retract with them) — folding it
@@ -1045,7 +1020,7 @@ def fold_runs(df: DataFrame, schema: TableSchema, bucket_col: str) -> DataFrame:
     elif engine == ENGINE_AGGREGATION:
         bad_kinds = list(UNFOLDABLE_KINDS)
         prep, aggs = [], _aggregation_aggs(schema, seq_col)
-    else:  # pragma: no cover — compactor handles dedup/first-row itself
+    else:  # pragma: no cover — deduplicate/first-row use fold_winner
         raise ValueError(f"fold_runs does not handle merge-engine {engine}")
 
     flag = F.max(F.when(F.col(VALUE_KIND).isin(bad_kinds), 1).otherwise(0)).over(

@@ -2034,7 +2034,7 @@ class Table:
                 # drop every retract winner (-D and -U — DropDeleteReader
                 # keeps only RowKind.isAdd), like a full compaction
                 merged = merge_engines.fold_winner(
-                    _prepart(df), schema, BUCKET_COL
+                    _prepart(df), schema, [BUCKET_COL], keep_system=True
                 ).where(
                     ~F.col(VALUE_KIND).isin(*merge_engines.UNFOLDABLE_KINDS)
                 )
@@ -2094,7 +2094,9 @@ class Table:
                 # keep -D winners: they must still cancel rows in the
                 # unmerged older runs (MergeTreeCompactRewriter
                 # dropDelete=false)
-                merged = merge_engines.fold_winner(_prepart(df), schema, BUCKET_COL)
+                merged = merge_engines.fold_winner(
+                    _prepart(df), schema, [BUCKET_COL], keep_system=True
+                )
             else:
                 merged = merge_engines.fold_runs(df, schema, BUCKET_COL)
             new_entries += stage_and_collect(

@@ -70,6 +70,29 @@ def test_merge_on_read_single_shuffle(spark, warehouse):
     assert "partial_max_by" in formatted or "partial_min_by" in formatted
 
 
+def test_merge_on_read_pushes_key_predicate(spark, warehouse):
+    """PK reads keep predicates at the parquet scan: a key filter
+    pushes through the deterministic winner fold into the merge-path
+    FileScan, whether applied after to_df or passed as its predicate."""
+    nation = spark.read.parquet(os.path.join(SF, "nation.parquet"))
+    t = warehouse.create_table(
+        "db.natpk", nation.schema, primary_keys=["n_nationkey"], options={"bucket": "2"}
+    )
+    t.write(nation)
+    t.write(nation.withColumn("n_name", F.upper("n_name")))
+    t = t.refresh()
+    want = nation.where("n_nationkey = 5").withColumn("n_name", F.upper("n_name")).collect()
+    for df in (
+        t.to_df(spark).where("n_nationkey = 5"),
+        t.to_df(spark, predicate=P.equal("n_nationkey", 5)),
+    ):
+        plan = _plan(df)
+        assert "max_by" in plan, "two overlapping runs must take the merge path"
+        pushed = [ln for ln in plan.splitlines() if ln.startswith("PushedFilters")]
+        assert pushed and all("EqualTo(n_nationkey,5)" in ln for ln in pushed), pushed
+        assert df.collect() == want
+
+
 def test_post_compaction_no_shuffle(spark, warehouse):
     nation = spark.read.parquet(os.path.join(SF, "nation.parquet"))
     t = warehouse.create_table(

@@ -150,7 +150,6 @@ def test_universal_partial_pick_stays_level0(spark, warehouse):
     assert new_run.level == 0, "partial output must NOT take the raw path"
 
 
-@pytest.mark.slow
 def test_universal_sequence_field_dedup(spark, warehouse):
     """sequence.field tables now take universal compaction: the fold
     winner is by struct(version, seq) — an older-run row with a HIGHER
@@ -323,7 +322,6 @@ def test_universal_fold_gate(spark, warehouse):
     assert t1.to_df(spark).collect()[0].n == 6
 
 
-@pytest.mark.slow
 def test_universal_first_row_engine(spark, warehouse):
     """first-row tables fold to the MIN-effective-sequence winner; a
     partial merge of newer runs must not displace the first value."""
