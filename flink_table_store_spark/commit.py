@@ -92,8 +92,9 @@ class FileStoreCommit:
             # Idempotence for streaming sinks (foreachBatch re-runs): if a
             # snapshot with this identifier already exists, skip (T10).
             for sid in self.snapshots.snapshot_ids():
-                if self.snapshots.load(sid).commit_identifier == commit_identifier:
-                    return self.snapshots.load(sid)
+                snap = self.snapshots.load(sid)
+                if snap.commit_identifier == commit_identifier:
+                    return snap
 
         # row tracking: first_row_id ranges must be allocated against the
         # snapshot we actually commit on top of, so assignment (and the

@@ -41,6 +41,8 @@ from flink_table_store_spark.schema import (
     SEQUENCE_NUMBER,
     VALUE_KIND,
     TableSchema,
+    quote_ident,
+    select_exprs,
 )
 
 ENGINE_DEDUPLICATE = "deduplicate"
@@ -103,6 +105,8 @@ _EFF_SEQ = "__eff_seq"
 # whose unfolded retract rows landed at MAX_LEVEL would be served
 # VERBATIM by the single-run raw-read shortcut.
 UNFOLDABLE_KINDS = (KIND_DELETE, "-U")
+# SQL filter keeping the rows whose kind is not in UNFOLDABLE_KINDS
+NOT_RETRACT = f"NOT ({VALUE_KIND} IN ({', '.join(repr(k) for k in UNFOLDABLE_KINDS)}))"
 
 
 def seq_descending(schema: TableSchema) -> bool:
@@ -123,18 +127,19 @@ def seq_order_exprs(df: DataFrame, schema: TableSchema, fields: list[str]):
     ascending-only, so reversal becomes negation). NULL versions stay
     NULL (lowest = oldest) in both orders."""
     if not seq_descending(schema):
-        return [F.col(c) for c in fields]
+        return [F.col(quote_ident(c)) for c in fields]
     out = []
     for c in fields:
         dt = df.schema[c].dataType.typeName()
+        col = F.col(quote_ident(c))
         if dt in ("byte", "short", "integer", "long"):
-            out.append(-F.col(c).cast("long"))
+            out.append(-col.cast("long"))
         elif dt in ("float", "double") or dt.startswith("decimal"):
-            out.append(-F.col(c))
+            out.append(-col)
         elif dt in ("timestamp", "timestamp_ntz"):
-            out.append(-F.unix_micros(F.col(c).cast("timestamp")))
+            out.append(-F.unix_micros(col.cast("timestamp")))
         elif dt == "date":
-            out.append(-F.unix_date(F.col(c)))
+            out.append(-F.unix_date(col))
         else:
             raise ValueError(
                 "sequence.field.sort-order=descending needs numeric/"
@@ -176,9 +181,7 @@ def merge_view(
         # a retract winner (-D or -U) hides the record: merged reads
         # wrap in DropDeleteReader, which keeps only RowKind.isAdd rows
         merged = fold_winner(df, schema, extra)
-        return merged.where(~F.col(VALUE_KIND).isin(*UNFOLDABLE_KINDS)).drop(
-            VALUE_KIND
-        )
+        return merged.where(NOT_RETRACT).drop(VALUE_KIND)
     df, seq_col = _effective_seq(df, schema)
     if engine == ENGINE_PARTIAL_UPDATE:
         return _partial_update(df, schema, seq_col=seq_col, extra=extra)
@@ -222,21 +225,21 @@ def fold_winner(
     carry = [VALUE_KIND] + ([SEQUENCE_NUMBER] if keep_system else [])
     payload = [c for c in schema.field_names() if c not in keys] + carry
     df, seq_col = _effective_seq(df, schema)
-    pick = F.max_by if engine == ENGINE_DEDUPLICATE else F.min_by
-    winner = pick(F.struct(*[F.col(c) for c in payload]), F.col(seq_col))
-    w = F.col("__w")
-    return (
-        df.groupBy(*[F.col(k) for k in keys])
-        .agg(winner.alias("__w"))
-        .select(
-            *[
-                F.col(c) if c in keys else w.getField(c).alias(c)
-                for c in schema.field_names()
-            ],
-            *[w.getField(c).alias(c) for c in carry],
-            *[F.col(c) for c in extra],
-        )
+    pick = "max_by" if engine == ENGINE_DEDUPLICATE else "min_by"
+    q = quote_ident
+    # Each PySpark Column call costs several JVM round-trips, so the
+    # winner struct and its unpacking are one SQL string each, not one
+    # Column per table column.
+    winner = F.expr(
+        f"{pick}(struct({', '.join(q(c) for c in payload)}), {q(seq_col)}) AS __w"
     )
+    out = [
+        q(c) if c in keys else f"__w.{q(c)} AS {q(c)}"
+        for c in schema.field_names()
+    ]
+    out += [f"__w.{q(c)} AS {q(c)}" for c in carry] + [q(c) for c in extra]
+    grouped = df.groupBy(*[F.expr(q(k)) for k in keys]).agg(winner)
+    return select_exprs(grouped, out)
 
 
 def _sequence_groups(schema: TableSchema) -> dict[str, list[str]]:

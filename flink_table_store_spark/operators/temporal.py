@@ -32,12 +32,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_table_store_spark.schema import quote_ident
+
 
 def _qcol(name: str) -> Column:
     """Column reference by EXACT name — backtick-quoted so names with
     dots (which F.col would parse as struct access), spaces, or dashes
     resolve as one identifier (ADVICE r10)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(quote_ident(name))
 
 
 def as_of_join(

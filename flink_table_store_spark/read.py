@@ -37,6 +37,8 @@ from flink_table_store_spark.schema import (
     SEQUENCE_NUMBER,
     VALUE_KIND,
     TableSchema,
+    quote_ident,
+    select_exprs,
 )
 from flink_table_store_spark.write import BUCKET_COL, DATA_DIR, POSTPONE_BUCKET
 
@@ -472,25 +474,27 @@ def _adapt(
         # fast path — files of the CURRENT generation (the common case:
         # every scan, every file, unless schema evolution happened) need
         # no renames and no casts; avoid building an n_cols × py4j
-        # cast/alias expression tree per scan. At most one string-based
-        # select to fix column order / drop extra stored columns.
+        # cast/alias expression tree per scan. The system columns come
+        # in _stored_schema's order, so a plain scan returns untouched;
+        # otherwise one constant-cost select fixes column order / drops
+        # extra stored columns.
         names = current.field_names()
         have = df.columns
         if with_system:
-            names += [s for s in (SEQUENCE_NUMBER, VALUE_KIND) if s in have]
+            names += [s for s in (VALUE_KIND, SEQUENCE_NUMBER) if s in have]
             if BUCKET_COL in have:
                 names.append(BUCKET_COL)
         if with_row_id and ROW_ID_COL in have:
             names.append(ROW_ID_COL)
         elif with_row_id:
-            df = df.withColumn(ROW_ID_COL, F.lit(None).cast("long"))
+            df = df.withColumn(ROW_ID_COL, F.expr("CAST(NULL AS BIGINT)"))
             have = df.columns
             names.append(ROW_ID_COL)
         if keep_meta:
             names.append("_metadata")
         if have == names:
             return df
-        return df.select(*names)
+        return select_exprs(df, [quote_ident(c) for c in names])
     by_id = {f.id: f for f in writer_schema.fields}
     cols = []
     for f in current.fields:
@@ -502,7 +506,7 @@ def _adapt(
         else:
             cols.append(F.lit(None).cast(f.type).alias(f.name))
     if with_system:
-        for s in (SEQUENCE_NUMBER, VALUE_KIND):
+        for s in (VALUE_KIND, SEQUENCE_NUMBER):
             if s in df.columns:
                 cols.append(F.col(s))
         if BUCKET_COL in df.columns:
@@ -649,7 +653,7 @@ def build_dataframe(
         parts.append(_read_rowgroups(spark, table_path, rg_items, schema, need))
     if raw is not None:
         if pk and not keep_system_cols:
-            raw = raw.select(*out_fields)
+            raw = select_exprs(raw, [quote_ident(c) for c in out_fields])
         parts.append(raw)
     if merge is not None:
         if pk:

@@ -10,10 +10,13 @@ reference's ~30 hand-written cast rules (paimon-common casting/).
 
 from __future__ import annotations
 
+import copy
+import functools
 import os
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_table_store_spark.fileio import read_json, write_json_atomic_new
@@ -154,8 +157,37 @@ class TableSchema:
         )
 
 
-def parse_type(ddl: str) -> T.DataType:
+@functools.lru_cache(maxsize=1024)
+def _parse_type_memo(ddl: str) -> T.DataType:
     return T._parse_datatype_string(ddl)
+
+
+def parse_type(ddl: str) -> T.DataType:
+    """The Spark type of a DDL type string. The parser runs in the JVM
+    and every read and write parses each field's type, so results are
+    memoised per string. Struct, array and map types are mutable
+    (``StructType.add``) and come back as a fresh copy on every call;
+    atomic types are shared. The memo assumes ``spark.sql.timestampType``
+    (the one setting that changes what ``timestamp`` parses to) keeps
+    its value for the life of the process."""
+    dt = _parse_type_memo(ddl)
+    return dt if isinstance(dt, T.AtomicType) else copy.deepcopy(dt)
+
+
+def quote_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def select_exprs(df, exprs: list[str]):
+    """``df.selectExpr(*exprs)`` in a constant number of JVM calls: each
+    PySpark ``Column`` or list element costs one or more py4j
+    round-trips, so the projection is one ``struct(...)`` SQL string
+    unpacked by a star. Every expression needs an output name
+    (``expr AS `name``` or a quoted column). The optimizer collapses the
+    struct and its unpacking, so the physical plan is the plain
+    projection."""
+    return df.select(F.expr(f"struct({', '.join(exprs)}) AS __o")).select("__o.*")
 
 
 def _copy_subs(subs: dict | None) -> dict | None:

@@ -43,6 +43,7 @@ from flink_table_store_spark.schema import (
     VALUE_KIND,
     SchemaManager,
     TableSchema,
+    quote_ident,
 )
 from flink_table_store_spark.snapshot import (
     COMMIT_APPEND,
@@ -1763,7 +1764,7 @@ class Table:
             )
             runs = runs.withColumn(BUCKET_COL, bucket_expr(schema))
             runs = runs.repartition(
-                *[F.col(c) for c in list(schema.partition_keys) + [BUCKET_COL]]
+                *[F.expr(quote_ident(c)) for c in list(schema.partition_keys) + [BUCKET_COL]]
             )
             merged = merge_engines.merge_view(
                 runs, schema, group_extra=[BUCKET_COL]
@@ -1790,7 +1791,6 @@ class Table:
             merged,
             self.path,
             schema,
-            base_sequence=0 if not pk else 0,
             target_level=max_level,
             keep_cols=["_ROW_ID"] if row_ids else None,
             pre_partitioned=one_shuffle,
@@ -2021,7 +2021,7 @@ class Table:
             if not pre_part:
                 return d
             return d.repartition(
-                *[F.col(c) for c in list(schema.partition_keys) + [BUCKET_COL]]
+                *[F.expr(quote_ident(c)) for c in list(schema.partition_keys) + [BUCKET_COL]]
             )
 
         if selected_whole:
@@ -2035,9 +2035,7 @@ class Table:
                 # keeps only RowKind.isAdd), like a full compaction
                 merged = merge_engines.fold_winner(
                     _prepart(df), schema, [BUCKET_COL], keep_system=True
-                ).where(
-                    ~F.col(VALUE_KIND).isin(*merge_engines.UNFOLDABLE_KINDS)
-                )
+                ).where(merge_engines.NOT_RETRACT)
                 residual = None
             else:
                 # persist: the fold (file read + window + groupBy) feeds

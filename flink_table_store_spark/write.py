@@ -37,6 +37,8 @@ from flink_table_store_spark.schema import (
     VALUE_KIND,
     TableSchema,
     parse_type,
+    quote_ident,
+    select_exprs,
 )
 from flink_table_store_spark.snapshot import now_millis
 
@@ -97,12 +99,10 @@ def bucket_expr(schema: TableSchema, num_buckets: int | None = None):
     key instead (NULL keys land in bucket 0 — a defined bucket beats a
     null directory)."""
     n = num_buckets if num_buckets is not None else schema.num_buckets()
-    keys = bucket_keys(schema)
+    keys = [quote_ident(k) for k in bucket_keys(schema)]
     if bucket_function_type(schema) == "mod":
-        return F.coalesce(
-            F.pmod(F.col(keys[0]).cast("long"), F.lit(n)), F.lit(0)
-        ).cast("int")
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)).cast("int")
+        return F.expr(f"CAST(coalesce(pmod(CAST({keys[0]} AS BIGINT), {n}), 0) AS INT)")
+    return F.expr(f"CAST(pmod(xxhash64({', '.join(keys)}), {n}) AS INT)")
 
 
 def apply_column_defaults(df: DataFrame, schema: TableSchema) -> DataFrame:
@@ -152,9 +152,26 @@ def parse_default_literal(dv: str):
 
 
 def _cast_to_schema(df: DataFrame, schema: TableSchema, extra: list[str] = ()) -> DataFrame:
-    cols = [F.col(f.name).cast(f.type).alias(f.name) for f in schema.fields]
-    cols += [F.col(c) for c in extra if c in df.columns]
-    return df.select(*cols)
+    """``df`` as the table's fields (cast, renamed, in order) plus the
+    ``extra`` columns it has. Each PySpark ``Column`` costs several JVM
+    round-trips on every commit, so a frame that already has the exact
+    names and types comes back as is (or reordered), and a cast goes
+    through one SQL string."""
+    extra = [c for c in extra if c in df.columns]
+    names = schema.field_names() + extra
+    have = {f.name: f.dataType for f in df.schema.fields}
+    if all(have.get(f.name) == parse_type(f.type) for f in schema.fields):
+        if df.columns == names:
+            return df
+        return select_exprs(df, [quote_ident(c) for c in names])
+    return select_exprs(
+        df,
+        [
+            f"CAST({quote_ident(f.name)} AS {f.type}) AS {quote_ident(f.name)}"
+            for f in schema.fields
+        ]
+        + [quote_ident(c) for c in extra],
+    )
 
 
 def stage_and_collect(
@@ -188,12 +205,15 @@ def stage_and_collect(
 
     if pk:
         if row_kind_col and row_kind_col in df.columns:
-            kind = F.col(row_kind_col)
+            kind = row_kind_col
         elif ROW_KIND in df.columns:
-            kind = F.col(ROW_KIND)
+            kind = ROW_KIND
         else:
-            kind = F.lit(KIND_INSERT)
-        df = df.withColumn(VALUE_KIND, kind)
+            kind = None
+        if kind != VALUE_KIND:  # maintenance rewrites carry it already
+            df = df.withColumn(
+                VALUE_KIND, F.expr(quote_ident(kind) if kind else f"'{KIND_INSERT}'")
+            )
         engine = schema.options.get("merge-engine", "deduplicate")
         if any(
             schema.options.get(k) == "true"
@@ -203,16 +223,14 @@ def stage_and_collect(
             # retract records (isRetract: -D and -U) from e.g. CDC
             # streams are dropped at write — the table keeps the last
             # non-delete value
-            df = df.where(~F.col(VALUE_KIND).isin("-D", "-U"))
+            df = df.where(f"NOT ({VALUE_KIND} IN ('-D', '-U'))")
         elif schema.options.get("ignore-update-before") == "true":
             # CoreOptions.IGNORE_UPDATE_BEFORE: -U alone drops (redundant
             # for upsert streams whose +U carries the full row); -D still
             # deletes
-            df = df.where(F.col(VALUE_KIND) != "-U")
-        extra_sys = [VALUE_KIND, BUCKET_COL]
-        if preserve_seq:
-            extra_sys.append(SEQUENCE_NUMBER)
-        df = _cast_to_schema(df, schema, extra=extra_sys)
+            df = df.where(f"{VALUE_KIND} != '-U'")
+        extra_sys = [VALUE_KIND] + ([SEQUENCE_NUMBER] if preserve_seq else [])
+        df = _cast_to_schema(df, schema, extra=extra_sys + [BUCKET_COL])
         # partial compaction (preserve_seq) carries ORIGINAL sequence
         # numbers so merge-on-read ordering against untouched runs is
         # unchanged (the reference's rewriters keep KeyValue
@@ -221,7 +239,8 @@ def stage_and_collect(
         # assigned BEFORE the bucket shuffle
         if not (preserve_seq and SEQUENCE_NUMBER in df.columns):
             df = df.withColumn(
-                SEQUENCE_NUMBER, (F.lit(base_sequence) + F.monotonically_increasing_id()).cast("long")
+                SEQUENCE_NUMBER,
+                F.expr(f"CAST({base_sequence} + monotonically_increasing_id() AS BIGINT)"),
             )
         postpone_write = False
         if BUCKET_COL not in df.columns:
@@ -238,7 +257,7 @@ def stage_and_collect(
                 # (operators/dynamic_bucket.assign_buckets)
                 df = df.withColumn(BUCKET_COL, bucket_expr(schema))
         if not postpone_write and not pre_partitioned:
-            df = df.repartition(*[F.col(c) for c in pt_cols + [BUCKET_COL]])
+            df = df.repartition(*[F.expr(quote_ident(c)) for c in pt_cols + [BUCKET_COL]])
         partition_by = pt_cols + [BUCKET_COL]
         spark_extra = [VALUE_KIND, SEQUENCE_NUMBER, BUCKET_COL]
     else:
@@ -254,7 +273,7 @@ def stage_and_collect(
             # two such tables co-partition for join_bucketed and bucket
             # predicates prune scans — same hash as PK tables
             df = df.withColumn(BUCKET_COL, bucket_expr(schema))
-            df = df.repartition(*[F.col(c) for c in pt_cols + [BUCKET_COL]])
+            df = df.repartition(*[F.expr(quote_ident(c)) for c in pt_cols + [BUCKET_COL]])
             partition_by = pt_cols + [BUCKET_COL]
 
     fmt = schema.file_format()
