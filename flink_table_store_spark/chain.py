@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from flink_table_store_spark import read as read_mod
 from flink_table_store_spark.predicate import And, Leaf, Or, Predicate
-from flink_table_store_spark.schema import SEQUENCE_NUMBER, TableSchema
+from flink_table_store_spark.schema import SEQUENCE_NUMBER, TableSchema, typed_partition
 
 SNAPSHOT_BRANCH_OPT = "scan.fallback-snapshot-branch"
 DELTA_BRANCH_OPT = "scan.fallback-delta-branch"
@@ -66,10 +66,8 @@ def _part_key(schema: TableSchema, part: dict[str, str]) -> tuple:
     """Typed, order-preserving partition sort key (the reference
     compares partitions with a codegen RecordComparator over the
     logical partition row type)."""
-    from flink_table_store_spark.operators.bucketed_join import _typed_partition
-
     return tuple(
-        _typed_partition(part.get(k), schema.field(k).type)
+        typed_partition(part.get(k), schema.field(k).type)
         for k in schema.partition_keys
     )
 

@@ -87,37 +87,23 @@ def _table_arrow_schema(schema) -> "pa.Schema":
     return pa.schema([pa.field(f.name, _arrow_type(f.type)) for f in schema.fields])
 
 
-def _builder_options(rb: "ReadBuilder") -> dict:
-    opts = {}
-    if rb._snapshot_id is not None:
-        opts["version_as_of"] = str(rb._snapshot_id)
-    if rb._timestamp_ms is not None:
-        opts["timestamp_as_of"] = str(rb._timestamp_ms)
-    if rb._tag is not None:
-        opts["tag"] = rb._tag
-    if rb._file_creation_ms is not None:
-        opts["scan.file-creation-time-millis"] = str(rb._file_creation_ms)
-    return opts
-
-
 def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
     """Materialize the scan as one pyarrow Table."""
     import pyarrow as pa
 
     from flink_table_store_spark.sources.datasource import (
-        _plan_input_partitions,
+        _partitions,
         _read_partition,
     )
 
     t = rb._table
     arrow_schema = _table_arrow_schema(t.schema)
-    if getattr(t, "data_evolution_enabled", lambda: False)():
-        plan = rb.plan()
-        if plan.patch_entries:
-            return _read_stitched_arrow(rb, plan)
+    plan = rb.plan()
+    if plan.patch_entries:
+        return _read_stitched_arrow(rb, plan)
     # projection pushdown: the per-task readers load only the selected
     # columns plus whatever the predicate needs (the residual filter
-    # runs here, post-merge); _make_spec adds merge keys itself
+    # runs here, post-merge); bucket_spec adds merge keys itself
     needed = None
     if rb._projection is not None:
         pf = rb._predicate.fields() if rb._predicate is not None else set()
@@ -129,9 +115,7 @@ def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
         arrow_schema = _pa.schema(
             [f for f in arrow_schema if f.name in set(needed)]
         )
-    parts = _plan_input_partitions(
-        t, rb._predicate, _builder_options(rb), columns=needed
-    )
+    parts = _partitions(t, plan, rb._predicate, columns=needed)
 
     def _one(p) -> list:
         return list(_read_partition(p, arrow_schema))
@@ -161,13 +145,13 @@ def read_arrow_batch_reader(rb: "ReadBuilder") -> "pa.RecordBatchReader":
     import pyarrow as pa
 
     from flink_table_store_spark.sources.datasource import (
-        _plan_input_partitions,
+        _partitions,
         _read_partition,
     )
 
     t = rb._table
     arrow_schema = _table_arrow_schema(t.schema)
-    parts = _plan_input_partitions(t, rb._predicate, _builder_options(rb))
+    parts = _partitions(t, rb.plan(), rb._predicate)
     expr = rb._predicate.to_arrow_expr() if rb._predicate is not None else None
     proj = rb._projection
     out_schema = (
@@ -224,7 +208,7 @@ def _read_stitched_arrow(rb: "ReadBuilder", plan) -> "pa.Table":
 
     t = rb._table
     schema = t.schema
-    snap = rb._resolve_snapshot()
+    snap = plan.snapshot
     if snap and snap.dv_files:
         raise ValueError(
             "local read of a data-evolution table with deletion vectors "

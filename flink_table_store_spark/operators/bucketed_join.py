@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import os
 import re
-from datetime import date, datetime
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,14 +42,14 @@ from flink_table_store_spark.schema import (
     KIND_DELETE,
     SEQUENCE_NUMBER,
     VALUE_KIND,
-    TableSchema,
+    typed_partition,
 )
 from flink_table_store_spark.write import POSTPONE_BUCKET, bucket_keys
 
 # repo root (…/flink_table_store_spark/operators/ → two levels up) — shipped
 # into executor closures so workers can import the package from shared
 # storage even when the session was not started from the repo directory
-_PKG_ROOT = os.path.dirname(
+PKG_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
@@ -701,9 +700,35 @@ def _keep_mask(pred, pdf):
         return ones
 
 
-def _make_spec(schema, buckets, dv, maps, sel_cols, jkeys, pred=None) -> dict:
-    """Everything one bucket task needs about one table side, as a plain
-    picklable dict (shipped into the mapInPandas closure)."""
+def bucket_spec(
+    table, plan, cols=None, keys=(), pred=None, *, dv=True, split=False
+):
+    """What the bucket reader (``read_bucket_side``) needs about one
+    table side, as plain picklable dicts, from a ``ReadBuilder.plan``.
+
+    ``cols`` are the output columns (default: all of them), ``keys``
+    join keys read along with them, ``pred`` a filter each task applies
+    after its merge (see _keep_mask). ``dv=False`` ignores deletion
+    vectors (a delta is read as committed).
+
+    Without ``split``, one spec whose files are grouped by bucket across
+    all partitions: the co-located shape joins and lookups read bucket
+    by bucket. Postpone-bucket files and files of another bucket layout
+    cannot be read that way and raise ValueError. With ``split``, a list
+    of ``(spec, bucket)`` tasks: one per (partition, bucket) merge group
+    and one per raw file (the format surface's input partitions).
+
+    Live data-evolution patches raise ValueError: the bucket reader
+    cannot stitch them onto their base rows."""
+    if plan.patch_entries:
+        raise ValueError(
+            "the bucket reader cannot stitch data-evolution patch files — "
+            "read via table.to_df(spark), or compact() to materialize the "
+            "patches first"
+        )
+    schema = table.schema
+    sel_cols = list(cols) if cols is not None else schema.field_names()
+    jkeys = list(keys)
     key_cols = list(schema.partition_keys) + schema.trimmed_primary_keys()
     seq_fields = [
         c.strip()
@@ -749,9 +774,26 @@ def _make_spec(schema, buckets, dv, maps, sel_cols, jkeys, pred=None) -> dict:
         # task closure and a no-op for _keep_mask anyway
         pred = None
     pred_fields = sorted(pred.fields()) if pred is not None else []
-    return {
-        "buckets": buckets,
-        "dv": dv,
+    # (abs path, bucket coverage | None): a task consults only sidecars
+    # covering its bucket; None (pre-coverage snapshots) = all buckets
+    snap = plan.snapshot
+    dv_paths = (
+        [
+            (os.path.join(table.path, "index", n), snap.dv_buckets.get(n))
+            for n in snap.dv_files
+        ]
+        if dv and snap is not None
+        else []
+    )
+    # {schema_id: {current name: name in that generation | None}}: the
+    # by-field-id rename/add mapping read._adapt applies
+    maps: dict[int, dict[str, str | None]] = {}
+    for sid, s in table.all_schemas().items():
+        by_id = {f.id: f.name for f in s.fields}
+        maps[sid] = {f.name: by_id.get(f.id) for f in schema.fields}
+    spec = {
+        "buckets": {},
+        "dv": dv_paths,
         "maps": maps,
         "pk": pk,
         "engine": engine,
@@ -795,6 +837,62 @@ def _make_spec(schema, buckets, dv, maps, sel_cols, jkeys, pred=None) -> dict:
         ),
         "out_need": list(dict.fromkeys(list(sel_cols) + jkeys)),
     }
+    pt_types = {k: schema.field(k).type for k in schema.partition_keys}
+
+    def files(entries) -> list[dict]:
+        out = []
+        for e in entries:
+            if not e.file_name.endswith(".parquet"):
+                raise ValueError(
+                    "the bucket reader reads parquet files with pyarrow; "
+                    f"{e.file_name} is not parquet — read via "
+                    "table.to_df(spark) or use a regular join"
+                )
+            out.append(
+                {
+                    "path": os.path.join(table.path, e.file_name),
+                    "schema_id": e.schema_id,
+                    "partition": {
+                        k: typed_partition(v, pt_types[k])
+                        for k, v in e.partition.items()
+                    },
+                }
+            )
+        return out
+
+    if split:
+        groups: dict[tuple, list] = {}
+        for e in plan.merge_entries:
+            groups.setdefault(
+                (tuple(sorted(e.partition.items())), e.bucket), []
+            ).append(e)
+        # a raw file (single compacted run, or an append table's file)
+        # needs no merge: its task reads it as plain rows
+        return [
+            (dict(spec, buckets={b: files(es)}), b)
+            for (_pt, b), es in groups.items()
+        ] + [
+            (dict(spec, pk=False, buckets={e.bucket: files([e])}), e.bucket)
+            for e in plan.raw_entries
+        ]
+    layout_cache: dict[int, bool] = {}
+    for e in plan.entries:
+        if e.bucket == POSTPONE_BUCKET:
+            raise ValueError(
+                "postpone-bucket files are live — run compact() first"
+            )
+        if not read_mod.same_bucket_layout(
+            table.path, schema, e.schema_id, layout_cache
+        ):
+            # a mid-rescale table mixes bucket layouts: co-grouping by
+            # bucket id would join rows hashed under DIFFERENT counts
+            raise ValueError(
+                "files from a different bucket layout (schema generation "
+                f"{e.schema_id}) are live — finish the rescale or use a "
+                "regular join"
+            )
+        spec["buckets"].setdefault(e.bucket, []).extend(files([e]))
+    return spec
 
 
 def read_bucket_side(spec: dict, bucket: int):
@@ -1031,109 +1129,6 @@ def read_bucket_side(spec: dict, bucket: int):
     return pdf[keep]
 
 
-def _typed_partition(raw: str | None, ddl: str):
-    if raw is None:
-        return None
-    t = ddl.lower()
-    if t in ("tinyint", "smallint", "int", "integer", "bigint", "long"):
-        return int(raw)
-    if t in ("float", "double"):
-        return float(raw)
-    if t.startswith("decimal"):
-        return Decimal(raw)
-    if t == "boolean":
-        return raw in ("true", "True", "1")
-    if t == "date":
-        return date.fromisoformat(raw)
-    if t.startswith("timestamp"):
-        return datetime.fromisoformat(raw)
-    return raw
-
-
-def _side_plan(
-    table, spark=None, snap=None, predicate=None
-) -> tuple[dict[int, list[dict]], list[str], TableSchema]:
-    """{bucket: [{path, schema_id, partition(typed)}]}, abs DV paths.
-
-    Planning routes through ReadBuilder._plan_entries, so a table whose
-    manifests exceed ``scan.manifest.distributed-threshold`` entry rows
-    gets the SAME distributed ADD/DELETE merge the normal scan path
-    uses (SnapshotReaderImpl parallel manifest scan) — the join of two
-    million-file tables never re-materializes every entry on the
-    driver. Callers that also key caches by snapshot id pass ``snap``
-    so the plan and the id come from ONE read (no commit race).
-
-    ``predicate`` prunes this side's files exactly like the normal scan
-    (partition pruning + stats skipping with plan_scan's PK-safety
-    rules) — an IO optimization only; callers must still apply the
-    predicate to the joined rows."""
-    schema = table.schema
-    if snap is None:
-        snap = table.snapshots.latest()
-    buckets: dict[int, list[dict]] = {}
-    dv_paths: list[str] = []
-    if snap is None:
-        return buckets, dv_paths, schema
-    rb = table.read_builder()
-    if predicate is not None:
-        rb = rb.with_filter(predicate)
-    entries = rb._plan_entries(spark, snap)
-    if predicate is not None:
-        from flink_table_store_spark import read as _read_mod
-
-        plan = _read_mod.plan_scan(entries, schema, predicate, None, table.path)
-        entries = list(plan.raw_entries) + list(plan.merge_entries)
-    pt_types = {k: schema.field(k).type for k in schema.partition_keys}
-    _lay_cache: dict[int, bool] = {}
-    for e in entries:
-        if e.bucket == POSTPONE_BUCKET:
-            raise ValueError(
-                "join_bucketed: postpone-bucket files present — run compact() first"
-            )
-        if not read_mod.same_bucket_layout(
-            table.path, schema, e.schema_id, _lay_cache
-        ):
-            # a mid-rescale table mixes bucket layouts: co-grouping by
-            # bucket id would join rows hashed under DIFFERENT counts
-            raise ValueError(
-                "join_bucketed: files from a different bucket layout "
-                f"(schema generation {e.schema_id}) are live — finish "
-                "the rescale or use a regular join"
-            )
-        if not e.file_name.endswith(".parquet"):
-            raise ValueError(
-                f"join_bucketed reads bucket files with pyarrow.parquet; "
-                f"{e.file_name} is not parquet (set file.format=parquet or use a regular join)"
-            )
-        buckets.setdefault(e.bucket, []).append(
-            {
-                "path": os.path.join(table.path, e.file_name),
-                "schema_id": e.schema_id,
-                "partition": {
-                    k: _typed_partition(v, pt_types[k]) for k, v in e.partition.items()
-                },
-            }
-        )
-    # (abs path, bucket coverage | None): a task consults only sidecars
-    # covering its bucket; None (pre-coverage snapshots) = all buckets
-    dv_paths = [
-        (os.path.join(table.path, "index", n), snap.dv_buckets.get(n))
-        for n in snap.dv_files
-    ]
-    return buckets, dv_paths, schema
-
-
-def _field_maps(table) -> dict[int, dict[str, str | None]]:
-    """{schema_id: {current_name: name_in_that_generation_or_None}} —
-    the by-field-id rename/add mapping read.py._adapt applies."""
-    current = table.schema
-    out: dict[int, dict[str, str | None]] = {}
-    for sid, s in table.all_schemas().items():
-        by_id = {f.id: f.name for f in s.fields}
-        out[sid] = {f.name: by_id.get(f.id) for f in current.fields}
-    return out
-
-
 def join_bucketed(
     spark: SparkSession,
     left,
@@ -1194,7 +1189,7 @@ def join_bucketed(
         raise ValueError(f"unsupported how={how!r} (inner/left/right/outer)")
 
     # per-side file/row pruning (IO only; the caller still applies the
-    # predicate to joined rows — see _side_plan/_keep_mask). A side the
+    # predicate to joined rows — see bucket_spec/_keep_mask). A side the
     # join NULL-extends must not prune: pruning would turn matched rows
     # into NULL-extended ones (wrong under e.g. IS NULL re-filters)
     lpred, rpred = filters if filters is not None else (None, None)
@@ -1202,9 +1197,6 @@ def join_bucketed(
         how == "right" and lpred is not None
     ) or (how == "outer" and (lpred is not None or rpred is not None)):
         raise ValueError(f"filters on a NULL-extended side are unsafe for how={how!r}")
-    lbuckets, ldv, _ = _side_plan(left, spark, predicate=lpred)
-    rbuckets, rdv, _ = _side_plan(right, spark, predicate=rpred)
-    lmaps, rmaps = _field_maps(left), _field_maps(right)
 
     left_cols = left_cols or lschema.field_names()
     right_cols = right_cols or [
@@ -1277,15 +1269,21 @@ def join_bucketed(
         ]
         out_schema = ", ".join(f"`{n}` {t}" for n, t in out_fields)
 
-    lspec = _make_spec(lschema, lbuckets, ldv, lmaps, left_cols, lkeys, pred=lpred)
-    rspec = _make_spec(rschema, rbuckets, rdv, rmaps, right_cols, rkeys, pred=rpred)
+    lspec = bucket_spec(
+        left, left.read_builder().with_filter(lpred).plan(spark),
+        left_cols, lkeys, pred=lpred,
+    )
+    rspec = bucket_spec(
+        right, right.read_builder().with_filter(rpred).plan(spark),
+        right_cols, rkeys, pred=rpred,
+    )
     join_keys = (list(lkeys), list(rkeys))
     out_names = [n for n, _t in out_fields]  # == join_names unless agg
     rename = dict(rename_right)
     group_cols = list(group_by) if group_by is not None else None
     agg_spec = dict(agg) if agg is not None else None
 
-    pkg_root = _PKG_ROOT
+    pkg_root = PKG_ROOT
 
     def _run(batches):
         # executor-side: stdlib + pyarrow + pandas, plus this package
@@ -1452,17 +1450,11 @@ def join_bucketed_chain(
     out_names = [n for n, _t in out_fields]
 
     specs = []
-    for i, (t, s) in enumerate(zip(tables, schemas)):
-        buckets, dv, _ = _side_plan(
-            t, spark, predicate=filters[i] if filters is not None else None
-        )
+    for i, t in enumerate(tables):
+        pred = filters[i] if filters is not None else None
         jk = base_keys if i == 0 else [p[1] for p in on[i - 1]]
-        specs.append(
-            _make_spec(
-                s, buckets, dv, _field_maps(t), sels[i], jk,
-                pred=filters[i] if filters is not None else None,
-            )
-        )
+        plan = t.read_builder().with_filter(pred).plan(spark)
+        specs.append(bucket_spec(t, plan, sels[i], jk, pred=pred))
     join_plan = [
         {
             "left_on": [p[0] for p in pairs],  # base column names
@@ -1472,7 +1464,7 @@ def join_bucketed_chain(
         for i, pairs in enumerate(on)
     ]
     n_buckets = ns[0]
-    pkg_root = _PKG_ROOT
+    pkg_root = PKG_ROOT
 
     def _run(batches):
         import sys as _sys

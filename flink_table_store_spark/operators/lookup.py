@@ -89,10 +89,8 @@ def lookup_join_partial(
     trimmed primary key, bucket-key columns first — same contract a
     point lookup needs to route to one bucket."""
     from flink_table_store_spark.operators.bucketed_join import (
-        _PKG_ROOT,
-        _field_maps,
-        _make_spec,
-        _side_plan,
+        PKG_ROOT,
+        bucket_spec,
     )
     from flink_table_store_spark.write import bucket_keys
 
@@ -115,14 +113,12 @@ def lookup_join_partial(
     clash = set(right_cols) & set(probe_df.columns)
     if clash:
         raise ValueError(f"rename probe columns colliding with dim output: {sorted(clash)}")
-    # resolve the snapshot ONCE and pass it to planning: the cache token
-    # and the planned file set must name the same snapshot even when a
-    # concurrent commit lands mid-call
-    snap = table.snapshots.latest()
-    buckets, dv, _schema = _side_plan(table, spark, snap=snap)
-    spec = _make_spec(
-        schema, buckets, dv, _field_maps(table),
-        list(dict.fromkeys(right_cols + dim_keys)), dim_keys,
+    # the cache token names the snapshot the plan was made from: one
+    # resolution, even when a concurrent commit lands mid-call
+    plan = table.read_builder().plan(spark)
+    snap = plan.snapshot
+    spec = bucket_spec(
+        table, plan, list(dict.fromkeys(right_cols + dim_keys)), dim_keys
     )
     probe_names = probe_df.columns
     probe_keys = [p for p, _d in on]
@@ -142,7 +138,7 @@ def lookup_join_partial(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in probe_df.schema.fields]
         + [f"`{c}` {schema.field(c).type}" for c in right_cols]
     )
-    pkg_root, cap = _PKG_ROOT, _BUCKET_CACHE_CAP
+    pkg_root, cap = PKG_ROOT, _BUCKET_CACHE_CAP
     inner = how == "inner"
     # integer-typed right columns must go back to Arrow as NULLABLE ints
     # after a left join introduces misses (float64-NaN would corrupt)
@@ -263,24 +259,17 @@ class PartialLookupTable:
             return
         latest = self.table.snapshots.latest_id()
         if self._spec is None or latest != self._snap_id:
-            from flink_table_store_spark.operators.bucketed_join import (
-                _field_maps,
-                _make_spec,
-                _side_plan,
-            )
+            from flink_table_store_spark.operators.bucketed_join import bucket_spec
 
             t = self.table.refresh() if latest != self._snap_id else self.table
             self.table = t
-            # ONE snapshot read feeds both the plan and the cache key —
-            # a commit landing mid-refresh must not label old files with
-            # a newer id (sticky-stale cache)
-            snap = t.snapshots.latest()
-            buckets, dv, schema = _side_plan(t, self.spark, snap=snap)
-            keys = schema.trimmed_primary_keys()
-            self._spec = _make_spec(
-                schema, buckets, dv, _field_maps(t), schema.field_names(), keys
-            )
-            self._snap_id = snap.id if snap else None
+            # the cache key is the snapshot the plan was made from — a
+            # commit landing mid-refresh must not label old files with a
+            # newer id (sticky-stale cache)
+            plan = t.read_builder().plan(self.spark)
+            keys = t.schema.trimmed_primary_keys()
+            self._spec = bucket_spec(t, plan, keys=keys)
+            self._snap_id = plan.snapshot.id if plan.snapshot else None
             # drop cached buckets of older snapshots
             self._buckets = {
                 k: v for k, v in self._buckets.items() if k[0] == self._snap_id

@@ -40,6 +40,7 @@ from flink_table_store_spark.schema import (
     quote_ident,
     select_exprs,
 )
+from flink_table_store_spark.snapshot import Snapshot
 from flink_table_store_spark.write import BUCKET_COL, DATA_DIR, POSTPONE_BUCKET
 
 
@@ -51,6 +52,9 @@ class ScanPlan:
     # _ROW_ID (never part of raw/merge — every consumer of data rows
     # sees only real row sources)
     patch_entries: list[ManifestEntry] = dc_field(default_factory=list)
+    # the snapshot the plan was made from (None: empty table, or a plan
+    # not made by ReadBuilder.plan) — its DVs apply to these entries
+    snapshot: Snapshot | None = None
 
     @property
     def entries(self) -> list[ManifestEntry]:
@@ -567,7 +571,7 @@ def _read_rowgroups(
 
         if pkg_root not in _sys.path:
             _sys.path.insert(0, pkg_root)
-        from flink_table_store_spark.operators.bucketed_join import _typed_partition
+        from flink_table_store_spark.schema import typed_partition
 
         for pdf in batches:
             for s in pdf["spec"]:
@@ -578,7 +582,7 @@ def _read_rowgroups(
                 out = tbl.to_pandas()
                 for k, v in d["partition"].items():
                     if k in field_order:
-                        out[k] = _typed_partition(v, pt_types[k])
+                        out[k] = typed_partition(v, pt_types[k])
                 yield out[field_order]
 
     return base.mapInPandas(_run, ddl)

@@ -14,6 +14,8 @@ import copy
 import functools
 import os
 from dataclasses import dataclass, field
+from datetime import date, datetime
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import functions as F
@@ -188,6 +190,27 @@ def select_exprs(df, exprs: list[str]):
     struct and its unpacking, so the physical plan is the plain
     projection."""
     return df.select(F.expr(f"struct({', '.join(exprs)}) AS __o")).select("__o.*")
+
+
+def typed_partition(raw: str | None, ddl: str):
+    """A partition value as stored in a manifest entry (a string) back
+    to the Python value of its DDL type; unknown types stay strings."""
+    if raw is None:
+        return None
+    t = ddl.lower()
+    if t in ("tinyint", "smallint", "int", "integer", "bigint", "long"):
+        return int(raw)
+    if t in ("float", "double"):
+        return float(raw)
+    if t.startswith("decimal"):
+        return Decimal(raw)
+    if t == "boolean":
+        return raw in ("true", "True", "1")
+    if t == "date":
+        return date.fromisoformat(raw)
+    if t.startswith("timestamp"):
+        return datetime.fromisoformat(raw)
+    return raw
 
 
 def _copy_subs(subs: dict | None) -> dict | None:

@@ -18,10 +18,13 @@ connector re-expressed without a JVM extension:
 
 Architecture (the same planner/executor split as the engine's own API):
 
-* ``partitions()`` runs DRIVER-side: the ordinary ReadBuilder plan —
-  snapshot resolution, manifest pruning, stats skipping — emits one
+* ``partitions()`` runs DRIVER-side: ``ReadBuilder.plan`` — snapshot
+  resolution, manifest pruning, stats skipping — becomes bucket tasks
+  through ``bucketed_join.bucket_spec(..., split=True)``: one
   ``InputPartition`` per merge group (partition, bucket) and one per
-  raw-convertible file; each carries a plain picklable spec.
+  raw-convertible file, each carrying a plain picklable spec.
+  Incremental and streaming reads plan ``Table.delta_plan`` the same
+  way.
 * ``read()`` runs EXECUTOR-side: the bucketed-join pyarrow bucket
   reader (``read_bucket_side`` — DV-scoped, schema-evolution-aware,
   full merge-engine folds) yields Arrow RecordBatches straight into
@@ -123,16 +126,6 @@ class FtssInputPartition(InputPartition):
         self.bucket = bucket
 
 
-def _entry_file(table_path: str, e, pt_types: dict) -> dict:
-    from flink_table_store_spark.operators.bucketed_join import _typed_partition
-
-    return {
-        "path": os.path.join(table_path, e.file_name),
-        "schema_id": e.schema_id,
-        "partition": {k: _typed_partition(v, pt_types[k]) for k, v in e.partition.items()},
-    }
-
-
 def _incremental_range(table: "Table", options) -> tuple[int, int] | None:
     """Resolve the reference's incremental read options to a snapshot
     range (start, end] — option names mirror paimon-spark's
@@ -152,78 +145,43 @@ def _incremental_range(table: "Table", options) -> tuple[int, int] | None:
     return None
 
 
-def _plan_incremental_partitions(
-    table: "Table", rng: tuple[int, int]
+def _partitions(
+    table: "Table", plan, predicate=None, columns: list[str] | None = None, dv=True
 ) -> list[FtssInputPartition]:
-    """Partitions for rows ADDED in snapshots (start, end] — the same
-    delta-entry walk as Table.incremental_read (COMPACT snapshots move
-    data, add none). PK tables merge the delta per bucket; append
-    tables read each delta file raw. DVs do not apply (the delta is
-    read as committed); file pruning is skipped — Catalyst re-applies
-    every filter above the scan."""
-    import json as _json
+    """One input partition per bucket task of ``plan``
+    (DataTableBatchScan.plan → DataSplit[] analogue;
+    PaimonBatch.planInputPartitions). ``columns`` narrows the per-task
+    read to a column subset (the local no-Spark reader's projection
+    pushdown; the Spark format surface always reads the full schema and
+    lets Catalyst prune after the exchange)."""
+    from flink_table_store_spark.operators.bucketed_join import bucket_spec
 
-    from flink_table_store_spark.operators.bucketed_join import (
-        _field_maps,
-        _make_spec,
-    )
-    from flink_table_store_spark.snapshot import COMMIT_COMPACT
+    sel_cols = None
+    if columns:
+        wanted = set(columns)
+        sel_cols = [c for c in table.schema.field_names() if c in wanted]
+    tasks = bucket_spec(table, plan, sel_cols, pred=predicate, dv=dv, split=True)
+    return [FtssInputPartition(spec, bucket) for spec, bucket in tasks]
 
-    start, end = rng
-    entries = []
-    for sid in range(start + 1, end + 1):
-        if table.snapshots.exists(sid):
-            s = table.snapshots.load(sid)
-            if s.commit_kind == COMMIT_COMPACT:
-                continue
-            entries.extend(table.delta_entries(sid))
-    schema = table.schema
-    maps = _field_maps(table)
-    all_cols = schema.field_names()
-    base = _make_spec(schema, {}, [], maps, all_cols, [], pred=None)
-    pt_types = {k: schema.field(k).type for k in schema.partition_keys}
-    parts: list[FtssInputPartition] = []
-    if table.is_primary_key_table():
-        groups: dict[tuple, list] = {}
-        for e in entries:
-            groups.setdefault(
-                (_json.dumps(e.partition, sort_keys=True), e.bucket), []
-            ).append(e)
-        for (_pj, bucket), es in groups.items():
-            spec = dict(base)
-            spec["buckets"] = {
-                bucket: [_entry_file(table.path, e, pt_types) for e in es]
-            }
-            parts.append(FtssInputPartition(spec, bucket))
-    else:
-        for e in entries:
-            spec = dict(base)
-            spec["pk"] = False
-            spec["buckets"] = {
-                e.bucket: [_entry_file(table.path, e, pt_types)]
-            }
-            parts.append(FtssInputPartition(spec, e.bucket))
-    return parts
+
+def _plan_incremental_partitions(
+    table: "Table", start: int, end: int
+) -> list[FtssInputPartition]:
+    """Partitions for rows ADDED in snapshots (start, end]
+    (Table.delta_plan). DVs do not apply: a delta file's rows are the
+    snapshot's NEW rows, DVs describe the merged state. File pruning is
+    skipped — Catalyst re-applies every filter above the scan."""
+    return _partitions(table, table.delta_plan(start, end), dv=False)
 
 
 def _plan_input_partitions(
-    table: "Table", predicate, options, columns: list[str] | None = None
+    table: "Table", predicate, options
 ) -> list[FtssInputPartition]:
-    """Driver-side planning → per-task specs (DataTableBatchScan.plan →
-    DataSplit[] analogue; PaimonBatch.planInputPartitions). ``columns``
-    narrows the per-task read to a column subset (the local no-Spark
-    reader's projection pushdown; the Spark format surface always reads
-    the full schema and lets Catalyst prune after the exchange)."""
-    import json as _json
-
-    from flink_table_store_spark.operators.bucketed_join import (
-        _field_maps,
-        _make_spec,
-    )
-
+    """Driver-side planning of a format-surface read: the read options
+    become a ReadBuilder, whose plan becomes the input partitions."""
     inc = _incremental_range(table, options)
     if inc is not None:
-        return _plan_incremental_partitions(table, inc)
+        return _plan_incremental_partitions(table, *inc)
     from flink_table_store_spark.chain import is_chain_table
 
     if is_chain_table(table.schema) and table.branch_name is None:
@@ -235,9 +193,7 @@ def _plan_input_partitions(
             "read via table.to_df(spark), or address a branch "
             "(path '.../table', branch option / t$branch_<name>)"
         )
-    rb = table.read_builder()
-    if predicate is not None:
-        rb = rb.with_filter(predicate)
+    rb = table.read_builder().with_filter(predicate)
     if options.get("version_as_of"):
         rb = rb.with_snapshot(int(options.get("version_as_of")))
     if options.get("timestamp_as_of"):
@@ -258,52 +214,7 @@ def _plan_input_partitions(
         rb = rb.with_file_creation_time(
             int(options.get("scan.file-creation-time-millis"))
         )
-    snap = rb._resolve_snapshot()
-    if snap is None:
-        return []
-    plan = rb.plan()
-    if plan.patch_entries:
-        raise ValueError(
-            f"format('{FORMAT_NAME}') cannot stitch data-evolution patch "
-            "files yet — read via table.to_df(spark), or compact() to "
-            "materialize the patches first"
-        )
-    schema = table.schema
-    for e in plan.entries:
-        if not e.file_name.endswith(".parquet"):
-            raise ValueError(
-                f"format('{FORMAT_NAME}') reads parquet bucket files with "
-                f"pyarrow; {e.file_name} is not parquet — use table.to_df()"
-            )
-    maps = _field_maps(table)
-    dv = [
-        (os.path.join(table.path, "index", n), snap.dv_buckets.get(n))
-        for n in snap.dv_files
-    ]
-    all_cols = schema.field_names()
-    sel_cols = [c for c in all_cols if c in set(columns)] if columns else all_cols
-    base = _make_spec(schema, {}, dv, maps, sel_cols, [], pred=predicate)
-    pt_types = {k: schema.field(k).type for k in schema.partition_keys}
-
-    parts: list[FtssInputPartition] = []
-    groups: dict[tuple, list] = {}
-    for e in plan.merge_entries:
-        groups.setdefault(
-            (_json.dumps(e.partition, sort_keys=True), e.bucket), []
-        ).append(e)
-    for (_pj, bucket), es in groups.items():
-        spec = dict(base)
-        spec["buckets"] = {bucket: [_entry_file(table.path, e, pt_types) for e in es]}
-        parts.append(FtssInputPartition(spec, bucket))
-    for e in plan.raw_entries:
-        # raw-convertible: single compacted run (or append table) — no
-        # merge, no -D rows (whole-bucket picks finalize at MAX_LEVEL);
-        # DVs still apply via the spec's coverage-scoped sidecars
-        spec = dict(base)
-        spec["pk"] = False
-        spec["buckets"] = {e.bucket: [_entry_file(table.path, e, pt_types)]}
-        parts.append(FtssInputPartition(spec, e.bucket))
-    return parts
+    return _partitions(table, rb.plan(), predicate)
 
 
 def _read_partition(partition: FtssInputPartition, arrow_schema) -> Iterator:
@@ -426,14 +337,6 @@ class FtssStreamReader(DataSourceStreamReader):
         return {"snapshot": t.snapshots.latest_id() or 0, "full": False}
 
     def partitions(self, start: dict, end: dict):
-        import json as _json
-
-        from flink_table_store_spark.operators.bucketed_join import (
-            _field_maps,
-            _make_spec,
-        )
-        from flink_table_store_spark.snapshot import COMMIT_COMPACT
-
         t = _load_table(self._options)
         parts: list[FtssInputPartition] = []
         if start.get("full"):
@@ -442,35 +345,10 @@ class FtssStreamReader(DataSourceStreamReader):
             opts["version_as_of"] = str(start["snapshot"])
             parts.extend(_plan_input_partitions(t, None, opts))
         lo, hi = int(start["snapshot"]), int(end["snapshot"])
-        if hi <= lo:
-            return parts
-        schema = t.schema
-        maps = _field_maps(t)
-        all_cols = schema.field_names()
-        # deltas read without DV sidecars: a delta file's rows are the
-        # snapshot's NEW rows (DVs describe the merged state, not deltas)
-        base = _make_spec(schema, {}, [], maps, all_cols, [], pred=None)
-        pt_types = {k: schema.field(k).type for k in schema.partition_keys}
-        entries = []
-        for sid in range(lo + 1, hi + 1):
-            if not t.snapshots.exists(sid):
-                continue  # expired — the retained state was read via full
-            if t.snapshots.load(sid).commit_kind == COMMIT_COMPACT:
-                continue  # DeltaFollowUpScanner: compactions move rows
-            entries.extend(t.delta_entries(sid))
-        groups: dict[tuple, list] = {}
-        for e in entries:
-            groups.setdefault(
-                (_json.dumps(e.partition, sort_keys=True), e.bucket), []
-            ).append(e)
-        for (_pj, bucket), es in groups.items():
-            spec = dict(base)
-            if not t.is_primary_key_table():
-                spec["pk"] = False
-            spec["buckets"] = {
-                bucket: [_entry_file(t.path, e, pt_types) for e in es]
-            }
-            parts.append(FtssInputPartition(spec, bucket))
+        if hi > lo:
+            # expired snapshots were read by the full scan; compactions
+            # move rows (DeltaFollowUpScanner)
+            parts.extend(_plan_incremental_partitions(t, lo, hi))
         return parts
 
     def read(self, partition):
@@ -819,7 +697,7 @@ class FtssWriter(DataSourceArrowWriter):
 
 def _fmt_pt(v) -> str:
     """Partition value → the directory/manifest string form the engine's
-    readers parse back (_parse_partition / _typed_partition)."""
+    readers parse back (schema.typed_partition)."""
     import datetime as _dt
 
     if isinstance(v, bool):

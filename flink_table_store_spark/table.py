@@ -102,7 +102,9 @@ class ReadBuilder:
         self._topn: tuple[str, int, bool] | None = None
         self._file_creation_ms: int | None = None
 
-    def with_filter(self, predicate: Predicate) -> "ReadBuilder":
+    def with_filter(self, predicate: Predicate | None) -> "ReadBuilder":
+        if predicate is None:
+            return self
         self._predicate = predicate if self._predicate is None else (self._predicate & predicate)
         return self
 
@@ -166,12 +168,20 @@ class ReadBuilder:
             return t.snapshots.for_watermark(self._watermark)
         return t.snapshots.latest()
 
-    def plan(self) -> read_mod.ScanPlan:
+    def plan(self, spark: SparkSession | None = None) -> read_mod.ScanPlan:
+        """The scan plan every reader builds on: the snapshot (resolved
+        once, returned on the plan) → live entries → file-creation
+        cutoff → partition/bucket/stats pruning (read.plan_scan). With a
+        session, large manifests plan distributed (_plan_entries) and
+        =/IN literals over bloom-indexed columns get their plan-time
+        positions so pruning can skip files."""
         t = self._table
         snap = self._resolve_snapshot()
         if snap is None:
             return read_mod.ScanPlan()
-        entries = t.manifests.read_live_entries(snap.base_manifest_list, snap.delta_manifest_list)
+        if spark is not None and self._predicate is not None:
+            fileindex.attach_bloom_positions(spark, self._predicate, t.schema)
+        entries = self._plan_entries(spark, snap)
         if self._file_creation_ms is not None:
             entries = [
                 e for e in entries if e.creation_time > self._file_creation_ms
@@ -187,7 +197,9 @@ class ReadBuilder:
                     for k in t.schema.partition_keys
                 ),
             )
-        return read_mod.plan_scan(entries, t.schema, self._predicate, self._limit, t.path)
+        plan = read_mod.plan_scan(entries, t.schema, self._predicate, self._limit, t.path)
+        plan.snapshot = snap
+        return plan
 
     # --- local (no-Spark) materialization — pypaimon TableRead parity
     # (paimon-python pypaimon/read/table_read.py:56-186) ---
@@ -298,18 +310,8 @@ class ReadBuilder:
             if self._limit is not None:
                 df = df.limit(self._limit)
             return df
-        snap = self._resolve_snapshot()
-        if snap is None:
-            plan = read_mod.ScanPlan()
-        else:
-            if self._predicate is not None:
-                # =/IN literals over bloom-indexed columns get their
-                # plan-time positions so manifest pruning can skip files
-                fileindex.attach_bloom_positions(spark, self._predicate, t.schema)
-            entries = self._plan_entries(spark, snap)
-            plan = read_mod.plan_scan(
-                entries, t.schema, self._predicate, self._limit, t.path
-            )
+        plan = self.plan(spark)
+        snap = plan.snapshot
         if (
             self._topn is not None
             and not t.is_primary_key_table()
@@ -349,10 +351,9 @@ class ReadBuilder:
         if self._topn is not None:
             col, n, desc = self._topn
             df = df.orderBy(F.col(col).desc() if desc else F.col(col).asc()).limit(n)
-        df = self._with_fallback_branch(spark, df, plan, snap)
-        return df
+        return self._with_fallback_branch(spark, df, plan)
 
-    def _with_fallback_branch(self, spark, df, plan, snap):
+    def _with_fallback_branch(self, spark, df, plan):
         """``scan.fallback-branch`` (FallbackReadFileStoreTable.java):
         partitions ABSENT from this branch read from the fallback
         branch instead — the main/backfill dual-branch deployment.
@@ -375,8 +376,8 @@ class ReadBuilder:
         ):
             return df
         fb_table = Table(t.path, t.name, branch=fb)
-        fb_snap = fb_table.snapshots.latest()
-        if fb_snap is None:
+        fb_plan = fb_table.read_builder().with_filter(self._predicate).plan(spark)
+        if fb_plan.snapshot is None:
             return df
         if fb_table.schema.field_names() != t.schema.field_names() or (
             fb_table.schema.partition_keys != t.schema.partition_keys
@@ -389,13 +390,6 @@ class ReadBuilder:
             tuple(sorted(e.partition.items()))
             for e in plan.raw_entries + plan.merge_entries
         }
-        fb_rb = fb_table.read_builder()
-        if self._predicate is not None:
-            fb_rb.with_filter(self._predicate)
-        fb_entries = fb_rb._plan_entries(spark, fb_snap)
-        fb_plan = read_mod.plan_scan(
-            fb_entries, fb_table.schema, self._predicate, None, t.path
-        )
         keep = lambda e: tuple(sorted(e.partition.items())) not in main_parts  # noqa: E731
         fb_plan.raw_entries = [e for e in fb_plan.raw_entries if keep(e)]
         fb_plan.merge_entries = [e for e in fb_plan.merge_entries if keep(e)]
@@ -410,7 +404,7 @@ class ReadBuilder:
             predicate=self._predicate,
             projection=self._projection,
             limit=None,
-            dv_files=fb_snap.dv_files,
+            dv_files=fb_plan.snapshot.dv_files,
         )
         return df.unionByName(fb_df)
 
@@ -3720,6 +3714,23 @@ class Table:
             if e.kind == KIND_ADD and not e.patch_cols
         ]
 
+    def delta_plan(self, start: int, end: int) -> read_mod.ScanPlan:
+        """The row-adding files of the snapshots in (start, end], as a
+        plan: PK tables merge them per bucket, append tables read them
+        raw. Expired snapshots contribute nothing, nor do COMPACT ones:
+        compaction moves rows, it adds none. No pruning, no DVs (a
+        delta is read as committed)."""
+        entries: list[ManifestEntry] = []
+        for sid in range(start + 1, end + 1):
+            if (
+                self.snapshots.exists(sid)
+                and self.snapshots.load(sid).commit_kind != COMMIT_COMPACT
+            ):
+                entries.extend(self.delta_entries(sid))
+        if self.is_primary_key_table():
+            return read_mod.ScanPlan(merge_entries=entries)
+        return read_mod.ScanPlan(raw_entries=entries)
+
     def incremental_read(
         self,
         spark: SparkSession,
@@ -3777,19 +3788,10 @@ class Table:
             for p in parts[1:]:
                 out = out.unionByName(p)
             return out
-        entries: list[ManifestEntry] = []
-        for sid in range(start_snapshot + 1, end_snapshot + 1):
-            if self.snapshots.exists(sid):
-                s = self.snapshots.load(sid)
-                if s.commit_kind == COMMIT_COMPACT:
-                    continue  # compaction moves data, adds none
-                entries.extend(self.delta_entries(sid))
-        schema = self.schema
-        if self.is_primary_key_table():
-            plan = read_mod.ScanPlan(merge_entries=entries)
-        else:
-            plan = read_mod.ScanPlan(raw_entries=entries)
-        return read_mod.build_dataframe(spark, self.path, plan, schema, self.all_schemas())
+        plan = self.delta_plan(start_snapshot, end_snapshot)
+        return read_mod.build_dataframe(
+            spark, self.path, plan, self.schema, self.all_schemas()
+        )
 
     def incremental_read_between_timestamps(
         self, spark: SparkSession, ts1_millis: int, ts2_millis: int
@@ -3815,16 +3817,13 @@ class Table:
         last = self.snapshots.latest_id() or 0
         lo = start_snapshot if start_snapshot is not None else 0
         hi = end_snapshot if end_snapshot is not None else last
-        entries: list[ManifestEntry] = []
-        for sid in range(lo + 1, hi + 1):
-            if self.snapshots.exists(sid):
-                s = self.snapshots.load(sid)
-                if s.commit_kind == COMMIT_COMPACT:
-                    continue
-                entries.extend(self.delta_entries(sid))
-        plan = read_mod.ScanPlan()
         df = read_mod._read_files(
-            spark, self.path, entries, schema, self.all_schemas(), with_system=True
+            spark,
+            self.path,
+            self.delta_plan(lo, hi).entries,
+            schema,
+            self.all_schemas(),
+            with_system=True,
         )
         if df is None:
             from pyspark.sql import types as T

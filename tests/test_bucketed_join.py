@@ -846,7 +846,7 @@ def test_bucketed_join_chain_partitioned_base(spark, warehouse):
 
 def test_bucketed_join_distributed_manifest_planning(spark, warehouse, monkeypatch):
     """Above scan.manifest.distributed-threshold the JOIN's planning
-    (_side_plan) takes the same distributed ADD/DELETE merge the scan
+    (ReadBuilder.plan) takes the same distributed ADD/DELETE merge the scan
     path uses — and the join result is unchanged."""
     from flink_table_store_spark.manifest import ManifestManager
 
@@ -912,8 +912,8 @@ def test_dv_sidecars_bucket_scoped_open_set(spark, warehouse, monkeypatch):
     covs = [snap.dv_buckets[n] for n in snap.dv_files]
     assert all(len(c) == 1 for c in covs), covs  # each delete hit one bucket
 
-    buckets, dv, schema = bj._side_plan(t, spark)
-    spec = bj._make_spec(schema, buckets, dv, bj._field_maps(t), schema.field_names(), ["o_custkey"])
+    spec = bj.bucket_spec(t, t.read_builder().plan(spark), keys=["o_custkey"])
+    buckets = spec["buckets"]
 
     opened: dict[int, list[str]] = {}
     orig = bj.dv_positions_for
@@ -1196,3 +1196,46 @@ def test_structural_fold_kernels():
     ]
     # groups interleaved in arrival order (stable sort, not pre-grouped)
     assert fold([["p"], ["q"], ["r"]], [1, 0, 1], 2, "collect") == [["q"], ["p", "r"]]
+
+
+def test_bucket_reads_refuse_live_patches(spark, warehouse):
+    """A bucketed data-evolution append table with a live column patch:
+    the bucket reader cannot stitch patches, so both bucketed joins
+    refuse at plan time (naming compact()), and SQL auto-elision falls
+    back to the Catalyst join instead of reading the patch file as rows
+    or dropping it."""
+    import pytest
+
+    from flink_table_store_spark import predicate as P
+    from flink_table_store_spark.operators.bucketed_join import join_bucketed_chain
+    from flink_table_store_spark.sql import SqlSession
+
+    opts = {"bucket": "2", "bucket-key": "k"}
+    de = warehouse.create_table(
+        "db.de",
+        "k bigint, v string",
+        options={
+            **opts,
+            "row-tracking.enabled": "true",
+            "data-evolution.enabled": "true",
+        },
+    )
+    de.write(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k bigint, v string"))
+    dim = warehouse.create_table("db.dim", "k bigint, w string", options=opts)
+    dim.write(spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "k bigint, w string"))
+    de.refresh().update_columns(spark, P.equal("k", 2), {"v": F.lit("B")})
+    de, dim = de.refresh(), dim.refresh()
+
+    with pytest.raises(ValueError, match=r"compact\(\)"):
+        join_bucketed(spark, de, dim)
+    with pytest.raises(ValueError, match=r"compact\(\)"):
+        join_bucketed_chain(spark, [de, dim])
+
+    a, d = de.to_df(spark).alias("a"), dim.to_df(spark).alias("d")
+    catalyst = a.join(d, F.col("a.k") == F.col("d.k")).select("a.k", "a.v", "d.w")
+    want = sorted(map(tuple, catalyst.collect()))
+    assert (2, "B", "y") in want
+    s = SqlSession(spark, warehouse)
+    q = "SELECT a.k, a.v, d.w FROM db.de a JOIN db.dim d ON a.k = d.k"
+    assert sorted(map(tuple, s.sql(q + " WHERE a.k > 0").collect())) == want
+    assert sorted(map(tuple, s.sql(q).collect())) == want

@@ -409,3 +409,5 @@ def test_with_file_creation_time_builder(spark, warehouse):
     rb = t.read_builder().with_file_creation_time(old_cut)
     rows = sorted(r["k"] for r in rb.to_arrow().to_pylist())
     assert rows == [2]  # only the file created after the cutoff
+    # the Spark read plans the same cutoff
+    assert sorted(r.k for r in rb.to_df(spark).collect()) == [2]

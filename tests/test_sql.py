@@ -560,7 +560,7 @@ def test_sql_auto_elision_faithfulness_extras(spark, warehouse, monkeypatch):
     side's key columns, case-mixed aliases resolve like Spark's,
     double-quoted string literals survive qualifier stripping, and
     WHERE conjuncts prune the owning side's files (predicate reaches
-    _side_plan) while staying in the query."""
+    bucket_spec) while staying in the query."""
     from flink_table_store_spark import predicate as PP
     from flink_table_store_spark.operators import bucketed_join as bj
     from flink_table_store_spark.sql import SqlSession
@@ -608,16 +608,16 @@ def test_sql_auto_elision_faithfulness_extras(spark, warehouse, monkeypatch):
     )
     assert sorted(map(tuple, cm.collect())) == sorted(map(tuple, exp2.collect()))
 
-    # WHERE pushdown: each single-side conjunct reaches _side_plan as a
+    # WHERE pushdown: each single-side conjunct reaches bucket_spec as a
     # predicate for its owning table; the WHERE clause stays in the query
     seen = []
-    orig = bj._side_plan
+    orig = bj.bucket_spec
 
-    def spy(table, spark=None, snap=None, predicate=None):
-        seen.append((table.schema.options.get("path-hint") or table.path, predicate))
-        return orig(table, spark=spark, snap=snap, predicate=predicate)
+    def spy(table, plan, cols=None, keys=(), pred=None, **kw):
+        seen.append((table.schema.options.get("path-hint") or table.path, pred))
+        return orig(table, plan, cols, keys, pred=pred, **kw)
 
-    monkeypatch.setattr(bj, "_side_plan", spy)
+    monkeypatch.setattr(bj, "bucket_spec", spy)
     pf = s.sql(
         "SELECT f.oid, d.dname FROM db.fx_f f JOIN db.fx_d d ON f.fk = d.dk "
         "WHERE f.amt > 10.5 AND d.dname = 'd2' AND f.oid + d.dk > 0"
