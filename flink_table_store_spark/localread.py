@@ -103,7 +103,7 @@ def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
         return _read_stitched_arrow(rb, plan)
     # projection pushdown: the per-task readers load only the selected
     # columns plus whatever the predicate needs (the residual filter
-    # runs here, post-merge); bucket_spec adds merge keys itself
+    # runs here, post-merge); bucket_tasks adds merge keys itself
     needed = None
     if rb._projection is not None:
         pf = rb._predicate.fields() if rb._predicate is not None else set()

@@ -700,23 +700,12 @@ def _keep_mask(pred, pdf):
         return ones
 
 
-def bucket_spec(
-    table, plan, cols=None, keys=(), pred=None, *, dv=True, split=False
-):
+def _side_spec(table, plan, cols, keys, pred) -> dict:
     """What the bucket reader (``read_bucket_side``) needs about one
-    table side, as plain picklable dicts, from a ``ReadBuilder.plan``.
-
-    ``cols`` are the output columns (default: all of them), ``keys``
-    join keys read along with them, ``pred`` a filter each task applies
-    after its merge (see _keep_mask). ``dv=False`` ignores deletion
-    vectors (a delta is read as committed).
-
-    Without ``split``, one spec whose files are grouped by bucket across
-    all partitions: the co-located shape joins and lookups read bucket
-    by bucket. Postpone-bucket files and files of another bucket layout
-    cannot be read that way and raise ValueError. With ``split``, a list
-    of ``(spec, bucket)`` tasks: one per (partition, bucket) merge group
-    and one per raw file (the format surface's input partitions).
+    table side, as plain picklable dicts, from a ``ReadBuilder.plan``;
+    ``buckets`` is left empty for bucket_spec/bucket_tasks to fill.
+    The plan's snapshot supplies the deletion vectors: a plan without
+    one (Table.delta_plan) reads its files as committed.
 
     Live data-evolution patches raise ValueError: the bucket reader
     cannot stitch them onto their base rows."""
@@ -782,7 +771,7 @@ def bucket_spec(
             (os.path.join(table.path, "index", n), snap.dv_buckets.get(n))
             for n in snap.dv_files
         ]
-        if dv and snap is not None
+        if snap is not None
         else []
     )
     # {schema_id: {current name: name in that generation | None}}: the
@@ -837,44 +826,44 @@ def bucket_spec(
         ),
         "out_need": list(dict.fromkeys(list(sel_cols) + jkeys)),
     }
+    return spec
+
+
+def _files(table, entries) -> list[dict]:
+    schema = table.schema
     pt_types = {k: schema.field(k).type for k in schema.partition_keys}
-
-    def files(entries) -> list[dict]:
-        out = []
-        for e in entries:
-            if not e.file_name.endswith(".parquet"):
-                raise ValueError(
-                    "the bucket reader reads parquet files with pyarrow; "
-                    f"{e.file_name} is not parquet — read via "
-                    "table.to_df(spark) or use a regular join"
-                )
-            out.append(
-                {
-                    "path": os.path.join(table.path, e.file_name),
-                    "schema_id": e.schema_id,
-                    "partition": {
-                        k: typed_partition(v, pt_types[k])
-                        for k, v in e.partition.items()
-                    },
-                }
+    out = []
+    for e in entries:
+        if not e.file_name.endswith(".parquet"):
+            raise ValueError(
+                "the bucket reader reads parquet files with pyarrow; "
+                f"{e.file_name} is not parquet — read via "
+                "table.to_df(spark) or use a regular join"
             )
-        return out
+        out.append(
+            {
+                "path": os.path.join(table.path, e.file_name),
+                "schema_id": e.schema_id,
+                "partition": {
+                    k: typed_partition(v, pt_types[k])
+                    for k, v in e.partition.items()
+                },
+            }
+        )
+    return out
 
-    if split:
-        groups: dict[tuple, list] = {}
-        for e in plan.merge_entries:
-            groups.setdefault(
-                (tuple(sorted(e.partition.items())), e.bucket), []
-            ).append(e)
-        # a raw file (single compacted run, or an append table's file)
-        # needs no merge: its task reads it as plain rows
-        return [
-            (dict(spec, buckets={b: files(es)}), b)
-            for (_pt, b), es in groups.items()
-        ] + [
-            (dict(spec, pk=False, buckets={e.bucket: files([e])}), e.bucket)
-            for e in plan.raw_entries
-        ]
+
+def bucket_spec(table, plan, cols=None, keys=(), pred=None) -> dict:
+    """One table side of a bucketed join or lookup: a spec whose files
+    are grouped by bucket across all partitions, read bucket by bucket
+    with ``read_bucket_side(spec, bucket)``.
+
+    ``cols`` are the output columns (default: all of them), ``keys``
+    join keys read along with them, ``pred`` a filter each task applies
+    after its merge (see _keep_mask). Postpone-bucket files and files of
+    another bucket layout cannot be grouped that way and raise
+    ValueError, as do live data-evolution patches."""
+    spec = _side_spec(table, plan, cols, keys, pred)
     layout_cache: dict[int, bool] = {}
     for e in plan.entries:
         if e.bucket == POSTPONE_BUCKET:
@@ -882,7 +871,7 @@ def bucket_spec(
                 "postpone-bucket files are live — run compact() first"
             )
         if not read_mod.same_bucket_layout(
-            table.path, schema, e.schema_id, layout_cache
+            table.path, table.schema, e.schema_id, layout_cache
         ):
             # a mid-rescale table mixes bucket layouts: co-grouping by
             # bucket id would join rows hashed under DIFFERENT counts
@@ -891,8 +880,33 @@ def bucket_spec(
                 f"{e.schema_id}) are live — finish the rescale or use a "
                 "regular join"
             )
-        spec["buckets"].setdefault(e.bucket, []).extend(files([e]))
+        spec["buckets"].setdefault(e.bucket, []).extend(_files(table, [e]))
     return spec
+
+
+def bucket_tasks(table, plan, cols=None, pred=None) -> list[tuple[dict, int]]:
+    """The scan tasks of the format surface and local reads over
+    ``plan``: ``(spec, bucket)`` pairs, one per (partition, bucket)
+    merge group and one per raw file. A raw file (a single compacted
+    run, or an append table's file) needs no merge, so its task reads
+    it as plain rows. ``cols`` and ``pred`` as in bucket_spec; live
+    data-evolution patches raise ValueError."""
+    spec = _side_spec(table, plan, cols, (), pred)
+    groups: dict[tuple, list] = {}
+    for e in plan.merge_entries:
+        groups.setdefault(
+            (tuple(sorted(e.partition.items())), e.bucket), []
+        ).append(e)
+    return [
+        (dict(spec, buckets={b: _files(table, es)}), b)
+        for (_pt, b), es in groups.items()
+    ] + [
+        (
+            dict(spec, pk=False, buckets={e.bucket: _files(table, [e])}),
+            e.bucket,
+        )
+        for e in plan.raw_entries
+    ]
 
 
 def read_bucket_side(spec: dict, bucket: int):

@@ -20,7 +20,7 @@ Architecture (the same planner/executor split as the engine's own API):
 
 * ``partitions()`` runs DRIVER-side: ``ReadBuilder.plan`` — snapshot
   resolution, manifest pruning, stats skipping — becomes bucket tasks
-  through ``bucketed_join.bucket_spec(..., split=True)``: one
+  through ``bucketed_join.bucket_tasks``: one
   ``InputPartition`` per merge group (partition, bucket) and one per
   raw-convertible file, each carrying a plain picklable spec.
   Incremental and streaming reads plan ``Table.delta_plan`` the same
@@ -146,7 +146,7 @@ def _incremental_range(table: "Table", options) -> tuple[int, int] | None:
 
 
 def _partitions(
-    table: "Table", plan, predicate=None, columns: list[str] | None = None, dv=True
+    table: "Table", plan, predicate=None, columns: list[str] | None = None
 ) -> list[FtssInputPartition]:
     """One input partition per bucket task of ``plan``
     (DataTableBatchScan.plan → DataSplit[] analogue;
@@ -154,13 +154,13 @@ def _partitions(
     read to a column subset (the local no-Spark reader's projection
     pushdown; the Spark format surface always reads the full schema and
     lets Catalyst prune after the exchange)."""
-    from flink_table_store_spark.operators.bucketed_join import bucket_spec
+    from flink_table_store_spark.operators.bucketed_join import bucket_tasks
 
     sel_cols = None
     if columns:
         wanted = set(columns)
         sel_cols = [c for c in table.schema.field_names() if c in wanted]
-    tasks = bucket_spec(table, plan, sel_cols, pred=predicate, dv=dv, split=True)
+    tasks = bucket_tasks(table, plan, sel_cols, pred=predicate)
     return [FtssInputPartition(spec, bucket) for spec, bucket in tasks]
 
 
@@ -168,10 +168,9 @@ def _plan_incremental_partitions(
     table: "Table", start: int, end: int
 ) -> list[FtssInputPartition]:
     """Partitions for rows ADDED in snapshots (start, end]
-    (Table.delta_plan). DVs do not apply: a delta file's rows are the
-    snapshot's NEW rows, DVs describe the merged state. File pruning is
-    skipped — Catalyst re-applies every filter above the scan."""
-    return _partitions(table, table.delta_plan(start, end), dv=False)
+    (Table.delta_plan). File pruning is skipped — Catalyst re-applies
+    every filter above the scan."""
+    return _partitions(table, table.delta_plan(start, end))
 
 
 def _plan_input_partitions(

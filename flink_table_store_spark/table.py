@@ -197,7 +197,10 @@ class ReadBuilder:
                     for k in t.schema.partition_keys
                 ),
             )
-        plan = read_mod.plan_scan(entries, t.schema, self._predicate, self._limit, t.path)
+        # limit pushdown counts file rows; DVs make those overcount the
+        # live rows, so a DV snapshot plans every file
+        limit = None if snap.dv_files else self._limit
+        plan = read_mod.plan_scan(entries, t.schema, self._predicate, limit, t.path)
         plan.snapshot = snap
         return plan
 
@@ -358,9 +361,11 @@ class ReadBuilder:
         partitions ABSENT from this branch read from the fallback
         branch instead — the main/backfill dual-branch deployment.
         Applies to plain latest scans only (a snapshot id / tag /
-        timestamp names a point on ONE branch; TopN/limit bounds are
-        per-branch plans, so they bail too). The fallback must agree on
-        columns and partition keys (validateFallbackBranch)."""
+        timestamp names a point on ONE branch; TopN/limit bounds and the
+        file-creation cutoff shape per-branch plans — a cut plan would
+        hide partitions the main branch owns — so they bail too). The
+        fallback must agree on columns and partition keys
+        (validateFallbackBranch)."""
         t = self._table
         fb = t.schema.options.get("scan.fallback-branch")
         if (
@@ -373,6 +378,7 @@ class ReadBuilder:
             or self._watermark is not None
             or self._limit is not None
             or self._topn is not None
+            or self._file_creation_ms is not None
         ):
             return df
         fb_table = Table(t.path, t.name, branch=fb)
@@ -3718,8 +3724,10 @@ class Table:
         """The row-adding files of the snapshots in (start, end], as a
         plan: PK tables merge them per bucket, append tables read them
         raw. Expired snapshots contribute nothing, nor do COMPACT ones:
-        compaction moves rows, it adds none. No pruning, no DVs (a
-        delta is read as committed)."""
+        compaction moves rows, it adds none. No pruning, and no
+        snapshot on the plan, so no DVs: a delta file's rows are the
+        snapshot's NEW rows as committed, DVs describe the merged
+        state."""
         entries: list[ManifestEntry] = []
         for sid in range(start + 1, end + 1):
             if (

@@ -55,6 +55,24 @@ def test_dv_delete_idempotent_and_stacking(spark, t):
     assert len(t.snapshots.latest().dv_files) == 2
 
 
+def test_limit_counts_live_rows_not_file_rows(spark, warehouse):
+    """Limit pushdown stops planning once file row counts cover the
+    limit; under DVs those counts overcount the live rows, so a limited
+    read must still return ``limit`` rows while that many are live."""
+    table = warehouse.create_table(
+        "db.dvlim", "id bigint", options={"deletion-vectors.enabled": "true"}
+    )
+    for lo in (0, 10):  # two files of 10 rows
+        table.write(spark.range(lo, lo + 10).coalesce(1))
+    table.delete(spark, P.less_than("id", 8))
+    table.delete(spark, P.between("id", 10, 17))  # 2 live rows per file
+    assert table.snapshots.latest().dv_files
+    rb = table.read_builder().with_limit(3)
+    assert rb.to_arrow().num_rows == 3
+    assert len(rb.to_pandas()) == 3
+    assert rb.to_df(spark).count() == 3
+
+
 def test_dv_time_travel_sees_undeleted(spark, t):
     t.delete(spark, P.equal("id", 50))
     assert t.to_df(spark).count() == 99

@@ -4,6 +4,8 @@ main/backfill dual-branch deployment."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import types as T
 
@@ -70,6 +72,18 @@ def test_travel_and_limit_stay_single_branch(spark, dual):
     one = t.to_df(spark, snapshot_id=1)
     assert sorted(r.pt for r in one.collect()) == ["z"]
     assert t.to_df(spark, limit=1).count() == 1
+
+
+def test_file_creation_cutoff_stays_single_branch(spark, dual):
+    """A cut plan would make main's partitions whose files all predate
+    the cutoff (y) look absent and pull their rows in from the
+    fallback; the cutoff reads the main branch only, like limit/TopN."""
+    t, _ = dual
+    cut = int(time.time() * 1000)
+    time.sleep(0.01)
+    t.write(spark.createDataFrame([(41, "newer-d", "z")], KV))
+    got = t.read_builder().with_file_creation_time(cut).to_df(spark)
+    assert sorted((r.k, r.pt) for r in got.collect()) == [(41, "z")]
 
 
 def test_branch_itself_reads_plain(spark, dual):

@@ -560,7 +560,7 @@ def test_sql_auto_elision_faithfulness_extras(spark, warehouse, monkeypatch):
     side's key columns, case-mixed aliases resolve like Spark's,
     double-quoted string literals survive qualifier stripping, and
     WHERE conjuncts prune the owning side's files (predicate reaches
-    bucket_spec) while staying in the query."""
+    ReadBuilder.plan and bucket_spec) while staying in the query."""
     from flink_table_store_spark import predicate as PP
     from flink_table_store_spark.operators import bucketed_join as bj
     from flink_table_store_spark.sql import SqlSession
@@ -608,22 +608,34 @@ def test_sql_auto_elision_faithfulness_extras(spark, warehouse, monkeypatch):
     )
     assert sorted(map(tuple, cm.collect())) == sorted(map(tuple, exp2.collect()))
 
-    # WHERE pushdown: each single-side conjunct reaches bucket_spec as a
-    # predicate for its owning table; the WHERE clause stays in the query
-    seen = []
-    orig = bj.bucket_spec
+    # WHERE pushdown: each single-side conjunct reaches its owning
+    # table's file planning (ReadBuilder.plan, where pruning happens)
+    # and bucket_spec (the per-task row filter); the WHERE clause stays
+    # in the query
+    from flink_table_store_spark.table import ReadBuilder
 
-    def spy(table, plan, cols=None, keys=(), pred=None, **kw):
-        seen.append((table.schema.options.get("path-hint") or table.path, pred))
-        return orig(table, plan, cols, keys, pred=pred, **kw)
+    seen, planned = [], []
+    orig, orig_plan = bj.bucket_spec, ReadBuilder.plan
+
+    def spy(table, plan, cols=None, keys=(), pred=None):
+        seen.append((table.path, pred))
+        return orig(table, plan, cols, keys, pred=pred)
+
+    def plan_spy(self, spark=None):
+        planned.append((self._table.path, self._predicate))
+        return orig_plan(self, spark)
 
     monkeypatch.setattr(bj, "bucket_spec", spy)
+    monkeypatch.setattr(ReadBuilder, "plan", plan_spy)
     pf = s.sql(
         "SELECT f.oid, d.dname FROM db.fx_f f JOIN db.fx_d d ON f.fk = d.dk "
         "WHERE f.amt > 10.5 AND d.dname = 'd2' AND f.oid + d.dk > 0"
     )
     preds = [p for _t, p in seen if p is not None]
     assert len(preds) == 2, seen  # one per side; the cross-side piece not pushed
+    assert [(t_, p) for t_, p in planned if p is not None] == [
+        (t_, p) for t_, p in seen if p is not None
+    ], (planned, seen)
     exp3 = (
         fact.join(dim, fact.fk == dim.dk)
         .where((F.col("amt") > 10.5) & (F.col("dname") == "d2") & (F.col("oid") + F.col("dk") > 0))
@@ -634,11 +646,13 @@ def test_sql_auto_elision_faithfulness_extras(spark, warehouse, monkeypatch):
 
     # LEFT join: predicate on the NULL-extended side must NOT push
     seen.clear()
+    planned.clear()
     s.sql(
         "SELECT f.oid FROM db.fx_f f LEFT JOIN db.fx_d d ON f.fk = d.dk "
         "WHERE d.dname IS NULL"
     ).collect()
     assert all(p is None for _t, p in seen), seen
+    assert all(p is None for _t, p in planned), planned
 
 
 def test_sql_auto_elision_fuzz_parity(spark, warehouse, monkeypatch):
