@@ -31,7 +31,8 @@ stored bytes are interchangeable with other systems:
 
 Everything here is plain numpy/stdlib — no Spark imports — so the
 functions run identically driver-side and inside Arrow-batched UDFs
-(see merge_engines._agg_expr for the aggregation-engine integration).
+(the sketch rows of merge_engines.MERGE_FUNCS are the aggregation-engine
+integration).
 
 NOTE: the container has no ``datasketches``/``pyroaring`` wheels to
 cross-check against, so conformance is asserted structurally (byte

@@ -38,6 +38,13 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_table_store_spark import read as read_mod
+from flink_table_store_spark.operators.merge_engines import (
+    MERGE_FUNCS,
+    field_merges,
+    remove_record_groups,
+    seq_descending,
+    sequence_groups,
+)
 from flink_table_store_spark.schema import (
     KIND_DELETE,
     SEQUENCE_NUMBER,
@@ -84,99 +91,8 @@ def dv_positions_for(dv_paths: list[str], basenames: list[str]) -> dict[str, set
     return dels
 
 
-# aggregate functions the per-bucket pandas fold reproduces exactly
-# (mirrors merge_engines._agg_expr); hll_sketch folds too on binary
-# fields (sketches.hll_union implements the DataSketches HLL wire
-# format), leaving no compact-first aggregators
-_LOCAL_AGG_FUNCS = frozenset(
-    {
-        "sum",
-        "count",
-        "product",
-        "min",
-        "max",
-        "bool_and",
-        "bool_or",
-        "first_value",
-        "first_non_null_value",
-        "first_not_null_value",
-        "last_value",
-        "last_non_null_value",
-        "primary-key",
-        "listagg",
-        "collect",
-        "collect_distinct",
-        "rbm32",
-        "rbm64",
-        "theta_sketch",
-        "merge_map",
-        "nested_update",
-        "nested_partial_update",
-    }
-)
-
-
-def _agg_cfg(schema) -> dict:
-    """Per-field aggregation-engine config shipped into bucket tasks."""
-    opts = schema.options
-    keys = set(schema.partition_keys) | set(schema.trimmed_primary_keys())
-    default = opts.get("fields.default-aggregate-function", "last_non_null_value")
-    cfg = {"funcs": {}, "ignore_retract": set(), "types": {}, "k": {}, "default": default}
-    for f in schema.fields:
-        if f.name in keys:
-            continue
-        cfg["funcs"][f.name] = opts.get(f"fields.{f.name}.aggregate-function", default)
-        cfg["types"][f.name] = f.type.lower()
-        if opts.get(f"fields.{f.name}.ignore-retract", "false") == "true":
-            cfg["ignore_retract"].add(f.name)
-        cfg["k"][f.name] = int(opts.get(f"fields.{f.name}.theta-sketch.k", "4096"))
-        cfg.setdefault("delimiter", {})[f.name] = opts.get(
-            f"fields.{f.name}.list-agg-delimiter", ","
-        )
-        if opts.get(f"fields.{f.name}.distinct", "false") == "true":
-            cfg.setdefault("distinct", set()).add(f.name)
-            if cfg["funcs"][f.name] == "collect":
-                cfg["funcs"][f.name] = "collect_distinct"
-        cl = opts.get(f"fields.{f.name}.count-limit")
-        cfg.setdefault("count_limit", {})[f.name] = (
-            int(cl) if cl is not None else None
-        )
-        cfg.setdefault("nested_key", {})[f.name] = [
-            k.strip()
-            for k in opts.get(f"fields.{f.name}.nested-key", "").split(",")
-            if k.strip()
-        ]
-    cfg["remove_on_delete"] = (
-        opts.get("aggregation.remove-record-on-delete", "false") == "true"
-    )
-    return cfg
-
-
-def _check_local_agg_funcs(schema) -> None:
-    cfg = _agg_cfg(schema)
-    _check_foldable(cfg["funcs"], cfg["types"])
-
-
-def _check_foldable(funcs: dict, types: dict) -> None:
-    bad = sorted(
-        {
-            f
-            for f, fn in funcs.items()
-            if fn not in _LOCAL_AGG_FUNCS
-            # binary hll fields union locally via sketches.hll_union;
-            # raw-value hll sketching stays JVM-side
-            and not (fn == "hll_sketch" and types.get(f, "") == "binary")
-        }
-    )
-    if bad:
-        raise ValueError(
-            f"cannot fold aggregate-function(s) of fields {bad} "
-            "in the local (pandas) merge — compact() the table first"
-        )
-
-
 def _structural_fold(
-    vals, codes, n_groups: int, func: str, nested_key: list,
+    vals, codes, n_groups: int, func: str, nested_key: tuple,
     delimiter: str = ",", distinct: bool = False, count_limit=None,
 ) -> list:
     """Fold one structural aggregator column (listagg / collect /
@@ -338,15 +254,19 @@ def _structural_fold(
     return out
 
 
-def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str):
-    """Pandas replica of the aggregation merge engine's per-field folds
-    (merge_engines._agg_expr / reference AggregateMergeFunction.java:49)
-    over one bucket's rows. ``pdf`` is already stable-sorted by the
-    effective sequence; retract rows (``-U``/``-D``) subtract for
-    sum/count and are ignored by the other aggregators
-    (FieldIgnoreRetractAgg). Returns merged rows with key + value
-    columns. All folds share ONE groupby over shaped working columns so
-    every result aligns on the same group index."""
+def fold_aggregation(
+    pdf, key_cols: list[str], fields: dict, seqc: str, kindc: str,
+    remove_on_delete: bool = False,
+):
+    """Pandas replica of the Catalyst per-field folds (reference
+    AggregateMergeFunction.java:49) over one bucket's rows: ``fields``
+    maps value columns to their ``merge_engines.field_merges`` entries,
+    ``remove_on_delete`` is that table's flag. ``pdf`` is already
+    stable-sorted by the effective sequence; retract rows (``-U``/
+    ``-D``) subtract for sum/count and are ignored by the other
+    aggregators (FieldIgnoreRetractAgg). Returns merged rows with key +
+    value columns. All folds share ONE groupby over shaped working
+    columns so every result aligns on the same group index."""
     import numpy as np
     import pandas as pd
 
@@ -356,47 +276,28 @@ def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str)
     retract = pdf[kindc].isin(("-D", "-U")).to_numpy()
     keep_mask = ~retract
     ords = np.arange(len(pdf), dtype=float)
-    notna = lambda x: not pd.isna(x)  # noqa: E731
     # scalar-or-array presence test: pd.isna on a list/ndarray returns
     # an elementwise ARRAY (ambiguous in boolean context) — an array
     # value is always "present"
     present = lambda x: (  # noqa: E731
         isinstance(x, (list, np.ndarray)) or (x is not None and not pd.isna(x))
     )
-    # integral folds must NOT transit float64 (nullable int64 coerces to
-    # float64 in pandas and rounds above 2^53) — same hazard the fused
-    # file-index stats ship integral min/max as strings to avoid. Fold
-    # through the nullable Int64 extension dtype instead: exact, and
-    # Arrow maps it straight back to a nullable bigint.
-    integral = lambda c: cfg["types"].get(c, "").split("(")[0] in (  # noqa: E731
-        "tinyint",
-        "smallint",
-        "int",
-        "integer",
-        "bigint",
-    )
-
     value_cols = [
         c
         for c in pdf.columns
-        if c not in set(key_cols) | {seqc, kindc} and c in cfg["funcs"]
+        if c not in set(key_cols) | {seqc, kindc} and c in fields
     ]
     work = pdf[key_cols].copy()
     plan: list[tuple[str, str]] = []  # (out col, op)
     for c in value_cols:
-        func = cfg["funcs"][c]
-        ig = c in cfg["ignore_retract"]
+        func = fields[c].func
+        ig = fields[c].ignore_retract
         col = pdf[c]
-        if integral(c) and func in (
-            "sum",
-            "product",
-            "min",
-            "max",
-            "first_non_null_value",
-            "first_not_null_value",
-            "last_non_null_value",
-            "primary-key",
-        ):
+        if fields[c].exact_int:
+            # integral folds must NOT transit float64 (nullable int64
+            # coerces to float64 in pandas and rounds above 2^53): fold
+            # through the nullable Int64 extension dtype instead — exact,
+            # and Arrow maps it straight back to a nullable bigint
             col = col.astype("Int64")
         masked = col.where(keep_mask)  # payload null on retract rows
         w = f"__w_{c}"
@@ -404,7 +305,7 @@ def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str)
             work[w] = masked if ig else col.where(keep_mask, -col)
             plan.append((c, "sum"))
         elif func == "count":
-            # associative count (merge_engines._agg_expr): first
+            # associative count, as the Catalyst fold computes it: first
             # non-retract row contributes its stored value (a partial
             # count from compaction/folding), later non-null rows ±1
             work[w] = np.where(col.notna(), np.where(retract, 0 if ig else -1, 1), 0)
@@ -430,107 +331,28 @@ def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str)
         elif func in ("last_non_null_value", "primary-key"):
             work[w] = masked
             plan.append((c, "last"))
-        elif func in (
-            "listagg",
-            "collect",
-            "collect_distinct",
-            "rbm32",
-            "rbm64",
-            "theta_sketch",
-            "hll_sketch",
-            "merge_map",
-            "nested_update",
-            "nested_partial_update",
-        ):
+        else:  # structural folds and sketch unions
             work[w] = masked
             plan.append((c, "fn"))
-        else:  # pragma: no cover — _check_local_agg_funcs gates this
-            raise ValueError(f"unsupported local aggregate-function {func}")
     work["__ups_ord"] = np.where(retract, -1.0, ords)
     work["__del_ord"] = np.where(pdf[kindc].to_numpy() == KIND_DELETE, ords, -1.0)
 
-    def _fold_fn(c):
-        func = cfg["funcs"][c]
-        if func == "listagg":
-            return lambda s: ",".join(str(x) for x in s if notna(x))
-        if func == "merge_map":
-            # FieldMergeMapAgg: later entries win; all-null group folds
-            # to an EMPTY map like map_concat over cast(map()). Arrow
-            # ships map values as lists of (k, v) pairs.
-            def _mmap(s):
-                # pyarrow ships map values as lists of (k, v) pairs.
-                # Return a PAIR LIST (a dict return would make
-                # groupby.apply expand keys into columns); the caller
-                # converts to dict for Spark's Arrow writer.
-                out: dict = {}
-                for x in s:
-                    if isinstance(x, dict):
-                        out.update(x)
-                    elif isinstance(x, (list, np.ndarray)):
-                        out.update(dict(x))
-                return list(out.items())
-
-            return _mmap
-        if func == "nested_update":
-            nk = cfg.get("nested_key", {}).get(c) or []
-
-            def _nupd(s):
-                flat: list = []
-                for x in s:
-                    if isinstance(x, (list, np.ndarray)):
-                        flat.extend(list(x))
-                if not nk:
-                    return flat  # append mode: rows in sequence order
-                # nested-key mode: latest version per nested key,
-                # original relative order of survivors preserved
-                seen: set = set()
-                out: list = []
-                for x in reversed(flat):
-                    key = tuple((x or {}).get(k) for k in nk)
-                    if key in seen:
-                        continue
-                    seen.add(key)
-                    out.append(x)
-                return list(reversed(out))
-
-            return _nupd
-        if func in ("collect", "collect_distinct"):
-            distinct = func == "collect_distinct"
-
-            def _coll(s):
-                out = []
-                for x in s:
-                    if isinstance(x, (list, np.ndarray)):
-                        out.extend(list(x))
-                    elif notna(x):
-                        out.append(x)
-                if distinct:
-                    seen, ded = set(), []
-                    for x in out:
-                        kx = str(x)
-                        if kx not in seen:
-                            seen.add(kx)
-                            ded.append(x)
-                    return ded
-                return out
-
-            return _coll
-        binary = cfg["types"].get(c, "") == "binary"
-        kk = cfg["k"].get(c, 4096)
+    def _sketch_union(m):
+        binary = m.type.lower() == "binary"
 
         def _sk(s):
             vals = [x for x in s if present(x)]
             if binary:
                 vals = [bytes(x) for x in vals]
-                if func == "rbm32":
+                if m.func == "rbm32":
                     return _S.rbm32_union(vals)
-                if func == "rbm64":
+                if m.func == "rbm64":
                     return _S.rbm64_union(vals)
-                if func == "hll_sketch":
+                if m.func == "hll_sketch":
                     return _S.hll_union(vals)
-                return _S.theta_union(vals, k=kk)
+                return _S.theta_union(vals, k=m.theta_k)
             flat = sorted({int(v) for x in vals for v in x})
-            return flat[:kk] if func == "theta_sketch" else flat
+            return flat[: m.theta_k] if m.func == "theta_sketch" else flat
 
         return _sk
 
@@ -580,11 +402,11 @@ def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str)
             got = pd.Series(col_np[c][valid.to_numpy()], index=valid.index)
             results[c] = got.reindex(pick.index)
         else:  # fn
-            func = cfg["funcs"][c]
-            if func in ("rbm32", "rbm64", "theta_sketch", "hll_sketch"):
+            m = fields[c]
+            if MERGE_FUNCS[m.func].sketch_on:
                 # sketch unions are real per-group math (numpy/wire
                 # format); the per-group call IS the work
-                results[c] = gb[w].apply(_fold_fn(c))
+                results[c] = gb[w].apply(_sketch_union(m))
             else:
                 # structural folds (listagg/collect/merge_map/
                 # nested_update): Arrow kernels + one linear pass, no
@@ -594,11 +416,11 @@ def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str)
                     work[w].to_numpy(dtype=object),
                     codes,
                     len(gindex),
-                    func,
-                    cfg.get("nested_key", {}).get(c) or [],
-                    delimiter=cfg.get("delimiter", {}).get(c, ","),
-                    distinct=c in cfg.get("distinct", set()),
-                    count_limit=cfg.get("count_limit", {}).get(c),
+                    m.func,
+                    m.nested_key,
+                    delimiter=m.delimiter,
+                    distinct=m.distinct,
+                    count_limit=m.count_limit,
                 )
                 results[c] = pd.Series(folded, index=gindex, dtype=object)
     ups_ord = gb["__ups_ord"].max()
@@ -607,7 +429,7 @@ def fold_aggregation(pdf, key_cols: list[str], cfg: dict, seqc: str, kindc: str)
         if results
         else pd.DataFrame(index=ups_ord.index)
     )
-    if cfg.get("remove_on_delete"):
+    if remove_on_delete:
         # keep when the key has NO -D row at all (merge_view's left join
         # yields NULL __del_seq → kept, even for all-retract groups), or
         # when an upsert postdates the latest -D
@@ -702,13 +524,14 @@ def _keep_mask(pred, pdf):
 
 def _side_spec(table, plan, cols, keys, pred) -> dict:
     """What the bucket reader (``read_bucket_side``) needs about one
-    table side, as plain picklable dicts, from a ``ReadBuilder.plan``;
+    table side, as picklable values, from a ``ReadBuilder.plan``;
     ``buckets`` is left empty for bucket_spec/bucket_tasks to fill.
     The plan's snapshot supplies the deletion vectors: a plan without
     one (Table.delta_plan) reads its files as committed.
 
-    Live data-evolution patches raise ValueError: the bucket reader
-    cannot stitch them onto their base rows."""
+    Raises ValueError, before any task runs, on live data-evolution
+    patches (the bucket reader cannot stitch them onto their base rows)
+    and on field merge functions the kernel cannot fold."""
     if plan.patch_entries:
         raise ValueError(
             "the bucket reader cannot stitch data-evolution patch files — "
@@ -724,40 +547,22 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
         for c in schema.options.get("sequence.field", "").split(",")
         if c.strip()
     ]
-    from flink_table_store_spark.operators.merge_engines import seq_descending
-
-    seq_desc = seq_descending(schema)
     pk = bool(schema.primary_keys)
     engine = schema.options.get("merge-engine", "deduplicate")
-    from flink_table_store_spark.operators.merge_engines import _sequence_groups
-
-    seq_groups = _sequence_groups(schema) if engine == "partial-update" else {}
-    rr_groups = []
-    pu_aggs: dict = {}
-    pu_agg_cfg = None
-    if engine == "partial-update" and seq_groups:
-        from flink_table_store_spark.operators.merge_engines import (
-            pu_agg_funcs,
-            remove_record_groups,
-        )
-
-        rr_groups = sorted(remove_record_groups(schema))
-        pu_aggs = pu_agg_funcs(schema)
-        if pu_aggs:
-            # aggregation-for-partial-update: reuse the aggregation
-            # engine's task config, restricted to the aggregated fields.
-            # Take the funcs from _agg_cfg, NOT pu_agg_funcs — _agg_cfg
-            # applies the fields.<f>.distinct collect->collect_distinct
-            # rewrite the Spark expression path performs too.
-            base_cfg = _agg_cfg(schema)
-            pu_aggs = {f: base_cfg["funcs"][f] for f in pu_aggs}
-            # same local-foldability gate the aggregation engine gets —
-            # an unfoldable function must refuse upfront, not TypeError
-            # inside an executor task
-            _check_foldable(pu_aggs, base_cfg["types"])
-            pu_agg_cfg = dict(base_cfg)
-            pu_agg_cfg["funcs"] = dict(pu_aggs)
-            pu_agg_cfg["remove_on_delete"] = False
+    seq_groups: dict = {}
+    rr_groups: list = []
+    merges = None
+    if pk and engine in ("partial-update", "aggregation"):
+        merges = field_merges(schema)
+        bad = sorted(f for f, m in merges.fields.items() if not m.kernel)
+        if bad:
+            raise ValueError(
+                f"cannot fold aggregate-function(s) of fields {bad} "
+                "in the local (pandas) merge — compact() the table first"
+            )
+        if engine == "partial-update":
+            seq_groups = sequence_groups(schema)
+            rr_groups = sorted(remove_record_groups(schema)) if seq_groups else []
     if pred is not None and pred.fields() is None:
         # Raw predicates wrap a py4j-backed Column — unpicklable in the
         # task closure and a no-op for _keep_mask anyway
@@ -786,14 +591,14 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
         "maps": maps,
         "pk": pk,
         "engine": engine,
-        "agg_cfg": _agg_cfg(schema) if engine == "aggregation" else None,
+        # merge_engines.TableMerges: per-field merge functions of an
+        # aggregation / partial-update table
+        "merges": merges,
         "seq_groups": seq_groups,
         "rr_groups": rr_groups,
-        "pu_aggs": pu_aggs,
-        "pu_agg_cfg": pu_agg_cfg,
         "key_cols": key_cols,
         "seq_fields": seq_fields,
-        "seq_desc": seq_desc,
+        "seq_desc": seq_descending(schema),
         "partition_keys": list(schema.partition_keys),
         # a pushed WHERE conjunct filters rows POST-merge in the task,
         # shrinking the join width; its fields must be read even when
@@ -1010,7 +815,11 @@ def read_bucket_side(spec: dict, bucket: int):
             # DropDeleteReader's RowKind.isAdd filter
             pdf = pdf[~pdf[kindc].isin((KIND_DELETE, "-U"))]
         elif spec["engine"] == "aggregation":
-            pdf = fold_aggregation(pdf, spec["key_cols"], spec["agg_cfg"], seqc, kindc)
+            merges = spec["merges"]
+            pdf = fold_aggregation(
+                pdf, spec["key_cols"], merges.fields, seqc, kindc,
+                merges.remove_on_delete,
+            )
         else:  # partial-update: per-column last non-null in order
             pdf["__ord"] = range(len(pdf))
             groups = spec.get("seq_groups") or {}
@@ -1052,7 +861,7 @@ def read_bucket_side(spec: dict, bucket: int):
             # retraction: fields null out, or (remove-record-on-
             # sequence-group) the whole row drops.
             rr = set(spec.get("rr_groups") or ())
-            pu_aggs = spec.get("pu_aggs") or {}
+            pu_aggs = spec["merges"].fields
             for g, fields in groups.items():
                 gcols = [c for c in gcols_of[g] if c in pdf.columns]
                 if not gcols:
@@ -1110,12 +919,10 @@ def read_bucket_side(spec: dict, bucket: int):
                     elig = body[body[gcols].notna().any(axis=1)].sort_values(
                         order, kind="stable", na_position="first"
                     )
-                    sub_cfg = dict(spec["pu_agg_cfg"])
-                    sub_cfg["funcs"] = {c: pu_aggs[c] for c in afields}
                     folded = fold_aggregation(
                         elig[spec["key_cols"] + afields + [kindc]],
                         spec["key_cols"],
-                        sub_cfg,
+                        pu_aggs,
                         seqc,
                         kindc,
                     ).set_index(spec["key_cols"])
@@ -1124,7 +931,7 @@ def read_bucket_side(spec: dict, bucket: int):
                         # reference never initializes the field)
                         merged[c] = folded[c].reindex(merged.index)
             if len(del_rows):
-                # remove-record-on-delete: a -D that is the key's
+                # without sequence groups a -D that is the key's
                 # latest activity drops the record
                 del_ord = del_rows.groupby(
                     spec["key_cols"], sort=False, dropna=False
@@ -1197,8 +1004,6 @@ def join_bucketed(
                     "first-row/partial-update/aggregation semantics "
                     "(MergeFileSplitRead.java:220-231)"
                 )
-            if eng == "aggregation":
-                _check_local_agg_funcs(s)
     if how not in ("inner", "left", "right", "outer"):
         raise ValueError(f"unsupported how={how!r} (inner/left/right/outer)")
 
@@ -1430,8 +1235,6 @@ def join_bucketed_chain(
             eng = s.options.get("merge-engine", "deduplicate")
             if eng not in ("deduplicate", "first-row", "partial-update", "aggregation"):
                 raise ValueError(f"unsupported merge-engine {eng!r} in chain")
-            if eng == "aggregation":
-                _check_local_agg_funcs(s)
 
     cols = cols or [None] * n_sides
     if len(cols) != n_sides:

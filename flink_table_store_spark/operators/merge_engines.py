@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import functools
 import os
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -242,7 +243,7 @@ def fold_winner(
     return select_exprs(grouped, out)
 
 
-def _sequence_groups(schema: TableSchema) -> dict[str, list[str]]:
+def sequence_groups(schema: TableSchema) -> dict[str, list[str]]:
     """{group key: [value fields]} from ``fields.<seq[,seq2...]>.
     sequence-group`` options (PartialUpdateMergeFunction.java:67
     SEQUENCE_GROUP). The key keeps the option's raw comma-joined
@@ -273,41 +274,182 @@ def _group_seq_cols(group_key: str) -> list[str]:
     return [c.strip() for c in group_key.split(",") if c.strip()]
 
 
-def pu_agg_funcs(schema: TableSchema) -> dict[str, str]:
-    """``fields.<f>.aggregate-function`` under the partial-update
-    engine ("Aggregation For Partial Update", partial-update.md:150):
-    per-field aggregators that fold instead of overwrite. ACTIVE ONLY
-    when at least one sequence group exists — without groups the
-    reference's updateNonNullFields ignores aggregators entirely
-    (PartialUpdateMergeFunction.java:227-232). Group sequence columns
-    and keys never aggregate."""
-    groups = _sequence_groups(schema)
-    if not groups:
-        return {}
+# --- per-field merge functions (mergetree/compact/aggregate/factory/) ---
+
+
+class MergeFunc(NamedTuple):
+    """What every merge path needs to know about one aggregate function.
+
+    - ``kernel``: the per-bucket pandas kernel
+      (``bucketed_join.fold_aggregation``) reproduces the Catalyst fold.
+    - ``prefix_safe``: a fold of the NEWEST runs re-merges with older
+      unmerged runs exactly as the unfolded rows would (universal
+      compaction). Run sequence ranges are disjoint and the fold covers
+      the newest prefix, so a folded value attributed to the fold row's
+      (max) sequence still orders above every older run: last/max/sum/
+      union-style functions are untouched, first/min-style ones lose to
+      any older candidate exactly as before. ``count`` is not: its
+      partial count must sit at the OLDEST position to seed the
+      accumulator.
+    - ``group_safe``: the same inside a partial-update sequence group,
+      where the folded row is relabelled with the winner's group
+      version: order-insensitive folds, and ``last_value``, whose value
+      comes from exactly that row.
+    - ``exact_int``: on integral fields the kernel folds through
+      pandas' nullable Int64, never float64 (which rounds above 2^53).
+    - ``sketch_on``: field types (prefixes) that hold sketches merges
+      union; on any other type the function sketches raw values, which
+      neither the kernel nor a partial fold can re-merge.
+    """
+
+    kernel: bool = True
+    prefix_safe: bool = False
+    group_safe: bool = False
+    exact_int: bool = False
+    sketch_on: tuple[str, ...] = ()
+
+
+_PREFIX = MergeFunc(prefix_safe=True)
+_GROUP = MergeFunc(prefix_safe=True, group_safe=True)
+_SKETCH = MergeFunc(prefix_safe=True, sketch_on=("binary", "array"))
+
+# every aggregate function the engine implements, registered once
+MERGE_FUNCS: dict[str, MergeFunc] = {
+    "sum": _GROUP._replace(exact_int=True),
+    "product": _GROUP._replace(exact_int=True),
+    "min": _GROUP._replace(exact_int=True),
+    "max": _GROUP._replace(exact_int=True),
+    "bool_and": _GROUP,
+    "bool_or": _GROUP,
+    "count": MergeFunc(),
+    "first_value": _PREFIX,
+    "first_non_null_value": _PREFIX._replace(exact_int=True),
+    "first_not_null_value": _PREFIX._replace(exact_int=True),
+    "last_value": _GROUP,
+    "last_non_null_value": _PREFIX._replace(exact_int=True),
+    "primary-key": _PREFIX._replace(exact_int=True),
+    "listagg": _PREFIX,
+    "collect": _PREFIX,
+    "collect_distinct": _PREFIX,
+    "merge_map": _PREFIX,
+    "nested_update": _PREFIX,
+    "nested_partial_update": _PREFIX,
+    "rbm32": _SKETCH,
+    "rbm64": _SKETCH,
+    "theta_sketch": _SKETCH,
+    "hll_sketch": _SKETCH._replace(sketch_on=("binary",)),
+}
+
+_INTEGRAL = ("tinyint", "smallint", "int", "integer", "bigint")
+
+
+class FieldMerge(NamedTuple):
+    """One value field's merge function with its options, as every
+    merge path reads it (picklable: bucket tasks ship it)."""
+
+    func: str
+    type: str
+    ignore_retract: bool
+    delimiter: str
+    distinct: bool
+    count_limit: int | None
+    nested_key: tuple[str, ...]
+    theta_k: int
+    group: str | None  # partial-update sequence group key
+    kernel: bool
+    fold_safe: bool  # prefix_safe (aggregation) / group_safe (partial-update)
+    exact_int: bool
+
+
+class TableMerges(NamedTuple):
+    fields: dict[str, FieldMerge]  # value field -> merge, schema order
+    remove_on_delete: bool
+
+
+def field_merges(schema: TableSchema) -> TableMerges:
+    """The per-field merge functions of an aggregation or partial-update
+    table, resolved from its options once for every merge path: the
+    Catalyst folds, the universal-compaction gate and the bucket kernel.
+
+    - aggregation: every value field, by ``fields.<f>.aggregate-function``,
+      else ``fields.default-aggregate-function``, else
+      ``last_non_null_value``.
+    - partial-update ("Aggregation For Partial Update",
+      partial-update.md:150): only with at least one sequence group —
+      without one the reference's updateNonNullFields ignores
+      aggregators entirely (PartialUpdateMergeFunction.java:227-232).
+      Keys and group sequence columns never aggregate; a function on a
+      field outside every group must be ``last_non_null_value`` or
+      ``primary-key``, the engine's own behaviour, and is dropped
+      (getAggFuncName).
+    - ``fields.<f>.distinct=true`` turns ``collect`` into
+      ``collect_distinct``; ``nested_partial_update`` needs
+      ``fields.<f>.nested-key``.
+
+    ``remove_on_delete`` is ``aggregation.remove-record-on-delete``: a
+    trailing ``-D`` drops the whole record."""
+    engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
+    opts = schema.options
     keys = set(_key_cols(schema))
+    default = opts.get("fields.default-aggregate-function")
+    groups = sequence_groups(schema) if engine == ENGINE_PARTIAL_UPDATE else {}
+    group_of = {c: g for g, cols in groups.items() for c in cols}
     seq_cols = {c for g in groups for c in _group_seq_cols(g)}
-    grouped = {c for _g, cols in groups.items() for c in cols}
-    default = schema.options.get("fields.default-aggregate-function")
-    out: dict[str, str] = {}
+    out: dict[str, FieldMerge] = {}
     for f in schema.fields:
-        if f.name in keys or f.name in seq_cols:
+        if f.name in keys:
             continue
-        func = schema.options.get(
-            f"fields.{f.name}.aggregate-function", default
-        )
-        if not func:
+        func = opts.get(f"fields.{f.name}.aggregate-function", default)
+        if engine == ENGINE_AGGREGATION:
+            func = func or "last_non_null_value"
+        elif not groups or f.name in seq_cols or not func:
             continue
-        if f.name not in grouped:
-            # getAggFuncName: only last_non_null_value works without a
-            # sequence group — and it IS the engine's default behavior
+        elif f.name not in group_of:
             if func in ("last_non_null_value", "primary-key"):
                 continue
             raise ValueError(
                 "Must use sequence group for aggregation functions "
                 f"but not found for field {f.name}"
             )
-        out[f.name] = func
-    return out
+        props = MERGE_FUNCS.get(func)
+        if props is None:
+            raise ValueError(f"unsupported aggregate-function {func}")
+        distinct = opts.get(f"fields.{f.name}.distinct", "false") == "true"
+        nested_key = tuple(
+            k.strip()
+            for k in opts.get(f"fields.{f.name}.nested-key", "").split(",")
+            if k.strip()
+        )
+        if func == "nested_partial_update" and not nested_key:
+            raise ValueError(
+                f"nested_partial_update on {f.name!r} requires "
+                f"fields.{f.name}.nested-key"
+            )
+        count_limit = opts.get(f"fields.{f.name}.count-limit")
+        ftype = f.type.lower()
+        typed_ok = not props.sketch_on or ftype.startswith(props.sketch_on)
+        out[f.name] = FieldMerge(
+            func="collect_distinct" if func == "collect" and distinct else func,
+            type=f.type,
+            ignore_retract=opts.get(f"fields.{f.name}.ignore-retract", "false") == "true",
+            delimiter=opts.get(f"fields.{f.name}.list-agg-delimiter", ","),
+            distinct=distinct,
+            count_limit=None if count_limit is None else int(count_limit),
+            nested_key=nested_key,
+            theta_k=int(opts.get(f"fields.{f.name}.theta-sketch.k", "4096")),
+            group=group_of.get(f.name),
+            kernel=props.kernel and typed_ok,
+            fold_safe=typed_ok
+            and (
+                props.group_safe
+                if engine == ENGINE_PARTIAL_UPDATE
+                else props.prefix_safe
+            ),
+            exact_int=props.exact_int and ftype.split("(")[0] in _INTEGRAL,
+        )
+    return TableMerges(
+        out, opts.get("aggregation.remove-record-on-delete", "false") == "true"
+    )
 
 
 def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:
@@ -327,7 +469,7 @@ def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:
     - Group value fields (no aggregator): the winning NON-RETRACT
       row's value, nulls included.
     - Aggregated fields ("Aggregation For Partial Update" — always
-      inside a sequence group; pu_agg_funcs refuses the rest): folded
+      inside a sequence group; field_merges refuses the rest): folded
       by the group's (seq-cols..., seq) order, empty-group rows masked
       out (the reference's isEmptySequenceGroup skip), retracts
       retract winning or not. For order-dependent aggregators with
@@ -339,13 +481,9 @@ def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:
       as sequence.field partial folds.
     """
     keys = _key_cols(schema)
-    opts = schema.options
-    groups = _sequence_groups(schema)
-    agg_funcs = pu_agg_funcs(schema)
-    field_group: dict[str, str] = {}
-    for g, cols in groups.items():
-        for c in cols:
-            field_group[c] = g
+    groups = sequence_groups(schema)
+    merges = field_merges(schema).fields
+    field_group = {c: g for g, cols in groups.items() for c in cols}
     group_ord: dict[str, str] = {}
     prep: list[tuple] = []
     for i, g in enumerate(sorted(groups)):
@@ -364,13 +502,11 @@ def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:
                 ),
             )
         )
-    for fname in agg_funcs:
-        g = field_group.get(fname)
-        if g is not None:
-            # empty-group rows contribute NOTHING to the group's agg
-            prep.append(
-                (fname, F.when(F.col(group_ord[g]).isNotNull(), F.col(fname)))
-            )
+    for fname, m in merges.items():
+        # empty-group rows contribute NOTHING to the group's agg
+        prep.append(
+            (fname, F.when(F.col(group_ord[m.group]).isNotNull(), F.col(fname)))
+        )
 
     not_retract = f"`{VALUE_KIND}` NOT IN ('{KIND_DELETE}', '-U')"
     seq_cols_all = {c for g in groups for c in _group_seq_cols(g)}
@@ -389,15 +525,11 @@ def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:
             aggs.append(
                 F.expr(f"max_by(`{f.name}`, `{group_ord[g]}`)").alias(f.name)
             )
-        elif f.name in agg_funcs:
-            # always sequence-group-gated: pu_agg_funcs refuses any
+        elif f.name in merges:
+            # always sequence-group-gated: field_merges refuses any
             # other aggregator outside a group (getAggFuncName)
-            func = agg_funcs[f.name]
-            ig = opts.get(f"fields.{f.name}.ignore-retract", "false") == "true"
-            g = field_group[f.name]
-            expr = _agg_field_expr(
-                opts, f.name, f.type, func, group_ord[g], retract=not ig
-            )
+            m = merges[f.name]
+            expr = _agg_field_expr(f.name, m, group_ord[m.group])
             aggs.append(expr.cast(f.type).alias(f.name))
         elif f.name in field_group:
             g = field_group[f.name]
@@ -425,7 +557,7 @@ def remove_record_groups(schema: TableSchema) -> set[str]:
         "partial-update.remove-record-on-sequence-group", ""
     )
     named = {c.strip() for c in raw.split(",") if c.strip()}
-    groups = _sequence_groups(schema)
+    groups = sequence_groups(schema)
     rr: set[str] = set()
     unknown = set(named)
     for g in groups:
@@ -452,7 +584,7 @@ def _partial_update(
     """groupBy(key) with per-field max_by — one shuffle, map-side combine.
 
     ``-D`` rows remove the record when they are the latest activity
-    (partial-update.remove-record-on-delete semantics); ``-U`` rows are
+    (the partial-update engine's remove-on-delete); ``-U`` rows are
     silently ignored, exactly the reference's silent ``return`` inside
     the removeRecordOnDelete branch
     (PartialUpdateMergeFunction.java:145-152). With sequence groups,
@@ -464,7 +596,7 @@ def _partial_update(
     """
     keys = _key_cols(schema) + list(extra)
     seq = seq_col
-    groups = _sequence_groups(schema)
+    groups = sequence_groups(schema)
     if groups:
         return _partial_update_with_groups(df, schema, seq, extra=extra)
     upserts = df.where(~F.col(VALUE_KIND).isin(KIND_DELETE, "-U"))
@@ -513,9 +645,9 @@ def _partial_update_with_groups(
     row in the reference (initRow); here earlier groups' pre-delete
     values survive the re-insert."""
     keys = _key_cols(schema) + list(extra)
-    groups = _sequence_groups(schema)
+    groups = sequence_groups(schema)
     rr = remove_record_groups(schema)
-    agg_funcs = pu_agg_funcs(schema)
+    merges = field_merges(schema).fields
     all_seq_cols = [c for g in sorted(groups) for c in _group_seq_cols(g)]
     all_null = " AND ".join(f"`{c}` IS NULL" for c in all_seq_cols)
     is_noop_delete = F.expr(
@@ -552,7 +684,7 @@ def _partial_update_with_groups(
                 ~F.coalesce(F.col(kind_col[g]) == KIND_DELETE, F.lit(False))
             )
         for c in cols:
-            if c in agg_funcs:
+            if c in merges:
                 # aggregated fields RETRACT (winning or not) instead of
                 # nulling out — already folded into the agg expression
                 continue
@@ -588,7 +720,9 @@ def _agg_expr(
             return F.expr(f"sum(CASE WHEN {_RETRACT} THEN -{c} ELSE {c} END)")
         return F.expr(f"sum({v})")
     if func == "product":
-        return F.expr(f"product({v})")
+        # Catalyst's Product aggregate has no SQL name: build it through
+        # the DataFrame function
+        return F.product(F.expr(v))
     if func == "count":
         # associative count (no reference counterpart — aggregate/
         # factory/ has no FieldCountAgg; semantics follow the reference
@@ -704,7 +838,7 @@ def theta_sketch_estimate(sketch, k: int = 4096):
     return F.when(n < k, n.cast("double")).otherwise(F.lit(float(k - 1)) / theta)
 
 
-def _nested_update_keyed(name: str, seq: str, ftype: str, nested_keys: list[str]):
+def _nested_update_keyed(name: str, seq: str, ftype: str, nested_keys: tuple[str, ...]):
     """FieldNestedUpdateAgg with ``fields.<f>.nested-key``: union nested
     rows, then keep only the latest version per nested key. Newest-first
     fold with an exists() check — O(n²) in the nested-array length,
@@ -722,7 +856,7 @@ def _nested_update_keyed(name: str, seq: str, ftype: str, nested_keys: list[str]
 
 
 def _nested_partial_update_expr(
-    name: str, seq: str, ftype: str, nested_keys: list[str]
+    name: str, seq: str, ftype: str, nested_keys: tuple[str, ...]
 ):
     """FieldNestedPartialUpdateAgg: union nested rows in sequence
     order, then PARTIAL-update per nested key — each later row's
@@ -783,77 +917,49 @@ def _listagg_expr(name: str, seq: str, delimiter: str, distinct: bool):
     return F.expr(f"array_join({vals}, {dlit})")
 
 
-def _agg_field_expr(
-    opts: dict, fname: str, ftype: str, func: str, seq: str, retract: bool
-):
+def _agg_field_expr(name: str, m: FieldMerge, seq: str):
     """One field's aggregation expression (merge_map / nested_update /
-    the _agg_expr matrix), ordered by the ``seq`` column — a plain
-    column name, so callers may substitute a precomputed composite
-    order (e.g. a sequence-group struct). Shared by the aggregation
-    engine and aggregation-for-partial-update."""
-    nested_key = opts.get(f"fields.{fname}.nested-key")
-    distinct = opts.get(f"fields.{fname}.distinct", "false") == "true"
-    count_limit = opts.get(f"fields.{fname}.count-limit")
-    if func == "merge_map":
-        c, v = f"`{fname}`", f"(CASE WHEN NOT ({_RETRACT}) THEN `{fname}` END)"
+    the _agg_expr matrix) for its ``field_merges`` entry, ordered by the
+    ``seq`` column — a plain column name, so callers may substitute a
+    precomputed composite order (e.g. a sequence-group struct). Shared
+    by the aggregation engine and aggregation-for-partial-update."""
+    if m.func == "merge_map":
+        c, v = f"`{name}`", f"(CASE WHEN NOT ({_RETRACT}) THEN `{name}` END)"
         # FieldMergeMapAgg: later entries win (needs mapKeyDedupPolicy=LAST_WIN)
         return F.expr(
-            f"aggregate(transform(array_sort(collect_list(CASE WHEN {v} IS NOT NULL THEN struct(`{seq}` AS s, {c} AS v) END), {_SEQ_CMP}), x -> x.v), cast(map() as {ftype}), (acc, x) -> map_concat(acc, x))"
+            f"aggregate(transform(array_sort(collect_list(CASE WHEN {v} IS NOT NULL THEN struct(`{seq}` AS s, {c} AS v) END), {_SEQ_CMP}), x -> x.v), cast(map() as {m.type}), (acc, x) -> map_concat(acc, x))"
         )
-    if func == "nested_partial_update":
-        keys = [k.strip() for k in (nested_key or "").split(",") if k.strip()]
-        if not keys:
-            raise ValueError(
-                f"nested_partial_update on {fname!r} requires "
-                f"fields.{fname}.nested-key"
-            )
-        return _nested_partial_update_expr(fname, seq, ftype, keys)
-    if func == "nested_update":
-        if nested_key:
-            expr = _nested_update_keyed(
-                fname, seq, ftype,
-                [k.strip() for k in nested_key.split(",") if k.strip()],
-            )
+    if m.func == "nested_partial_update":
+        return _nested_partial_update_expr(name, seq, m.type, m.nested_key)
+    if m.func == "nested_update":
+        if m.nested_key:
+            expr = _nested_update_keyed(name, seq, m.type, m.nested_key)
         else:
-            expr = _agg_expr(func, fname, seq, ftype, retract=retract)
-        if count_limit is not None:
+            expr = _agg_expr(m.func, name, seq, m.type, retract=not m.ignore_retract)
+        if m.count_limit is not None:
             # fields.<f>.count-limit (aggregation.md:311): cap the
             # nested table at N rows, selected sequentially
-            expr = F.slice(expr, 1, int(count_limit))
+            expr = F.slice(expr, 1, m.count_limit)
         return expr
-    if func == "collect" and distinct:
-        # fields.<f>.distinct=true (FieldCollectAgg): dedupe elements
-        func = "collect_distinct"
-    if func == "listagg":
-        delimiter = opts.get(f"fields.{fname}.list-agg-delimiter", ",")
-        return _listagg_expr(fname, seq, delimiter, distinct)
+    if m.func == "listagg":
+        return _listagg_expr(name, seq, m.delimiter, m.distinct)
     return _agg_expr(
-        func,
-        fname,
+        m.func,
+        name,
         seq,
-        ftype,
-        retract=retract,
-        sketch_k=int(opts.get(f"fields.{fname}.theta-sketch.k", "4096")),
+        m.type,
+        retract=not m.ignore_retract,
+        sketch_k=m.theta_k,
     )
 
 
-def _aggregation_aggs(schema: TableSchema, seq: str) -> list:
+def _aggregation_aggs(merges: dict[str, FieldMerge], seq: str) -> list:
     """Per-field aggregate expressions of the aggregation engine
     (shared by the full merge and the universal-compaction fold)."""
-    keys = _key_cols(schema)
-    opts = schema.options
-    default_func = opts.get("fields.default-aggregate-function", "last_non_null_value")
-    aggs = []
-    for f in schema.fields:
-        if f.name in keys:
-            continue
-        func = opts.get(f"fields.{f.name}.aggregate-function", default_func)
-        ignore_retract = opts.get(f"fields.{f.name}.ignore-retract", "false") == "true"
-        expr = _agg_field_expr(
-            opts, f.name, f.type, func, seq, retract=not ignore_retract
-        )
-        aggs.append(expr.cast(f.type).alias(f.name))
-    return aggs
+    return [
+        _agg_field_expr(name, m, seq).cast(m.type).alias(name)
+        for name, m in merges.items()
+    ]
 
 
 def _aggregation(
@@ -870,17 +976,16 @@ def _aggregation(
     sequences than fresh level-0 rows — same invariant the LSM merge
     relies on. Retractions (``-U``/``-D`` payloads): sum/count subtract
     (FieldSumAgg.retract); other aggregators ignore the retracted
-    payload (FieldIgnoreRetractAgg). With
-    ``aggregation.remove-record-on-delete`` a trailing ``-D`` drops the
-    whole record instead.
+    payload (FieldIgnoreRetractAgg). With remove-on-delete
+    (``field_merges``) a trailing ``-D`` drops the whole record instead.
     """
     keys = _key_cols(schema) + list(extra)
     seq = seq_col
-    opts = schema.options
-    aggs = _aggregation_aggs(schema, seq)
+    merges = field_merges(schema)
+    aggs = _aggregation_aggs(merges.fields, seq)
     aggs.append(F.max(F.expr(f"CASE WHEN NOT ({_RETRACT}) THEN `{seq}` END")).alias("__ups_seq"))
     merged = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    if opts.get("aggregation.remove-record-on-delete", "false") == "true":
+    if merges.remove_on_delete:
         deletes = (
             df.where(F.col(VALUE_KIND) == KIND_DELETE)
             .groupBy(*[F.col(k) for k in keys])
@@ -894,48 +999,6 @@ def _aggregation(
 
 # --- universal (partial) compaction folds (SURVEY §4.2; T13) ---
 
-# aggregation functions whose newest-runs fold re-merges with OLDER
-# unmerged runs exactly as the unfolded rows would. The key invariant:
-# run sequence ranges are disjoint and the fold covers the newest
-# prefix, so a folded value attributed to the fold row's (max) sequence
-# still orders ABOVE every older run — last/max/sum/union-style
-# functions are untouched, first/min-style functions lose to any older
-# candidate exactly as before. Excluded: ``count`` (its partial count
-# must sit at the OLDEST position to seed the accumulator — a fold of
-# the newest runs would re-count it as one input).
-_FOLD_SAFE_AGGS = frozenset(
-    {
-        "sum",
-        "product",
-        "min",
-        "max",
-        "bool_and",
-        "bool_or",
-        "first_value",
-        "first_non_null_value",
-        "first_not_null_value",
-        "last_value",
-        "last_non_null_value",
-        "primary-key",
-        "listagg",
-        "collect",
-        "collect_distinct",
-        "rbm32",
-        "rbm64",
-        "merge_map",
-        "nested_update",
-        "nested_partial_update",
-    }
-)
-
-# GROUP-gated aggregators safe under a partial fold: order-insensitive
-# folds, plus last_value (whose folded value comes from exactly the row
-# whose group sequence labels the folded output)
-_GROUP_FOLD_SAFE_AGGS = frozenset(
-    {"sum", "product", "min", "max", "bool_and", "bool_or", "last_value"}
-)
-
-
 def fold_supported(schema: TableSchema) -> bool:
     """True when this table's merge engine folds ASSOCIATIVELY over the
     newest runs only, so universal compaction may rewrite a partial run
@@ -943,51 +1006,20 @@ def fold_supported(schema: TableSchema) -> bool:
     dropDelete=false). deduplicate/first-row always qualify (their fold
     is ``fold_winner``, the winner row by effective sequence);
     partial-update and aggregation qualify when every field function
-    is newest-prefix associative. A user ``sequence.field``
-    re-attributes folded last-non-null fields at the folded row's
-    version, which is wrong ONLY when an unselected older run holds an
-    intermediate version — per-bucket file stats decide that at pick
-    time (Table._fold_seq_guard): guarded-OK picks fold partially,
-    guard failures promote to a whole-bucket merge (always sound; no
-    older run remains). Keys carrying retract/delete rows never fold —
-    they pass through ``fold_runs`` unchanged."""
+    is fold-safe (``MergeFunc.prefix_safe`` / ``group_safe``). A user
+    ``sequence.field`` re-attributes folded last-non-null fields at the
+    folded row's version, which is wrong ONLY when an unselected older
+    run holds an intermediate version — per-bucket file stats decide
+    that at pick time (Table._fold_seq_guard): guarded-OK picks fold
+    partially, guard failures promote to a whole-bucket merge (always
+    sound; no older run remains). Keys carrying retract/delete rows
+    never fold — they pass through ``fold_runs`` unchanged."""
     engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
     if engine in (ENGINE_DEDUPLICATE, ENGINE_FIRST_ROW):
         return True
-    if engine == ENGINE_PARTIAL_UPDATE:
-        # aggregation-for-partial-update (every aggregated field sits
-        # inside a sequence group): GROUP-gated agg fields fold-safe
-        # only when order-insensitive OR when the folded label (the
-        # winning row's group seq) IS the row the value came from
-        # (last_value) — a folded first_value / last_non_null relabeled
-        # with the winner's version would lose to / beat older runs it
-        # shouldn't
-        return all(
-            func in _GROUP_FOLD_SAFE_AGGS
-            for func in pu_agg_funcs(schema).values()
-        )
-    if engine != ENGINE_AGGREGATION:
+    if engine not in (ENGINE_PARTIAL_UPDATE, ENGINE_AGGREGATION):
         return False
-    keys = set(_key_cols(schema))
-    opts = schema.options
-    default_func = opts.get("fields.default-aggregate-function", "last_non_null_value")
-    for f in schema.fields:
-        if f.name in keys:
-            continue
-        func = opts.get(f"fields.{f.name}.aggregate-function", default_func)
-        if not _fold_safe_func(func, f.type.lower()):
-            return False
-    return True
-
-
-def _fold_safe_func(func: str, ftype: str) -> bool:
-    """Whether one input-seq-ordered aggregator is newest-prefix
-    associative (foldable over the newest runs only)."""
-    if func == "hll_sketch":
-        return ftype == "binary"  # raw-value sketching is not re-mergeable
-    if func == "theta_sketch":
-        return ftype == "binary" or ftype.startswith("array")
-    return func in _FOLD_SAFE_AGGS
+    return all(m.fold_safe for m in field_merges(schema).fields.values())
 
 
 def fold_runs(df: DataFrame, schema: TableSchema, bucket_col: str) -> DataFrame:
@@ -1022,7 +1054,7 @@ def fold_runs(df: DataFrame, schema: TableSchema, bucket_col: str) -> DataFrame:
         prep, aggs = _partial_update_aggs(schema, seq_col)
     elif engine == ENGINE_AGGREGATION:
         bad_kinds = list(UNFOLDABLE_KINDS)
-        prep, aggs = [], _aggregation_aggs(schema, seq_col)
+        prep, aggs = [], _aggregation_aggs(field_merges(schema).fields, seq_col)
     else:  # pragma: no cover — deduplicate/first-row use fold_winner
         raise ValueError(f"fold_runs does not handle merge-engine {engine}")
 

@@ -149,9 +149,17 @@ def test_nested_partial_update_requires_key(spark, warehouse):
             "fields.rows.aggregate-function": "nested_partial_update",
         },
     )
-    t.write(spark.createDataFrame([(1, [(1, "a")])], ddl))
-    with _pytest.raises(ValueError, match="nested-key"):
-        t.to_df(spark).collect()
+    t.write(spark.createDataFrame([(1, [(1, "a"), (2, "b")])], ddl))
+    t.refresh().write(spark.createDataFrame([(1, [(3, "c")])], ddl))
+    t = t.refresh()
+    # every surface refuses: none may collapse the two runs to one row
+    for read in (lambda: t.to_df(spark).collect(), lambda: t.to_arrow()):
+        with _pytest.raises(ValueError, match="nested-key"):
+            read()
+    # the format surface plans in a Python data source: Spark reports
+    # the planner's ValueError as an AnalysisException naming it
+    with _pytest.raises(Exception, match="ValueError: .*nested-key"):
+        spark.read.format("ftss").load(t.path).collect()
 
 
 def test_pu_agg_options_parity_in_bucketed_join(spark, warehouse):
@@ -195,3 +203,168 @@ def test_pu_agg_options_parity_in_bucketed_join(spark, warehouse):
     t2.write(spark.createDataFrame([(1, 1, 5)], "k bigint, g int, h bigint"))
     with _pytest.raises(ValueError, match="cannot fold"):
         join_bucketed(spark, t2.refresh(), t2.refresh()).collect()
+
+
+def _kernel_fixture(spark):
+    """{function: (column type, value(key, run), extra options)} — one
+    column per function the merge table marks kernel-foldable."""
+    from pyspark.sql import functions as F
+
+    from flink_table_store_spark.functions import sketches as S
+
+    hll = {
+        r.i: bytes(r.h)
+        for r in spark.range(0, 160)
+        .selectExpr("id % 4 AS i", "id")
+        .groupBy("i")
+        .agg(F.expr("hll_sketch_agg(id)").alias("h"))
+        .collect()
+    }
+
+    def maybe(k, i, v):
+        return None if (k + i) % 3 == 0 else v
+
+    return {
+        "sum": ("bigint", lambda k, i: 10 * k + i, {}),
+        "count": ("bigint", lambda k, i: i + 1, {}),
+        "product": ("bigint", lambda k, i: i + 2, {}),
+        "min": ("int", lambda k, i: (7 * k + 3 * i) % 11, {}),
+        "max": ("int", lambda k, i: (7 * k + 3 * i) % 11, {}),
+        "bool_and": ("boolean", lambda k, i: (k + i) % 2 == 0, {}),
+        "bool_or": ("boolean", lambda k, i: (k + i) % 3 == 0, {}),
+        "first_value": ("string", lambda k, i: maybe(k, i, f"v{k}_{i}"), {}),
+        "first_non_null_value": ("string", lambda k, i: maybe(k, i, f"a{k}_{i}"), {}),
+        "first_not_null_value": ("string", lambda k, i: maybe(k, i + 1, f"b{k}_{i}"), {}),
+        "last_value": ("string", lambda k, i: maybe(k, i, f"c{k}_{i}"), {}),
+        "last_non_null_value": ("string", lambda k, i: maybe(k, i, f"d{k}_{i}"), {}),
+        "primary-key": ("string", lambda k, i: maybe(k, i + 2, f"e{k}_{i}"), {}),
+        "listagg": ("string", lambda k, i: f"t{i}", {"list-agg-delimiter": "|"}),
+        "collect": ("array<int>", lambda k, i: [i, k], {}),
+        "collect_distinct": ("array<int>", lambda k, i: [i % 2, k], {}),
+        "merge_map": ("map<string,int>", lambda k, i: {f"m{i % 2}": i, f"k{k}": i}, {}),
+        "nested_update": (
+            "array<struct<id:int, v:string>>",
+            lambda k, i: [(i % 2, f"n{k}_{i}")],
+            {"nested-key": "id"},
+        ),
+        "nested_partial_update": (
+            "array<struct<id:int, v:string>>",
+            lambda k, i: [(i % 2, None if i == 2 else f"p{k}_{i}")],
+            {"nested-key": "id"},
+        ),
+        "rbm32": ("binary", lambda k, i: S.rbm32_serialize([k, i, 7]), {}),
+        "rbm64": ("binary", lambda k, i: S.rbm64_serialize([k, (1 << 40) + i]), {}),
+        "theta_sketch": (
+            "binary",
+            lambda k, i: S.theta_sketch_of(range(10 * i, 10 * i + 20 + k)),
+            {},
+        ),
+        "hll_sketch": ("binary", lambda k, i: hll[(k + i) % 4], {}),
+    }
+
+
+def _canon(v, func):
+    """One spelling per merged value across Spark rows and Arrow lists;
+    sketches compare by what they hold, not by their bytes."""
+    import numpy as np
+    from pyspark.sql import Row
+
+    from flink_table_store_spark.functions import sketches as S
+
+    if v is None:
+        return None
+    decode = {
+        "rbm32": lambda b: sorted(int(x) for x in S.rbm32_deserialize(b)),
+        "rbm64": lambda b: sorted(int(x) for x in S.rbm64_deserialize(b)),
+        "theta_sketch": S.theta_estimate,
+        "hll_sketch": S.hll_estimate,
+    }.get(func)
+    if decode is not None:
+        return decode(bytes(v))
+    if func == "merge_map":
+        return dict(v.items() if isinstance(v, dict) else v)
+    if isinstance(v, Row):
+        return v.asDict()
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return [_canon(x, None) for x in v]
+    return v
+
+
+def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse):
+    """Table-driven parity: one aggregation column per kernel-foldable
+    function of ``merge_engines.MERGE_FUNCS``, three runs plus a -U and
+    a -D; the Catalyst fold (``to_df``) and the bucket kernel
+    (``to_arrow``, ``format("ftss")``) must agree on every column. A
+    function registered without a fixture column fails here. The
+    fold-safe columns alone must survive a universal compaction
+    unchanged."""
+    from flink_table_store_spark.operators.merge_engines import (
+        MERGE_FUNCS,
+        field_merges,
+        fold_supported,
+    )
+
+    fixture = _kernel_fixture(spark)
+    assert set(fixture) == {f for f, p in MERGE_FUNCS.items() if p.kernel}
+    col = {f: "c_" + f.replace("-", "_") for f in fixture}
+
+    def create(name, funcs):
+        options = {"bucket": "2", "merge-engine": "aggregation"}
+        for f in funcs:
+            options[f"fields.{col[f]}.aggregate-function"] = f
+            for opt, val in fixture[f][2].items():
+                options[f"fields.{col[f]}.{opt}"] = val
+        ddl = ", ".join(["k int"] + [f"{col[f]} {fixture[f][0]}" for f in funcs])
+        return warehouse.create_table(name, ddl, primary_keys=["k"], options=options), ddl
+
+    def write(t, ddl, funcs, rows):
+        data = [(k, *[fixture[f][1](k, i) for f in funcs], rk) for k, i, rk in rows]
+        t.refresh().write(spark.createDataFrame(data, ddl + ", rk string"), row_kind_col="rk")
+
+    runs = [
+        [(k, 0, "+I") for k in range(4)],
+        [(k, 1, "+I") for k in range(4)],
+        # retract payloads repeat run 1's values: sum/count subtract
+        [(1, 1, "-U"), (2, 1, "-D"), (0, 2, "+I"), (3, 2, "+I")],
+        [(1, 3, "+U"), (3, 3, "+I")],
+    ]
+
+    def merged(records, funcs):
+        return {
+            r["k"]: tuple(_canon(r[col[f]], f) for f in funcs) for r in records
+        }
+
+    funcs = list(fixture)
+    t, ddl = create("db.agkernel", funcs)
+    assert all(m.kernel for m in field_merges(t.schema).fields.values())
+    for rows in runs:
+        write(t, ddl, funcs, rows)
+    t = t.refresh()
+    want = merged(t.to_df(spark).collect(), funcs)
+    assert sorted(want) == [0, 1, 2, 3]
+    surfaces = {
+        "to_arrow": merged(t.to_arrow().to_pylist(), funcs),
+        "ftss": merged(spark.read.format("ftss").load(t.path).collect(), funcs),
+    }
+    for name, got in surfaces.items():
+        for k in want:
+            diff = {
+                f: (g, w)
+                for f, g, w in zip(funcs, got.get(k, ()), want[k])
+                if g != w
+            }
+            assert got.get(k) == want[k], f"{name} key {k}: {diff}"
+
+    safe = [
+        f for f in funcs if field_merges(t.schema).fields[col[f]].fold_safe
+    ]
+    assert "count" not in safe and "sum" in safe
+    t2, ddl2 = create("db.agkernel_safe", safe)
+    assert fold_supported(t2.schema)
+    for rows in runs:
+        write(t2, ddl2, safe, rows)
+    before = merged(t2.refresh().to_df(spark).collect(), safe)
+    snap = t2.refresh().snapshots.latest_id()
+    t2.refresh().compact(spark, full=False, trigger_runs=2)
+    assert t2.refresh().snapshots.latest_id() > snap  # it did compact
+    assert merged(t2.refresh().to_df(spark).collect(), safe) == before

@@ -318,9 +318,10 @@ def test_bucketed_join_sequence_field_table(spark, warehouse):
 
 def test_bucketed_join_aggregation_engine_table(spark, warehouse):
     """Aggregation-engine tables join WITHOUT compact-first: the bucket
-    tasks run the table's own per-field folds (fold_aggregation mirrors
-    merge_engines._agg_expr). Equivalence oracle: the proven merge-on-
-    read path (to_df) + a regular join."""
+    tasks run the table's own per-field folds (fold_aggregation folds
+    the same merge_engines.field_merges entries as the Catalyst path).
+    Equivalence oracle: the proven merge-on-read path (to_df) + a
+    regular join."""
     ddl = "k bigint, n bigint, hi double, lo double, last string, tag string"
     t1 = warehouse.create_table(
         "db.bjagg",
@@ -358,10 +359,12 @@ def test_bucketed_join_aggregation_engine_table(spark, warehouse):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
-    # hll_sketch on a NON-binary field (raw-value sketching) still
-    # requires compact-first; binary hll fields fold locally (see
+    # hll_sketch on a NON-binary field (raw-value sketching) cannot
+    # fold in the kernel; binary hll fields fold locally (see
     # test_bucketed_join_hll_sketch_binary_fold)
     import pytest
+
+    from flink_table_store_spark.operators.lookup import PartialLookupTable
 
     t3 = warehouse.create_table(
         "db.bjagg_bad",
@@ -374,8 +377,19 @@ def test_bucketed_join_aggregation_engine_table(spark, warehouse):
         },
     )
     t3.write(spark.createDataFrame([(1, "x")], "k bigint, h string"))
-    with pytest.raises(ValueError, match="compact"):
-        join_bucketed(spark, t3.refresh(), t2, on=[("k", "k")])
+    t3 = t3.refresh()
+    # every kernel surface refuses at plan time, before a task runs
+    for read in (
+        lambda: join_bucketed(spark, t3, t2, on=[("k", "k")]),
+        lambda: t3.to_arrow(),
+        lambda: PartialLookupTable(spark, t3).lookup({"k": 1}),
+    ):
+        with pytest.raises(ValueError, match="compact"):
+            read()
+    # the format surface plans in a Python data source: Spark reports
+    # the planner's ValueError as an AnalysisException naming it
+    with pytest.raises(Exception, match="ValueError: .*compact"):
+        spark.read.format("ftss").load(t3.path).collect()
 
 
 def test_bucketed_join_aggregation_sketch_fields(spark, warehouse):
@@ -447,6 +461,22 @@ def test_bucketed_join_aggregation_array_sketch_fields(spark, warehouse):
     assert got[2] == ([3], [])
 
 
+def _agg_merges(ddl: dict, **options):
+    """field_merges of a PK-``k`` aggregation table with columns
+    ``ddl`` ({name: type}) and ``options``."""
+    from flink_table_store_spark.operators.merge_engines import field_merges
+    from flink_table_store_spark.schema import DataField, TableSchema
+
+    return field_merges(
+        TableSchema(
+            id=0,
+            fields=[DataField(i, n, ty) for i, (n, ty) in enumerate(ddl.items())],
+            primary_keys=["k"],
+            options={"merge-engine": "aggregation", **options},
+        )
+    )
+
+
 def test_fold_aggregation_bigint_exact_above_2_53():
     """Integral folds must not transit float64: sum/min/max over bigints
     above 2^53 mixed with nulls stay exact (the same Arrow/pandas
@@ -467,15 +497,15 @@ def test_fold_aggregation_bigint_exact_above_2_53():
             "__kind": ["+I", "+I", "+I"],
         }
     )
-    cfg = {
-        "funcs": {"n": "sum", "hi": "max"},
-        "ignore_retract": set(),
-        "types": {"n": "bigint", "hi": "bigint"},
-        "k": {},
-        "default": "sum",
-        "remove_on_delete": False,
-    }
-    out = fold_aggregation(pdf, ["k"], cfg, "__seq", "__kind")
+    merges = _agg_merges(
+        {"k": "bigint", "n": "bigint", "hi": "bigint"},
+        **{
+            "fields.n.aggregate-function": "sum",
+            "fields.hi.aggregate-function": "max",
+        },
+    )
+    assert merges.fields["n"].exact_int and not merges.remove_on_delete
+    out = fold_aggregation(pdf, ["k"], merges.fields, "__seq", "__kind")
     [r] = list(out.itertuples())
     # a float64 round-trip would land on 2^53 + 2 or 2^53 + 4 instead
     assert int(r.n) == big + 2
@@ -699,15 +729,16 @@ def test_fold_aggregation_all_retract_group_kept_with_remove_on_delete():
             "__kind": ["-U", "-U", "+I"],
         }
     )
-    cfg = {
-        "funcs": {"n": "sum"},
-        "ignore_retract": set(),
-        "types": {"n": "bigint"},
-        "k": {},
-        "default": "sum",
-        "remove_on_delete": True,
-    }
-    out = fold_aggregation(pdf, ["k"], cfg, "__seq", "__kind")
+    merges = _agg_merges(
+        {"k": "bigint", "n": "bigint"},
+        **{
+            "fields.default-aggregate-function": "sum",
+            "aggregation.remove-record-on-delete": "true",
+        },
+    )
+    out = fold_aggregation(
+        pdf, ["k"], merges.fields, "__seq", "__kind", merges.remove_on_delete
+    )
     got = {r.k: r.n for r in out.itertuples()}
     assert set(got) == {1, 2}  # key 1 NOT dropped
     assert got[1] == -8.0  # retracts subtract

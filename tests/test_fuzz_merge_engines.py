@@ -12,8 +12,8 @@ parity testing found two real wrong-answer bugs (sequence-group
 shadowing; merge_map analysis crash), and it directly audits round 5's
 partial-fold rewrite (merge_engines.fold_runs) against unmerged runs.
 The same read goes through every surface — ``to_df`` (the Catalyst
-fold), the local Arrow reader, ``format("ftss")`` and
-``PartialLookupTable`` (the per-bucket pandas kernel) — and all must
+fold), the local Arrow reader, ``format("ftss")``, ``PartialLookupTable``
+and the bucketed joins (the per-bucket pandas kernel) — and all must
 agree, so the kernel is checked against the same oracle.
 
 Oracle model: a global row counter stands in for _SEQUENCE_NUMBER —
@@ -96,8 +96,14 @@ def _norm(v, ddl: str = ""):
 def _read(spark, t, keys=range(25)):
     """The merged read of ``t`` keyed by its first column. Every read
     surface must return it: ``to_df``, the local Arrow reader, the
-    ``ftss`` format and a ``PartialLookupTable`` probed for every key
-    of ``keys`` (absent and deleted keys must answer None)."""
+    ``ftss`` format, a ``PartialLookupTable`` probed for every key of
+    ``keys`` (absent and deleted keys must answer None), and inner
+    bucketed self-joins (two-table and chain) projected to the base
+    table's columns."""
+    from flink_table_store_spark.operators.bucketed_join import (
+        join_bucketed,
+        join_bucketed_chain,
+    )
     from flink_table_store_spark.operators.lookup import PartialLookupTable
     from flink_table_store_spark.sources.datasource import register_data_source
 
@@ -120,6 +126,10 @@ def _read(spark, t, keys=range(25)):
         "to_arrow": by_key(t.read_builder().to_arrow().to_pylist()),
         "ftss": by_key(spark.read.format("ftss").load(t.path).collect()),
         "lookup": by_key(r for r in found if r is not None),
+        "join_bucketed": by_key(join_bucketed(spark, t, t).select(*names).collect()),
+        "join_bucketed_chain": by_key(
+            join_bucketed_chain(spark, [t, t]).select(*names).collect()
+        ),
     }
     for name, other in surfaces.items():
         assert other == got, (

@@ -1,6 +1,7 @@
-"""Modules do not reach into the bucket reader's private helpers: any
-``_``-prefixed name of ``operators.bucketed_join`` used outside that
-module is a second implementation waiting to drift."""
+"""Modules do not reach into the merge engines' private helpers: any
+``_``-prefixed name of ``operators.bucketed_join`` (the bucket kernel)
+or ``operators.merge_engines`` (the Catalyst folds) used outside its
+own module is a second implementation waiting to drift."""
 
 from __future__ import annotations
 
@@ -10,7 +11,10 @@ import os
 import flink_table_store_spark
 
 PKG_DIR = os.path.dirname(flink_table_store_spark.__file__)
-KERNEL = "flink_table_store_spark.operators.bucketed_join"
+GUARDED = (
+    "flink_table_store_spark.operators.bucketed_join",
+    "flink_table_store_spark.operators.merge_engines",
+)
 
 
 def _module_name(path: str, pkg_dir: str) -> str:
@@ -26,26 +30,28 @@ def _resolve(node: ast.ImportFrom, module: str, is_pkg: bool) -> str:
     return ".".join(base + ([node.module] if node.module else []))
 
 
-def private_kernel_uses(path: str, pkg_dir: str = PKG_DIR) -> list[str]:
-    """``file:line name`` for every private kernel name the file imports
-    or reads off an imported kernel module."""
+def private_uses(path: str, pkg_dir: str = PKG_DIR) -> list[str]:
+    """``file:line name`` for every private name of a guarded module
+    that the file imports or reads off an imported guarded module —
+    except the module's own file."""
     with open(path) as f:
         tree = ast.parse(f.read(), path)
     module = _module_name(path, pkg_dir)
     is_pkg = path.endswith("__init__.py")
-    aliases: set[str] = set()  # local names bound to the kernel module
+    guarded = set(GUARDED) - {module}
+    aliases: set[str] = set()  # local names bound to a guarded module
     found = []
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom):
             src = _resolve(node, module, is_pkg)
             for a in node.names:
-                if src == KERNEL and a.name.startswith("_"):
+                if src in guarded and a.name.startswith("_"):
                     found.append(f"{path}:{node.lineno} {a.name}")
-                if f"{src}.{a.name}" == KERNEL:
+                if f"{src}.{a.name}" in guarded:
                     aliases.add(a.asname or a.name)
         elif isinstance(node, ast.Import):
             for a in node.names:
-                if a.name == KERNEL and a.asname:
+                if a.name in guarded and a.asname:
                     aliases.add(a.asname)
     for node in ast.walk(tree):
         if (
@@ -59,15 +65,13 @@ def private_kernel_uses(path: str, pkg_dir: str = PKG_DIR) -> list[str]:
     return found
 
 
-def test_no_private_imports_of_the_bucket_kernel():
-    kernel_file = os.path.join(PKG_DIR, "operators", "bucketed_join.py")
+def test_no_private_imports_of_the_merge_engines():
     found = []
     for root, _dirs, files in os.walk(PKG_DIR):
         for name in files:
-            path = os.path.join(root, name)
-            if name.endswith(".py") and path != kernel_file:
-                found += private_kernel_uses(path)
-    assert not found, "private bucketed_join names used outside it:\n" + "\n".join(found)
+            if name.endswith(".py"):
+                found += private_uses(os.path.join(root, name))
+    assert not found, "private merge-engine names used outside their module:\n" + "\n".join(found)
 
 
 def test_checker_sees_each_import_form(tmp_path):
@@ -79,6 +83,18 @@ def test_checker_sees_each_import_form(tmp_path):
         "from .bucketed_join import _b\n"
         "from flink_table_store_spark.operators import bucketed_join as bj\n"
         "bj._c(bj.public)\n"
+        "from flink_table_store_spark.operators.merge_engines import _d, ok2\n"
+        "from .merge_engines import _e\n"
+        "from flink_table_store_spark.operators import merge_engines as me\n"
+        "me._f(me.public)\n"
     )
-    got = [s.split(" ")[1] for s in private_kernel_uses(str(src), str(pkg))]
-    assert got == ["_a", "_b", "bj._c"]
+    got = [s.split(" ")[1] for s in private_uses(str(src), str(pkg))]
+    assert got == ["_a", "_b", "_d", "_e", "bj._c", "me._f"]
+    # a module may use its own private names
+    own = pkg / "operators" / "merge_engines.py"
+    own.write_text(
+        "from flink_table_store_spark.operators.merge_engines import _g\n"
+        "from .bucketed_join import _h\n"
+    )
+    got = [s.split(" ")[1] for s in private_uses(str(own), str(pkg))]
+    assert got == ["_h"]

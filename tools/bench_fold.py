@@ -98,7 +98,7 @@ def run(n_rows: int = 100_000) -> dict:
         for func in ("listagg", "collect", "merge_map"):
             vals, codes = _mk(func, n_rows, n_groups, rng)
             t0 = time.perf_counter()
-            arrow = _structural_fold(vals, codes, n_groups, func, [])
+            arrow = _structural_fold(vals, codes, n_groups, func, ())
             t_arrow = time.perf_counter() - t0
             t0 = time.perf_counter()
             ref = _apply_reference(vals, codes, n_groups, func)
