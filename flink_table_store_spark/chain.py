@@ -315,7 +315,7 @@ def chain_read(
         parts.append(rb.to_df(spark))
     if merged is not None:
         if predicate is not None:
-            merged = merged.where(predicate.to_column())
+            merged = merged.where(predicate.to_column(schema.field_names()))
         if projection:
             merged = merged.select(*projection)
         parts.append(merged)

@@ -17,10 +17,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import date, datetime
 from decimal import Decimal
-from typing import Any
+from typing import Any, Collection
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from flink_table_store_spark.schema import quote_ident
 
 
 def _norm(v: Any) -> Any:
@@ -49,7 +51,10 @@ class Predicate:
         predicates return True (unknown)."""
         raise NotImplementedError
 
-    def to_column(self) -> Column:
+    def to_column(self, columns: Collection[str] = ()) -> Column:
+        """The predicate as a Spark Column. A field named in ``columns``
+        (the frame's top-level columns) is that column even when its name
+        holds a dot; any other dotted field is a struct-leaf path."""
         raise NotImplementedError
 
     def to_arrow_expr(self):
@@ -207,8 +212,9 @@ class Leaf(Predicate):
             return self.literals[0] <= typed <= self.literals[1]
         return True
 
-    def to_column(self) -> Column:
-        c, lits = F.col(self.field), self.literals
+    def to_column(self, columns: Collection[str] = ()) -> Column:
+        c = F.col(quote_ident(self.field) if self.field in columns else self.field)
+        lits = self.literals
         return {
             "=": lambda: c == lits[0],
             "<>": lambda: c != lits[0],
@@ -271,10 +277,10 @@ class And(Predicate):
             out |= f
         return out
 
-    def to_column(self) -> Column:
-        col = self.children[0].to_column()
+    def to_column(self, columns: Collection[str] = ()) -> Column:
+        col = self.children[0].to_column(columns)
         for c in self.children[1:]:
-            col = col & c.to_column()
+            col = col & c.to_column(columns)
         return col
 
     def to_arrow_expr(self):
@@ -303,10 +309,10 @@ class Or(Predicate):
             out |= f
         return out
 
-    def to_column(self) -> Column:
-        col = self.children[0].to_column()
+    def to_column(self, columns: Collection[str] = ()) -> Column:
+        col = self.children[0].to_column(columns)
         for c in self.children[1:]:
-            col = col | c.to_column()
+            col = col | c.to_column(columns)
         return col
 
     def to_arrow_expr(self):
@@ -334,7 +340,7 @@ class Raw(Predicate):
     def fields(self):
         return None
 
-    def to_column(self) -> Column:
+    def to_column(self, columns: Collection[str] = ()) -> Column:
         return self.column
 
     def to_arrow_expr(self):

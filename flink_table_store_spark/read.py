@@ -676,7 +676,7 @@ def build_dataframe(
         df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     if predicate is not None:
-        df = df.where(predicate.to_column())
+        df = df.where(predicate.to_column(schema.field_names()))
     if projection:
         df = df.select(*projection)
     if limit is not None:

@@ -1042,9 +1042,8 @@ class Table:
                 snap = self._delete_with_dv(spark, predicate)
             else:
                 # strategy 2b: copy-on-write rewrite of touched files
-                snap = self._rewrite_files(
-                    spark, predicate, lambda df: df.where(~predicate.to_column())
-                )
+                cond = predicate.to_column(schema.field_names())
+                snap = self._rewrite_files(spark, predicate, lambda df: df.where(~cond))
         if staging_cl is not None:
             import shutil as _shutil
             import uuid as _uuid
@@ -1110,7 +1109,7 @@ class Table:
             dv=read_mod.dv_dataframe(spark, self.path, snap.dv_files),
             keep_meta=True,
         )
-        positions = df.where(predicate.to_column()).select(
+        positions = df.where(predicate.to_column(self.schema.field_names())).select(
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("file_name"),
             F.col("_metadata.row_index").alias("pos"),
         )
@@ -1227,7 +1226,7 @@ class Table:
                 df = df.withColumn(k, v if hasattr(v, "_jc") or "Column" in type(v).__name__ else F.lit(v))
             # a row-tracking CoW rewrite carries _ROW_ID through the update
             keep = schema.field_names() + [c for c in ("_ROW_ID",) if c in df.columns]
-            return df.select(*keep)
+            return df.select(*[F.col(quote_ident(c)) for c in keep])
 
         if self.is_primary_key_table():
             rows = apply_set(self.to_df(spark, predicate=predicate))
@@ -1236,12 +1235,11 @@ class Table:
             # data-evolution append tables update by COLUMN PATCH, not
             # copy-on-write: only the assigned columns hit storage
             return self.update_columns(spark, predicate, assignments)
+        cond = predicate.to_column(schema.field_names())
         return self._rewrite_files(
             spark,
             predicate,
-            lambda df: df.where(~predicate.to_column()).unionByName(
-                apply_set(df.where(predicate.to_column()))
-            ),
+            lambda df: df.where(~cond).unionByName(apply_set(df.where(cond))),
         )
 
     def merge_into(
@@ -2468,7 +2466,7 @@ class Table:
         base = self._rows_with_ids(spark, plan.raw_entries, snap.dv_files if snap else None)
         df = self._apply_patches(spark, base, plan.patch_entries)
         if predicate is not None:
-            df = df.where(predicate.to_column())
+            df = df.where(predicate.to_column(self.schema.field_names()))
         if not keep_row_id:
             df = df.drop("_ROW_ID")
         if projection is not None:
@@ -2521,7 +2519,7 @@ class Table:
         )
         rows = self._read_stitched(spark, plan, snap, keep_row_id=True)
         if predicate is not None:
-            rows = rows.where(predicate.to_column())
+            rows = rows.where(predicate.to_column(self.schema.field_names()))
         upd_cols = sorted(assignments)
         exprs = [
             (F.expr(v) if isinstance(v, str) else v).alias(c)

@@ -1,4 +1,4 @@
-"""Write path: executors write bucketed parquet, driver commits.
+"""Write path: bucketed parquet is staged, the driver commits.
 
 Mirrors the reference two-phase shape (SURVEY §3.2/§3.3):
 ``PaimonSparkWriter.write`` repartitions by (partition, bucket)
@@ -7,9 +7,10 @@ files whose metadata flows back to the driver (the CommitMessage hop,
 table/sink/BatchTableWrite.java:33), and the driver commits
 (FileStoreCommitImpl). Here the executor side is a plain Spark
 parquet write into a staging dir — Catalyst/Tungsten do the shuffle
-and encoding — and the driver turns staged files into manifest
-entries. Sequence numbers mirror MergeTreeWriter.java:111 (monotonic
-per table, assigned at write).
+and encoding — or, for rows already on the driver, a pyarrow write
+there; the driver turns staged files into manifest entries. Sequence
+numbers mirror MergeTreeWriter.java:111 (monotonic per table,
+assigned at write).
 
 Scale note: the driver-side stats collection walks one parquet footer
 per staged file (no data read). At 100 TB / millions of files per
@@ -193,6 +194,20 @@ def stage_and_collect(
     task → one level-``target_level`` file per commit per bucket (the
     LSM run, SURVEY §2.1 S16).
 
+    Two sinks stage the files, in the same ``<k=v>/_bucket=<n>/``
+    layout. When Catalyst's optimized plan of the frame to write is a
+    ``LocalRelation`` (``createDataFrame`` from pandas, SQL ``VALUES``),
+    its rows, system columns and buckets were all computed on the
+    driver: the Arrow sink takes them as Arrow and pyarrow writes one
+    file per (partition, bucket), with no shuffle and no Spark job
+    beyond the collect (Paimon commits on the coordinator; pypaimon
+    writes Arrow in-process). It writes the Spark sink's codec, zstd
+    level, dictionary choice and timestamp encoding. Every other frame,
+    and every table whose files pyarrow cannot write as Spark does
+    (``_arrow_sink_options``), goes through one Spark file-write job.
+    Everything after staging (file indexes, footer stats, the move into
+    ``data/``) is shared.
+
     ``pre_partitioned=True``: the caller guarantees ``df`` already
     carries ``_bucket`` AND is hash-partitioned on (partition, bucket)
     — the write-side repartition is skipped (r12 one-shuffle
@@ -201,7 +216,6 @@ def stage_and_collect(
     """
     pk = bool(schema.primary_keys)
     pt_cols = list(schema.partition_keys)
-    spark_extra: list[str] = []
 
     if pk:
         if row_kind_col and row_kind_col in df.columns:
@@ -242,77 +256,45 @@ def stage_and_collect(
                 SEQUENCE_NUMBER,
                 F.expr(f"CAST({base_sequence} + monotonically_increasing_id() AS BIGINT)"),
             )
+        # fixed-bucket hash; postpone mode (every row in the postpone
+        # bucket, NO key shuffle at ingest — compaction redistributes
+        # later and arrives here with BUCKET_COL pre-assigned); dynamic-
+        # bucket tables arrive pre-assigned
+        # (operators/dynamic_bucket.assign_buckets)
         postpone_write = False
         if BUCKET_COL not in df.columns:
-            if schema.num_buckets() == POSTPONE_BUCKET:
-                # postpone mode: every row lands in the postpone bucket —
-                # NO key shuffle at ingest (postpone/'s whole point);
-                # compaction redistributes into real buckets later (it
-                # arrives here with BUCKET_COL pre-assigned and takes the
-                # normal shuffle below)
-                df = df.withColumn(BUCKET_COL, F.lit(POSTPONE_BUCKET))
-                postpone_write = True
-            else:
-                # fixed-bucket hash; dynamic-bucket tables arrive pre-assigned
-                # (operators/dynamic_bucket.assign_buckets)
-                df = df.withColumn(BUCKET_COL, bucket_expr(schema))
-        if not postpone_write and not pre_partitioned:
-            df = df.repartition(*[F.expr(quote_ident(c)) for c in pt_cols + [BUCKET_COL]])
+            postpone_write = schema.num_buckets() == POSTPONE_BUCKET
+            df = df.withColumn(
+                BUCKET_COL,
+                F.lit(POSTPONE_BUCKET) if postpone_write else bucket_expr(schema),
+            )
+        shuffle = not postpone_write and not pre_partitioned
         partition_by = pt_cols + [BUCKET_COL]
-        spark_extra = [VALUE_KIND, SEQUENCE_NUMBER, BUCKET_COL]
     else:
         # keep_cols: extra stored columns a maintenance rewrite carries
         # through (e.g. the materialized _ROW_ID of row-tracking
         # compaction); ordinary reads drop them by projection
         df = _cast_to_schema(df, schema, extra=list(keep_cols or []))
         partition_by = pt_cols
-        if schema.options.get("bucket-key") and schema.num_buckets() > 0:
+        shuffle = bool(schema.options.get("bucket-key")) and schema.num_buckets() > 0
+        if shuffle:
             # bucketed APPEND table (reference BucketMode.BUCKET_APPEND:
             # bucket-key without primary keys, AppendOnlyFileStore.java
             # bucketMode): rows distribute by the shared bucket hash so
             # two such tables co-partition for join_bucketed and bucket
             # predicates prune scans — same hash as PK tables
             df = df.withColumn(BUCKET_COL, bucket_expr(schema))
-            df = df.repartition(*[F.expr(quote_ident(c)) for c in pt_cols + [BUCKET_COL]])
             partition_by = pt_cols + [BUCKET_COL]
 
     fmt = schema.file_format()
     staging = os.path.join(table_path, "staging", uuid.uuid4().hex)
-    writer = df.write.mode("overwrite").format(fmt)
-    # file indexes (P9): format-native bloom filters per configured
-    # column (reference bloomfilter/BloomFilterFileIndexFactory.java:29;
-    # here the index lives IN the parquet footer / orc stripe metadata
-    # and the reader's row-group filter uses it natively)
-    bloom_cols = schema.options.get("file-index.bloom-filter.columns")
-    if bloom_cols:
-        if fmt == "parquet":
-            for c in bloom_cols.split(","):
-                # dotted struct-leaf paths get the engine-side sidecar
-                # index only; the parquet-native writer option addresses
-                # top-level columns
-                if "." not in c:
-                    writer = writer.option(f"parquet.bloom.filter.enabled#{c.strip()}", "true")
-        elif fmt == "orc":
-            writer = writer.option("orc.bloom.filter.columns", bloom_cols)
-    comp = schema.options.get("file.compression")
-    if comp:
-        # CoreOptions FILE_COMPRESSION (reference default zstd; here the
-        # engine honors the option and otherwise keeps Spark's codec)
-        writer = writer.option("compression", comp)
-        zlevel = schema.options.get("file.compression.zstd-level")
-        if zlevel and fmt == "parquet" and comp.lower() == "zstd":
-            writer = writer.option("parquet.compression.codec.zstd.level", zlevel)
-    blk = schema.options.get("file.block-size")
-    if blk:
-        writer = writer.option(
-            "parquet.block.size" if fmt == "parquet" else "orc.stripe.size", blk
-        )
-    for k, v in schema.options.items():
-        if k.startswith(f"{fmt}."):
-            writer = writer.option(k, v)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(staging)
+    arrow = _arrow_sink_options(df, schema, fmt)
+    if arrow is not None:
+        _arrow_sink(*arrow, staging, partition_by)
+    else:
+        if shuffle:
+            df = df.repartition(*[F.expr(quote_ident(c)) for c in partition_by])
+        _spark_sink(df, staging, schema, fmt, partition_by)
 
     # file indexes (P9): ONE distributed job computes every configured
     # column's bloom bitset + bitmap value-set per staged file and writes
@@ -364,7 +346,7 @@ def stage_and_collect(
         # files fine; variant itself is unstatable and excluded).
         # Checked on the PARSED type tree — a field merely NAMED
         # "variant_x" must not disable the cheap footer walk.
-        has_variant = any(_type_has_variant(parse_type(f.type)) for f in schema.fields)
+        has_variant = any("variant" in _type_names(parse_type(f.type)) for f in schema.fields)
         distributed = fmt != "parquet" or has_variant
         if not distributed:
             thr = int(schema.options.get("commit.distributed-stats-threshold", "1000"))
@@ -389,20 +371,236 @@ def stage_and_collect(
     return entries
 
 
-def _type_has_variant(dt) -> bool:
-    """True when the PARSED type tree contains a VariantType at any
-    nesting depth (pyarrow cannot read footers that store one)."""
+def _spark_sink(
+    df: DataFrame, staging: str, schema: TableSchema, fmt: str, partition_by: list[str]
+) -> None:
+    """The executor-side sink: one Spark file-write job into ``staging``,
+    one directory per ``partition_by`` value."""
+    writer = df.write.mode("overwrite").format(fmt)
+    # file indexes (P9): format-native bloom filters per configured
+    # column (reference bloomfilter/BloomFilterFileIndexFactory.java:29;
+    # here the index lives IN the parquet footer / orc stripe metadata
+    # and the reader's row-group filter uses it natively)
+    bloom_cols = schema.options.get("file-index.bloom-filter.columns")
+    if bloom_cols:
+        if fmt == "parquet":
+            for c in bloom_cols.split(","):
+                # dotted struct-leaf paths get the engine-side sidecar
+                # index only; the parquet-native writer option addresses
+                # top-level columns
+                if "." not in c:
+                    writer = writer.option(f"parquet.bloom.filter.enabled#{c.strip()}", "true")
+        elif fmt == "orc":
+            writer = writer.option("orc.bloom.filter.columns", bloom_cols)
+    comp = schema.options.get("file.compression")
+    if comp:
+        # CoreOptions FILE_COMPRESSION (reference default zstd; here the
+        # engine honors the option and otherwise keeps Spark's codec)
+        writer = writer.option("compression", comp)
+        zlevel = schema.options.get("file.compression.zstd-level")
+        if zlevel and fmt == "parquet" and comp.lower() == "zstd":
+            writer = writer.option("parquet.compression.codec.zstd.level", zlevel)
+    blk = schema.options.get("file.block-size")
+    if blk:
+        writer = writer.option(
+            "parquet.block.size" if fmt == "parquet" else "orc.stripe.size", blk
+        )
+    for k, v in schema.options.items():
+        if k.startswith(f"{fmt}."):
+            writer = writer.option(k, v)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(staging)
+
+
+# pyarrow's name for each Spark parquet codec it writes the same way
+_ARROW_CODECS = {
+    "none": "none",
+    "uncompressed": "none",
+    "snappy": "snappy",
+    "gzip": "gzip",
+    "zstd": "zstd",
+}
+# parquet-mr's default levels; pyarrow's own are zstd 1 and zlib 9
+_DEFAULT_LEVELS = {"zstd": 3, "gzip": 6}
+
+
+def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
+    """``(frame, codec, level, int96)`` for the Arrow sink when ``df`` is
+    driver-local (``_driver_local``) and pyarrow can write what the
+    table asks for, else None. ``frame`` is ``df`` plus one directory
+    string per partition key (``_PT_DIR``), Spark's own ``CAST(... AS
+    STRING)`` with ``''`` as null, as ``partitionBy`` writes them. The
+    Spark sink writes other formats, parquet-native bloom filters
+    (pyarrow writes none), ``parquet.*`` or ``file.block-size`` writer
+    options, VARIANT columns, codecs pyarrow does not write as Spark
+    does, and tables with both timestamp kinds (Spark stores TIMESTAMP
+    as INT96 and TIMESTAMP_NTZ as INT64; pyarrow picks one encoding per
+    file). ``int96``: store timestamps as Spark does by default, as
+    INT96, which carries no footer stats."""
+    opts = schema.options
+    if (
+        fmt != "parquet"
+        or opts.get("file-index.bloom-filter.columns")
+        or opts.get("file.block-size")
+        or any(k.startswith("parquet.") for k in opts)
+    ):
+        return None
+    kinds: set[str] = set()
+    for f in schema.fields:
+        kinds |= _type_names(parse_type(f.type))
+    if "variant" in kinds or {"timestamp", "timestamp_ntz"} <= kinds:
+        return None
+    if schema.partition_keys:
+        # projected before the check, so the collect reuses the
+        # optimized plan instead of folding every row a second time
+        df = select_exprs(
+            df,
+            ["*"]
+            + [
+                f"NULLIF(CAST({quote_ident(c)} AS STRING), '') AS {_PT_DIR.format(i)}"
+                for i, c in enumerate(schema.partition_keys)
+            ],
+        )
+    if not _driver_local(df):
+        return None
+    comp = opts.get("file.compression")
+    name = comp or df.sparkSession.conf.get("spark.sql.parquet.compression.codec", "snappy")
+    codec = _ARROW_CODECS.get(name.lower())
+    if codec is None:
+        return None
+    level = _DEFAULT_LEVELS.get(codec)
+    if comp and codec == "zstd" and opts.get("file.compression.zstd-level"):
+        level = int(opts["file.compression.zstd-level"])
+    return df, codec, level, "timestamp_ntz" not in kinds
+
+
+def _type_names(dt) -> set[str]:
+    """``typeName()`` of every type in a PARSED type tree."""
     from pyspark.sql import types as T
 
-    if dt.typeName() == "variant":
-        return True
+    out = {dt.typeName()}
     if isinstance(dt, T.StructType):
-        return any(_type_has_variant(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return _type_has_variant(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _type_has_variant(dt.keyType) or _type_has_variant(dt.valueType)
-    return False
+        for f in dt.fields:
+            out |= _type_names(f.dataType)
+    elif isinstance(dt, T.ArrayType):
+        out |= _type_names(dt.elementType)
+    elif isinstance(dt, T.MapType):
+        out |= _type_names(dt.keyType) | _type_names(dt.valueType)
+    return out
+
+
+def _driver_local(df: DataFrame) -> bool:
+    """True when Catalyst's optimized plan of ``df`` is a
+    ``LocalRelation``: its rows already sit on the driver
+    (``createDataFrame`` from pandas, SQL ``VALUES``), and
+    ``ConvertToLocalRelation`` evaluated every projection and filter
+    above them there, system columns, sequence numbers and buckets
+    included. A plan that reads files has no row bound (``maxRows``), so
+    compactions and other rewrites skip the optimizer pass (10-13 ms on
+    a universal compaction of a 4-bucket q1 table)."""
+    qe = df._jdf.queryExecution()
+    return (
+        qe.analyzed().maxRows().isDefined()
+        and qe.optimizedPlan().nodeName() == "LocalRelation"
+    )
+
+
+# the Arrow sink's directory string of partition key i
+_PT_DIR = "__pt{}"
+# ExternalCatalogUtils.charToEscape (non-Windows): the characters Spark
+# percent-encodes in a partition directory name
+_PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 0x20)}
+
+
+def _escape_path_name(s: str) -> str:
+    """``ExternalCatalogUtils.escapePathName``: the directory name that
+    ``partitionBy`` writes and ``_parse_partition`` unquotes."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
+
+
+def _arrow_sink(
+    frame: DataFrame,
+    codec: str,
+    level: int | None,
+    int96: bool,
+    staging: str,
+    partition_by: list[str],
+) -> None:
+    """The driver-local sink: ``frame`` (see ``_arrow_sink_options``)
+    comes back as Arrow and pyarrow writes one parquet file per
+    (partition, bucket) into ``staging``, in ``partitionBy``'s layout,
+    with no repartition and no Spark write job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = frame.toArrow()
+    os.makedirs(staging, exist_ok=True)
+    if tbl.num_rows == 0:
+        return
+    # the column holding each directory's value: the partition keys'
+    # strings, then the bucket
+    dirs = [c if c == BUCKET_COL else _PT_DIR.format(i) for i, c in enumerate(partition_by)]
+    data = tbl.drop_columns(list(dict.fromkeys(partition_by + dirs)))
+    if dirs:
+        groups = (
+            tbl.select(dirs)
+            .append_column("__i", pa.array(range(tbl.num_rows), pa.int64()))
+            .group_by(dirs, use_threads=False)
+            .aggregate([("__i", "list")])
+        )
+        keys, rows = groups.select(dirs).to_pylist(), groups.column("__i_list")
+    else:
+        keys, rows = [{}], [None]
+    for n, (key, idx) in enumerate(zip(keys, rows)):
+        rel = [
+            _escape_path_name(name)
+            + "="
+            + ("__HIVE_DEFAULT_PARTITION__" if key[d] is None else _escape_path_name(str(key[d])))
+            for name, d in zip(partition_by, dirs)
+        ]
+        out = os.path.join(staging, *rel)
+        os.makedirs(out, exist_ok=True)
+        part = data if idx is None else data.take(idx.values)
+        pq.write_table(
+            part,
+            os.path.join(out, f"part-{n:05d}.parquet"),
+            compression=codec,
+            compression_level=level,
+            use_dictionary=_dictionary_columns(part, int96),
+            use_deprecated_int96_timestamps=int96,
+            store_schema=False,
+        )
+
+
+def _dictionary_columns(tbl, int96: bool) -> list[str]:
+    """The columns parquet-mr writes dictionary-encoded: those whose
+    dictionary plus bit-packed indices come out smaller than the plain
+    values (``DictionaryValuesWriter.isCompressionSatisfying``), which
+    parquet-mr decides on its first page; the first 32768 values stand
+    in for it. pyarrow would dictionary-encode every column, which made
+    1000-row q1 L0 files a quarter larger. Booleans and nested columns
+    stay plain."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = []
+    for name, col in zip(tbl.column_names, tbl.slice(0, 1 << 15).columns):
+        typ = col.type
+        rows = len(col) - col.null_count
+        if pa.types.is_nested(typ) or pa.types.is_boolean(typ) or rows == 0:
+            continue
+        distinct = pc.count_distinct(col).as_py()
+        try:
+            width = 12 if int96 and pa.types.is_timestamp(typ) else typ.bit_width // 8
+            plain, dictionary = width * rows, width * distinct
+        except ValueError:  # strings and binaries: length-prefixed values
+            plain = (pc.sum(pc.binary_length(col)).as_py() or 0) + 4 * rows
+            dictionary = plain * distinct / max(rows, 1)
+        indices = rows * max(1, (distinct - 1).bit_length()) / 8
+        if indices + dictionary < plain:
+            out.append(name)
+    return out
 
 
 def collect_stats_distributed(

@@ -376,20 +376,35 @@ def test_bucketed_join_aggregation_engine_table(spark, warehouse):
             "fields.h.aggregate-function": "hll_sketch",
         },
     )
-    t3.write(spark.createDataFrame([(1, "x")], "k bigint, h string"))
+    # a NULL value: the sketch of no values is ASCII, so the compacted
+    # string column stays valid UTF-8 for pyarrow (a sketch of real
+    # values stored in a string field is not)
+    t3.write(spark.createDataFrame([(1, None)], "k bigint, h string"))
     t3 = t3.refresh()
-    # every kernel surface refuses at plan time, before a task runs
+    # every kernel surface refuses at plan time, before a task runs,
+    # while the table has files to merge
     for read in (
         lambda: join_bucketed(spark, t3, t2, on=[("k", "k")]),
         lambda: t3.to_arrow(),
         lambda: PartialLookupTable(spark, t3).lookup({"k": 1}),
     ):
-        with pytest.raises(ValueError, match="compact"):
+        with pytest.raises(ValueError, match=r"table\.to_df\(spark\).*compact"):
             read()
     # the format surface plans in a Python data source: Spark reports
     # the planner's ValueError as an AnalysisException naming it
     with pytest.raises(Exception, match="ValueError: .*compact"):
         spark.read.format("ftss").load(t3.path).collect()
+    # fully compacted, nothing is left to merge: every surface reads the
+    # one stored row as to_df does
+    t3.compact(spark, full=True)
+    t3 = t3.refresh()
+    want = [tuple(r) for r in t3.to_df(spark).collect()]
+    assert len(want) == 1
+    assert [tuple(r.values()) for r in t3.to_arrow().to_pylist()] == want
+    assert [tuple(r) for r in spark.read.format("ftss").load(t3.path).collect()] == want
+    assert tuple(PartialLookupTable(spark, t3).lookup({"k": 1}).values()) == want[0]
+    got = join_bucketed(spark, t3, t2, on=[("k", "k")]).collect()
+    assert [tuple(r)[:2] for r in got] == want
 
 
 def test_bucketed_join_aggregation_sketch_fields(spark, warehouse):

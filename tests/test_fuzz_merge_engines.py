@@ -14,7 +14,10 @@ partial-fold rewrite (merge_engines.fold_runs) against unmerged runs.
 The same read goes through every surface — ``to_df`` (the Catalyst
 fold), the local Arrow reader, ``format("ftss")``, ``PartialLookupTable``
 and the bucketed joins (the per-bucket pandas kernel) — and all must
-agree, so the kernel is checked against the same oracle.
+agree, so the kernel is checked against the same oracle. Writes
+alternate between the two write sinks (``_write``), so every table
+merges runs written by pyarrow on the driver with runs written by a
+Spark job.
 
 Oracle model: a global row counter stands in for _SEQUENCE_NUMBER —
 the engine assigns monotonically-increasing sequences in input order
@@ -24,12 +27,16 @@ counter reproduces it exactly.
 
 from __future__ import annotations
 
+import collections
 import math
 import random
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import types as T
+
+from flink_table_store_spark import write as W
 
 # Only seed 0 of each family runs in the fast tier; the other seeds are
 # slow-tier (run `-m ""` for the full suite).
@@ -141,6 +148,21 @@ def _read(spark, t, keys=range(25)):
     return got
 
 
+_writes: collections.Counter = collections.Counter()
+
+
+def _write(spark, t, rows, ddl, **kwargs):
+    """``t.write`` of ``rows``, alternating by write index between a
+    driver-local frame (the Arrow sink) and the same frame behind
+    ``localCheckpoint()``, which is not local (the Spark sink)."""
+    names = T._parse_datatype_string(ddl).names
+    df = spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), ddl)
+    assert W._driver_local(df)
+    i = _writes[t.path]
+    _writes[t.path] += 1
+    t.write(df if i % 2 == 0 else df.localCheckpoint(), **kwargs)
+
+
 # --- family A: deduplicate + sequence.field --------------------------------
 
 
@@ -187,7 +209,7 @@ def test_fuzz_dedup_sequence_field(spark, warehouse, seed):
 
     def apply_batch(rows):
         nonlocal seqc
-        t.write(spark.createDataFrame(rows, wddl), row_kind_col="rk")
+        _write(spark, t, rows, wddl, row_kind_col="rk")
         for k, v, ver, kind in rows:
             seqc += 1
             cur = state.get(k)
@@ -248,7 +270,7 @@ def test_fuzz_partial_update_groups(spark, warehouse, seed):
 
     def apply_batch(rows):
         nonlocal seqc
-        t.write(spark.createDataFrame(rows, wddl), row_kind_col="rk")
+        _write(spark, t, rows, wddl, row_kind_col="rk")
         for k, a, b, g, c, kind in rows:
             seqc += 1
             st = state.setdefault(
@@ -330,7 +352,7 @@ def test_fuzz_aggregation_retracts(spark, warehouse, seed):
         return rows
 
     def apply_batch(rows):
-        t.write(spark.createDataFrame(rows, wddl), row_kind_col="rk")
+        _write(spark, t, rows, wddl, row_kind_col="rk")
         for k, s, last, vs, m, kind in rows:
             st = state.setdefault(k, {"s": None, "last": None, "vs": [], "m": {}})
             retract = kind in ("-D", "-U")
@@ -410,7 +432,7 @@ def test_fuzz_partial_update_aggregation(spark, warehouse, seed):
         return rows
 
     def apply_batch(rows):
-        t.write(spark.createDataFrame(rows, wddl), row_kind_col="rk")
+        _write(spark, t, rows, wddl, row_kind_col="rk")
         for k, a, g, amt, kind in rows:
             st = state.setdefault(
                 k, {"a": None, "g": None, "total": None, "met": False}
@@ -493,7 +515,7 @@ def test_fuzz_partial_update_sequence_field(spark, warehouse, seed):
 
     def apply_batch(rows):
         nonlocal seqc
-        t.write(spark.createDataFrame(rows, ddl))
+        _write(spark, t, rows, ddl)
         for k, a, b, ver in rows:
             seqc += 1
             st = state.setdefault(k, {})

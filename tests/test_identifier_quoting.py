@@ -6,13 +6,16 @@ so every identifier is backtick-quoted there. A PK table whose payload
 columns are named ``a b``, ``x.y`` and ``q`t`` must merge exactly like
 any other: last writer wins for ``deduplicate``, first writer wins for
 ``first-row``, and with ``sequence.field`` the order is the user
-version first, the write order second.
+version first, the write order second. A predicate on such a column
+names that column, on PK and append tables alike.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import types as T
+
+from flink_table_store_spark import predicate as P
 
 SCHEMA = T.StructType(
     [
@@ -99,3 +102,36 @@ def _live_files(t) -> set[str]:
         snap.base_manifest_list, snap.delta_manifest_list
     )
     return {e.file_name for e in entries}
+
+
+@pytest.mark.parametrize("pk", [True, False], ids=["pk", "append"])
+def test_predicates_name_dotted_top_level_columns(spark, warehouse, pk):
+    """``x.y`` is a top-level column here, not a struct leaf: every
+    Spark read surface resolves it as that column, as ``to_arrow`` does."""
+    t = warehouse.create_table(
+        f"db.dotted_{int(pk)}",
+        SCHEMA,
+        primary_keys=["id"] if pk else None,
+        options={"bucket": "2"} if pk else {},
+    )
+    rows = _batch(1, range(20), lambda writer, k: k)
+    t.write(spark.createDataFrame(rows, SCHEMA))
+    t = t.refresh()
+    want = [r for r in rows if r[2] == "w1-7"]
+    for pred in (
+        P.equal("x.y", "w1-7"),
+        P.and_(P.equal("x.y", "w1-7"), P.greater_than("a b", 0), P.is_not_null("q`t")),
+        P.or_(P.equal("x.y", "w1-7"), P.equal("x.y", "none")),
+    ):
+        got = sorted(tuple(r) for r in t.to_df(spark, predicate=pred).collect())
+        assert got == want, pred
+        arrow = t.to_arrow(predicate=pred).to_pylist()
+        assert [tuple(r.values()) for r in arrow] == want, pred
+    if not pk:
+        # copy-on-write delete and update build the same predicate Column
+        t.update(spark, P.equal("x.y", "w1-7"), {"a b": -1})
+        t = t.refresh()
+        got = t.to_df(spark, predicate=P.equal("x.y", "w1-7")).collect()
+        assert [r["a b"] for r in got] == [-1]
+        t.delete(spark, P.equal("x.y", "w1-7"))
+        assert t.refresh().to_df(spark).count() == len(rows) - 1

@@ -6,10 +6,11 @@ cost of every commit, key read and compaction grow with the schema
 width. The engine builds its hot-path plans from SQL strings
 instead; these tests pin that:
 
-- round-trip budgets for a PK key-read plan, a one-row commit and a
-  universal compaction on a q1-shaped table (11 columns, PK
-  ``item_id``, 4 buckets), and the same counts on a table three times
-  as wide;
+- round-trip budgets for a PK key-read plan, a one-row commit (from
+  a row list, which the Spark sink writes, and from a pandas frame,
+  which the Arrow sink writes) and a universal compaction on a
+  q1-shaped table (11 columns, PK ``item_id``, 4 buckets), and the
+  same counts on a table three times as wide;
 - the ``parse_type`` memo (equal to the JVM parser, no shared mutable
   state, zero round-trips for a repeated ``spark_schema()``);
 - both branches of the ``_cast_to_schema`` fast path.
@@ -22,6 +23,7 @@ import datetime as dt
 import io
 import threading
 
+import pandas as pd
 import pytest
 from py4j.clientserver import ClientServerConnection
 from pyspark.sql import types as T
@@ -95,6 +97,15 @@ def _costs(spark, warehouse, monkeypatch, extra_longs: int) -> dict[str, int]:
     reader = batches(table("read"))
     one = [spark.createDataFrame(_rows([7 + i], 3 + i, width), ddl) for i in (0, 1)]
     writer = table("write")
+    # a pandas frame is driver-local: the Arrow sink writes it
+    names = LONGS + [f"extra_{i}" for i in range(extra_longs)] + ["item_name", "ts"]
+    local = [
+        spark.createDataFrame(
+            pd.DataFrame.from_records(_rows([7 + i], 3 + i, width), columns=names), ddl
+        )
+        for i in (0, 1)
+    ]
+    local_writer = table("local_write")
     pairs = [batches(table(f"compact{i}")) for i in (0, 1)]
     return {
         "read": _second_call_cost(
@@ -104,6 +115,10 @@ def _costs(spark, warehouse, monkeypatch, extra_longs: int) -> dict[str, int]:
         "write": _second_call_cost(
             monkeypatch,
             lambda i: writer.write(one[i], commit_identifier=f"point-{i}"),
+        ),
+        "local_write": _second_call_cost(
+            monkeypatch,
+            lambda i: local_writer.write(local[i], commit_identifier=f"point-{i}"),
         ),
         "compact": _second_call_cost(
             monkeypatch,
@@ -118,6 +133,7 @@ def test_plan_build_round_trip_budget(spark, warehouse, monkeypatch):
     q1 = _costs(spark, warehouse, monkeypatch, extra_longs=0)
     assert q1["read"] <= 300, q1
     assert q1["write"] <= 150, q1
+    assert q1["local_write"] <= 150, q1
     assert q1["compact"] <= 600, q1
     wide = _costs(spark, warehouse, monkeypatch, extra_longs=22)
     assert wide == q1
