@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_table_store_spark import read as read_mod
-from flink_table_store_spark.predicate import And, Leaf, Or, Predicate
+from flink_table_store_spark.predicate import Predicate, sub_predicate
 from flink_table_store_spark.schema import SEQUENCE_NUMBER, TableSchema, typed_partition
 
 SNAPSHOT_BRANCH_OPT = "scan.fallback-snapshot-branch"
@@ -65,42 +65,10 @@ def _branch_names(schema: TableSchema) -> tuple[str, str]:
 def _part_key(schema: TableSchema, part: dict[str, str]) -> tuple:
     """Typed, order-preserving partition sort key (the reference
     compares partitions with a codegen RecordComparator over the
-    logical partition row type)."""
-    return tuple(
-        typed_partition(part.get(k), schema.field(k).type)
-        for k in schema.partition_keys
-    )
-
-
-def _pk_subpredicate(pred: Predicate | None, pk_cols: set[str]) -> Predicate | None:
-    """The largest sub-predicate mentioning ONLY trimmed-PK columns —
-    safe to push into a chain group's pre-merge branch scans (a key's
-    versions all agree on the key; partition columns are about to be
-    rewritten, and value columns may change across versions, so both
-    stay residual-only)."""
-    if pred is None:
-        return None
-    if isinstance(pred, And):
-        kept = [
-            s for c in pred.children if (s := _pk_subpredicate(c, pk_cols))
-        ]
-        if not kept:
-            return None
-        out = kept[0]
-        for c in kept[1:]:
-            out = out & c
-        return out
-    if isinstance(pred, Or):
-        kept = [_pk_subpredicate(c, pk_cols) for c in pred.children]
-        if any(k is None for k in kept):
-            return None  # weakening one arm of an OR is unsound
-        out = kept[0]
-        for c in kept[1:]:
-            out = out | c
-        return out
-    if isinstance(pred, Leaf) and pred.field in pk_cols:
-        return pred
-    return None
+    logical partition row type); the default partition (NULL) sorts
+    first."""
+    vals = (typed_partition(part.get(k), schema.field(k).type) for k in schema.partition_keys)
+    return tuple((v is not None, v) for v in vals)
 
 
 def _branch_entries(spark: SparkSession, bt) -> tuple[list, object]:
@@ -202,7 +170,10 @@ def _chain_plan(
     remaining = sorted(k for k in delta_parts if k not in snap_parts)
     snap_keys = sorted(snap_parts)
     pk_cols = set(schema.trimmed_primary_keys()) - set(schema.partition_keys)
-    pk_pred = _pk_subpredicate(predicate, pk_cols)
+    # safe to push into a chain group's pre-merge branch scans:
+    # partition columns are about to be rewritten and value columns may
+    # change across versions, so both stay residual-only
+    pk_pred = sub_predicate(predicate, lambda leaf: leaf.field in pk_cols)
     part_cols = list(schema.partition_keys)
 
     # views the read must answer (predicate-pruned, oldest first):

@@ -28,6 +28,11 @@ if TYPE_CHECKING:  # pragma: no cover
 
     from flink_table_store_spark.table import ReadBuilder
 
+# ReadBuilder.to_df reads a plan whose selected data files total at most
+# this many bytes on the driver (read_arrow into a LocalRelation) instead
+# of in a Spark job. Measured crossover on local[2]: see CHANGES.md.
+LOCAL_READ_MAX_BYTES = 1 << 20
+
 
 def _arrow_type(ddl: str) -> "pa.DataType":
     """Engine DDL type string → pyarrow type, without a SparkSession
@@ -87,8 +92,17 @@ def _table_arrow_schema(schema) -> "pa.Schema":
     return pa.schema([pa.field(f.name, _arrow_type(f.type)) for f in schema.fields])
 
 
-def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
-    """Materialize the scan as one pyarrow Table."""
+def read_arrow(
+    rb: "ReadBuilder", max_workers: int = 8, plan=None, exact: bool = True
+) -> "pa.Table":
+    """Materialize the scan as one pyarrow Table. ``plan`` is a plan
+    already built from ``rb`` (default: ``rb.plan()``). With
+    ``exact=False`` the predicate only prunes (files, buckets, and rows
+    where the bucket reader knows it is false) and the projection only
+    narrows the columns read: the caller applies the predicate, the
+    projection and the limit (``ReadBuilder.to_df``'s driver branch).
+    Raises ValueError, before any file is read, on a plan the bucket
+    reader refuses (``bucketed_join._side_spec``/``_files``)."""
     import pyarrow as pa
 
     from flink_table_store_spark.sources.datasource import (
@@ -98,7 +112,8 @@ def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
 
     t = rb._table
     arrow_schema = _table_arrow_schema(t.schema)
-    plan = rb.plan()
+    if plan is None:
+        plan = rb.plan()
     if plan.patch_entries:
         return _read_stitched_arrow(rb, plan)
     # projection pushdown: the per-task readers load only the selected
@@ -110,9 +125,7 @@ def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
         if pf is None:
             pf = set()
         needed = list(dict.fromkeys(list(rb._projection) + sorted(pf)))
-        import pyarrow as _pa
-
-        arrow_schema = _pa.schema(
+        arrow_schema = pa.schema(
             [f for f in arrow_schema if f.name in set(needed)]
         )
     parts = _partitions(t, plan, rb._predicate, columns=needed)
@@ -130,6 +143,8 @@ def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
         if batches
         else arrow_schema.empty_table()
     )
+    if not exact:
+        return tbl
     if rb._predicate is not None:
         tbl = tbl.filter(rb._predicate.to_arrow_expr())
     if rb._projection is not None:

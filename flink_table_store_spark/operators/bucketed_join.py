@@ -38,6 +38,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_table_store_spark import read as read_mod
+from flink_table_store_spark.predicate import sub_predicate
 from flink_table_store_spark.operators.merge_engines import (
     MERGE_FUNCS,
     field_merges,
@@ -465,29 +466,33 @@ def _keep_mask(pred, pdf):
     col = pdf[pred.field]
     lits = list(pred.literals)
 
+    import pandas.api.types as pt
+
     def lit_ok(lit):
         # EXPLICIT literal/column compatibility: pandas ==/isin on a
         # mismatched type is silently all-False (it never raises like
-        # the ordered ops do), which would wrongly drop every row
-        import pandas.api.types as pt
-
+        # the ordered ops do), which would wrongly drop every row; a
+        # string compared with a date column, or a float with a decimal
+        # one, is cast by Spark but not by pandas
         if lit is None:
             return False
         if isinstance(lit, bool):
             return pt.is_bool_dtype(col) or col.dtype == object
-        if isinstance(lit, (int, float, Decimal)):
+        if isinstance(lit, float):
+            return pt.is_integer_dtype(col) and lit == lit
+        if isinstance(lit, (int, Decimal)):
             return pt.is_numeric_dtype(col) or col.dtype == object
         if isinstance(lit, str):
-            return not (
-                pt.is_numeric_dtype(col)
-                or pt.is_bool_dtype(col)
-                or pt.is_datetime64_any_dtype(col)
-            )
+            return pt.infer_dtype(col, skipna=True) in ("string", "empty")
         return True
 
     try:
         if op == "is_null":
             return col.isna().to_numpy(dtype=bool)
+        if pt.is_float_dtype(col):
+            # pandas reads NULL and NaN alike; Spark orders NaN above
+            # every number and keeps it for IS NOT NULL
+            return ones
         if op == "is_not_null":
             return col.notna().to_numpy(dtype=bool)
         notna = col.notna()
@@ -522,6 +527,22 @@ def _keep_mask(pred, pdf):
         return ones
 
 
+_INTEGRAL = ("tinyint", "smallint", "int", "integer", "bigint")
+
+
+def _arrow_exact(leaf, ddl: str | None) -> bool:
+    """Whether pyarrow evaluates ``leaf`` exactly as Spark's WHERE does
+    on a column of DDL type ``ddl``: int literals against an integral
+    column, string literals against a string column (both compare UTF-8
+    bytes), never a NULL literal. Other types and literals (casts,
+    float NaN ordering, dates against strings) may differ."""
+    if ddl in _INTEGRAL and leaf.op not in ("starts_with", "ends_with", "contains"):
+        return all(isinstance(v, int) and not isinstance(v, bool) for v in leaf.literals)
+    if ddl == "string" or (ddl or "").startswith("varchar"):
+        return all(isinstance(v, str) for v in leaf.literals)
+    return False
+
+
 def _side_spec(table, plan, cols, keys, pred) -> dict:
     """What the bucket reader (``read_bucket_side``) needs about one
     table side, as picklable values, from a ``ReadBuilder.plan``;
@@ -531,9 +552,7 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
 
     Raises ValueError, before any task runs, on live data-evolution
     patches (the bucket reader cannot stitch them onto their base rows)
-    and, when the plan has files to merge, on field merge functions the
-    kernel cannot fold. A plan without them (a fully compacted table)
-    reads its files as plain rows, as ``to_df`` does."""
+    and on misconfigured field merge functions (``field_merges``)."""
     if plan.patch_entries:
         raise ValueError(
             "the bucket reader cannot stitch data-evolution patch files — "
@@ -551,30 +570,35 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
     ]
     pk = bool(schema.primary_keys)
     engine = schema.options.get("merge-engine", "deduplicate")
+    if pk and seq_descending(schema):
+        # the Catalyst fold's refusal (merge_engines.seq_order_exprs)
+        for c in seq_fields:
+            ty = schema.field(c).type.lower()
+            if not ty.startswith(_INTEGRAL + ("float", "double", "decimal", "timestamp", "date")):
+                raise ValueError(
+                    "sequence.field.sort-order=descending needs numeric/"
+                    f"timestamp/date sequence fields; {c!r} is {ty}"
+                )
     seq_groups: dict = {}
     rr_groups: list = []
     merges = None
     if pk and engine in ("partial-update", "aggregation"):
         merges = field_merges(schema)
-        bad = sorted(f for f, m in merges.fields.items() if not m.kernel)
-        if bad and plan.merge_entries:
-            raise ValueError(
-                f"cannot fold aggregate-function(s) of fields {bad} "
-                "in the local (pandas) merge — read via table.to_df(spark), "
-                "or compact(full=True) the table first"
-            )
-        if bad:
-            # nothing to merge, and these functions cannot fold: read
-            # each bucket's one compacted run as plain rows
-            pk = False
         if engine == "partial-update":
             seq_groups = sequence_groups(schema)
             rr_groups = sorted(remove_record_groups(schema)) if seq_groups else []
-    if pred is not None and pred.fields() is None:
-        # Raw predicates wrap a py4j-backed Column — unpicklable in the
-        # task closure and a no-op for _keep_mask anyway
-        pred = None
+    # the reader evaluates leaves on top-level columns only: Raw leaves
+    # (a py4j-backed Column, unpicklable in the task closure) and
+    # struct-leaf paths drop out, leaving a weaker filter the caller's
+    # own predicate completes
+    top = set(schema.field_names())
+    pred = sub_predicate(pred, lambda leaf: leaf.field in top)
     pred_fields = sorted(pred.fields()) if pred is not None else []
+    key_types = (
+        {c: schema.field(c).type.lower() for c in schema.trimmed_primary_keys()}
+        if pk
+        else {}
+    )
     # (abs path, bucket coverage | None): a task consults only sidecars
     # covering its bucket; None (pre-coverage snapshots) = all buckets
     snap = plan.snapshot
@@ -589,9 +613,22 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
     # {schema_id: {current name: name in that generation | None}}: the
     # by-field-id rename/add mapping read._adapt applies
     maps: dict[int, dict[str, str | None]] = {}
+    live_sids = {e.schema_id for e in plan.entries}
     for sid, s in table.all_schemas().items():
-        by_id = {f.id: f.name for f in s.fields}
-        maps[sid] = {f.name: by_id.get(f.id) for f in schema.fields}
+        by_id = {f.id: f for f in s.fields}
+        maps[sid] = {f.name: by_id[f.id].name if f.id in by_id else None for f in schema.fields}
+        for f in schema.fields if sid in live_sids else ():
+            old = by_id.get(f.id)
+            if old is not None and (
+                old.subs != f.subs or (old.type != f.type and "<" in old.type + f.type)
+            ):
+                # read._evolve_cast rebuilds evolved structs by subfield
+                # id; the bucket reader maps top-level columns only
+                raise ValueError(
+                    f"the bucket reader cannot evolve nested column {f.name!r} "
+                    f"across schema generations — read via table.to_df(spark), "
+                    "or compact() the table first"
+                )
     spec = {
         "buckets": {},
         "dv": dv_paths,
@@ -611,6 +648,12 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
         # shrinking the join width; its fields must be read even when
         # not selected
         "pred": pred,
+        # its conjuncts over key columns that Arrow evaluates as Spark
+        # does filter each file's rows BEFORE the merge: every version
+        # of a key shares its key values
+        "key_pred": sub_predicate(
+            pred, lambda leaf: _arrow_exact(leaf, key_types.get(leaf.field))
+        ),
         # merge keys + user sequence columns (incl. sequence-group
         # version columns) must be read even when not selected (the
         # local merge orders/groups by them)
@@ -727,21 +770,32 @@ def read_bucket_side(spec: dict, bucket: int):
     the bucket holds no files. Applies deletion vectors scoped to the
     bucket's files, schema-evolution field maps, and the table's merge
     engine (deduplicate / first-row / partial-update / aggregation)."""
+    import numpy as np
     import pandas as pd
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    # integral columns come back as pandas NULLABLE extension ints, not
-    # float64: pyarrow's default to_pandas turns a nullable int64 into
-    # float64, silently rounding values above 2^53 before any local
-    # merge/fold runs (the same hazard fileindex string-ships stats
-    # around). Arrow maps Int64Dtype straight back to int64 on output.
+    # integral columns with nulls come back as pandas NULLABLE extension
+    # ints, not float64: pyarrow's default to_pandas turns a nullable
+    # int64 into float64, silently rounding values above 2^53 before any
+    # local merge/fold runs (the same hazard fileindex string-ships stats
+    # around). Float columns holding NaN come back as extension floats:
+    # numpy float64 spells NULL as NaN, and Arrow would read every NaN
+    # back as NULL. Arrow maps both straight back on output.
     int_dtypes = {
         pa.int8(): pd.Int8Dtype(),
         pa.int16(): pd.Int16Dtype(),
         pa.int32(): pd.Int32Dtype(),
         pa.int64(): pd.Int64Dtype(),
     }
+    float_dtypes = {pa.float32(): pd.Float32Dtype(), pa.float64(): pd.Float64Dtype()}
+    ext_dtypes = {**int_dtypes, **float_dtypes}
+
+    def _needs_ext(tbl, fld) -> bool:
+        if fld.type in int_dtypes:
+            return tbl.column(fld.name).null_count > 0
+        return fld.type in float_dtypes and pc.any(pc.is_nan(tbl.column(fld.name))).as_py()
 
     seqc, kindc = SEQUENCE_NUMBER, VALUE_KIND
     # open only the DV sidecars covering THIS bucket (unknown coverage =
@@ -755,6 +809,8 @@ def read_bucket_side(spec: dict, bucket: int):
         if my_dv
         else {}
     )
+    key_expr = spec["key_pred"].to_arrow_expr() if spec.get("key_pred") else None
+    map_cols: set[str] = set()
     frames = []
     for f in spec["buckets"].get(bucket, []):
         fmap = spec["maps"].get(f["schema_id"], {})
@@ -767,35 +823,39 @@ def read_bucket_side(spec: dict, bucket: int):
         if spec["pk"]:
             cols += [seqc, kindc]
         tbl = pq.read_table(f["path"], columns=list(dict.fromkeys(cols)))
-        # only columns that actually hold nulls pay the extension-dtype
-        # conversion; null-free ints stay plain numpy int64 (faster
-        # groupby/merge keys), and pandas promotes int64+Int64 to Int64
-        # on concat so mixed files stay exact
-        nullable_ints = [
-            fld.name
-            for fld in tbl.schema
-            if fld.type in int_dtypes and tbl.column(fld.name).null_count > 0
-        ]
-        if nullable_ints:
-            pdf = tbl.drop_columns(nullable_ints).to_pandas()
-            fixed = tbl.select(nullable_ints).to_pandas(types_mapper=int_dtypes.get)
-            for c in nullable_ints:
-                pdf[c] = fixed[c]
-        else:
-            pdf = tbl.to_pandas()
         d = dels.get(os.path.basename(f["path"]))
         if d:
-            pdf = pdf[~pdf.index.isin(d)]
-        out = pd.DataFrame(index=pdf.index)
-        for c, s in stored.items():
-            out[c] = pdf[s] if s is not None else None
+            # deletion-vector positions index the file's stored rows
+            live = np.ones(tbl.num_rows, dtype=bool)
+            live[[p for p in d if p < tbl.num_rows]] = False
+            tbl = tbl.filter(live)
+        n = tbl.num_rows
+        # one Arrow table of current names: renamed, null-filled and
+        # partition columns, then the system columns
+        out = {c: tbl.column(s) if s is not None else pa.nulls(n) for c, s in stored.items()}
         for k, v in f["partition"].items():
             if k in spec["need"] or k in spec["key_cols"]:
-                out[k] = v
+                out[k] = pa.repeat(v, n) if v is not None else pa.nulls(n)
         if spec["pk"]:
-            out[seqc] = pdf[seqc]
-            out[kindc] = pdf[kindc]
-        frames.append(out)
+            out[seqc] = tbl.column(seqc)
+            out[kindc] = tbl.column(kindc)
+        tbl = pa.table(out)
+        if key_expr is not None:
+            try:
+                tbl = tbl.filter(key_expr)
+            except pa.ArrowException:
+                pass  # an IO shortcut only: the WHERE re-filters
+        map_cols.update(fld.name for fld in tbl.schema if pa.types.is_map(fld.type))
+        # only columns that need it pay the extension-dtype conversion;
+        # null-free ints stay plain numpy int64 (faster groupby/merge
+        # keys), and pandas promotes int64+Int64 to Int64 on concat so
+        # mixed files stay exact
+        ext = [fld.name for fld in tbl.schema if _needs_ext(tbl, fld)]
+        pdf = tbl.drop_columns(ext).to_pandas()
+        if ext:
+            fixed = tbl.select(ext).to_pandas(types_mapper=ext_dtypes.get)
+            pdf = pd.concat([pdf, fixed], axis=1)
+        frames.append(pdf)
     if not frames:
         return None
     pdf = pd.concat(frames, ignore_index=True)
@@ -954,7 +1014,14 @@ def read_bucket_side(spec: dict, bucket: int):
         # drop anyway — see _keep_mask
         pdf = pdf[_keep_mask(spec["pred"], pdf)]
     keep = [c for c in spec["out_need"] if c in pdf.columns]
-    return pdf[keep]
+    # Arrow reads maps as (key, value) pair lists; mapInPandas,
+    # applyInPandas and Arrow's from_pandas take dicts
+    return pdf[keep].assign(
+        **{
+            c: [dict(v) if isinstance(v, list) else v for v in pdf[c]]
+            for c in map_cols.intersection(keep)
+        }
+    )
 
 
 def join_bucketed(

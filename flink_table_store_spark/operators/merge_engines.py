@@ -280,8 +280,6 @@ def _group_seq_cols(group_key: str) -> list[str]:
 class MergeFunc(NamedTuple):
     """What every merge path needs to know about one aggregate function.
 
-    - ``kernel``: the per-bucket pandas kernel
-      (``bucketed_join.fold_aggregation``) reproduces the Catalyst fold.
     - ``prefix_safe``: a fold of the NEWEST runs re-merges with older
       unmerged runs exactly as the unfolded rows would (universal
       compaction). Run sequence ranges are disjoint and the fold covers
@@ -297,12 +295,15 @@ class MergeFunc(NamedTuple):
       comes from exactly that row.
     - ``exact_int``: on integral fields the kernel folds through
       pandas' nullable Int64, never float64 (which rounds above 2^53).
-    - ``sketch_on``: field types (prefixes) that hold sketches merges
-      union; on any other type the function sketches raw values, which
-      neither the kernel nor a partial fold can re-merge.
+    - ``sketch_on``: the field types (prefixes) a sketch function's
+      field must have; merges union the stored sketches. On any other
+      type the function would sketch raw values into a field that cannot
+      hold a sketch, so such fields are refused (``check_sketch_fields``).
+
+    Every function also folds in the per-bucket pandas kernel
+    (``bucketed_join.fold_aggregation``), as the Catalyst fold does.
     """
 
-    kernel: bool = True
     prefix_safe: bool = False
     group_safe: bool = False
     exact_int: bool = False
@@ -356,7 +357,6 @@ class FieldMerge(NamedTuple):
     nested_key: tuple[str, ...]
     theta_k: int
     group: str | None  # partial-update sequence group key
-    kernel: bool
     fold_safe: bool  # prefix_safe (aggregation) / group_safe (partial-update)
     exact_int: bool
 
@@ -427,7 +427,7 @@ def field_merges(schema: TableSchema) -> TableMerges:
             )
         count_limit = opts.get(f"fields.{f.name}.count-limit")
         ftype = f.type.lower()
-        typed_ok = not props.sketch_on or ftype.startswith(props.sketch_on)
+        _check_sketch_type(f.name, func, ftype)
         out[f.name] = FieldMerge(
             func="collect_distinct" if func == "collect" and distinct else func,
             type=f.type,
@@ -438,9 +438,7 @@ def field_merges(schema: TableSchema) -> TableMerges:
             nested_key=nested_key,
             theta_k=int(opts.get(f"fields.{f.name}.theta-sketch.k", "4096")),
             group=group_of.get(f.name),
-            kernel=props.kernel and typed_ok,
-            fold_safe=typed_ok
-            and (
+            fold_safe=(
                 props.group_safe
                 if engine == ENGINE_PARTIAL_UPDATE
                 else props.prefix_safe
@@ -450,6 +448,32 @@ def field_merges(schema: TableSchema) -> TableMerges:
     return TableMerges(
         out, opts.get("aggregation.remove-record-on-delete", "false") == "true"
     )
+
+
+def _check_sketch_type(name: str, func: str, ftype: str) -> None:
+    sketch_on = MERGE_FUNCS[func].sketch_on if func in MERGE_FUNCS else ()
+    if sketch_on and not ftype.startswith(sketch_on):
+        raise ValueError(
+            f"aggregate-function {func} on field {name!r} of type {ftype}: "
+            f"the field stores a sketch and must be {' or '.join(sketch_on)}"
+        )
+
+
+def check_sketch_fields(schema: TableSchema) -> None:
+    """Refuse a sketch aggregate function on a field of a type that
+    cannot hold its sketch (``MergeFunc.sketch_on``): run when a schema
+    is created or altered (``SchemaManager.commit``). Such a field would
+    store sketch bytes cast to its own type, which no later merge or
+    reader can use."""
+    engine = schema.options.get("merge-engine", ENGINE_DEDUPLICATE)
+    if not schema.primary_keys or engine not in (ENGINE_AGGREGATION, ENGINE_PARTIAL_UPDATE):
+        return
+    keys = set(_key_cols(schema))
+    default = schema.options.get("fields.default-aggregate-function")
+    for f in schema.fields:
+        func = schema.options.get(f"fields.{f.name}.aggregate-function", default)
+        if f.name not in keys and func:
+            _check_sketch_type(f.name, func, f.type.lower())
 
 
 def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:

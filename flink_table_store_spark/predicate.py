@@ -403,3 +403,27 @@ def and_(*ps):
 
 def or_(*ps):
     return Or(list(ps))
+
+
+def sub_predicate(pred: Predicate | None, keep) -> Predicate | None:
+    """The largest sub-predicate of ``pred`` built from leaves for which
+    ``keep(leaf)`` holds, implied by ``pred`` (every row ``pred`` keeps,
+    it keeps too); None when nothing is left. A conjunct may drop out
+    of an AND; weakening one arm of an OR is unsound, so an OR stays
+    whole or goes. Over primary-key columns it is safe to apply before
+    a merge: every version of a key shares its key values."""
+    if pred is None:
+        return None
+    if isinstance(pred, And):
+        kept = [s for c in pred.children if (s := sub_predicate(c, keep))]
+        if not kept:
+            return None
+        return kept[0] if len(kept) == 1 else And(kept)
+    if isinstance(pred, Or):
+        kept = [sub_predicate(c, keep) for c in pred.children]
+        if any(k is None for k in kept):
+            return None
+        return Or(kept)
+    if isinstance(pred, Leaf) and keep(pred):
+        return pred
+    return None

@@ -674,7 +674,20 @@ def build_dataframe(
         df = spark.createDataFrame([], schema=spark_schema)
     else:
         df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return finish_scan(df, schema, predicate, projection, limit)
 
+
+def finish_scan(
+    df: DataFrame,
+    schema: TableSchema,
+    predicate: Predicate | None,
+    projection: list[str] | None,
+    limit: int | None,
+) -> DataFrame:
+    """The residual WHERE, projection and limit on top of a scan's rows:
+    the Spark read (build_dataframe) and the driver read
+    (ReadBuilder.to_df) share them, so both answer with Spark's SQL
+    semantics."""
     if predicate is not None:
         df = df.where(predicate.to_column(schema.field_names()))
     if projection:

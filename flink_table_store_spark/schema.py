@@ -194,8 +194,11 @@ def select_exprs(df, exprs: list[str]):
 
 def typed_partition(raw: str | None, ddl: str):
     """A partition value as stored in a manifest entry (a string) back
-    to the Python value of its DDL type; unknown types stay strings."""
-    if raw is None:
+    to the Python value of its DDL type; unknown types stay strings.
+    Manifests store the default partition (``__HIVE_DEFAULT_PARTITION__``,
+    a NULL or an empty value on write) as ``''``: it reads as NULL for
+    every type, as Spark's ``partitionBy`` read of the directory does."""
+    if raw is None or raw == "":
         return None
     t = ddl.lower()
     if t in ("tinyint", "smallint", "int", "integer", "bigint", "long"):
@@ -300,6 +303,9 @@ class SchemaManager:
         return TableSchema.from_dict(read_json(self._path(schema_id)))
 
     def commit(self, schema: TableSchema) -> None:
+        from flink_table_store_spark.operators.merge_engines import check_sketch_fields
+
+        check_sketch_fields(schema)
         os.makedirs(self.dir, exist_ok=True)
         if not write_json_atomic_new(self._path(schema.id), schema.to_dict()):
             raise RuntimeError(f"schema-{schema.id} already exists (concurrent DDL)")

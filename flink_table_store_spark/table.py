@@ -19,6 +19,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from flink_table_store_spark import fileindex
 from flink_table_store_spark import read as read_mod
@@ -85,6 +86,32 @@ def _is_partition_only(predicate: Predicate, schema: TableSchema) -> bool:
     if isinstance(predicate, (And, Or)):
         return all(_is_partition_only(c, schema) for c in predicate.children)
     return False
+
+
+def _scan_type(dt: T.DataType, nullable: bool) -> T.DataType:
+    """``dt`` as Spark's file sources read it: CHAR/VARCHAR as STRING
+    and, with ``nullable``, every field, element and value nullable
+    (``StructType.asNullable``)."""
+    if isinstance(dt, (T.CharType, T.VarcharType)):
+        return T.StringType()
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name, _scan_type(f.dataType, nullable), nullable or f.nullable, f.metadata
+                )
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_scan_type(dt.elementType, nullable), nullable or dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _scan_type(dt.keyType, nullable),
+            _scan_type(dt.valueType, nullable),
+            nullable or dt.valueContainsNull,
+        )
+    return dt
 
 
 class ReadBuilder:
@@ -284,6 +311,23 @@ class ReadBuilder:
         return t.manifests.read_live_entries(snap.base_manifest_list, snap.delta_manifest_list)
 
     def to_df(self, spark: SparkSession) -> DataFrame:
+        """The scan as a Spark DataFrame, from one of two branches
+        picked by the plan, with the same rows and schema either way.
+
+        - Driver branch: a plan with no data-evolution patches, no
+          ``Raw`` predicate, selected data files totalling at most
+          ``localread.LOCAL_READ_MAX_BYTES`` and accepted by the bucket
+          reader is read on the driver (``localread.read_arrow``) into
+          a ``LocalRelation``: filters, projections and limits on top
+          fold into it, so collecting a key read starts no Spark job.
+        - Spark branch: every other plan builds a Spark scan and merge
+          (``read.build_dataframe``).
+
+        Both apply the predicate, projection and limit as Spark's WHERE,
+        SELECT and LIMIT (``read.finish_scan``)."""
+        return self._to_df(spark, driver=True)
+
+    def _to_df(self, spark: SparkSession, driver: bool) -> DataFrame:
         t = self._table
         from flink_table_store_spark import chain as chain_mod
 
@@ -340,6 +384,8 @@ class ReadBuilder:
                 limit=self._limit,
             )
         else:
+            df = self._driver_df(spark, plan) if driver else None
+        if df is None:
             df = read_mod.build_dataframe(
                 spark,
                 t.path,
@@ -355,6 +401,29 @@ class ReadBuilder:
             col, n, desc = self._topn
             df = df.orderBy(F.col(col).desc() if desc else F.col(col).asc()).limit(n)
         return self._with_fallback_branch(spark, df, plan)
+
+    def _driver_df(self, spark: SparkSession, plan) -> DataFrame | None:
+        """to_df's driver branch over ``plan``, or None when the plan
+        is above the byte bound, the predicate is ``Raw`` or the read
+        raises ValueError: the bucket reader refuses a plan it cannot
+        read that way before it opens a file (``bucketed_join._side_spec``
+        and ``_files``)."""
+        from flink_table_store_spark import localread
+
+        t, pred = self._table, self._predicate
+        if pred is not None and pred.fields() is None:
+            return None
+        if sum(e.file_size for e in plan.entries) > localread.LOCAL_READ_MAX_BYTES:
+            return None
+        try:
+            tbl = localread.read_arrow(self, plan=plan, exact=False)
+        except ValueError:
+            return None
+        # the Spark branch of an empty plan declares the table's schema
+        schema = _scan_type(t.schema.spark_schema(), nullable=bool(plan.entries))
+        schema = T.StructType([f for f in schema.fields if f.name in tbl.column_names])
+        df = spark.createDataFrame(tbl, schema)
+        return read_mod.finish_scan(df, t.schema, pred, self._projection, self._limit)
 
     def _with_fallback_branch(self, spark, df, plan):
         """``scan.fallback-branch`` (FallbackReadFileStoreTable.java):
@@ -1011,7 +1080,11 @@ class Table:
         if self.is_primary_key_table():
             # strategy 3: PK upsert of -D rows (their kinds ARE the
             # changelog under the input producer — no forcing needed)
-            rows = self.to_df(spark, predicate=predicate).select(*schema.field_names())
+            # read on the Spark branch: a driver-local frame would take
+            # the Arrow sink, whose smaller files move universal
+            # compaction's size-ratio picks
+            rows = self.read_builder().with_filter(predicate)._to_df(spark, driver=False)
+            rows = rows.select(*schema.field_names())
             return self.write(rows.withColumn(ROW_KIND, F.lit(ROWKIND_DELETE)), row_kind_col=ROW_KIND)
         staging_cl = None
         if schema.options.get("delete.force-produce-changelog") == "true":

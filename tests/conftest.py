@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -23,3 +24,18 @@ def warehouse(tmp_path):
     from flink_table_store_spark.catalog import Catalog
 
     return Catalog(str(tmp_path / "wh"))
+
+
+@pytest.fixture()
+def spark_branch(monkeypatch):
+    """A context manager under which ``to_df`` takes its Spark branch:
+    the driver branch's byte bound is 0 inside it."""
+    from flink_table_store_spark import localread
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setattr(localread, "LOCAL_READ_MAX_BYTES", 0)
+            yield
+
+    return forced

@@ -189,25 +189,24 @@ def test_pu_agg_options_parity_in_bucketed_join(spark, warehouse):
     joined = join_bucketed(spark, t.refresh(), t.refresh()).collect()
     join_read = {r.k: sorted(r.vs) for r in joined}
     assert join_read == table_read
-    # unfoldable aggregator: loud upfront refusal, not an executor crash
-    t2 = warehouse.create_table(
-        "db.agpu_join2", "k bigint, g int, h bigint", primary_keys=["k"],
-        options={
-            "bucket": "2",
-            "bucket-key": "k",
-            "merge-engine": "partial-update",
-            "fields.g.sequence-group": "h",
-            "fields.h.aggregate-function": "hll_sketch",
-        },
-    )
-    t2.write(spark.createDataFrame([(1, 1, 5)], "k bigint, g int, h bigint"))
-    with _pytest.raises(ValueError, match="cannot fold"):
-        join_bucketed(spark, t2.refresh(), t2.refresh()).collect()
+    # a raw-value sketch no merge can fold: refused up front, when the
+    # table is created, not by an executor crash
+    with _pytest.raises(ValueError, match="hll_sketch on field 'h'"):
+        warehouse.create_table(
+            "db.agpu_join2", "k bigint, g int, h bigint", primary_keys=["k"],
+            options={
+                "bucket": "2",
+                "bucket-key": "k",
+                "merge-engine": "partial-update",
+                "fields.g.sequence-group": "h",
+                "fields.h.aggregate-function": "hll_sketch",
+            },
+        )
 
 
 def _kernel_fixture(spark):
     """{function: (column type, value(key, run), extra options)} — one
-    column per function the merge table marks kernel-foldable."""
+    column per function of the merge table (the kernel folds them all)."""
     from pyspark.sql import functions as F
 
     from flink_table_store_spark.functions import sketches as S
@@ -290,11 +289,12 @@ def _canon(v, func):
     return v
 
 
-def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse):
-    """Table-driven parity: one aggregation column per kernel-foldable
-    function of ``merge_engines.MERGE_FUNCS``, three runs plus a -U and
-    a -D; the Catalyst fold (``to_df``) and the bucket kernel
-    (``to_arrow``, ``format("ftss")``) must agree on every column. A
+def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse, spark_branch):
+    """Table-driven parity: one aggregation column per function of
+    ``merge_engines.MERGE_FUNCS``, three runs plus a -U and a -D; the
+    Catalyst fold (``to_df`` forced onto its Spark branch) and the bucket
+    kernel (``to_df``'s driver branch, ``to_arrow``, ``format("ftss")``)
+    must agree on every column. A
     function registered without a fixture column fails here. The
     fold-safe columns alone must survive a universal compaction
     unchanged."""
@@ -305,7 +305,7 @@ def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse):
     )
 
     fixture = _kernel_fixture(spark)
-    assert set(fixture) == {f for f, p in MERGE_FUNCS.items() if p.kernel}
+    assert set(fixture) == set(MERGE_FUNCS)
     col = {f: "c_" + f.replace("-", "_") for f in fixture}
 
     def create(name, funcs):
@@ -336,13 +336,14 @@ def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse):
 
     funcs = list(fixture)
     t, ddl = create("db.agkernel", funcs)
-    assert all(m.kernel for m in field_merges(t.schema).fields.values())
     for rows in runs:
         write(t, ddl, funcs, rows)
     t = t.refresh()
-    want = merged(t.to_df(spark).collect(), funcs)
+    with spark_branch():
+        want = merged(t.to_df(spark).collect(), funcs)
     assert sorted(want) == [0, 1, 2, 3]
     surfaces = {
+        "to_df": merged(t.to_df(spark).collect(), funcs),
         "to_arrow": merged(t.to_arrow().to_pylist(), funcs),
         "ftss": merged(spark.read.format("ftss").load(t.path).collect(), funcs),
     }
@@ -363,8 +364,9 @@ def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse):
     assert fold_supported(t2.schema)
     for rows in runs:
         write(t2, ddl2, safe, rows)
-    before = merged(t2.refresh().to_df(spark).collect(), safe)
-    snap = t2.refresh().snapshots.latest_id()
-    t2.refresh().compact(spark, full=False, trigger_runs=2)
-    assert t2.refresh().snapshots.latest_id() > snap  # it did compact
-    assert merged(t2.refresh().to_df(spark).collect(), safe) == before
+    with spark_branch():
+        before = merged(t2.refresh().to_df(spark).collect(), safe)
+        snap = t2.refresh().snapshots.latest_id()
+        t2.refresh().compact(spark, full=False, trigger_runs=2)
+        assert t2.refresh().snapshots.latest_id() > snap  # it did compact
+        assert merged(t2.refresh().to_df(spark).collect(), safe) == before

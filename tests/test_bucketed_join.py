@@ -359,52 +359,23 @@ def test_bucketed_join_aggregation_engine_table(spark, warehouse):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
-    # hll_sketch on a NON-binary field (raw-value sketching) cannot
-    # fold in the kernel; binary hll fields fold locally (see
+    # hll_sketch on a NON-binary field would store sketch bytes cast to
+    # the field's type, which no surface can merge or read back: the
+    # table is refused when created (binary hll fields fold locally, see
     # test_bucketed_join_hll_sketch_binary_fold)
     import pytest
 
-    from flink_table_store_spark.operators.lookup import PartialLookupTable
-
-    t3 = warehouse.create_table(
-        "db.bjagg_bad",
-        "k bigint, h string",
-        primary_keys=["k"],
-        options={
-            "bucket": "2",
-            "merge-engine": "aggregation",
-            "fields.h.aggregate-function": "hll_sketch",
-        },
-    )
-    # a NULL value: the sketch of no values is ASCII, so the compacted
-    # string column stays valid UTF-8 for pyarrow (a sketch of real
-    # values stored in a string field is not)
-    t3.write(spark.createDataFrame([(1, None)], "k bigint, h string"))
-    t3 = t3.refresh()
-    # every kernel surface refuses at plan time, before a task runs,
-    # while the table has files to merge
-    for read in (
-        lambda: join_bucketed(spark, t3, t2, on=[("k", "k")]),
-        lambda: t3.to_arrow(),
-        lambda: PartialLookupTable(spark, t3).lookup({"k": 1}),
-    ):
-        with pytest.raises(ValueError, match=r"table\.to_df\(spark\).*compact"):
-            read()
-    # the format surface plans in a Python data source: Spark reports
-    # the planner's ValueError as an AnalysisException naming it
-    with pytest.raises(Exception, match="ValueError: .*compact"):
-        spark.read.format("ftss").load(t3.path).collect()
-    # fully compacted, nothing is left to merge: every surface reads the
-    # one stored row as to_df does
-    t3.compact(spark, full=True)
-    t3 = t3.refresh()
-    want = [tuple(r) for r in t3.to_df(spark).collect()]
-    assert len(want) == 1
-    assert [tuple(r.values()) for r in t3.to_arrow().to_pylist()] == want
-    assert [tuple(r) for r in spark.read.format("ftss").load(t3.path).collect()] == want
-    assert tuple(PartialLookupTable(spark, t3).lookup({"k": 1}).values()) == want[0]
-    got = join_bucketed(spark, t3, t2, on=[("k", "k")]).collect()
-    assert [tuple(r)[:2] for r in got] == want
+    with pytest.raises(ValueError, match="hll_sketch on field 'h'.*binary"):
+        warehouse.create_table(
+            "db.bjagg_bad",
+            "k bigint, h string",
+            primary_keys=["k"],
+            options={
+                "bucket": "2",
+                "merge-engine": "aggregation",
+                "fields.h.aggregate-function": "hll_sketch",
+            },
+        )
 
 
 def test_bucketed_join_aggregation_sketch_fields(spark, warehouse):

@@ -42,7 +42,7 @@ from flink_table_store_spark import write as W
 # slow-tier (run `-m ""` for the full suite).
 
 
-def _drive(spark, t, rng, n_ops, write_batch, apply_batch, expected, on_full=None):
+def _drive(spark, spark_branch, t, rng, n_ops, write_batch, apply_batch, expected, on_full=None):
     """Shared loop: interleave writes / compactions / expiry; compare
     the merged read against ``expected()`` after every op. ``on_full``
     lets the oracle model TOMBSTONE GC: a full compaction materializes
@@ -72,7 +72,7 @@ def _drive(spark, t, rng, n_ops, write_batch, apply_batch, expected, on_full=Non
     do_write()
     for step in range(n_ops):
         rng.choice(pool)()
-        got = _read(spark, t)
+        got = _read(spark, spark_branch, t)
         want = expected()
         assert got == want, (
             f"step {step}: diverged\n"
@@ -100,13 +100,14 @@ def _norm(v, ddl: str = ""):
     return v
 
 
-def _read(spark, t, keys=range(25)):
+def _read(spark, spark_branch, t, keys=range(25)):
     """The merged read of ``t`` keyed by its first column. Every read
-    surface must return it: ``to_df``, the local Arrow reader, the
-    ``ftss`` format, a ``PartialLookupTable`` probed for every key of
-    ``keys`` (absent and deleted keys must answer None), and inner
-    bucketed self-joins (two-table and chain) projected to the base
-    table's columns."""
+    surface must return it: ``to_df`` on its driver branch (these
+    tables are small) and forced onto its Spark branch, with equal
+    schemas, the local Arrow reader, the ``ftss`` format, a
+    ``PartialLookupTable`` probed for every key of ``keys`` (absent and
+    deleted keys must answer None), and inner bucketed self-joins
+    (two-table and chain) projected to the base table's columns."""
     from flink_table_store_spark.operators.bucketed_join import (
         join_bucketed,
         join_bucketed_chain,
@@ -125,11 +126,16 @@ def _read(spark, t, keys=range(25)):
             out[vals[0]] = tuple(vals[1:])
         return out
 
-    got = by_key(t.to_df(spark).collect())
+    df = t.to_df(spark)
+    with spark_branch():
+        spark_df = t.to_df(spark)
+    assert spark_df.schema == df.schema
+    got = by_key(df.collect())
     register_data_source(spark)
     lookup = PartialLookupTable(spark, t)
     found = [lookup.lookup({names[0]: k}) for k in keys]
     surfaces = {
+        "to_df (Spark branch)": by_key(spark_df.collect()),
         "to_arrow": by_key(t.read_builder().to_arrow().to_pylist()),
         "ftss": by_key(spark.read.format("ftss").load(t.path).collect()),
         "lookup": by_key(r for r in found if r is not None),
@@ -171,7 +177,7 @@ def _seeds(n: int) -> list:
 
 
 @pytest.mark.parametrize("seed", _seeds(6))
-def test_fuzz_dedup_sequence_field(spark, warehouse, seed):
+def test_fuzz_dedup_sequence_field(spark, warehouse, seed, spark_branch):
     rng = random.Random(4000 + seed)
     ddl = "k bigint, v bigint, ver bigint"
     wddl = ddl + ", rk string"
@@ -219,14 +225,14 @@ def test_fuzz_dedup_sequence_field(spark, warehouse, seed):
     def expected():
         return {k: (v, ver) for k, (_e, kind, v, ver) in state.items() if kind != "-D"}
 
-    _drive(spark, t, rng, 9, write_batch, apply_batch, expected)
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected)
 
 
 # --- family B: partial-update + sequence-group -----------------------------
 
 
 @pytest.mark.parametrize("seed", _seeds(6))
-def test_fuzz_partial_update_groups(spark, warehouse, seed):
+def test_fuzz_partial_update_groups(spark, warehouse, seed, spark_branch):
     rng = random.Random(4100 + seed)
     ddl = "k bigint, a string, b string, g bigint, c string"
     wddl = ddl + ", rk string"
@@ -306,14 +312,14 @@ def test_fuzz_partial_update_groups(spark, warehouse, seed):
         for k in [k for k, st in state.items() if not st["met"]]:
             del state[k]
 
-    _drive(spark, t, rng, 9, write_batch, apply_batch, expected, on_full=on_full)
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected, on_full=on_full)
 
 
 # --- family C: aggregation (sum / last_non_null / collect / merge_map) -----
 
 
 @pytest.mark.parametrize("seed", _seeds(6))
-def test_fuzz_aggregation_retracts(spark, warehouse, seed):
+def test_fuzz_aggregation_retracts(spark, warehouse, seed, spark_branch):
     rng = random.Random(4200 + seed)
     ddl = "k bigint, s bigint, last string, vs array<bigint>, m map<string,bigint>"
     wddl = ddl + ", rk string"
@@ -371,14 +377,14 @@ def test_fuzz_aggregation_retracts(spark, warehouse, seed):
             k: (st["s"], st["last"], st["vs"], st["m"]) for k, st in state.items()
         }
 
-    _drive(spark, t, rng, 9, write_batch, apply_batch, expected)
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected)
 
 
 # --- family E: aggregation-for-partial-update (r9 session 3) ---------------
 
 
 @pytest.mark.parametrize("seed", _seeds(4))
-def test_fuzz_partial_update_aggregation(spark, warehouse, seed):
+def test_fuzz_partial_update_aggregation(spark, warehouse, seed, spark_branch):
     """partial-update + a sum aggregator inside a sequence group +
     last-non-null non-group fields, mixed with universal and full
     compaction. sum is group-fold-safe, so partial folds DO fire; the
@@ -460,14 +466,14 @@ def test_fuzz_partial_update_aggregation(spark, warehouse, seed):
         for k in [k for k, st in state.items() if not st["met"]]:
             del state[k]
 
-    _drive(spark, t, rng, 9, write_batch, apply_batch, expected, on_full=on_full)
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected, on_full=on_full)
 
 
 # --- family D: partial-update + global sequence.field (r6 guarded fold) ----
 
 
 @pytest.mark.parametrize("seed", _seeds(6))
-def test_fuzz_partial_update_sequence_field(spark, warehouse, seed):
+def test_fuzz_partial_update_sequence_field(spark, warehouse, seed, spark_branch):
     """Random version streams under partial-update with a global
     ``sequence.field``, interleaved with universal compaction. Per-KEY
     versions never decrease — merge results are then materialization-
@@ -532,4 +538,4 @@ def test_fuzz_partial_update_sequence_field(spark, warehouse, seed):
             for k, st in state.items()
         }
 
-    _drive(spark, t, rng, 9, write_batch, apply_batch, expected)
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected)

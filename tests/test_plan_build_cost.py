@@ -6,7 +6,9 @@ cost of every commit, key read and compaction grow with the schema
 width. The engine builds its hot-path plans from SQL strings
 instead; these tests pin that:
 
-- round-trip budgets for a PK key-read plan, a one-row commit (from
+- round-trip budgets for a PK key-read plan (``to_df`` forced onto
+  its Spark branch), a driver-branch key read with its ``collect()``,
+  a one-row commit (from
   a row list, which the Spark sink writes, and from a pandas frame,
   which the Arrow sink writes) and a universal compaction on a
   q1-shaped table (11 columns, PK ``item_id``, 4 buckets), and the
@@ -79,7 +81,7 @@ def _second_call_cost(monkeypatch, fn) -> int:
     return n[0]
 
 
-def _costs(spark, warehouse, monkeypatch, extra_longs: int) -> dict[str, int]:
+def _costs(spark, warehouse, monkeypatch, spark_branch, extra_longs: int) -> dict[str, int]:
     ddl = _ddl(extra_longs)
     width = len(LONGS) + extra_longs + 2
     opts = {"bucket": "4"}
@@ -107,11 +109,18 @@ def _costs(spark, warehouse, monkeypatch, extra_longs: int) -> dict[str, int]:
     ]
     local_writer = table("local_write")
     pairs = [batches(table(f"compact{i}")) for i in (0, 1)]
+
+    def spark_read(i):
+        with spark_branch():
+            return reader.to_df(spark, predicate=P.equal("item_id", 7 + i))
+
+    def driver_read(i):
+        rows = reader.to_df(spark, predicate=P.equal("item_id", 7 + i)).collect()
+        assert [r.item_id for r in rows] == [7 + i]
+
     return {
-        "read": _second_call_cost(
-            monkeypatch,
-            lambda i: reader.to_df(spark, predicate=P.equal("item_id", 7 + i)),
-        ),
+        "read": _second_call_cost(monkeypatch, spark_read),
+        "driver_read": _second_call_cost(monkeypatch, driver_read),
         "write": _second_call_cost(
             monkeypatch,
             lambda i: writer.write(one[i], commit_identifier=f"point-{i}"),
@@ -127,15 +136,16 @@ def _costs(spark, warehouse, monkeypatch, extra_longs: int) -> dict[str, int]:
     }
 
 
-def test_plan_build_round_trip_budget(spark, warehouse, monkeypatch):
+def test_plan_build_round_trip_budget(spark, warehouse, monkeypatch, spark_branch):
     """Budgets on the q1 shape (one Column per table column cost about
     800 / 555 / 1700 round-trips), and the same count at 33 columns."""
-    q1 = _costs(spark, warehouse, monkeypatch, extra_longs=0)
+    q1 = _costs(spark, warehouse, monkeypatch, spark_branch, extra_longs=0)
     assert q1["read"] <= 300, q1
+    assert q1["driver_read"] <= 300, q1
     assert q1["write"] <= 150, q1
     assert q1["local_write"] <= 150, q1
     assert q1["compact"] <= 600, q1
-    wide = _costs(spark, warehouse, monkeypatch, extra_longs=22)
+    wide = _costs(spark, warehouse, monkeypatch, spark_branch, extra_longs=22)
     assert wide == q1
 
 

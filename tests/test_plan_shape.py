@@ -29,16 +29,17 @@ def _plan(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
-def test_scan_pushdown_and_pruning(spark, warehouse):
+def test_scan_pushdown_and_pruning(spark, warehouse, spark_branch):
     li = spark.read.parquet(os.path.join(SF, "lineitem.parquet"))
     t = warehouse.create_table("db.li", li.schema, partition_keys=["l_returnflag"])
     t.write(li)
 
-    df = t.to_df(
-        spark,
-        predicate=P.and_(P.equal("l_returnflag", "R"), P.greater_than("l_quantity", 40.0)),
-        projection=["l_orderkey", "l_quantity"],
-    )
+    with spark_branch():
+        df = t.to_df(
+            spark,
+            predicate=P.and_(P.equal("l_returnflag", "R"), P.greater_than("l_quantity", 40.0)),
+            projection=["l_orderkey", "l_quantity"],
+        )
     plan = _plan(df)
     # non-partition residual filter pushed into the parquet reader
     assert "PushedFilters" in plan and "l_quantity" in plan.split("PushedFilters")[1][:200]
@@ -51,7 +52,7 @@ def test_scan_pushdown_and_pruning(spark, warehouse):
     assert df.count() == li.where((F.col("l_returnflag") == "R") & (F.col("l_quantity") > 40)).count()
 
 
-def test_merge_on_read_single_shuffle(spark, warehouse):
+def test_merge_on_read_single_shuffle(spark, warehouse, spark_branch):
     nation = spark.read.parquet(os.path.join(SF, "nation.parquet"))
     t = warehouse.create_table(
         "db.nat", nation.schema, primary_keys=["n_nationkey"], options={"bucket": "2"}
@@ -61,16 +62,18 @@ def test_merge_on_read_single_shuffle(spark, warehouse):
     t = t.refresh()
 
     # simple mode prints each operator once — countable
-    plan = _plan(t.to_df(spark), mode="simple")
+    with spark_branch():
+        df = t.to_df(spark)
+    plan = _plan(df, mode="simple")
     # exactly one exchange: the merge keyed on the PK. More would mean
     # the merge view re-shuffles; zero would mean no merge happened.
     assert plan.count("Exchange") == 1
     # partial (map-side) combine before that exchange
-    formatted = _plan(t.to_df(spark))
+    formatted = _plan(df)
     assert "partial_max_by" in formatted or "partial_min_by" in formatted
 
 
-def test_merge_on_read_pushes_key_predicate(spark, warehouse):
+def test_merge_on_read_pushes_key_predicate(spark, warehouse, spark_branch):
     """PK reads keep predicates at the parquet scan: a key filter
     pushes through the deterministic winner fold into the merge-path
     FileScan, whether applied after to_df or passed as its predicate."""
@@ -82,10 +85,12 @@ def test_merge_on_read_pushes_key_predicate(spark, warehouse):
     t.write(nation.withColumn("n_name", F.upper("n_name")))
     t = t.refresh()
     want = nation.where("n_nationkey = 5").withColumn("n_name", F.upper("n_name")).collect()
-    for df in (
-        t.to_df(spark).where("n_nationkey = 5"),
-        t.to_df(spark, predicate=P.equal("n_nationkey", 5)),
-    ):
+    with spark_branch():
+        dfs = (
+            t.to_df(spark).where("n_nationkey = 5"),
+            t.to_df(spark, predicate=P.equal("n_nationkey", 5)),
+        )
+    for df in dfs:
         plan = _plan(df)
         assert "max_by" in plan, "two overlapping runs must take the merge path"
         pushed = [ln for ln in plan.splitlines() if ln.startswith("PushedFilters")]
@@ -93,7 +98,7 @@ def test_merge_on_read_pushes_key_predicate(spark, warehouse):
         assert df.collect() == want
 
 
-def test_post_compaction_no_shuffle(spark, warehouse):
+def test_post_compaction_no_shuffle(spark, warehouse, spark_branch):
     nation = spark.read.parquet(os.path.join(SF, "nation.parquet"))
     t = warehouse.create_table(
         "db.nat2", nation.schema, primary_keys=["n_nationkey"], options={"bucket": "2"}
@@ -105,7 +110,8 @@ def test_post_compaction_no_shuffle(spark, warehouse):
     t = t.refresh()
     # single compacted run per bucket → rawConvertible read, no merge,
     # no exchange at all
-    plan = _plan(t.to_df(spark), mode="simple")
+    with spark_branch():
+        plan = _plan(t.to_df(spark), mode="simple")
     assert "Exchange" not in plan
 
 
