@@ -29,9 +29,13 @@ if TYPE_CHECKING:  # pragma: no cover
     from flink_table_store_spark.table import ReadBuilder
 
 # ReadBuilder.to_df reads a plan whose selected data files total at most
-# this many bytes on the driver (read_arrow into a LocalRelation) instead
-# of in a Spark job. Measured crossover on local[2]: see CHANGES.md.
-LOCAL_READ_MAX_BYTES = 1 << 20
+# this many bytes on the driver (plan_tasks/read_tasks into a
+# LocalRelation) instead of in a Spark job. A full merged read of a q1
+# table costs the same on both branches at about 1.4 MB of files on
+# local[2] and 1.0 MB on local[4] (key reads favour the driver at every
+# size); the bound sits at half the smaller figure, as more executor
+# cores move the crossover further down. See CHANGES.md.
+LOCAL_READ_MAX_BYTES = 1 << 19
 
 
 def _arrow_type(ddl: str) -> "pa.DataType":
@@ -92,33 +96,22 @@ def _table_arrow_schema(schema) -> "pa.Schema":
     return pa.schema([pa.field(f.name, _arrow_type(f.type)) for f in schema.fields])
 
 
-def read_arrow(
-    rb: "ReadBuilder", max_workers: int = 8, plan=None, exact: bool = True
-) -> "pa.Table":
-    """Materialize the scan as one pyarrow Table. ``plan`` is a plan
-    already built from ``rb`` (default: ``rb.plan()``). With
-    ``exact=False`` the predicate only prunes (files, buckets, and rows
-    where the bucket reader knows it is false) and the projection only
-    narrows the columns read: the caller applies the predicate, the
-    projection and the limit (``ReadBuilder.to_df``'s driver branch).
-    Raises ValueError, before any file is read, on a plan the bucket
-    reader refuses (``bucketed_join._side_spec``/``_files``)."""
+def plan_tasks(rb: "ReadBuilder", plan) -> "tuple[list, pa.Schema]":
+    """The bucket tasks of ``plan`` (built from ``rb``, without
+    data-evolution patches) and the Arrow schema they read. The
+    predicate prunes files, buckets, and rows where the bucket reader
+    knows it is false; the projection narrows the columns read. Opens no
+    data file: raises ValueError on a plan the bucket reader refuses
+    (``bucketed_join._side_spec``/``_files``)."""
     import pyarrow as pa
 
-    from flink_table_store_spark.sources.datasource import (
-        _partitions,
-        _read_partition,
-    )
+    from flink_table_store_spark.sources.datasource import _partitions
 
     t = rb._table
     arrow_schema = _table_arrow_schema(t.schema)
-    if plan is None:
-        plan = rb.plan()
-    if plan.patch_entries:
-        return _read_stitched_arrow(rb, plan)
     # projection pushdown: the per-task readers load only the selected
     # columns plus whatever the predicate needs (the residual filter
-    # runs here, post-merge); bucket_tasks adds merge keys itself
+    # runs after the merge); bucket_tasks adds merge keys itself
     needed = None
     if rb._projection is not None:
         pf = rb._predicate.fields() if rb._predicate is not None else set()
@@ -128,7 +121,14 @@ def read_arrow(
         arrow_schema = pa.schema(
             [f for f in arrow_schema if f.name in set(needed)]
         )
-    parts = _partitions(t, plan, rb._predicate, columns=needed)
+    return _partitions(t, plan, rb._predicate, columns=needed), arrow_schema
+
+
+def read_tasks(parts: list, arrow_schema: "pa.Schema", max_workers: int = 8) -> "pa.Table":
+    """Read ``plan_tasks``' tasks on a thread pool into one Arrow table."""
+    import pyarrow as pa
+
+    from flink_table_store_spark.sources.datasource import _read_partition
 
     def _one(p) -> list:
         return list(_read_partition(p, arrow_schema))
@@ -138,13 +138,19 @@ def read_arrow(
         with ThreadPoolExecutor(max_workers=min(max_workers, len(parts))) as ex:
             for bs in ex.map(_one, parts):
                 batches.extend(bs)
-    tbl = (
+    return (
         pa.Table.from_batches(batches, schema=arrow_schema)
         if batches
         else arrow_schema.empty_table()
     )
-    if not exact:
-        return tbl
+
+
+def read_arrow(rb: "ReadBuilder", max_workers: int = 8) -> "pa.Table":
+    """Materialize the scan as one pyarrow Table."""
+    plan = rb.plan()
+    if plan.patch_entries:
+        return _read_stitched_arrow(rb, plan)
+    tbl = read_tasks(*plan_tasks(rb, plan), max_workers=max_workers)
     if rb._predicate is not None:
         tbl = tbl.filter(rb._predicate.to_arrow_expr())
     if rb._projection is not None:

@@ -552,7 +552,9 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
 
     Raises ValueError, before any task runs, on live data-evolution
     patches (the bucket reader cannot stitch them onto their base rows)
-    and on misconfigured field merge functions (``field_merges``)."""
+    and, when the plan has files to merge, on field merge functions the
+    kernel cannot fold. A plan without them (a fully compacted table)
+    reads its files as plain rows, as ``to_df`` does."""
     if plan.patch_entries:
         raise ValueError(
             "the bucket reader cannot stitch data-evolution patch files — "
@@ -584,6 +586,17 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
     merges = None
     if pk and engine in ("partial-update", "aggregation"):
         merges = field_merges(schema)
+        bad = sorted(f for f, m in merges.fields.items() if not m.kernel)
+        if bad and plan.merge_entries:
+            raise ValueError(
+                f"cannot fold aggregate-function(s) of fields {bad} "
+                "in the local (pandas) merge — read via table.to_df(spark), "
+                "or compact(full=True) the table first"
+            )
+        if bad:
+            # nothing to merge, and these functions cannot fold: read
+            # each bucket's one compacted run as plain rows
+            pk = False
         if engine == "partial-update":
             seq_groups = sequence_groups(schema)
             rr_groups = sorted(remove_record_groups(schema)) if seq_groups else []

@@ -298,10 +298,13 @@ class MergeFunc(NamedTuple):
     - ``sketch_on``: the field types (prefixes) a sketch function's
       field must have; merges union the stored sketches. On any other
       type the function would sketch raw values into a field that cannot
-      hold a sketch, so such fields are refused (``check_sketch_fields``).
+      hold a sketch, so such fields are refused (``check_sketch_fields``);
+      a table stored with one before that refusal reads through the
+      Catalyst fold only (``FieldMerge.kernel``).
 
-    Every function also folds in the per-bucket pandas kernel
-    (``bucketed_join.fold_aggregation``), as the Catalyst fold does.
+    Every function on a field of the type it needs also folds in the
+    per-bucket pandas kernel (``bucketed_join.fold_aggregation``), as
+    the Catalyst fold does.
     """
 
     prefix_safe: bool = False
@@ -357,6 +360,7 @@ class FieldMerge(NamedTuple):
     nested_key: tuple[str, ...]
     theta_k: int
     group: str | None  # partial-update sequence group key
+    kernel: bool  # False: a sketch function on a field that cannot hold one
     fold_safe: bool  # prefix_safe (aggregation) / group_safe (partial-update)
     exact_int: bool
 
@@ -427,7 +431,7 @@ def field_merges(schema: TableSchema) -> TableMerges:
             )
         count_limit = opts.get(f"fields.{f.name}.count-limit")
         ftype = f.type.lower()
-        _check_sketch_type(f.name, func, ftype)
+        typed_ok = not props.sketch_on or ftype.startswith(props.sketch_on)
         out[f.name] = FieldMerge(
             func="collect_distinct" if func == "collect" and distinct else func,
             type=f.type,
@@ -438,7 +442,9 @@ def field_merges(schema: TableSchema) -> TableMerges:
             nested_key=nested_key,
             theta_k=int(opts.get(f"fields.{f.name}.theta-sketch.k", "4096")),
             group=group_of.get(f.name),
-            fold_safe=(
+            kernel=typed_ok,
+            fold_safe=typed_ok
+            and (
                 props.group_safe
                 if engine == ENGINE_PARTIAL_UPDATE
                 else props.prefix_safe
@@ -448,15 +454,6 @@ def field_merges(schema: TableSchema) -> TableMerges:
     return TableMerges(
         out, opts.get("aggregation.remove-record-on-delete", "false") == "true"
     )
-
-
-def _check_sketch_type(name: str, func: str, ftype: str) -> None:
-    sketch_on = MERGE_FUNCS[func].sketch_on if func in MERGE_FUNCS else ()
-    if sketch_on and not ftype.startswith(sketch_on):
-        raise ValueError(
-            f"aggregate-function {func} on field {name!r} of type {ftype}: "
-            f"the field stores a sketch and must be {' or '.join(sketch_on)}"
-        )
 
 
 def check_sketch_fields(schema: TableSchema) -> None:
@@ -472,8 +469,13 @@ def check_sketch_fields(schema: TableSchema) -> None:
     default = schema.options.get("fields.default-aggregate-function")
     for f in schema.fields:
         func = schema.options.get(f"fields.{f.name}.aggregate-function", default)
-        if f.name not in keys and func:
-            _check_sketch_type(f.name, func, f.type.lower())
+        sketch_on = MERGE_FUNCS[func].sketch_on if func in MERGE_FUNCS else ()
+        ftype = f.type.lower()
+        if f.name not in keys and sketch_on and not ftype.startswith(sketch_on):
+            raise ValueError(
+                f"aggregate-function {func} on field {f.name!r} of type {ftype}: "
+                f"the field stores a sketch and must be {' or '.join(sketch_on)}"
+            )
 
 
 def _partial_update_aggs(schema: TableSchema, seq: str) -> tuple[list, list]:

@@ -325,9 +325,6 @@ class ReadBuilder:
 
         Both apply the predicate, projection and limit as Spark's WHERE,
         SELECT and LIMIT (``read.finish_scan``)."""
-        return self._to_df(spark, driver=True)
-
-    def _to_df(self, spark: SparkSession, driver: bool) -> DataFrame:
         t = self._table
         from flink_table_store_spark import chain as chain_mod
 
@@ -384,7 +381,7 @@ class ReadBuilder:
                 limit=self._limit,
             )
         else:
-            df = self._driver_df(spark, plan) if driver else None
+            df = self._driver_df(spark, plan)
         if df is None:
             df = read_mod.build_dataframe(
                 spark,
@@ -404,10 +401,10 @@ class ReadBuilder:
 
     def _driver_df(self, spark: SparkSession, plan) -> DataFrame | None:
         """to_df's driver branch over ``plan``, or None when the plan
-        is above the byte bound, the predicate is ``Raw`` or the read
-        raises ValueError: the bucket reader refuses a plan it cannot
-        read that way before it opens a file (``bucketed_join._side_spec``
-        and ``_files``)."""
+        is above the byte bound, the predicate is ``Raw`` or the bucket
+        reader refuses the plan (``localread.plan_tasks``'s ValueError,
+        raised before a file is opened). Errors while reading the files
+        propagate."""
         from flink_table_store_spark import localread
 
         t, pred = self._table, self._predicate
@@ -416,9 +413,10 @@ class ReadBuilder:
         if sum(e.file_size for e in plan.entries) > localread.LOCAL_READ_MAX_BYTES:
             return None
         try:
-            tbl = localread.read_arrow(self, plan=plan, exact=False)
+            tasks = localread.plan_tasks(self, plan)
         except ValueError:
             return None
+        tbl = localread.read_tasks(*tasks)
         # the Spark branch of an empty plan declares the table's schema
         schema = _scan_type(t.schema.spark_schema(), nullable=bool(plan.entries))
         schema = T.StructType([f for f in schema.fields if f.name in tbl.column_names])
@@ -1080,11 +1078,7 @@ class Table:
         if self.is_primary_key_table():
             # strategy 3: PK upsert of -D rows (their kinds ARE the
             # changelog under the input producer — no forcing needed)
-            # read on the Spark branch: a driver-local frame would take
-            # the Arrow sink, whose smaller files move universal
-            # compaction's size-ratio picks
-            rows = self.read_builder().with_filter(predicate)._to_df(spark, driver=False)
-            rows = rows.select(*schema.field_names())
+            rows = self.to_df(spark, predicate=predicate).select(*schema.field_names())
             return self.write(rows.withColumn(ROW_KIND, F.lit(ROWKIND_DELETE)), row_kind_col=ROW_KIND)
         staging_cl = None
         if schema.options.get("delete.force-produce-changelog") == "true":

@@ -336,6 +336,7 @@ def test_every_kernel_merge_function_agrees_across_surfaces(spark, warehouse, sp
 
     funcs = list(fixture)
     t, ddl = create("db.agkernel", funcs)
+    assert all(m.kernel for m in field_merges(t.schema).fields.values())
     for rows in runs:
         write(t, ddl, funcs, rows)
     t = t.refresh()

@@ -316,7 +316,7 @@ def test_bucketed_join_sequence_field_table(spark, warehouse):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
 
 
-def test_bucketed_join_aggregation_engine_table(spark, warehouse):
+def test_bucketed_join_aggregation_engine_table(spark, warehouse, monkeypatch):
     """Aggregation-engine tables join WITHOUT compact-first: the bucket
     tasks run the table's own per-field folds (fold_aggregation folds
     the same merge_engines.field_merges entries as the Catalyst path).
@@ -360,22 +360,57 @@ def test_bucketed_join_aggregation_engine_table(spark, warehouse):
     assert "Exchange" not in plan
 
     # hll_sketch on a NON-binary field would store sketch bytes cast to
-    # the field's type, which no surface can merge or read back: the
-    # table is refused when created (binary hll fields fold locally, see
+    # the field's type, which no merge can fold: such a table is refused
+    # when created (binary hll fields fold locally, see
     # test_bucketed_join_hll_sketch_binary_fold)
     import pytest
 
+    from flink_table_store_spark.operators import merge_engines
+    from flink_table_store_spark.operators.lookup import PartialLookupTable
+
+    bad_args = ("db.bjagg_bad", "k bigint, h string")
+    bad_opts = {
+        "bucket": "2",
+        "merge-engine": "aggregation",
+        "fields.h.aggregate-function": "hll_sketch",
+    }
     with pytest.raises(ValueError, match="hll_sketch on field 'h'.*binary"):
-        warehouse.create_table(
-            "db.bjagg_bad",
-            "k bigint, h string",
-            primary_keys=["k"],
-            options={
-                "bucket": "2",
-                "merge-engine": "aggregation",
-                "fields.h.aggregate-function": "hll_sketch",
-            },
-        )
+        warehouse.create_table(*bad_args, primary_keys=["k"], options=bad_opts)
+    # a table stored before that refusal stays readable: to_df folds it
+    # in Catalyst, and the kernel surfaces read it once fully compacted
+    with monkeypatch.context() as m:
+        m.setattr(merge_engines, "check_sketch_fields", lambda schema: None)
+        t3 = warehouse.create_table(*bad_args, primary_keys=["k"], options=bad_opts)
+    # a NULL value: the sketch of no values is ASCII, so the compacted
+    # string column stays valid UTF-8 for pyarrow (a sketch of real
+    # values stored in a string field is not)
+    t3.write(spark.createDataFrame([(1, None)], "k bigint, h string"))
+    t3 = t3.refresh()
+    want = [tuple(r) for r in t3.to_df(spark).collect()]
+    assert len(want) == 1
+    # every kernel surface refuses at plan time, before a task runs,
+    # while the table has files to merge
+    for read in (
+        lambda: join_bucketed(spark, t3, t2, on=[("k", "k")]),
+        lambda: t3.to_arrow(),
+        lambda: PartialLookupTable(spark, t3).lookup({"k": 1}),
+    ):
+        with pytest.raises(ValueError, match=r"table\.to_df\(spark\).*compact"):
+            read()
+    # the format surface plans in a Python data source: Spark reports
+    # the planner's ValueError as an AnalysisException naming it
+    with pytest.raises(Exception, match="ValueError: .*compact"):
+        spark.read.format("ftss").load(t3.path).collect()
+    # fully compacted, nothing is left to merge: every surface reads the
+    # one stored row as to_df does
+    t3.compact(spark, full=True)
+    t3 = t3.refresh()
+    assert [tuple(r) for r in t3.to_df(spark).collect()] == want
+    assert [tuple(r.values()) for r in t3.to_arrow().to_pylist()] == want
+    assert [tuple(r) for r in spark.read.format("ftss").load(t3.path).collect()] == want
+    assert tuple(PartialLookupTable(spark, t3).lookup({"k": 1}).values()) == want[0]
+    got = join_bucketed(spark, t3, t2, on=[("k", "k")]).collect()
+    assert [tuple(r)[:2] for r in got] == want
 
 
 def test_bucketed_join_aggregation_sketch_fields(spark, warehouse):

@@ -162,6 +162,30 @@ def test_driver_key_read_starts_no_spark_job(spark, warehouse, spark_branch):
     assert jobs
 
 
+def test_driver_read_error_is_raised(spark, warehouse):
+    """Only the bucket reader's plan-time refusal sends a plan to the
+    Spark branch: an error while the driver reads the files (here a
+    corrupt data file, pyarrow's ArrowInvalid, a ValueError) is raised,
+    without a second read on Spark."""
+    import os
+
+    import pyarrow as pa
+
+    ddl = "k bigint, v string"
+    t = warehouse.create_table("db.corrupt", ddl, primary_keys=["k"], options={"bucket": "1"})
+    t.write(spark.createDataFrame([(k, f"v{k}") for k in range(10)], ddl))
+    t = t.refresh()
+    (e,) = t.read_builder().plan().entries
+    path = os.path.join(t.path, e.file_name)
+    with open(path, "r+b") as f:
+        f.write(b"\0" * os.path.getsize(path))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(pa.ArrowInvalid):
+        t.to_df(spark, predicate=P.equal("k", 3)).collect()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_raw_value_sketch_fields_refused(warehouse):
     """A sketch aggregate function on a field that cannot hold its
     sketch is refused when the table is created and when an ALTER would

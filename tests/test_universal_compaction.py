@@ -136,10 +136,14 @@ def test_universal_whole_pick_commits_max_level(spark, warehouse):
 def test_universal_partial_pick_stays_level0(spark, warehouse):
     """A PARTIAL pick keeps level 0 (its -D rows and sequences must
     still merge against the untouched older runs)."""
+    import pandas as pd
+
     t = _t(warehouse, "db.unilvl0")
     t.write(spark.createDataFrame([(k, k) for k in range(5000)], DDL))
+    # driver-local frames, as the delete's -D rows are: one sink writes
+    # all four one-row runs, so their sizes stay within the size ratio
     for i in range(3):
-        t.write(spark.createDataFrame([(i, 1000 + i)], DDL))
+        t.write(spark.createDataFrame(pd.DataFrame({"k": [i], "v": [1000 + i]}), DDL))
     t.delete(spark, P.equal("k", 50))
     t = t.refresh()
     t.compact(spark, full=False)
