@@ -317,9 +317,12 @@ class ReadBuilder:
         - Driver branch: a plan with no data-evolution patches, no
           ``Raw`` predicate, selected data files totalling at most
           ``localread.LOCAL_READ_MAX_BYTES`` and accepted by the bucket
-          reader is read on the driver (``localread.read_arrow``) into
-          a ``LocalRelation``: filters, projections and limits on top
-          fold into it, so collecting a key read starts no Spark job.
+          reader is read on the driver (``localread.plan_tasks`` and
+          ``read_tasks``) into a ``LocalRelation``: filters,
+          projections and limits on top fold into it, so collecting a
+          key read starts no Spark job. An error while reading the
+          files is raised; only the reader's refusal of the plan falls
+          back to the Spark branch.
         - Spark branch: every other plan builds a Spark scan and merge
           (``read.build_dataframe``).
 
