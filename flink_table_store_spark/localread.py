@@ -28,13 +28,17 @@ if TYPE_CHECKING:  # pragma: no cover
 
     from flink_table_store_spark.table import ReadBuilder
 
-# ReadBuilder.to_df reads a plan whose selected data files total at most
-# this many bytes on the driver (plan_tasks/read_tasks into a
+# ReadBuilder.to_df reads a plan, and Table.compact folds a deduplicate
+# or first-row pick, whose data files total at most this many bytes on
+# the driver (plan_tasks/plan_rewrite and read_tasks into a
 # LocalRelation) instead of in a Spark job. A full merged read of a q1
 # table costs the same on both branches at about 1.4 MB of files on
 # local[2] and 1.0 MB on local[4] (key reads favour the driver at every
 # size); the bound sits at half the smaller figure, as more executor
-# cores move the crossover further down. See CHANGES.md.
+# cores move the crossover further down. Compaction crosses over much
+# higher: a deduplicate compaction of up to 7 MB of q1 files still ran
+# 2-3x faster on the driver on local[2] and local[4]
+# (tools/bench_driver_crossover.py). See CHANGES.md.
 LOCAL_READ_MAX_BYTES = 1 << 19
 
 
@@ -122,6 +126,36 @@ def plan_tasks(rb: "ReadBuilder", plan) -> "tuple[list, pa.Schema]":
             [f for f in arrow_schema if f.name in set(needed)]
         )
     return _partitions(t, plan, rb._predicate, columns=needed), arrow_schema
+
+
+def plan_rewrite(table, snapshot, entries: list, whole: bool) -> "tuple[list, pa.Schema]":
+    """The bucket tasks that fold a compaction's picked runs
+    ``entries`` of ``snapshot`` (its deletion vectors apply), one per
+    (partition, bucket), and the Arrow schema they read: the table's
+    columns, then ``_VALUE_KIND``, ``_SEQUENCE_NUMBER`` and the stored
+    ``_bucket``. ``whole``: the pick is every run of its buckets, so
+    retract winners drop; otherwise they stay to cancel older rows.
+    Opens no data file: raises ValueError on runs the bucket reader
+    refuses to rewrite (``bucketed_join._side_spec``/``_files``)."""
+    import pyarrow as pa
+
+    from flink_table_store_spark.operators.bucketed_join import bucket_tasks
+    from flink_table_store_spark.read import ScanPlan
+    from flink_table_store_spark.schema import SEQUENCE_NUMBER, VALUE_KIND
+    from flink_table_store_spark.sources.datasource import FtssInputPartition
+    from flink_table_store_spark.write import BUCKET_COL
+
+    plan = ScanPlan(merge_entries=list(entries), snapshot=snapshot)
+    tasks = bucket_tasks(table, plan, rewrite="whole" if whole else "partial")
+    arrow_schema = pa.schema(
+        list(_table_arrow_schema(table.schema))
+        + [
+            pa.field(VALUE_KIND, pa.string()),
+            pa.field(SEQUENCE_NUMBER, pa.int64()),
+            pa.field(BUCKET_COL, pa.int32()),
+        ]
+    )
+    return [FtssInputPartition(spec, b) for spec, b in tasks], arrow_schema
 
 
 def read_tasks(parts: list, arrow_schema: "pa.Schema", max_workers: int = 8) -> "pa.Table":

@@ -52,7 +52,7 @@ from flink_table_store_spark.schema import (
     VALUE_KIND,
     typed_partition,
 )
-from flink_table_store_spark.write import POSTPONE_BUCKET, bucket_keys
+from flink_table_store_spark.write import BUCKET_COL, POSTPONE_BUCKET, bucket_keys
 
 # repo root (…/flink_table_store_spark/operators/ → two levels up) — shipped
 # into executor closures so workers can import the package from shared
@@ -543,15 +543,22 @@ def _arrow_exact(leaf, ddl: str | None) -> bool:
     return False
 
 
-def _side_spec(table, plan, cols, keys, pred) -> dict:
+def _side_spec(table, plan, cols, keys, pred, rewrite=None) -> dict:
     """What the bucket reader (``read_bucket_side``) needs about one
     table side, as picklable values, from a ``ReadBuilder.plan``;
     ``buckets`` is left empty for bucket_spec/bucket_tasks to fill.
     The plan's snapshot supplies the deletion vectors: a plan without
     one (Table.delta_plan) reads its files as committed.
 
+    ``rewrite`` folds a compaction's picked runs instead of reading
+    rows: each winner comes back with its ``_VALUE_KIND``,
+    ``_SEQUENCE_NUMBER`` and stored ``_bucket``; ``"whole"`` (no older
+    run is left in the bucket) drops retract winners as a read does,
+    ``"partial"`` keeps them to cancel rows in the untouched older runs.
+
     Raises ValueError, before any task runs, on live data-evolution
-    patches (the bucket reader cannot stitch them onto their base rows)
+    patches (the bucket reader cannot stitch them onto their base rows),
+    on a ``rewrite`` of anything but a deduplicate or first-row table
     and, when the plan has files to merge, on field merge functions the
     kernel cannot fold. A plan without them (a fully compacted table)
     reads its files as plain rows, as ``to_df`` does."""
@@ -572,6 +579,10 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
     ]
     pk = bool(schema.primary_keys)
     engine = schema.options.get("merge-engine", "deduplicate")
+    if rewrite is not None and not (pk and engine in ("deduplicate", "first-row")):
+        raise ValueError(
+            f"the bucket reader rewrites deduplicate and first-row runs only, not {engine!r}"
+        )
     if pk and seq_descending(schema):
         # the Catalyst fold's refusal (merge_engines.seq_order_exprs)
         for c in seq_fields:
@@ -693,6 +704,7 @@ def _side_spec(table, plan, cols, keys, pred) -> dict:
             )
         ),
         "out_need": list(dict.fromkeys(list(sel_cols) + jkeys)),
+        "rewrite": rewrite,
     }
     return spec
 
@@ -752,14 +764,15 @@ def bucket_spec(table, plan, cols=None, keys=(), pred=None) -> dict:
     return spec
 
 
-def bucket_tasks(table, plan, cols=None, pred=None) -> list[tuple[dict, int]]:
-    """The scan tasks of the format surface and local reads over
-    ``plan``: ``(spec, bucket)`` pairs, one per (partition, bucket)
-    merge group and one per raw file. A raw file (a single compacted
-    run, or an append table's file) needs no merge, so its task reads
-    it as plain rows. ``cols`` and ``pred`` as in bucket_spec; live
-    data-evolution patches raise ValueError."""
-    spec = _side_spec(table, plan, cols, (), pred)
+def bucket_tasks(table, plan, cols=None, pred=None, rewrite=None) -> list[tuple[dict, int]]:
+    """The scan tasks of the format surface, local reads and driver
+    compactions over ``plan``: ``(spec, bucket)`` pairs, one per
+    (partition, bucket) merge group and one per raw file. A raw file (a
+    single compacted run, or an append table's file) needs no merge, so
+    its task reads it as plain rows. ``cols`` and ``pred`` as in
+    bucket_spec, ``rewrite`` as in _side_spec; live data-evolution
+    patches raise ValueError."""
+    spec = _side_spec(table, plan, cols, (), pred, rewrite)
     groups: dict[tuple, list] = {}
     for e in plan.merge_entries:
         groups.setdefault(
@@ -779,7 +792,8 @@ def bucket_tasks(table, plan, cols=None, pred=None) -> list[tuple[dict, int]]:
 
 def read_bucket_side(spec: dict, bucket: int):
     """Read + locally merge ONE table side's bucket (executor-side).
-    Returns a pandas frame of ``spec["out_need"]`` columns, or None when
+    Returns a pandas frame of ``spec["out_need"]`` columns (plus the
+    system columns and ``_bucket`` of a ``rewrite``), or None when
     the bucket holds no files. Applies deletion vectors scoped to the
     bucket's files, schema-evolution field maps, and the table's merge
     engine (deduplicate / first-row / partial-update / aggregation)."""
@@ -891,9 +905,10 @@ def read_bucket_side(spec: dict, bucket: int):
         if spec["engine"] in ("deduplicate", "first-row"):
             keep = "last" if spec["engine"] == "deduplicate" else "first"
             pdf = pdf.drop_duplicates(subset=spec["key_cols"], keep=keep)
-            # retract winners (-D and -U) hide the record, matching
-            # DropDeleteReader's RowKind.isAdd filter
-            pdf = pdf[~pdf[kindc].isin((KIND_DELETE, "-U"))]
+            if spec.get("rewrite") != "partial":
+                # retract winners (-D and -U) hide the record, matching
+                # DropDeleteReader's RowKind.isAdd filter
+                pdf = pdf[~pdf[kindc].isin((KIND_DELETE, "-U"))]
         elif spec["engine"] == "aggregation":
             merges = spec["merges"]
             pdf = fold_aggregation(
@@ -1027,6 +1042,9 @@ def read_bucket_side(spec: dict, bucket: int):
         # drop anyway — see _keep_mask
         pdf = pdf[_keep_mask(spec["pred"], pdf)]
     keep = [c for c in spec["out_need"] if c in pdf.columns]
+    if spec.get("rewrite"):
+        pdf = pdf.assign(**{BUCKET_COL: bucket})
+        keep += [kindc, seqc, BUCKET_COL]
     # Arrow reads maps as (key, value) pair lists; mapInPandas,
     # applyInPandas and Arrow's from_pandas take dicts
     return pdf[keep].assign(

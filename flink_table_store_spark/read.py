@@ -38,6 +38,7 @@ from flink_table_store_spark.schema import (
     VALUE_KIND,
     TableSchema,
     quote_ident,
+    scan_type,
     select_exprs,
 )
 from flink_table_store_spark.snapshot import Snapshot
@@ -405,7 +406,7 @@ def _stored_schema(schema: TableSchema, pk: bool, with_row_id: bool = False) -> 
     declared types), plus the PK writer's system columns. With
     ``with_row_id``, the compaction-materialized ``_ROW_ID`` column is
     included (null for files written without one)."""
-    fields = list(schema.spark_schema().fields)
+    fields = list(scan_type(schema.spark_schema(), nullable=False).fields)
     if pk:
         fields.append(T.StructField(VALUE_KIND, T.StringType()))
         fields.append(T.StructField(SEQUENCE_NUMBER, T.LongType()))

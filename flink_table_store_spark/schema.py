@@ -532,3 +532,29 @@ class SchemaManager:
         )
         self.commit(new)
         return new
+
+
+def scan_type(dt: T.DataType, nullable: bool) -> T.DataType:
+    """``dt`` as Spark's file sources read it: CHAR/VARCHAR as STRING
+    and, with ``nullable``, every field, element and value nullable
+    (``StructType.asNullable``)."""
+    if isinstance(dt, (T.CharType, T.VarcharType)):
+        return T.StringType()
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name, scan_type(f.dataType, nullable), nullable or f.nullable, f.metadata
+                )
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(scan_type(dt.elementType, nullable), nullable or dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            scan_type(dt.keyType, nullable),
+            scan_type(dt.valueType, nullable),
+            nullable or dt.valueContainsNull,
+        )
+    return dt

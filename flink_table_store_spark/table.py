@@ -45,6 +45,7 @@ from flink_table_store_spark.schema import (
     SchemaManager,
     TableSchema,
     quote_ident,
+    scan_type,
 )
 from flink_table_store_spark.snapshot import (
     COMMIT_APPEND,
@@ -86,32 +87,6 @@ def _is_partition_only(predicate: Predicate, schema: TableSchema) -> bool:
     if isinstance(predicate, (And, Or)):
         return all(_is_partition_only(c, schema) for c in predicate.children)
     return False
-
-
-def _scan_type(dt: T.DataType, nullable: bool) -> T.DataType:
-    """``dt`` as Spark's file sources read it: CHAR/VARCHAR as STRING
-    and, with ``nullable``, every field, element and value nullable
-    (``StructType.asNullable``)."""
-    if isinstance(dt, (T.CharType, T.VarcharType)):
-        return T.StringType()
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(
-                    f.name, _scan_type(f.dataType, nullable), nullable or f.nullable, f.metadata
-                )
-                for f in dt.fields
-            ]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_scan_type(dt.elementType, nullable), nullable or dt.containsNull)
-    if isinstance(dt, T.MapType):
-        return T.MapType(
-            _scan_type(dt.keyType, nullable),
-            _scan_type(dt.valueType, nullable),
-            nullable or dt.valueContainsNull,
-        )
-    return dt
 
 
 class ReadBuilder:
@@ -421,7 +396,7 @@ class ReadBuilder:
             return None
         tbl = localread.read_tasks(*tasks)
         # the Spark branch of an empty plan declares the table's schema
-        schema = _scan_type(t.schema.spark_schema(), nullable=bool(plan.entries))
+        schema = scan_type(t.schema.spark_schema(), nullable=bool(plan.entries))
         schema = T.StructType([f for f in schema.fields if f.name in tbl.column_names])
         df = spark.createDataFrame(tbl, schema)
         return read_mod.finish_scan(df, t.schema, pred, self._projection, self._limit)
@@ -1684,7 +1659,24 @@ class Table:
         partition, not the table). ``partition_idle_time_ms`` compacts
         only partitions whose NEWEST file is older than the duration
         (the procedure's ``partition_idle_time`` — skip partitions
-        still receiving writes)."""
+        still receiving writes).
+
+        The rewrite of a primary-key table takes one of two branches,
+        with the same rows, levels and buckets either way:
+
+        - Driver branch (``_driver_compact``): when the picked files
+          total at most ``localread.LOCAL_READ_MAX_BYTES``, the bucket
+          reader folds each (partition, bucket) on the driver and
+          ``stage_and_collect`` writes the Arrow result through its
+          Arrow sink, with no Spark job. A full compaction takes it
+          only with a fixed bucket layout that every rewritten file was
+          written in, and without row tracking, data-evolution patches,
+          ``record-level.expire-time`` or
+          ``changelog-producer=full-compaction``.
+        - Spark branch: every other rewrite, and every pick the bucket
+          reader refuses before it opens a file (it rewrites only
+          deduplicate and first-row tables). An error while reading
+          the files is raised, not retried on Spark."""
         chain_target = self._chain_write_target()
         if chain_target is not None:
             # file compaction of the main view = the snapshot branch's
@@ -1775,7 +1767,78 @@ class Table:
         if not to_compact:
             return snap
 
-        max_level = MAX_LEVEL
+        pk = self.is_primary_key_table()
+        new_entries = None
+        layouts: dict[int, bool] = {}
+        if (
+            pk
+            and not patches
+            and not self.row_tracking_enabled()
+            and not schema.options.get("record-level.expire-time")
+            and schema.options.get("changelog-producer") != "full-compaction"
+            # a fixed bucket layout that every rewritten file was
+            # written in: its stored bucket is the one its keys hash to
+            and schema.num_buckets() > 0
+            and all(
+                read_mod.same_bucket_layout(self.path, schema, e.schema_id, layouts)
+                for e in to_compact
+            )
+        ):
+            new_entries = self._driver_compact(spark, snap, to_compact, [])
+        consumed_patches: list[ManifestEntry] = []
+        if new_entries is None:
+            new_entries, consumed_patches = self._spark_compact(
+                spark, snap, to_compact, patches, full
+            )
+        latest = self.snapshots.latest()
+        # compacted rows keep sequence semantics: the Spark rewrite gives
+        # them fresh low seqs and the driver rewrite keeps theirs, but no
+        # older run survives in their buckets, so ordering vs future
+        # commits (which use next_sequence from the snapshot) stays correct.
+        deletes = []
+        for e in to_compact + consumed_patches:
+            d = ManifestEntry(**{**e.__dict__})
+            d.kind = KIND_DELETE
+            deletes.append(d)
+        # DV maintenance: compacted files materialized their deletes, so
+        # keep only DV rows for files that survive this commit
+        new_dv, new_dv_count, new_dv_buckets = self._consolidate_dv(
+            snap,
+            survivors={os.path.basename(e.file_name) for e in entries}
+            - {os.path.basename(e.file_name) for e in to_compact},
+            bucket_of={os.path.basename(e.file_name): e.bucket for e in entries},
+        )
+        # changelog-producer=full-compaction: persist the diff vs the
+        # previous compaction's state as changelog files referenced by
+        # this snapshot, so N consumers read files instead of each
+        # recomputing a two-sided merge (FullChangelogMergeTreeCompact-
+        # Rewriter.java; Snapshot.changelogManifestList)
+        cl_files: list[str] = []
+        if pk and schema.options.get("changelog-producer") == "full-compaction":
+            cl_files = self._write_compaction_changelog(spark, snap)
+        return self.committer.commit(
+            deletes + new_entries,
+            schema.id,
+            kind=COMMIT_COMPACT,
+            next_sequence=latest.next_sequence if latest else 0,
+            dv_files=new_dv,
+            changelog_files=cl_files,
+            dv_row_count=new_dv_count,
+            dv_buckets=new_dv_buckets,
+        )
+
+    def _spark_compact(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        to_compact: list,
+        patches: list,
+        full: bool,
+    ) -> tuple[list[ManifestEntry], list[ManifestEntry]]:
+        """compact()'s rewrite of ``to_compact`` in Spark jobs: the new
+        MAX_LEVEL entries, and the patch files a full compaction of a
+        data-evolution table materialized (they retire with the runs)."""
+        schema = self.schema
         pk = self.is_primary_key_table()
         row_ids = self.row_tracking_enabled()
         one_shuffle = False
@@ -1854,49 +1917,15 @@ class Table:
             # post-compaction reads get bucket pruning + raw splits
             n = int(schema.options.get("postpone.bucket-num", "4"))
             merged = merged.withColumn(BUCKET_COL, bucket_expr(schema, n))
-        latest = self.snapshots.latest()
         new_entries = stage_and_collect(
             merged,
             self.path,
             schema,
-            target_level=max_level,
+            target_level=MAX_LEVEL,
             keep_cols=["_ROW_ID"] if row_ids else None,
             pre_partitioned=one_shuffle,
         )
-        # compacted rows keep sequence semantics: they carry fresh low seqs,
-        # but there are no surviving older runs, so ordering vs future
-        # commits (which use next_sequence from the snapshot) stays correct.
-        deletes = []
-        for e in to_compact + consumed_patches:
-            d = ManifestEntry(**{**e.__dict__})
-            d.kind = KIND_DELETE
-            deletes.append(d)
-        # DV maintenance: compacted files materialized their deletes, so
-        # keep only DV rows for files that survive this commit
-        new_dv, new_dv_count, new_dv_buckets = self._consolidate_dv(
-            snap,
-            survivors={os.path.basename(e.file_name) for e in entries}
-            - {os.path.basename(e.file_name) for e in to_compact},
-            bucket_of={os.path.basename(e.file_name): e.bucket for e in entries},
-        )
-        # changelog-producer=full-compaction: persist the diff vs the
-        # previous compaction's state as changelog files referenced by
-        # this snapshot, so N consumers read files instead of each
-        # recomputing a two-sided merge (FullChangelogMergeTreeCompact-
-        # Rewriter.java; Snapshot.changelogManifestList)
-        cl_files: list[str] = []
-        if pk and schema.options.get("changelog-producer") == "full-compaction":
-            cl_files = self._write_compaction_changelog(spark, snap)
-        return self.committer.commit(
-            deletes + new_entries,
-            schema.id,
-            kind=COMMIT_COMPACT,
-            next_sequence=latest.next_sequence if latest else 0,
-            dv_files=new_dv,
-            changelog_files=cl_files,
-            dv_row_count=new_dv_count,
-            dv_buckets=new_dv_buckets,
-        )
+        return new_entries, consumed_patches
 
     @staticmethod
     def _pick_universal(runs: list, amp_pct: int, size_ratio: int, trigger: int):
@@ -2008,7 +2037,10 @@ class Table:
         whole-bucket pick whose output is fully merged (-D rows dropped
         or absent) commits at MAX_LEVEL like the reference's pick
         outputLevel (UniversalCompaction.java outputLevel), so
-        plan_scan's single-run raw shortcut engages on the next read."""
+        plan_scan's single-run raw shortcut engages on the next read.
+
+        The rewrite takes one of two branches, as ``compact`` says
+        (``_driver_compact``, else ``_spark_compact_universal``)."""
         schema = self.schema
         opts = schema.options
         engine = opts.get("merge-engine", "deduplicate")
@@ -2061,6 +2093,83 @@ class Table:
         selected = selected_whole + selected_partial
         if not selected:
             return snap
+        new_entries = self._driver_compact(spark, snap, selected_whole, selected_partial)
+        if new_entries is None:
+            new_entries = self._spark_compact_universal(
+                spark, snap, selected_whole, selected_partial
+            )
+        deletes = []
+        for e in selected:
+            d = ManifestEntry(**{**e.__dict__})
+            d.kind = KIND_DELETE
+            deletes.append(d)
+        live_names = {os.path.basename(e.file_name) for e in entries}
+        sel_names = {os.path.basename(e.file_name) for e in selected}
+        dv_files, dv_count, dv_bkts = self._consolidate_dv(
+            snap,
+            live_names - sel_names,
+            bucket_of={os.path.basename(e.file_name): e.bucket for e in entries},
+        )
+        return self.committer.commit(
+            deletes + new_entries,
+            schema.id,
+            kind=COMMIT_COMPACT,
+            next_sequence=snap.next_sequence,
+            dv_files=dv_files,
+            dv_row_count=dv_count,
+            dv_buckets=dv_bkts,
+        )
+
+    def _driver_compact(
+        self, spark: SparkSession, snap: Snapshot, whole: list, partial: list
+    ) -> list[ManifestEntry] | None:
+        """The new entries of a compaction's rewrite on the driver, or
+        None when the ``whole``-bucket and ``partial`` picks total more
+        than ``localread.LOCAL_READ_MAX_BYTES`` or the bucket reader
+        refuses them (``localread.plan_rewrite``'s ValueError, raised
+        before a file is opened). Each pick's winners, with their
+        sequence numbers, kinds and stored buckets, go to
+        ``stage_and_collect`` as Arrow: a whole pick drops retract
+        winners and lands at MAX_LEVEL, a partial one keeps them at
+        level 0."""
+        from flink_table_store_spark import localread
+
+        if sum(e.file_size for e in whole + partial) > localread.LOCAL_READ_MAX_BYTES:
+            return None
+        try:
+            picks = [
+                (localread.plan_rewrite(self, snap, runs, whole=is_whole), level)
+                for runs, is_whole, level in ((whole, True, MAX_LEVEL), (partial, False, 0))
+                if runs
+            ]
+        except ValueError:
+            return None
+        new_entries: list[ManifestEntry] = []
+        for tasks, level in picks:
+            new_entries += stage_and_collect(
+                localread.read_tasks(*tasks),
+                self.path,
+                self.schema,
+                row_kind_col=VALUE_KIND,
+                target_level=level,
+                preserve_seq=True,
+                spark=spark,
+            )
+        return new_entries
+
+    def _spark_compact_universal(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        selected_whole: list,
+        selected_partial: list,
+    ) -> list[ManifestEntry]:
+        """_compact_universal's rewrite in Spark jobs: the new entries
+        of folding the whole-bucket picks (MAX_LEVEL, or level 0 for a
+        partial-update/aggregation group a retract leaves unresolved)
+        and the partial picks (level 0, sequence numbers kept)."""
+        schema = self.schema
+        engine = schema.options.get("merge-engine", "deduplicate")
         dv = read_mod.dv_dataframe(spark, self.path, snap.dv_files)
         # MUST match fold_runs' unfoldable set: a bucket whose retract
         # rows pass through the fold but get written at MAX_LEVEL would
@@ -2081,7 +2190,12 @@ class Table:
         # (guide §2.5): below the session parallelism the single-group
         # exchange would starve cores.
         pre_part = engine in ("deduplicate", "first-row") and (
-            len({(tuple(sorted(e.partition.items())), e.bucket) for e in selected})
+            len(
+                {
+                    (tuple(sorted(e.partition.items())), e.bucket)
+                    for e in selected_whole + selected_partial
+                }
+            )
             >= spark.sparkContext.defaultParallelism
         )
 
@@ -2174,27 +2288,7 @@ class Table:
                 preserve_seq=True,
                 pre_partitioned=pre_part,
             )
-        deletes = []
-        for e in selected:
-            d = ManifestEntry(**{**e.__dict__})
-            d.kind = KIND_DELETE
-            deletes.append(d)
-        live_names = {os.path.basename(e.file_name) for e in entries}
-        sel_names = {os.path.basename(e.file_name) for e in selected}
-        dv_files, dv_count, dv_bkts = self._consolidate_dv(
-            snap,
-            live_names - sel_names,
-            bucket_of={os.path.basename(e.file_name): e.bucket for e in entries},
-        )
-        return self.committer.commit(
-            deletes + new_entries,
-            schema.id,
-            kind=COMMIT_COMPACT,
-            next_sequence=snap.next_sequence,
-            dv_files=dv_files,
-            dv_row_count=dv_count,
-            dv_buckets=dv_bkts,
-        )
+        return new_entries
 
     def _write_compaction_changelog(self, spark: SparkSession, snap: Snapshot) -> list[str]:
         """Diff the merged state at the previous full compaction against

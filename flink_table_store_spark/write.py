@@ -25,8 +25,9 @@ import os
 import shutil
 import urllib.parse
 import uuid
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_table_store_spark import fileindex
@@ -42,6 +43,9 @@ from flink_table_store_spark.schema import (
     select_exprs,
 )
 from flink_table_store_spark.snapshot import now_millis
+
+if TYPE_CHECKING:  # pragma: no cover
+    import pyarrow as pa
 
 BUCKET_COL = "_bucket"
 DATA_DIR = "data"
@@ -176,7 +180,7 @@ def _cast_to_schema(df: DataFrame, schema: TableSchema, extra: list[str] = ()) -
 
 
 def stage_and_collect(
-    df: DataFrame,
+    df: "DataFrame | pa.Table",
     table_path: str,
     schema: TableSchema,
     base_sequence: int = 0,
@@ -185,6 +189,7 @@ def stage_and_collect(
     keep_cols: list[str] | None = None,
     preserve_seq: bool = False,
     pre_partitioned: bool = False,
+    spark: SparkSession | None = None,
 ) -> list[ManifestEntry]:
     """Write ``df`` into the table's data layout; return manifest entries.
 
@@ -208,6 +213,14 @@ def stage_and_collect(
     Everything after staging (file indexes, footer stats, the move into
     ``data/``) is shared.
 
+    ``df`` may also be a pyarrow Table of rows already on the driver,
+    with ``spark`` the session: a primary-key rewrite's rows with
+    ``preserve_seq``, holding the table's columns, ``_VALUE_KIND``,
+    ``_SEQUENCE_NUMBER`` and ``_bucket`` (a driver compaction). The
+    Arrow sink writes them as they stand, with no round trip through
+    the JVM (``_arrow_rows``); any other such table becomes a frame
+    first (``createDataFrame``).
+
     ``pre_partitioned=True``: the caller guarantees ``df`` already
     carries ``_bucket`` AND is hash-partitioned on (partition, bucket)
     — the write-side repartition is skipped (r12 one-shuffle
@@ -216,6 +229,14 @@ def stage_and_collect(
     """
     pk = bool(schema.primary_keys)
     pt_cols = list(schema.partition_keys)
+    fmt = schema.file_format()
+    staging = os.path.join(table_path, "staging", uuid.uuid4().hex)
+    if not isinstance(df, DataFrame):
+        rows = _arrow_rows(df, schema, fmt, spark) if pk and preserve_seq else None
+        if rows is not None:
+            _arrow_sink(*rows, staging, pt_cols + [BUCKET_COL])
+            return _finish_staged(spark, None, staging, table_path, schema, target_level, fmt)
+        df = spark.createDataFrame(df)
 
     if pk:
         if row_kind_col and row_kind_col in df.columns:
@@ -228,21 +249,9 @@ def stage_and_collect(
             df = df.withColumn(
                 VALUE_KIND, F.expr(quote_ident(kind) if kind else f"'{KIND_INSERT}'")
             )
-        engine = schema.options.get("merge-engine", "deduplicate")
-        if any(
-            schema.options.get(k) == "true"
-            for k in ("ignore-delete", f"{engine}.ignore-delete")
-        ):
-            # CoreOptions.IGNORE_DELETE (+ per-engine fallback keys):
-            # retract records (isRetract: -D and -U) from e.g. CDC
-            # streams are dropped at write — the table keeps the last
-            # non-delete value
-            df = df.where(f"NOT ({VALUE_KIND} IN ('-D', '-U'))")
-        elif schema.options.get("ignore-update-before") == "true":
-            # CoreOptions.IGNORE_UPDATE_BEFORE: -U alone drops (redundant
-            # for upsert streams whose +U carries the full row); -D still
-            # deletes
-            df = df.where(f"{VALUE_KIND} != '-U'")
+        dropped = _dropped_kinds(schema)
+        if dropped:
+            df = df.where(f"NOT ({VALUE_KIND} IN ({', '.join(repr(k) for k in dropped)}))")
         extra_sys = [VALUE_KIND] + ([SEQUENCE_NUMBER] if preserve_seq else [])
         df = _cast_to_schema(df, schema, extra=extra_sys + [BUCKET_COL])
         # partial compaction (preserve_seq) carries ORIGINAL sequence
@@ -286,16 +295,31 @@ def stage_and_collect(
             df = df.withColumn(BUCKET_COL, bucket_expr(schema))
             partition_by = pt_cols + [BUCKET_COL]
 
-    fmt = schema.file_format()
-    staging = os.path.join(table_path, "staging", uuid.uuid4().hex)
     arrow = _arrow_sink_options(df, schema, fmt)
     if arrow is not None:
-        _arrow_sink(*arrow, staging, partition_by)
+        frame, *codec = arrow
+        _arrow_sink(frame.toArrow(), *codec, staging, partition_by)
     else:
         if shuffle:
             df = df.repartition(*[F.expr(quote_ident(c)) for c in partition_by])
         _spark_sink(df, staging, schema, fmt, partition_by)
+    return _finish_staged(df.sparkSession, df, staging, table_path, schema, target_level, fmt)
 
+
+def _finish_staged(
+    spark: SparkSession,
+    frame: DataFrame | None,
+    staging: str,
+    table_path: str,
+    schema: TableSchema,
+    target_level: int,
+    fmt: str,
+) -> list[ManifestEntry]:
+    """stage_and_collect's tail over the files staged under ``staging``:
+    file indexes, per-file stats, the move into ``data/``, the manifest
+    entries. ``frame`` is the frame written, whose schema spares the
+    Spark jobs over the staged files an inference pass; None (rows
+    written from Arrow) lets them infer it."""
     # file indexes (P9): ONE distributed job computes every configured
     # column's bloom bitset + bitmap value-set per staged file and writes
     # sidecar `.index` files executor-side; only sub-threshold indexes
@@ -314,7 +338,7 @@ def stage_and_collect(
     stats_exclude = set(schema.partition_keys) | {BUCKET_COL}
     if idx_cols or bm_cols:
         indexes = fileindex.build_indexes(
-            df.sparkSession,
+            spark,
             staging,
             idx_cols,
             bm_cols,
@@ -325,7 +349,7 @@ def stage_and_collect(
             stats_exclude=stats_exclude,
             # the staged layout is exactly what was just written —
             # passing the schema skips the read-side inference job
-            schema=df.schema if fmt in ("parquet", "orc") else None,
+            schema=frame.schema if frame is not None and fmt in ("parquet", "orc") else None,
         )
 
     # per-file stats: fused into the index job when one ran (the driver
@@ -359,12 +383,12 @@ def stage_and_collect(
             distributed = n_staged > thr
         if distributed:
             stats_by_path = collect_stats_distributed(
-                df.sparkSession, staging, fmt, exclude=stats_exclude,
+                spark, staging, fmt, exclude=stats_exclude,
                 # the staged layout is exactly what was just written —
                 # passing the schema skips the read-side inference job
                 # (r12; same as build_indexes). VARIANT columns stay on
                 # inference: Spark must re-derive its own encoding.
-                schema=None if has_variant else df.schema,
+                schema=None if has_variant or frame is None else frame.schema,
             )
     entries = _collect_staged(staging, table_path, schema, target_level, indexes, fmt, stats_by_path)
     shutil.rmtree(staging, ignore_errors=True)
@@ -425,19 +449,31 @@ _ARROW_CODECS = {
 _DEFAULT_LEVELS = {"zstd": 3, "gzip": 6}
 
 
-def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
-    """``(frame, codec, level, int96)`` for the Arrow sink when ``df`` is
-    driver-local (``_driver_local``) and pyarrow can write what the
-    table asks for, else None. ``frame`` is ``df`` plus one directory
-    string per partition key (``_PT_DIR``), Spark's own ``CAST(... AS
-    STRING)`` with ``''`` as null, as ``partitionBy`` writes them. The
-    Spark sink writes other formats, parquet-native bloom filters
-    (pyarrow writes none), ``parquet.*`` or ``file.block-size`` writer
-    options, VARIANT columns, codecs pyarrow does not write as Spark
-    does, and tables with both timestamp kinds (Spark stores TIMESTAMP
-    as INT96 and TIMESTAMP_NTZ as INT64; pyarrow picks one encoding per
-    file). ``int96``: store timestamps as Spark does by default, as
-    INT96, which carries no footer stats."""
+def _dropped_kinds(schema: TableSchema) -> tuple[str, ...]:
+    """The row kinds a primary-key write drops. CoreOptions.IGNORE_DELETE
+    (+ per-engine fallback keys): retract records (isRetract: -D and -U)
+    from e.g. CDC streams, so the table keeps the last non-delete value.
+    CoreOptions.IGNORE_UPDATE_BEFORE: -U alone (redundant for upsert
+    streams whose +U carries the full row); -D still deletes."""
+    opts = schema.options
+    engine = opts.get("merge-engine", "deduplicate")
+    if any(opts.get(k) == "true" for k in ("ignore-delete", f"{engine}.ignore-delete")):
+        return ("-D", "-U")
+    if opts.get("ignore-update-before") == "true":
+        return ("-U",)
+    return ()
+
+
+def _arrow_codec(spark: SparkSession, schema: TableSchema, fmt: str):
+    """``(codec, level, int96)`` when pyarrow can write the table's files
+    as the Spark sink does, else None. The Spark sink writes other
+    formats, parquet-native bloom filters (pyarrow writes none),
+    ``parquet.*`` or ``file.block-size`` writer options, VARIANT
+    columns, codecs pyarrow does not write as Spark does, and tables
+    with both timestamp kinds (Spark stores TIMESTAMP as INT96 and
+    TIMESTAMP_NTZ as INT64; pyarrow picks one encoding per file).
+    ``int96``: store timestamps as Spark does by default, as INT96,
+    which carries no footer stats."""
     opts = schema.options
     if (
         fmt != "parquet"
@@ -450,6 +486,27 @@ def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
     for f in schema.fields:
         kinds |= _type_names(parse_type(f.type))
     if "variant" in kinds or {"timestamp", "timestamp_ntz"} <= kinds:
+        return None
+    comp = opts.get("file.compression")
+    name = comp or spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+    codec = _ARROW_CODECS.get(name.lower())
+    if codec is None:
+        return None
+    level = _DEFAULT_LEVELS.get(codec)
+    if comp and codec == "zstd" and opts.get("file.compression.zstd-level"):
+        level = int(opts["file.compression.zstd-level"])
+    return codec, level, "timestamp_ntz" not in kinds
+
+
+def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
+    """``(frame, codec, level, int96)`` for the Arrow sink when ``df`` is
+    driver-local (``_driver_local``) and pyarrow can write what the
+    table asks for (``_arrow_codec``), else None. ``frame`` is ``df``
+    plus one directory string per partition key (``_PT_DIR``), Spark's
+    own ``CAST(... AS STRING)`` with ``''`` as null, as ``partitionBy``
+    writes them."""
+    codec = _arrow_codec(df.sparkSession, schema, fmt)
+    if codec is None:
         return None
     if schema.partition_keys:
         # projected before the check, so the collect reuses the
@@ -464,15 +521,46 @@ def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
         )
     if not _driver_local(df):
         return None
-    comp = opts.get("file.compression")
-    name = comp or df.sparkSession.conf.get("spark.sql.parquet.compression.codec", "snappy")
-    codec = _ARROW_CODECS.get(name.lower())
-    if codec is None:
+    return (df, *codec)
+
+
+def _arrow_rows(tbl: "pa.Table", schema: TableSchema, fmt: str, spark: SparkSession):
+    """``(table, codec, level, int96)`` for the Arrow sink to write the
+    driver rows ``tbl`` (see stage_and_collect) as they stand, or None
+    when they must become a frame: the table has file indexes (built by
+    a Spark job over the frame), its files need the Spark sink
+    (``_arrow_codec``), or a partition key is of a type whose string
+    pyarrow may spell unlike Spark's ``CAST(... AS STRING)``. ``table``
+    is ``tbl`` without the row kinds the write drops (``_dropped_kinds``)
+    and with the ``_PT_DIR`` strings of ``_arrow_sink_options``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    codec = _arrow_codec(spark, schema, fmt)
+    if (
+        codec is None
+        or fileindex.bloom_columns(schema.options)
+        or fileindex.bitmap_columns(schema.options)
+        or not {VALUE_KIND, SEQUENCE_NUMBER, BUCKET_COL} <= set(tbl.column_names)
+    ):
         return None
-    level = _DEFAULT_LEVELS.get(codec)
-    if comp and codec == "zstd" and opts.get("file.compression.zstd-level"):
-        level = int(opts["file.compression.zstd-level"])
-    return df, codec, level, "timestamp_ntz" not in kinds
+    for i, c in enumerate(schema.partition_keys):
+        typ = tbl.schema.field(c).type
+        if not (
+            pa.types.is_integer(typ)
+            or pa.types.is_string(typ)
+            or pa.types.is_date32(typ)
+            or pa.types.is_boolean(typ)
+        ):
+            return None
+        s = pc.cast(tbl.column(c), pa.string())
+        tbl = tbl.append_column(
+            _PT_DIR.format(i), pc.if_else(pc.equal(s, ""), pa.scalar(None, pa.string()), s)
+        )
+    dropped = _dropped_kinds(schema)
+    if dropped:
+        tbl = tbl.filter(pc.invert(pc.is_in(tbl.column(VALUE_KIND), pa.array(dropped))))
+    return (tbl, *codec)
 
 
 def _type_names(dt) -> set[str]:
@@ -520,21 +608,22 @@ def _escape_path_name(s: str) -> str:
 
 
 def _arrow_sink(
-    frame: DataFrame,
+    tbl: "pa.Table",
     codec: str,
     level: int | None,
     int96: bool,
     staging: str,
     partition_by: list[str],
 ) -> None:
-    """The driver-local sink: ``frame`` (see ``_arrow_sink_options``)
-    comes back as Arrow and pyarrow writes one parquet file per
-    (partition, bucket) into ``staging``, in ``partitionBy``'s layout,
-    with no repartition and no Spark write job."""
+    """The driver-local sink: pyarrow writes the rows ``tbl`` (a
+    collected ``_arrow_sink_options`` frame, or ``_arrow_rows``) as one
+    parquet file per (partition, bucket) into ``staging``, in
+    ``partitionBy``'s layout, with no repartition and no Spark write
+    job."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    tbl = frame.toArrow()
     os.makedirs(staging, exist_ok=True)
     if tbl.num_rows == 0:
         return
@@ -543,8 +632,14 @@ def _arrow_sink(
     dirs = [c if c == BUCKET_COL else _PT_DIR.format(i) for i, c in enumerate(partition_by)]
     data = tbl.drop_columns(list(dict.fromkeys(partition_by + dirs)))
     if dirs:
+        # pyarrow's group_by on several keys splits NULL keys over many
+        # groups (one file each); a directory string is never '' (NULLIF),
+        # so '' stands for the default partition
         groups = (
-            tbl.select(dirs)
+            pa.table(
+                [tbl.column(d) if d == BUCKET_COL else pc.fill_null(tbl.column(d), "") for d in dirs],
+                names=dirs,
+            )
             .append_column("__i", pa.array(range(tbl.num_rows), pa.int64()))
             .group_by(dirs, use_threads=False)
             .aggregate([("__i", "list")])
@@ -556,7 +651,7 @@ def _arrow_sink(
         rel = [
             _escape_path_name(name)
             + "="
-            + ("__HIVE_DEFAULT_PARTITION__" if key[d] is None else _escape_path_name(str(key[d])))
+            + ("__HIVE_DEFAULT_PARTITION__" if key[d] == "" else _escape_path_name(str(key[d])))
             for name, d in zip(partition_by, dirs)
         ]
         out = os.path.join(staging, *rel)

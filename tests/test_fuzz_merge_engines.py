@@ -17,7 +17,10 @@ and the bucketed joins (the per-bucket pandas kernel) — and all must
 agree, so the kernel is checked against the same oracle. Writes
 alternate between the two write sinks (``_write``), so every table
 merges runs written by pyarrow on the driver with runs written by a
-Spark job.
+Spark job, and compactions alternate between the driver branch and the
+Spark branch (``_compact``). Two deduplicate families widen the value
+domain: string partition values ``None``/``''``/``'a/b'`` and a map
+column.
 
 Oracle model: a global row counter stands in for _SEQUENCE_NUMBER —
 the engine assigns monotonically-increasing sequences in input order
@@ -28,6 +31,7 @@ counter reproduces it exactly.
 from __future__ import annotations
 
 import collections
+import contextlib
 import math
 import random
 
@@ -56,10 +60,10 @@ def _drive(spark, spark_branch, t, rng, n_ops, write_batch, apply_batch, expecte
             apply_batch(rows)
 
     def compact_universal():
-        t.refresh().compact(spark, full=False, trigger_runs=rng.choice([2, 3, 5]))
+        _compact(spark, spark_branch, t, full=False, trigger_runs=rng.choice([2, 3, 5]))
 
     def compact_full():
-        t.refresh().compact(spark, full=True)
+        _compact(spark, spark_branch, t, full=True)
         if on_full is not None:
             on_full()
 
@@ -167,6 +171,19 @@ def _write(spark, t, rows, ddl, **kwargs):
     i = _writes[t.path]
     _writes[t.path] += 1
     t.write(df if i % 2 == 0 else df.localCheckpoint(), **kwargs)
+
+
+_compactions: collections.Counter = collections.Counter()
+
+
+def _compact(spark, spark_branch, t, **kwargs):
+    """``t.compact``, alternating by compaction index between its driver
+    branch (these tables are far below the byte bound) and its Spark
+    branch."""
+    i = _compactions[t.path]
+    _compactions[t.path] += 1
+    with contextlib.nullcontext() if i % 2 == 0 else spark_branch():
+        t.refresh().compact(spark, **kwargs)
 
 
 # --- family A: deduplicate + sequence.field --------------------------------
@@ -537,5 +554,81 @@ def test_fuzz_partial_update_sequence_field(spark, warehouse, seed, spark_branch
             k: (st.get("a", none)[1], st.get("b", none)[1], st["ver"][1])
             for k, st in state.items()
         }
+
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected)
+
+
+# --- family F: deduplicate, string partition key ---------------------------
+
+
+@pytest.mark.parametrize("seed", _seeds(6))
+def test_fuzz_dedup_partitioned(spark, warehouse, seed, spark_branch):
+    """A partition key that draws ``None``, ``''`` (both stored in the
+    default partition and read back as NULL) and ``'a/b'`` (an escaped
+    directory name). Each key keeps one partition value."""
+    rng = random.Random(4500 + seed)
+    ddl = "k bigint, p string, v bigint"
+    wddl = ddl + ", rk string"
+    t = warehouse.create_table(
+        f"db.fz4f_{seed}",
+        ddl,
+        primary_keys=["k", "p"],
+        partition_keys=["p"],
+        options={"bucket": "2", "snapshot.num-retained.min": "1"},
+    )
+    part_of = {k: rng.choice([None, "", "a/b", "x"]) for k in range(25)}
+    state: dict[int, tuple] = {}
+
+    def write_batch():
+        return [
+            (k, part_of[k], rng.randint(0, 10**6), "-D" if rng.random() < 0.2 else "+I")
+            for k in rng.sample(range(25), rng.randint(1, 8))
+        ]
+
+    def apply_batch(rows):
+        _write(spark, t, rows, wddl, row_kind_col="rk")
+        for k, p, v, kind in rows:
+            state[k] = (kind, p or None, v)
+
+    def expected():
+        return {k: (p, v) for k, (kind, p, v) in state.items() if kind != "-D"}
+
+    _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected)
+
+
+# --- family G: deduplicate, map value column -------------------------------
+
+
+@pytest.mark.parametrize("seed", _seeds(6))
+def test_fuzz_dedup_map_column(spark, warehouse, seed, spark_branch):
+    rng = random.Random(4600 + seed)
+    ddl = "k bigint, m map<string,bigint>, v bigint"
+    wddl = ddl + ", rk string"
+    t = warehouse.create_table(
+        f"db.fz4g_{seed}",
+        ddl,
+        primary_keys=["k"],
+        options={"bucket": "2", "snapshot.num-retained.min": "1"},
+    )
+    state: dict[int, tuple] = {}
+
+    def write_batch():
+        rows = []
+        for k in rng.sample(range(25), rng.randint(1, 8)):
+            m = (
+                {f"k{rng.randint(0, 5)}": rng.randint(0, 99) for _ in range(rng.randint(0, 3))}
+                if rng.random() < 0.8
+                else None
+            )
+            rows.append((k, m, rng.randint(0, 10**6), "-D" if rng.random() < 0.2 else "+I"))
+        return rows
+
+    def apply_batch(rows):
+        _write(spark, t, rows, wddl, row_kind_col="rk")
+        for k, m, v, kind in rows:
+            state[k] = (kind, m, v)
+
+    def expected():
+        return {k: (m, v) for k, (kind, m, v) in state.items() if kind != "-D"}
 
     _drive(spark, spark_branch, t, rng, 9, write_batch, apply_batch, expected)

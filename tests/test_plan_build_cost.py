@@ -109,10 +109,15 @@ def _costs(spark, warehouse, monkeypatch, spark_branch, extra_longs: int) -> dic
     ]
     local_writer = table("local_write")
     pairs = [batches(table(f"compact{i}")) for i in (0, 1)]
+    driver_pairs = [batches(table(f"driver_compact{i}")) for i in (0, 1)]
 
     def spark_read(i):
         with spark_branch():
             return reader.to_df(spark, predicate=P.equal("item_id", 7 + i))
+
+    def spark_compact(i):
+        with spark_branch():
+            pairs[i].compact(spark, full=False, trigger_runs=2)
 
     def driver_read(i):
         rows = reader.to_df(spark, predicate=P.equal("item_id", 7 + i)).collect()
@@ -129,9 +134,10 @@ def _costs(spark, warehouse, monkeypatch, spark_branch, extra_longs: int) -> dic
             monkeypatch,
             lambda i: local_writer.write(local[i], commit_identifier=f"point-{i}"),
         ),
-        "compact": _second_call_cost(
+        "spark_compact": _second_call_cost(monkeypatch, spark_compact),
+        "driver_compact": _second_call_cost(
             monkeypatch,
-            lambda i: pairs[i].compact(spark, full=False, trigger_runs=2),
+            lambda i: driver_pairs[i].compact(spark, full=False, trigger_runs=2),
         ),
     }
 
@@ -144,7 +150,8 @@ def test_plan_build_round_trip_budget(spark, warehouse, monkeypatch, spark_branc
     assert q1["driver_read"] <= 300, q1
     assert q1["write"] <= 150, q1
     assert q1["local_write"] <= 150, q1
-    assert q1["compact"] <= 600, q1
+    assert q1["spark_compact"] <= 600, q1
+    assert q1["driver_compact"] <= 600, q1
     wide = _costs(spark, warehouse, monkeypatch, spark_branch, extra_longs=22)
     assert wide == q1
 

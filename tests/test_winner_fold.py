@@ -2,15 +2,18 @@
 
 - Tied sequences: two writers that staged the same sequence numbers on
   the same keys must still yield, per key, exactly ONE staged row,
-  whole — on reads, full compaction and universal compaction.
+  whole — on reads, full compaction and universal compaction, with the
+  compaction folded on the driver and in Spark.
 - Both branches of the one-shuffle gates (full compaction and the
   universal ``pre_part`` gate, keyed on ``defaultParallelism``) give
   the same rows, and the executed write plan has the expected number
-  of exchanges on each side.
+  of exchanges on each side. These tables are small enough to compact
+  on the driver, so the compactions run forced onto Spark.
 """
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 import pytest
@@ -52,40 +55,45 @@ def _assert_whole_rows(rows, keys):
 
 
 @pytest.mark.parametrize("engine", ENGINES)
-def test_tied_sequence_winner_is_whole_row(spark, warehouse, engine):
+def test_tied_sequence_winner_is_whole_row(spark, warehouse, spark_branch, engine):
     opts = {"bucket": "2", "merge-engine": engine}
     t = warehouse.create_table(f"db.tie_{engine}", DDL, primary_keys=["k"], options=opts)
     t = _stage_tied(spark, t)
     _assert_whole_rows(t.to_df(spark).collect(), range(N_KEYS))
 
-    full = warehouse.create_table(
-        f"db.tie_full_{engine}", DDL, primary_keys=["k"], options=opts
-    )
-    full = _stage_tied(spark, full)
-    full.compact(spark, full=True)
-    _assert_whole_rows(full.refresh().to_df(spark).collect(), range(N_KEYS))
+    # each compaction folds on the driver, then forced onto Spark
+    for branch, forced in (("driver", contextlib.nullcontext), ("spark", spark_branch)):
+        full = warehouse.create_table(
+            f"db.tie_full_{branch}_{engine}", DDL, primary_keys=["k"], options=opts
+        )
+        full = _stage_tied(spark, full)
+        with forced():
+            full.compact(spark, full=True)
+        _assert_whole_rows(full.refresh().to_df(spark).collect(), range(N_KEYS))
 
-    # universal: a whole-bucket pick (only the two tied runs) and a
-    # partial pick (a big older run on other keys stays untouched)
-    uni = warehouse.create_table(
-        f"db.tie_uni_{engine}", DDL, primary_keys=["k"], options=opts
-    )
-    uni = _stage_tied(spark, uni)
-    uni.compact(spark, full=False, trigger_runs=2)
-    _assert_whole_rows(uni.refresh().to_df(spark).collect(), range(N_KEYS))
+        # universal: a whole-bucket pick (only the two tied runs) and a
+        # partial pick (a big older run on other keys stays untouched)
+        uni = warehouse.create_table(
+            f"db.tie_uni_{branch}_{engine}", DDL, primary_keys=["k"], options=opts
+        )
+        uni = _stage_tied(spark, uni)
+        with forced():
+            uni.compact(spark, full=False, trigger_runs=2)
+        _assert_whole_rows(uni.refresh().to_df(spark).collect(), range(N_KEYS))
 
-    part = warehouse.create_table(
-        f"db.tie_part_{engine}", DDL, primary_keys=["k"], options=opts
-    )
-    old = [(k, k, "w0") for k in range(N_KEYS, N_KEYS + 5000)]
-    part.write(spark.createDataFrame(old, DDL))
-    part = _stage_tied(spark, part.refresh())
-    n_runs = len(_live(part))
-    part.compact(spark, full=False, trigger_runs=3)
-    part = part.refresh()
-    assert len(_live(part)) < n_runs, "universal compaction must rewrite runs"
-    rows = part.to_df(spark).collect()
-    _assert_whole_rows(rows, range(N_KEYS + 5000))
+        part = warehouse.create_table(
+            f"db.tie_part_{branch}_{engine}", DDL, primary_keys=["k"], options=opts
+        )
+        old = [(k, k, "w0") for k in range(N_KEYS, N_KEYS + 5000)]
+        part.write(spark.createDataFrame(old, DDL))
+        part = _stage_tied(spark, part.refresh())
+        n_runs = len(_live(part))
+        with forced():
+            part.compact(spark, full=False, trigger_runs=3)
+        part = part.refresh()
+        assert len(_live(part)) < n_runs, "universal compaction must rewrite runs"
+        rows = part.to_df(spark).collect()
+        _assert_whole_rows(rows, range(N_KEYS + 5000))
 
 
 def _live(t):
@@ -128,7 +136,7 @@ def _gate_table(spark, warehouse, name, engine, n_writes):
 
 @pytest.mark.parametrize("engine", ENGINES)
 @pytest.mark.parametrize("full", [True, False], ids=["full", "universal"])
-def test_one_shuffle_gate_both_branches(spark, warehouse, monkeypatch, engine, full):
+def test_one_shuffle_gate_both_branches(spark, warehouse, monkeypatch, spark_branch, engine, full):
     """1 partition x 2 buckets: ``defaultParallelism`` 1 takes the
     one-shuffle branch (one exchange on (partition, bucket), the fold
     and the write ride on it), a huge parallelism the two-shuffle one
@@ -139,7 +147,7 @@ def test_one_shuffle_gate_both_branches(spark, warehouse, monkeypatch, engine, f
         t = _gate_table(spark, warehouse, name, engine, n_writes=3)
         # patched around the compaction only: a huge parallelism would
         # also slice the test's own createDataFrame inputs
-        with monkeypatch.context() as m:
+        with monkeypatch.context() as m, spark_branch():
             m.setattr(
                 SparkContext, "defaultParallelism", property(lambda self: parallelism)
             )

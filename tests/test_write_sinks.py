@@ -110,6 +110,21 @@ def test_partitioned_pk_table_odd_partition_values(spark, warehouse, sinks):
         assert _rows(a.to_df(spark, predicate=pred))
 
 
+def test_default_partition_is_one_file_per_bucket(spark, warehouse, sinks):
+    """Hundreds of rows whose partition values are NULL or ''
+    (pyarrow's group_by on several keys once split NULL keys over many
+    groups): each sink writes one file per (partition, bucket)."""
+    ddl = "k bigint, p string, v bigint"
+    pdf = pd.DataFrame({"k": range(400), "p": [[None, "", "x"][k % 3] for k in range(400)]})
+    a, _s = _both(
+        spark, warehouse, sinks, "default_pt", ddl, [pdf.assign(v=pdf.k)],
+        primary_keys=["k", "p"], partition_keys=["p"], options={"bucket": "2"},
+    )
+    assert sorted((e.partition["p"], e.bucket) for e in _entries(a)) == [
+        ("", 0), ("", 1), ("x", 0), ("x", 1)
+    ]
+
+
 def test_odd_column_names(spark, warehouse, sinks):
     schema = T.StructType(
         [
