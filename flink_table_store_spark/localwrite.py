@@ -3,19 +3,28 @@
 Mirrors pypaimon's write surface (paimon-python pypaimon/write/
 batch_table_write.py write_arrow/write_pandas + batch_table_commit.py):
 ingestion jobs that produce a pyarrow Table or pandas DataFrame should
-not need a SparkSession to land it in a table. This reuses the native
-format surface's writer VERBATIM (sources/datasource.py FtssWriter):
-the same engine-parity bucket hashing (pure-Python spark_xxhash64),
-sequence/value-kind layout, partition/bucket directory fan-out, footer
-stats, and the ordinary two-phase CAS commit — outside Spark,
-TaskContext resolves to task 0 and the whole batch writes as one task.
+not need a SparkSession to land it in a table. This is the native
+format surface's writer (sources/datasource.py FtssWriter) run in
+process: outside Spark, TaskContext resolves to task 0 and the whole
+batch writes as one task. FtssWriter adds the sequence, value-kind and
+bucket columns (the pure-Python ``write.bucket_of``, the writers' own
+hash), and write.py's Arrow sink writes the files, the same sink that
+writes ``Table.write``'s driver-local frames and driver compactions:
+the same codec (the table's ``file.compression``, else the session's,
+else ``session.PARQUET_CODEC``), dictionary choice, INT96 timestamps,
+partition directory spelling and footer stats. The commit is the
+ordinary two-phase CAS commit.
 
 One snapshot per call; ``overwrite=True`` is dynamic-partition
-overwrite (INSERT OVERWRITE semantics). Dynamic-bucket and non-parquet
-tables are refused with the same loud plan-time errors as the format
-surface. Data is cast to the table's exact Arrow schema first, so a
-pandas int32 column cannot silently write narrow parquet into a bigint
-table.
+overwrite (INSERT OVERWRITE semantics). Refused at plan time, with the
+same errors as the format surface: dynamic-bucket and non-parquet
+tables, upsert-key tables (unless ``overwrite``), a codec pyarrow does
+not write as Spark does (such as lz4), partition keys of any type but
+integral, string, date and boolean (Arrow would spell their directories
+unlike Spark, so the rows would land beside ``Table.write``'s), and
+bucket keys the pure-Python hash does not cover. Data is cast to the
+table's exact Arrow schema first, so a pandas int32 column cannot
+silently write narrow parquet into a bigint table.
 """
 
 from __future__ import annotations
@@ -108,8 +117,9 @@ def write_arrow(
     if table.branch_name:
         opts["branch"] = table.branch_name
     w = FtssWriter(opts, shim, overwrite)
-    msg = w.write(iter(data.to_batches()))
+    msg = None
     try:
+        msg = w.write(iter(data.to_batches()))
         w.commit([msg])
     except Exception:
         w.abort([msg])

@@ -838,7 +838,7 @@ def read_bucket_side(spec: dict, bucket: int):
     )
     key_expr = spec["key_pred"].to_arrow_expr() if spec.get("key_pred") else None
     map_cols: set[str] = set()
-    frames = []
+    reads = []
     for f in spec["buckets"].get(bucket, []):
         fmap = spec["maps"].get(f["schema_id"], {})
         stored = {}  # out_name -> stored name (None = null-fill)
@@ -856,13 +856,27 @@ def read_bucket_side(spec: dict, bucket: int):
             live = np.ones(tbl.num_rows, dtype=bool)
             live[[p for p in d if p < tbl.num_rows]] = False
             tbl = tbl.filter(live)
+        reads.append((f, stored, tbl))
+    # NULLs filling a column a file lacks (one added by a later schema,
+    # or a NULL partition value) take the type the bucket's other files
+    # read it as: an all-NA object column beside typed ones makes pandas
+    # pick the concatenated dtype by a rule it is deprecating
+    types = {c: t.column(s).type for _f, st, t in reads for c, s in st.items() if s is not None}
+    types.update(
+        (k, pa.scalar(v).type) for f, _st, _t in reads for k, v in f["partition"].items() if v is not None
+    )
+    frames = []
+    for f, stored, tbl in reads:
         n = tbl.num_rows
         # one Arrow table of current names: renamed, null-filled and
         # partition columns, then the system columns
-        out = {c: tbl.column(s) if s is not None else pa.nulls(n) for c, s in stored.items()}
+        out = {
+            c: tbl.column(s) if s is not None else pa.nulls(n, types.get(c))
+            for c, s in stored.items()
+        }
         for k, v in f["partition"].items():
             if k in spec["need"] or k in spec["key_cols"]:
-                out[k] = pa.repeat(v, n) if v is not None else pa.nulls(n)
+                out[k] = pa.repeat(v, n) if v is not None else pa.nulls(n, types.get(k))
         if spec["pk"]:
             out[seqc] = tbl.column(seqc)
             out[kindc] = tbl.column(kindc)

@@ -326,44 +326,30 @@ def bucket_for_key(table, key_values: dict, spark: SparkSession | None = None) -
     semantics exactly: the writer's bucket_expr (write.py) hashes with
     ``F.xxhash64(cols...)``, whose running hash is unchanged by a null
     input — so an all-null key hashes to the seed, same as Spark.
-    Pure-python when every non-null value's type is supported; a 1-row
-    Spark eval only when a session is available, else a loud refusal —
-    a SparkSession-free server process must never limp into the Spark
-    fallback (reference paimon-service routes by the same fixed hash on
+    Pure-python (``write.bucket_of``) when every non-null value's type
+    is supported; a 1-row Spark eval only when a session is available,
+    else a loud refusal — a SparkSession-free server process must never
+    limp into the Spark fallback (reference paimon-service routes by the same fixed hash on
     both halves, RemoteTableQuery.java / KvQueryTableBootstrapper)."""
-    schema = table.schema
-    from flink_table_store_spark.write import bucket_keys
-    from flink_table_store_spark.xxh64 import spark_xxhash64
+    from flink_table_store_spark.write import bucket_keys, bucket_of
 
-    n = schema.num_buckets()
+    n = table.schema.num_buckets()
     if n <= 0:
         # dynamic (-1) / postpone (-2) layouts have no fixed writer
         # hash — a modulo against them would route silently wrong
         raise ValueError(
             f"bucket_for_key requires a fixed-bucket table (bucket={n})"
         )
-    keys = bucket_keys(schema)
-    from flink_table_store_spark.write import bucket_function_type
-
-    if bucket_function_type(schema) == "mod":
-        v = key_values.get(keys[0])
-        return (int(v) % n) if v is not None else 0
-    h = spark_xxhash64(
-        [
-            (key_values.get(k), schema.field(k).type.lower())
-            for k in keys
-            if key_values.get(k) is not None
-        ]
-    )
-    if h is None:
+    b = bucket_of(table.schema, key_values)
+    if b is None:
         if spark is None:
             raise ValueError(
-                f"bucket-key types of {keys} not supported by the "
-                "pure-python hash and no SparkSession for the 1-row "
+                f"bucket-key types of {bucket_keys(table.schema)} not supported "
+                "by the pure-python hash and no SparkSession for the 1-row "
                 "fallback — cannot route this key"
             )
         return _bucket_of(spark, table, key_values)
-    return h % n
+    return b
 
 
 def _bucket_of(spark: SparkSession, table, key_values: dict) -> int:

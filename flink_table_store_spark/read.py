@@ -93,8 +93,7 @@ def _bucket_candidates(
     tables; dynamic-bucket (index-assigned) and cross-partition tables
     never qualify (num_buckets ≤ 0 / option guard)."""
     from flink_table_store_spark.predicate import And, Leaf
-    from flink_table_store_spark.write import bucket_keys
-    from flink_table_store_spark.xxh64 import spark_xxhash64
+    from flink_table_store_spark.write import bucket_keys, bucket_of
 
     n = schema.num_buckets()
     if predicate is None or n <= 0:
@@ -129,28 +128,18 @@ def _bucket_candidates(
         return None if combos else set()  # contradictory conjuncts: no bucket
     import itertools
 
-    from flink_table_store_spark.write import bucket_function_type
-
-    try:
-        mod_fn = bucket_function_type(schema) == "mod"
-    except ValueError:
-        return None  # misconfigured: don't prune
-    types = [schema.field(k).type.lower() for k in keys]
     buckets: set[int] = set()
     for combo in itertools.product(*[sorted(eqs[k], key=repr) for k in keys]):
-        # writer parity: xxhash64 skips null fields (seed carries); a
-        # null literal can't match rows anyway, so skip the combo
+        # a null literal can't match rows, so skip the combo
         if any(v is None for v in combo):
             continue
-        if mod_fn:
-            buckets.add(int(combo[0]) % n)
-            continue
-        h = spark_xxhash64(
-            [(v, t) for v, t in zip(combo, types) if v is not None]
-        )
-        if h is None:  # a type the pure-python hash doesn't cover
+        try:
+            b = bucket_of(schema, dict(zip(keys, combo)))
+        except ValueError:
+            return None  # misconfigured bucket function: don't prune
+        if b is None:  # a type the pure-python hash doesn't cover
             return None
-        buckets.add(h % n)
+        buckets.add(b)
     return buckets
 
 

@@ -10,6 +10,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the parquet codec of the engine's sessions; files written with no
+# session (Table.write_arrow) use it too (write.arrow_codec)
+PARQUET_CODEC = "zstd"
+
 
 def get_spark(app_name: str = "flink_table_store_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -48,7 +52,7 @@ def get_spark(app_name: str = "flink_table_store_spark", shuffle_partitions: int
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")  # merge_map engine: later entries win
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")

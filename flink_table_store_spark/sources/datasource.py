@@ -39,9 +39,10 @@ Architecture (the same planner/executor split as the engine's own API):
   index: planning is cheap enough per batch), with a pending-full
   marker for latest-full startup; COMPACT snapshots are skipped
   (DeltaFollowUpScanner).
-* The writer is the two-phase commit: executor tasks write bucketed
-  parquet files + footer stats and return manifest-entry commit
-  messages; ``commit()`` on the driver performs the ordinary CAS
+* The writer is the two-phase commit: executor tasks write their rows
+  through write.py's Arrow sink (``write.write_rows``, the files
+  ``Table.write`` writes from the driver) and return manifest-entry
+  commit messages; ``commit()`` on the driver performs the ordinary CAS
   commit (including the REST arbiter when the path belongs to a
   REST-loaded table? — no: the format surface addresses tables by
   PATH, so commits take the direct filesystem CAS; catalog-managed
@@ -52,14 +53,17 @@ Python DataSource API): no column pruning hook (the reader produces
 the full schema; Catalyst prunes after the exchange), no
 KeyGroupedPartitioning report (bucketed joins still need
 ``join_bucketed``/SqlSession), and the writer computes buckets with
-the pure-Python xxhash64 parity helper per row — correct but slower
+the pure-Python hash per row (``write.bucket_of``) — correct but slower
 than ``Table.write``'s JVM-side shuffle; large ingest should prefer
-``Table.write``.
+``Table.write``. Tables whose files or partition directories pyarrow
+cannot write as Spark does (a codec such as lz4; partition keys other
+than integral, string, date and boolean) are refused at plan time.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid as _uuid
 from dataclasses import dataclass, field as _dc_field
 from typing import TYPE_CHECKING, Iterator
@@ -372,20 +376,27 @@ class FtssStreamReader(DataSourceStreamReader):
 
 @dataclass
 class FtssCommitMessage(WriterCommitMessage):
-    entries: list = _dc_field(default_factory=list)  # ManifestEntry.__dict__s
-    files: list = _dc_field(default_factory=list)  # abs paths (for abort)
+    entries: list = _dc_field(default_factory=list)  # ManifestEntry
 
 
 class FtssWriter(DataSourceArrowWriter):
-    """Two-phase commit through the format surface: tasks write bucketed
-    parquet + footer stats (the CommitMessage hop,
-    BatchTableWrite.java:33), the driver commits with the ordinary CAS
-    (FileStoreCommitImpl). ``mode("overwrite")`` is dynamic-partition
-    overwrite on partitioned tables (INSERT OVERWRITE semantics,
+    """Two-phase commit through the format surface: tasks write their
+    rows through write.py's Arrow sink and return the files' manifest
+    entries (the CommitMessage hop, BatchTableWrite.java:33), the driver
+    commits with the ordinary CAS (FileStoreCommitImpl).
+    ``mode("overwrite")`` is dynamic-partition overwrite on partitioned
+    tables (INSERT OVERWRITE semantics,
     PaimonDynamicPartitionOverwriteCommand), full-table otherwise."""
 
     def __init__(self, options, spark_schema: StructType, overwrite: bool):
-        from flink_table_store_spark.write import POSTPONE_BUCKET, bucket_keys
+        from pyspark.sql import SparkSession
+
+        from flink_table_store_spark.write import (
+            arrow_codec,
+            bucket_function_type,
+            bucket_keys,
+            unspelled_partition_keys,
+        )
 
         self._options = dict(options)
         self._overwrite = overwrite
@@ -426,30 +437,37 @@ class FtssWriter(DataSourceArrowWriter):
             raise ValueError(
                 f"input columns {names} must match table columns {expect}"
             )
-        latest = t.snapshots.latest()
-        self._path = t.path
-        self._pk = bool(schema.primary_keys)
-        self._partition_keys = list(schema.partition_keys)
+        # the files' codec, resolved once here: a task has no session
+        self._codec = arrow_codec(schema, SparkSession.getActiveSession())
+        if self._codec is None:
+            codec = schema.options.get("file.compression") or "of the session"
+            raise ValueError(
+                f"pyarrow does not write the parquet codec {codec} as "
+                "Spark does — use table.write()"
+            )
+        unspelled = unspelled_partition_keys(schema)
+        if unspelled:
+            # the rows would land beside the partition table.write spells
+            raise ValueError(
+                f"partition keys {unspelled} need Spark's CAST(... AS STRING) "
+                "for their directory names — use table.write()"
+            )
         # bucketed layouts: fixed-bucket PK tables AND bucketed append
         # tables (bucket-key without PK) — a bucketed-append write that
         # ignored the hash would break co-location for join_bucketed
-        self._bucketed = self._pk or bool(
+        self._bucketed = bool(schema.primary_keys) or bool(
             schema.options.get("bucket-key") and n > 0
-        )
-        self._bucket_keys = (
-            [(k, schema.field(k).type) for k in bucket_keys(schema)]
-            if self._bucketed
-            else []
         )
         supported = {
             "bigint", "long", "int", "integer", "smallint", "short",
             "tinyint", "byte", "string", "varchar", "char", "boolean",
             "date", "double", "float", "timestamp",
         }
-        for k, ddl in self._bucket_keys:
+        for k in bucket_keys(schema) if self._bucketed else ():
             # exact base-token match (DDL up to any '(' or space): a
             # prefix test would let e.g. `interval day` slip through on
             # the 'int' prefix and fail mid-task in spark_xxhash64
+            ddl = schema.field(k).type
             base = ddl.strip().lower().split("(")[0].split(" ")[0].split("<")[0]
             if base not in supported:
                 # fail at plan time, not mid-task: a misplaced bucket
@@ -458,206 +476,87 @@ class FtssWriter(DataSourceArrowWriter):
                     f"bucket key {k} ({ddl}) needs the Spark-side hash — "
                     "use table.write() for this table"
                 )
-        self._n_buckets = n
-        self._postpone = n == POSTPONE_BUCKET
+        if self._bucketed:
+            bucket_function_type(schema)  # refuses a misconfigured mod function
+        latest = t.snapshots.latest()
+        self._path = t.path
+        self._schema = schema
         self._base_seq = latest.next_sequence if latest else 0
-        self._schema_id = schema.id
-        self._table_schema_json = schema.to_dict()
-        # CoreOptions FILE_COMPRESSION on the pyarrow writer (the Spark
-        # write path maps the same option onto the parquet codec)
-        self._compression = schema.options.get("file.compression")
-        zl = schema.options.get("file.compression.zstd-level")
-        self._compression_level = int(zl) if zl else None
-        self._schema_options = dict(schema.options)
-        from flink_table_store_spark.write import bucket_function_type
-
-        self._mod_bucket = bucket_function_type(schema) == "mod"
+        # each task stages under its own directory here; abort removes
+        # them all, those of failed tasks included
+        self._staging = os.path.join(t.path, "staging", _uuid.uuid4().hex)
 
     # --- executor side ---
 
     def write(self, iterator):
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        from flink_table_store_spark.manifest import (
-            KIND_ADD,
-            collect_parquet_stats,
-        )
         from flink_table_store_spark.schema import (
             KIND_INSERT,
             SEQUENCE_NUMBER,
             VALUE_KIND,
         )
-        from flink_table_store_spark.snapshot import now_millis
-        from flink_table_store_spark.write import BUCKET_COL, DATA_DIR
-        from flink_table_store_spark.xxh64 import spark_xxhash64
+        from flink_table_store_spark.write import BUCKET_COL, write_rows
 
-        batches = [b for b in iterator]
+        batches = list(iterator)
         if not batches:
             return FtssCommitMessage()
         tbl = pa.Table.from_batches(batches)
         n_rows = tbl.num_rows
-        # unique, order-preserving sequence numbers across tasks — the
-        # monotonically_increasing_id layout (partition id << 33 + row)
-        tid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        seq0 = self._base_seq + (tid << 33)
-
-        if self._pk:
+        if self._schema.primary_keys:
+            # unique, order-preserving sequence numbers across tasks — the
+            # monotonically_increasing_id layout (partition id << 33 + row)
+            tid = TaskContext.get().partitionId() if TaskContext.get() else 0
+            seq0 = self._base_seq + (tid << 33)
+            tbl = tbl.append_column(VALUE_KIND, pa.repeat(KIND_INSERT, n_rows))
             tbl = tbl.append_column(
                 SEQUENCE_NUMBER, pa.array(range(seq0, seq0 + n_rows), pa.int64())
             )
-            tbl = tbl.append_column(
-                VALUE_KIND, pa.array([KIND_INSERT] * n_rows, pa.string())
-            )
         if self._bucketed:
-            if self._postpone:
-                bucket_arr = [-2] * n_rows
-            elif self._mod_bucket:
-                # ModBucketFunction: floorMod of the single numeric key
-                k = self._bucket_keys[0][0]
-                vals = tbl.column(k).to_pylist()
-                bucket_arr = [
-                    (int(v) % self._n_buckets) if v is not None else 0
-                    for v in vals
-                ]
-            else:
-                cols = {k: tbl.column(k).to_pylist() for k, _t in self._bucket_keys}
-                types = [t for _k, t in self._bucket_keys]
-                keys = [k for k, _t in self._bucket_keys]
-                bucket_arr = []
-                for i in range(n_rows):
-                    # Spark's xxhash64 SKIPS null fields (seed carries)
-                    h = spark_xxhash64(
-                        [
-                            (cols[k][i], t)
-                            for k, t in zip(keys, types)
-                            if cols[k][i] is not None
-                        ]
-                    )
-                    if h is None:
-                        # a misplaced bucket would corrupt merges — the
-                        # JVM-side writer handles every key type
-                        raise ValueError(
-                            f"bucket-key types {types} need the Spark-side "
-                            "hash — use table.write() for this table"
-                        )
-                    bucket_arr.append(h % self._n_buckets)
-            tbl = tbl.append_column(BUCKET_COL, pa.array(bucket_arr, pa.int32()))
-
-        import pandas as pd  # noqa: F401  (group keys via pyarrow filter)
-
-        group_cols = list(self._partition_keys) + (
-            [BUCKET_COL] if self._bucketed else []
+            tbl = tbl.append_column(BUCKET_COL, pa.array(self._buckets(tbl), pa.int32()))
+        staging = os.path.join(self._staging, _uuid.uuid4().hex)
+        return FtssCommitMessage(
+            entries=write_rows(tbl, self._path, self._schema, self._codec, staging)
         )
-        entries, files = [], []
-        now = now_millis()
 
-        def _emit(sub_tbl, pt_vals: dict, bucket: int):
-            if sub_tbl.num_rows == 0:
-                return
-            rel_parts = [DATA_DIR]
-            for k in self._partition_keys:
-                v = pt_vals[k]
-                seg = (
-                    "__HIVE_DEFAULT_PARTITION__"
-                    if v is None
-                    else _quote_pt(_fmt_pt(v))
+    def _buckets(self, tbl) -> list[int]:
+        """The bucket of each row: the postpone bucket, or the writers'
+        hash (``write.bucket_of``)."""
+        from flink_table_store_spark.write import POSTPONE_BUCKET, bucket_keys, bucket_of
+
+        schema = self._schema
+        if schema.num_buckets() == POSTPONE_BUCKET:
+            return [POSTPONE_BUCKET] * tbl.num_rows
+        keys = bucket_keys(schema)
+        out = []
+        for vals in zip(*(tbl.column(k).to_pylist() for k in keys)):
+            b = bucket_of(schema, dict(zip(keys, vals)))
+            if b is None:
+                # a misplaced bucket would corrupt merges — the
+                # JVM-side writer handles every key type
+                raise ValueError(
+                    f"bucket-key types of {keys} need the Spark-side "
+                    "hash — use table.write() for this table"
                 )
-                rel_parts.append(f"{k}={seg}")
-            if self._bucketed:
-                rel_parts.append(f"{BUCKET_COL}={bucket}")
-            dest_dir = os.path.join(self._path, *rel_parts)
-            os.makedirs(dest_dir, exist_ok=True)
-            name = (
-                f"{self._schema_options.get('data-file.prefix', 'data-')}"
-                f"{_uuid.uuid4().hex}.parquet"
-            )
-            dest = os.path.join(dest_dir, name)
-            drop = [c for c in (self._partition_keys + [BUCKET_COL]) if c in sub_tbl.column_names]
-            kw = {}
-            if self._compression:
-                kw["compression"] = self._compression
-                if self._compression_level is not None:
-                    kw["compression_level"] = self._compression_level
-            pq.write_table(sub_tbl.drop_columns(drop), dest, **kw)
-            rc, size, stats = collect_parquet_stats(dest)
-            seq_stats = stats.get(SEQUENCE_NUMBER, {})
-            from flink_table_store_spark.manifest import apply_stats_mode
-
-            _sys = {
-                k: v
-                for k, v in stats.items()
-                if k in (SEQUENCE_NUMBER, "_VALUE_KIND")
-            }
-            stats = apply_stats_mode(
-                self._schema_options,
-                {k: v for k, v in stats.items() if k not in _sys},
-            )
-            stats.update(_sys)
-            files.append(dest)
-            entries.append(
-                {
-                    "kind": KIND_ADD,
-                    "partition": {
-                        k: ("" if pt_vals[k] is None else _fmt_pt(pt_vals[k]))
-                        for k in self._partition_keys
-                    },
-                    "bucket": bucket,
-                    "level": 0,
-                    "file_name": os.path.relpath(dest, self._path),
-                    "row_count": rc,
-                    "file_size": size,
-                    "min_seq": seq_stats.get("min", 0) or 0,
-                    "max_seq": seq_stats.get("max", 0) or 0,
-                    "schema_id": self._schema_id,
-                    "stats": stats,
-                    "creation_time": now,
-                }
-            )
-
-        if not group_cols:
-            _emit(tbl, {}, 0)
-        else:
-            import pyarrow.compute as pc
-
-            key_tbl = tbl.select(group_cols)
-            seen: dict[tuple, None] = dict.fromkeys(
-                tuple(r[c] for c in group_cols) for r in key_tbl.to_pylist()
-            )
-            for key in seen:
-                mask = None
-                for c, v in zip(group_cols, key):
-                    m = (
-                        pc.is_null(tbl.column(c))
-                        if v is None
-                        else pc.equal(tbl.column(c), v)
-                    )
-                    mask = m if mask is None else pc.and_(mask, m)
-                sub = tbl.filter(mask)
-                pt_vals = dict(zip(group_cols, key))
-                bucket = int(pt_vals.pop(BUCKET_COL)) if self._bucketed else 0
-                _emit(sub, pt_vals, bucket)
-        return FtssCommitMessage(entries=entries, files=files)
+            out.append(b)
+        return out
 
     # --- driver side ---
 
     def commit(self, messages):
         from flink_table_store_spark import predicate as P
-        from flink_table_store_spark.manifest import ManifestEntry
         from flink_table_store_spark.snapshot import COMMIT_APPEND
         from flink_table_store_spark.table import Table
 
-        entries = [
-            ManifestEntry(**d)
-            for m in messages
-            if m is not None
-            for d in m.entries
-        ]
+        # every task has moved its files into data/; what is left is
+        # empty directories and the staging of killed task attempts
+        shutil.rmtree(self._staging, ignore_errors=True)
+        entries = [e for m in messages if m is not None for e in m.entries]
         t = Table(self._path, branch=self._options.get("branch") or None)
         if self._overwrite:
             filt = None
-            if self._partition_keys and entries:
+            if self._schema.partition_keys and entries:
                 seen = {
                     tuple(sorted(e.partition.items())) for e in entries
                 }
@@ -666,7 +565,7 @@ class FtssWriter(DataSourceArrowWriter):
                     leafs = [P.equal(k, v) for k, v in items]
                     preds.append(leafs[0] if len(leafs) == 1 else P.and_(*leafs))
                 filt = preds[0] if len(preds) == 1 else P.or_(*preds)
-            t.committer.commit_overwrite(entries, self._schema_id, filt)
+            t.committer.commit_overwrite(entries, self._schema.id, filt)
             return
         # same high-water formula as Table.write
         next_seq = (
@@ -676,7 +575,7 @@ class FtssWriter(DataSourceArrowWriter):
         )
         t.committer.commit(
             entries,
-            self._schema_id,
+            self._schema.id,
             kind=COMMIT_APPEND,
             commit_identifier=self._options.get("commit-identifier", ""),
             next_sequence=next_seq,
@@ -685,31 +584,12 @@ class FtssWriter(DataSourceArrowWriter):
 
     def abort(self, messages):
         for m in messages:
-            if m is None:
-                continue
-            for p in m.files:
+            for e in m.entries if m is not None else ():
                 try:
-                    os.unlink(p)
+                    os.unlink(os.path.join(self._path, e.file_name))
                 except FileNotFoundError:
                     pass
-
-
-def _fmt_pt(v) -> str:
-    """Partition value → the directory/manifest string form the engine's
-    readers parse back (schema.typed_partition)."""
-    import datetime as _dt
-
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat()
-    return str(v)
-
-
-def _quote_pt(s: str) -> str:
-    import urllib.parse
-
-    return urllib.parse.quote(s, safe="")
+        shutil.rmtree(self._staging, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------

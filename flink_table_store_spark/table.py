@@ -705,7 +705,13 @@ class Table:
     ) -> None:
         """Local no-Spark write: pyarrow Table / RecordBatch / pandas →
         one committed snapshot (pypaimon write_arrow/write_pandas
-        parity; see localwrite.py)."""
+        parity). write.py's Arrow sink writes the files, as it does for
+        ``write``'s driver-local frames. Refused at plan time: dynamic-
+        bucket, non-parquet and upsert-key tables (unless
+        ``overwrite``), codecs pyarrow does not write as Spark does,
+        partition keys of any type but integral, string, date and
+        boolean, and bucket keys the pure-Python hash does not cover
+        (see localwrite.py)."""
         from flink_table_store_spark import localwrite
 
         localwrite.write_arrow(self, data, overwrite, commit_identifier)
@@ -2697,7 +2703,7 @@ class Table:
         from flink_table_store_spark.manifest import collect_parquet_stats
         from flink_table_store_spark.snapshot import now_millis
         from flink_table_store_spark.write import DATA_DIR
-        from flink_table_store_spark.write import _parse_partition as _w_parse_partition
+        from flink_table_store_spark.write import parse_partition
 
         staging = os.path.join(self.path, "staging", _uuid.uuid4().hex)
         w = patch_df.write.mode("overwrite").format("parquet")
@@ -2725,7 +2731,7 @@ class Table:
                 name = f"patch-{_uuid.uuid4().hex}.parquet"
                 dest = os.path.join(dest_dir, name)
                 os.replace(src, dest)
-                partition, _b = _w_parse_partition(rel_dir)
+                partition, _b = parse_partition(rel_dir)
                 new_entries.append(
                     ManifestEntry(
                         kind=KIND_ADD,

@@ -42,7 +42,9 @@ from flink_table_store_spark.schema import (
     quote_ident,
     select_exprs,
 )
+from flink_table_store_spark.session import PARQUET_CODEC
 from flink_table_store_spark.snapshot import now_millis
+from flink_table_store_spark.xxh64 import spark_xxhash64
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
@@ -108,6 +110,24 @@ def bucket_expr(schema: TableSchema, num_buckets: int | None = None):
     if bucket_function_type(schema) == "mod":
         return F.expr(f"CAST(coalesce(pmod(CAST({keys[0]} AS BIGINT), {n}), 0) AS INT)")
     return F.expr(f"CAST(pmod(xxhash64({', '.join(keys)}), {n}) AS INT)")
+
+
+def bucket_of(schema: TableSchema, values: dict) -> int | None:
+    """``bucket_expr`` in Python for one row of a fixed-bucket layout:
+    the bucket of the bucket-key values ``values`` (``{column: value}``),
+    floorMod of the key for ``bucket-function.type=mod`` and Spark's
+    ``xxhash64`` otherwise, whose running hash skips NULL fields. None
+    when the pure-Python hash does not cover a key's type
+    (``xxh64.spark_xxhash64``)."""
+    n = schema.num_buckets()
+    keys = bucket_keys(schema)
+    if bucket_function_type(schema) == "mod":
+        v = values.get(keys[0])
+        return int(v) % n if v is not None else 0
+    h = spark_xxhash64(
+        [(values[k], schema.field(k).type.lower()) for k in keys if values.get(k) is not None]
+    )
+    return None if h is None else h % n
 
 
 def apply_column_defaults(df: DataFrame, schema: TableSchema) -> DataFrame:
@@ -218,8 +238,13 @@ def stage_and_collect(
     ``preserve_seq``, holding the table's columns, ``_VALUE_KIND``,
     ``_SEQUENCE_NUMBER`` and ``_bucket`` (a driver compaction). The
     Arrow sink writes them as they stand, with no round trip through
-    the JVM (``_arrow_rows``); any other such table becomes a frame
-    first (``createDataFrame``).
+    the JVM (``_arrow_rows``), unless the table has file indexes (built
+    by a Spark job over the frame), files only the Spark sink writes
+    (``_spark_sink_only``, ``arrow_codec``) or partition keys the Arrow
+    sink cannot spell (``unspelled_partition_keys``); then the table
+    becomes a frame first (``createDataFrame``). The Arrow sink's third
+    caller, ``write_rows``, writes the rows of ``format("ftss")`` tasks
+    and of ``Table.write_arrow`` the same way, without a session.
 
     ``pre_partitioned=True``: the caller guarantees ``df`` already
     carries ``_bucket`` AND is hash-partitioned on (partition, bucket)
@@ -232,9 +257,17 @@ def stage_and_collect(
     fmt = schema.file_format()
     staging = os.path.join(table_path, "staging", uuid.uuid4().hex)
     if not isinstance(df, DataFrame):
-        rows = _arrow_rows(df, schema, fmt, spark) if pk and preserve_seq else None
-        if rows is not None:
-            _arrow_sink(*rows, staging, pt_cols + [BUCKET_COL])
+        codec = None if _spark_sink_only(schema, fmt) else arrow_codec(schema, spark)
+        if (
+            codec is not None
+            and pk
+            and preserve_seq
+            and {VALUE_KIND, SEQUENCE_NUMBER, BUCKET_COL} <= set(df.column_names)
+            and not fileindex.bloom_columns(schema.options)
+            and not fileindex.bitmap_columns(schema.options)
+            and not unspelled_partition_keys(schema)
+        ):
+            _arrow_sink(_arrow_rows(df, schema), *codec, staging, pt_cols + [BUCKET_COL])
             return _finish_staged(spark, None, staging, table_path, schema, target_level, fmt)
         df = spark.createDataFrame(df)
 
@@ -464,16 +497,14 @@ def _dropped_kinds(schema: TableSchema) -> tuple[str, ...]:
     return ()
 
 
-def _arrow_codec(spark: SparkSession, schema: TableSchema, fmt: str):
-    """``(codec, level, int96)`` when pyarrow can write the table's files
-    as the Spark sink does, else None. The Spark sink writes other
-    formats, parquet-native bloom filters (pyarrow writes none),
-    ``parquet.*`` or ``file.block-size`` writer options, VARIANT
-    columns, codecs pyarrow does not write as Spark does, and tables
-    with both timestamp kinds (Spark stores TIMESTAMP as INT96 and
-    TIMESTAMP_NTZ as INT64; pyarrow picks one encoding per file).
-    ``int96``: store timestamps as Spark does by default, as INT96,
-    which carries no footer stats."""
+def _spark_sink_only(schema: TableSchema, fmt: str) -> bool:
+    """True when only the Spark sink writes the table's files as Spark
+    does: other formats, parquet-native bloom filters (pyarrow writes
+    none), ``parquet.*`` or ``file.block-size`` writer options, VARIANT
+    columns, and tables with both timestamp kinds (Spark stores
+    TIMESTAMP as INT96 and TIMESTAMP_NTZ as INT64; pyarrow picks one
+    encoding per file). ``write_rows`` writes such tables' files with
+    pyarrow all the same."""
     opts = schema.options
     if (
         fmt != "parquet"
@@ -481,31 +512,41 @@ def _arrow_codec(spark: SparkSession, schema: TableSchema, fmt: str):
         or opts.get("file.block-size")
         or any(k.startswith("parquet.") for k in opts)
     ):
-        return None
+        return True
     kinds: set[str] = set()
     for f in schema.fields:
         kinds |= _type_names(parse_type(f.type))
-    if "variant" in kinds or {"timestamp", "timestamp_ntz"} <= kinds:
-        return None
+    return "variant" in kinds or {"timestamp", "timestamp_ntz"} <= kinds
+
+
+def arrow_codec(schema: TableSchema, spark: SparkSession | None = None):
+    """``(codec, level)`` with which pyarrow writes the table's parquet
+    files as the Spark sink does, or None for a codec pyarrow does not
+    write as Spark does. The codec is the table's ``file.compression``,
+    else the session's parquet codec, else (no session)
+    ``session.PARQUET_CODEC``, the one the engine's sessions are built
+    with; the level is ``file.compression.zstd-level`` or parquet-mr's
+    default."""
+    opts = schema.options
     comp = opts.get("file.compression")
-    name = comp or spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
-    codec = _ARROW_CODECS.get(name.lower())
+    session = spark.conf.get("spark.sql.parquet.compression.codec", "snappy") if spark else None
+    codec = _ARROW_CODECS.get((comp or session or PARQUET_CODEC).lower())
     if codec is None:
         return None
     level = _DEFAULT_LEVELS.get(codec)
     if comp and codec == "zstd" and opts.get("file.compression.zstd-level"):
         level = int(opts["file.compression.zstd-level"])
-    return codec, level, "timestamp_ntz" not in kinds
+    return codec, level
 
 
 def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
-    """``(frame, codec, level, int96)`` for the Arrow sink when ``df`` is
+    """``(frame, codec, level)`` for the Arrow sink when ``df`` is
     driver-local (``_driver_local``) and pyarrow can write what the
-    table asks for (``_arrow_codec``), else None. ``frame`` is ``df``
-    plus one directory string per partition key (``_PT_DIR``), Spark's
-    own ``CAST(... AS STRING)`` with ``''`` as null, as ``partitionBy``
-    writes them."""
-    codec = _arrow_codec(df.sparkSession, schema, fmt)
+    table asks for (``_spark_sink_only``, ``arrow_codec``), else None.
+    ``frame`` is ``df`` plus one directory string per partition key
+    (``_PT_DIR``), Spark's own ``CAST(... AS STRING)`` with ``''`` as
+    null, as ``partitionBy`` writes them."""
+    codec = None if _spark_sink_only(schema, fmt) else arrow_codec(schema, df.sparkSession)
     if codec is None:
         return None
     if schema.partition_keys:
@@ -524,43 +565,65 @@ def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
     return (df, *codec)
 
 
-def _arrow_rows(tbl: "pa.Table", schema: TableSchema, fmt: str, spark: SparkSession):
-    """``(table, codec, level, int96)`` for the Arrow sink to write the
-    driver rows ``tbl`` (see stage_and_collect) as they stand, or None
-    when they must become a frame: the table has file indexes (built by
-    a Spark job over the frame), its files need the Spark sink
-    (``_arrow_codec``), or a partition key is of a type whose string
-    pyarrow may spell unlike Spark's ``CAST(... AS STRING)``. ``table``
-    is ``tbl`` without the row kinds the write drops (``_dropped_kinds``)
-    and with the ``_PT_DIR`` strings of ``_arrow_sink_options``."""
+# Spark types whose CAST(... AS STRING) Arrow's cast to string spells alike
+_ARROW_SPELLED = frozenset(
+    "tinyint byte smallint short int integer bigint long string varchar char date boolean".split()
+)
+
+
+def unspelled_partition_keys(schema: TableSchema) -> list[str]:
+    """The partition keys whose directory string Arrow would spell
+    unlike Spark's ``CAST(... AS STRING)``: any type but integral,
+    string, date and boolean (Arrow writes ``1e+20`` and
+    ``2024-01-01T12:00:00+00:00`` where Spark writes ``1.0E20`` and
+    ``2024-01-01 12:00:00``, so the rows of one partition would land in
+    two)."""
+    return [
+        k
+        for k in schema.partition_keys
+        if schema.field(k).type.strip().lower().split("(")[0] not in _ARROW_SPELLED
+    ]
+
+
+def _arrow_rows(tbl: "pa.Table", schema: TableSchema) -> "pa.Table":
+    """The rows ``tbl`` ready for the Arrow sink: without the row kinds
+    the write drops (``_dropped_kinds``) and with the ``_PT_DIR``
+    strings of ``_arrow_sink_options``, Arrow's cast to string, which
+    spells the keys ``unspelled_partition_keys`` passes as Spark does."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    codec = _arrow_codec(spark, schema, fmt)
-    if (
-        codec is None
-        or fileindex.bloom_columns(schema.options)
-        or fileindex.bitmap_columns(schema.options)
-        or not {VALUE_KIND, SEQUENCE_NUMBER, BUCKET_COL} <= set(tbl.column_names)
-    ):
-        return None
     for i, c in enumerate(schema.partition_keys):
-        typ = tbl.schema.field(c).type
-        if not (
-            pa.types.is_integer(typ)
-            or pa.types.is_string(typ)
-            or pa.types.is_date32(typ)
-            or pa.types.is_boolean(typ)
-        ):
-            return None
         s = pc.cast(tbl.column(c), pa.string())
         tbl = tbl.append_column(
             _PT_DIR.format(i), pc.if_else(pc.equal(s, ""), pa.scalar(None, pa.string()), s)
         )
-    dropped = _dropped_kinds(schema)
+    dropped = _dropped_kinds(schema) if VALUE_KIND in tbl.column_names else ()
     if dropped:
         tbl = tbl.filter(pc.invert(pc.is_in(tbl.column(VALUE_KIND), pa.array(dropped))))
-    return (tbl, *codec)
+    return tbl
+
+
+def write_rows(
+    tbl: "pa.Table", table_path: str, schema: TableSchema, codec: tuple, staging: str
+) -> list[ManifestEntry]:
+    """Write the rows ``tbl`` as level-0 files through the Arrow sink,
+    with no Spark session: ``format("ftss")`` tasks and
+    ``Table.write_arrow``. ``tbl`` holds the table's columns, plus
+    ``_VALUE_KIND`` and ``_SEQUENCE_NUMBER`` on a primary-key table and
+    ``_bucket`` on a bucketed layout; ``codec`` is ``arrow_codec``'s,
+    and no partition key may be in ``unspelled_partition_keys``. The
+    files are staged under ``staging``, which is removed afterwards,
+    and their footers walked into the manifest entries returned; the
+    files themselves are moved into ``data/``."""
+    partition_by = list(schema.partition_keys)
+    if BUCKET_COL in tbl.column_names:
+        partition_by.append(BUCKET_COL)
+    try:
+        _arrow_sink(_arrow_rows(tbl, schema), *codec, staging, partition_by)
+        return _collect_staged(staging, table_path, schema, 0)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _type_names(dt) -> set[str]:
@@ -603,7 +666,7 @@ _PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 0x
 
 def _escape_path_name(s: str) -> str:
     """``ExternalCatalogUtils.escapePathName``: the directory name that
-    ``partitionBy`` writes and ``_parse_partition`` unquotes."""
+    ``partitionBy`` writes and ``parse_partition`` unquotes."""
     return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
 
 
@@ -611,7 +674,6 @@ def _arrow_sink(
     tbl: "pa.Table",
     codec: str,
     level: int | None,
-    int96: bool,
     staging: str,
     partition_by: list[str],
 ) -> None:
@@ -619,7 +681,9 @@ def _arrow_sink(
     collected ``_arrow_sink_options`` frame, or ``_arrow_rows``) as one
     parquet file per (partition, bucket) into ``staging``, in
     ``partitionBy``'s layout, with no repartition and no Spark write
-    job."""
+    job. Timestamps are stored as Spark stores them by default, as
+    INT96 (which carries no footer stats), unless the rows hold a
+    TIMESTAMP_NTZ, which Spark stores as INT64."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -631,6 +695,7 @@ def _arrow_sink(
     # strings, then the bucket
     dirs = [c if c == BUCKET_COL else _PT_DIR.format(i) for i, c in enumerate(partition_by)]
     data = tbl.drop_columns(list(dict.fromkeys(partition_by + dirs)))
+    int96 = not any(_naive_timestamps(f.type) for f in data.schema)
     if dirs:
         # pyarrow's group_by on several keys splits NULL keys over many
         # groups (one file each); a directory string is never '' (NULLIF),
@@ -666,6 +731,16 @@ def _arrow_sink(
             use_deprecated_int96_timestamps=int96,
             store_schema=False,
         )
+
+
+def _naive_timestamps(typ) -> bool:
+    """Whether the Arrow type ``typ`` holds a timestamp without a time
+    zone (a TIMESTAMP_NTZ) anywhere in its tree."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(typ):
+        return typ.tz is None
+    return any(_naive_timestamps(typ.field(i).type) for i in range(typ.num_fields))
 
 
 def _dictionary_columns(tbl, int96: bool) -> list[str]:
@@ -766,7 +841,7 @@ def _collect_staged(
                 continue
             src = os.path.join(dirpath, fn)
             rel_dir = os.path.relpath(dirpath, staging)
-            partition, bucket = _parse_partition(rel_dir)
+            partition, bucket = parse_partition(rel_dir)
             if stats_by_path is not None:
                 key = os.path.abspath(src)
                 hit = stats_by_path.get(key) or stats_by_path.get(os.path.realpath(src))
@@ -877,7 +952,10 @@ def _fallback_row_count(src: str, fmt: str) -> int:
         return sum(1 for line in f if line.strip())
 
 
-def _parse_partition(rel_dir: str) -> tuple[dict[str, str], int]:
+def parse_partition(rel_dir: str) -> tuple[dict[str, str], int]:
+    """The manifest partition strings and the bucket of a staged file's
+    directory ``rel_dir`` (``k=v/.../_bucket=n``, relative to the
+    staging root)."""
     partition: dict[str, str] = {}
     bucket = 0
     if rel_dir == ".":

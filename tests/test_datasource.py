@@ -70,6 +70,7 @@ class TestBatchRead:
         fmt = _parity(spark, warehouse.get_table("db.dv"), t.path)
         assert sorted(r.k for r in fmt.collect()) == list(range(5, 20))
 
+    @pytest.mark.filterwarnings("error::FutureWarning")
     def test_schema_evolution_parity(self, spark, warehouse):
         t = warehouse.create_table("db.ev", KV, primary_keys=["k"], options={"bucket": "1"})
         t.write(spark.createDataFrame([(1, "a", "x")], KV))

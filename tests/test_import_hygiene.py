@@ -1,7 +1,8 @@
-"""Modules do not reach into the merge engines' private helpers: any
-``_``-prefixed name of ``operators.bucketed_join`` (the bucket kernel)
-or ``operators.merge_engines`` (the Catalyst folds) used outside its
-own module is a second implementation waiting to drift."""
+"""Modules do not reach into the merge engines' or the writer's private
+helpers: any ``_``-prefixed name of ``operators.bucketed_join`` (the
+bucket kernel), ``operators.merge_engines`` (the Catalyst folds) or
+``write`` (the file sinks) used outside its own module is a second
+implementation waiting to drift."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ PKG_DIR = os.path.dirname(flink_table_store_spark.__file__)
 GUARDED = (
     "flink_table_store_spark.operators.bucketed_join",
     "flink_table_store_spark.operators.merge_engines",
+    "flink_table_store_spark.write",
 )
 
 
@@ -71,7 +73,7 @@ def test_no_private_imports_of_the_merge_engines():
         for name in files:
             if name.endswith(".py"):
                 found += private_uses(os.path.join(root, name))
-    assert not found, "private merge-engine names used outside their module:\n" + "\n".join(found)
+    assert not found, "private names used outside their module:\n" + "\n".join(found)
 
 
 def test_checker_sees_each_import_form(tmp_path):

@@ -387,10 +387,10 @@ def test_streaming_sink_marks_done(spark, warehouse, tmp_path):
 
 
 def test_escape_path_name_roundtrip():
-    from flink_table_store_spark.write import _parse_partition
+    from flink_table_store_spark.write import parse_partition
 
     part = {"dt": "a:b/c=d"}
     rel = markdone.partition_rel_path(["dt"], part)
     assert "/" not in rel.split("=", 1)[1].replace("%2F", "")
-    parsed, _ = _parse_partition(rel.replace("/", os.sep))
+    parsed, _ = parse_partition(rel.replace("/", os.sep))
     assert parsed == part

@@ -160,6 +160,7 @@ def test_first_row_engine(spark, warehouse):
     assert row.v == "first"
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_schema_evolution(spark, warehouse):
     t = warehouse.create_table("db.evo", "k bigint, a string", primary_keys=["k"], options={"bucket": "1"})
     t.write(spark.createDataFrame([(1, "x")], "k bigint, a string"))

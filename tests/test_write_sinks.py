@@ -7,6 +7,12 @@ rows twice: once as the local frame (Arrow sink) and once behind
 ``localCheckpoint()``, which is not local (Spark sink). The two tables
 must read back the same rows and hold the same manifest layout:
 ``(partition, bucket, level, row_count)`` per live file.
+
+The two local writers, ``Table.write_arrow`` and ``format("ftss")``,
+write their files through the same Arrow sink, so the same rows
+written by ``table.write``, ``write_arrow`` and ``ftss`` give one
+answer too, down to the files' encoding, and rows of one key written
+by different writers merge.
 """
 
 from __future__ import annotations
@@ -301,3 +307,127 @@ def test_local_one_row_write_runs_no_spark_write_job(spark, warehouse, monkeypat
     assert [tuple(r) for r in t.refresh().to_df(spark).collect()] == [(7, "x")]
     with pytest.raises(AssertionError, match="DataFrameWriter.save"):
         t.refresh().write(one.localCheckpoint())
+
+
+WRITERS = ("write", "write_arrow", "ftss")
+
+
+def _write_with(spark, t, pdf, ddl, writer):
+    if writer == "write":
+        t.write(spark.createDataFrame(pdf, ddl))
+    elif writer == "write_arrow":
+        t.write_arrow(pdf)
+    else:
+        # one task, so one file per (partition, bucket) as the others
+        spark.createDataFrame(pdf, ddl).coalesce(1).write.format("ftss").mode("append").save(t.path)
+
+
+def _files(t) -> collections.Counter:
+    """Per live file: its place, and how it is encoded."""
+    out = collections.Counter()
+    for e in _entries(t):
+        pf = pq.ParquetFile(os.path.join(t.path, e.file_name))
+        rg = pf.metadata.row_group(0)
+        chunks = [rg.column(i) for i in range(rg.num_columns)]
+        out[
+            (
+                tuple(sorted(e.partition.items())),
+                os.path.dirname(e.file_name),
+                e.bucket,
+                frozenset(c.compression for c in chunks),
+                frozenset(c.path_in_schema for c in chunks if c.has_dictionary_page),
+                tuple(sorted((c.path_in_schema, c.physical_type) for c in chunks)),
+                b"ARROW:schema" in (pf.metadata.metadata or {}),
+            )
+        ] += 1
+    return out
+
+
+@pytest.mark.parametrize("kind", ["pk", "bucketed_append"])
+def test_three_writers_write_the_same_files(spark, warehouse, sinks, kind):
+    ddl = "k bigint, s string, i int, d date, b boolean, v string, t timestamp"
+    strings = [None, "", "a b", "a/b"]
+    first = pd.DataFrame(
+        {
+            "k": range(32),
+            "s": [strings[n % 4] for n in range(32)],
+            "i": [(1, -2)[n % 2] for n in range(32)],
+            "d": [dt.date(2024, 1, 1 + n % 3) for n in range(32)],
+            "b": [n % 5 == 0 for n in range(32)],
+            "v": [f"v{n % 3}" for n in range(32)],
+            "t": [dt.datetime(2024, 1, 1, n % 4) for n in range(32)],
+        }
+    )
+    second = first.iloc[::3].assign(v="new")
+    keys = ["k", "s", "i", "d", "b"]
+    create = (
+        {"primary_keys": keys, "options": {"bucket": "2"}}
+        if kind == "pk"
+        else {"options": {"bucket": "2", "bucket-key": "k"}}
+    )
+    tables = {}
+    for writer in WRITERS:
+        t = warehouse.create_table(
+            f"db.{kind}_{writer}", ddl, partition_keys=["s", "i", "d", "b"], **create
+        )
+        for pdf in (first, second):
+            sinks.clear()
+            _write_with(spark, t.refresh(), pdf, ddl, writer)
+            if writer != "ftss":  # a Python worker writes ftss' files
+                assert sinks == ["_arrow_sink"]
+        tables[writer] = t.refresh()
+    w = tables["write"]
+    # null and '' share the default partition
+    assert {e.partition["s"] for e in _entries(w)} == {"", "a b", "a/b"}
+    for writer in ("write_arrow", "ftss"):
+        t = tables[writer]
+        assert _rows(t.to_df(spark)) == _rows(w.to_df(spark)), writer
+        assert _layout(t) == _layout(w), writer
+        assert _files(t) == _files(w), writer
+    assert not any(f[-1] for f in _files(w))
+
+
+@pytest.mark.parametrize("writer", ["write_arrow", "ftss"])
+@pytest.mark.parametrize(
+    "typ, value, spelled",
+    [
+        ("string", "a b", True),
+        ("int", -7, True),
+        ("date", dt.date(2024, 2, 29), True),
+        ("boolean", False, True),
+        ("timestamp", dt.datetime(2024, 1, 1, 12), False),
+        ("double", 1e20, False),
+    ],
+)
+def test_one_key_from_two_writers_reads_back_one_row(spark, warehouse, writer, typ, value, spelled):
+    """``table.write`` and then a local writer write one key into one
+    partition. The local writers refuse, at plan time, partition keys
+    whose values Arrow spells unlike Spark's CAST(... AS STRING)
+    (``1e+20`` against ``1.0E20``): their row would land in a second
+    partition and never merge with the first."""
+    ddl = f"k bigint, p {typ}, v string"
+    t = warehouse.create_table(
+        "db.mixed", ddl, primary_keys=["k", "p"], partition_keys=["p"], options={"bucket": "2"}
+    )
+    t.write(spark.createDataFrame(pd.DataFrame({"k": [1], "p": [value], "v": ["old"]}), ddl))
+    new = pd.DataFrame({"k": [1], "p": [value], "v": ["new"]})
+    if spelled:
+        _write_with(spark, t.refresh(), new, ddl, writer)
+    else:
+        with pytest.raises(Exception, match=r"partition keys \['p'\].*table\.write\(\)") as err:
+            _write_with(spark, t.refresh(), new, ddl, writer)
+        assert writer == "ftss" or err.type is ValueError
+        assert not os.listdir(os.path.join(t.path, "staging"))
+    t = t.refresh()
+    want = (1, value, "new" if spelled else "old")
+    assert [tuple(r) for r in t.to_df(spark).collect()] == [want]
+    assert t.to_arrow().column("v").to_pylist() == [want[2]]
+
+
+def test_local_writers_refuse_a_codec_pyarrow_writes_unlike_spark(spark, warehouse):
+    t = warehouse.create_table(
+        "db.lz4", "k bigint, v string", primary_keys=["k"],
+        options={"bucket": "2", "file.compression": "lz4"},
+    )
+    with pytest.raises(ValueError, match="lz4.*table\\.write\\(\\)"):
+        t.write_arrow(pd.DataFrame({"k": [1], "v": ["a"]}))
