@@ -53,26 +53,13 @@ def _arrow_type(ddl: str) -> "pa.DataType":
     if s.startswith("array<") and s.endswith(">"):
         return pa.list_(_arrow_type(s[6:-1]))
     if s.startswith("map<") and s.endswith(">"):
-        depth, split = 0, -1
-        inner = s[4:-1]
-        for i, ch in enumerate(inner):
-            depth += ch == "<"
-            depth -= ch == ">"
-            if ch == "," and depth == 0:
-                split = i
-                break
-        return pa.map_(_arrow_type(inner[:split]), _arrow_type(inner[split + 1:]))
+        key, value = _top_level_split(s[4:-1], maxsplit=1)
+        return pa.map_(_arrow_type(key), _arrow_type(value))
     if s.startswith("struct<") and s.endswith(">"):
-        fields, depth, cur = [], 0, ""
-        for ch in s[7:-1] + ",":
-            depth += ch == "<"
-            depth -= ch == ">"
-            if ch == "," and depth == 0:
-                name, _, typ = cur.partition(":")
-                fields.append(pa.field(name.strip().strip("`"), _arrow_type(typ)))
-                cur = ""
-            else:
-                cur += ch
+        fields = []
+        for part in _top_level_split(s[7:-1]):
+            name, _, typ = part.partition(":")
+            fields.append(pa.field(name.strip().strip("`"), _arrow_type(typ)))
         return pa.struct(fields)
     if s.startswith("decimal"):
         p, sc = (s[s.index("(") + 1 : s.rindex(")")].split(",") + ["0"])[:2] \
@@ -92,6 +79,20 @@ def _arrow_type(ddl: str) -> "pa.DataType":
     if s in base:
         return base[s]
     raise ValueError(f"local read: unsupported DDL type {ddl!r}")
+
+
+def _top_level_split(s: str, maxsplit: int = -1) -> list[str]:
+    """``s`` split on the commas outside any ``<...>`` or ``(...)``: the
+    fields of a struct or the key and value of a map, whose types may
+    hold commas themselves (``decimal(10,2)``, ``map<int,string>``)."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        depth += ch in "<("
+        depth -= ch in ">)"
+        if ch == "," and depth == 0 and maxsplit != len(parts):
+            parts.append(s[start:i])
+            start = i + 1
+    return parts + [s[start:]]
 
 
 def _table_arrow_schema(schema) -> "pa.Schema":

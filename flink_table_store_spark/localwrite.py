@@ -7,11 +7,15 @@ not need a SparkSession to land it in a table. This is the native
 format surface's writer (sources/datasource.py FtssWriter) run in
 process: outside Spark, TaskContext resolves to task 0 and the whole
 batch writes as one task. FtssWriter adds the sequence, value-kind and
-bucket columns (the pure-Python ``write.bucket_of``, the writers' own
-hash), and write.py's Arrow sink writes the files, the same sink that
-writes ``Table.write``'s driver-local frames and driver compactions:
-the same codec (the table's ``file.compression``, else the session's,
-else ``session.PARQUET_CODEC``), dictionary choice, INT96 timestamps,
+bucket columns with ``write.system_columns``, the function that builds
+them for ``Table.write``'s driver-local frames. The bucket comes from
+the writers' numpy kernel (``write.bucket_column``: Spark's xxhash64
+over whole Arrow columns; a 200k-row ``write_arrow`` into a two-key PK
+table takes about 0.15 s, where a per-row Python hash made it 1.7 s).
+write.py's Arrow sink writes the files, the same sink that writes
+``Table.write``'s driver-local frames and driver compactions: the same
+codec (the table's ``file.compression``, else the session's, else
+``session.PARQUET_CODEC``), dictionary choice, INT96 timestamps,
 partition directory spelling and footer stats. The commit is the
 ordinary two-phase CAS commit.
 
@@ -22,9 +26,9 @@ tables, upsert-key tables (unless ``overwrite``), a codec pyarrow does
 not write as Spark does (such as lz4), partition keys of any type but
 integral, string, date and boolean (Arrow would spell their directories
 unlike Spark, so the rows would land beside ``Table.write``'s), and
-bucket keys the pure-Python hash does not cover. Data is cast to the
-table's exact Arrow schema first, so a pandas int32 column cannot
-silently write narrow parquet into a bigint table.
+bucket keys of types the kernel does not hash (such as decimal). Data
+is cast to the table's exact Arrow schema first, so a pandas int32
+column cannot silently write narrow parquet into a bigint table.
 """
 
 from __future__ import annotations

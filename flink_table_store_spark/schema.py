@@ -185,11 +185,17 @@ def select_exprs(df, exprs: list[str]):
     """``df.selectExpr(*exprs)`` in a constant number of JVM calls: each
     PySpark ``Column`` or list element costs one or more py4j
     round-trips, so the projection is one ``struct(...)`` SQL string
-    unpacked by a star. Every expression needs an output name
+    unpacked by a star, each passed to the JVM ``selectExpr`` in a
+    one-element ``String[]``. Every expression needs an output name
     (``expr AS `name``` or a quoted column). The optimizer collapses the
     struct and its unpacking, so the physical plan is the plain
     projection."""
-    return df.select(F.expr(f"struct({', '.join(exprs)}) AS __o")).select("__o.*")
+    gateway = df.sparkSession.sparkContext._gateway
+    one = gateway.new_array(gateway.jvm.String, 1)
+    one[0] = f"struct({', '.join(exprs)}) AS __o"
+    jdf = df._jdf.selectExpr(one)
+    one[0] = "__o.*"
+    return type(df)(jdf.selectExpr(one), df.sparkSession)
 
 
 def typed_partition(raw: str | None, ddl: str):

@@ -53,11 +53,12 @@ Python DataSource API): no column pruning hook (the reader produces
 the full schema; Catalyst prunes after the exchange), no
 KeyGroupedPartitioning report (bucketed joins still need
 ``join_bucketed``/SqlSession), and the writer computes buckets with
-the pure-Python hash per row (``write.bucket_of``) — correct but slower
-than ``Table.write``'s JVM-side shuffle; large ingest should prefer
-``Table.write``. Tables whose files or partition directories pyarrow
-cannot write as Spark does (a codec such as lz4; partition keys other
-than integral, string, date and boolean) are refused at plan time.
+the writers' numpy kernel (``write.bucket_column``, Spark's xxhash64
+over whole columns), so bucket keys of types it does not hash (such as
+decimal) are refused at plan time, as are tables whose files or
+partition directories pyarrow cannot write as Spark does (a codec such
+as lz4; partition keys other than integral, string, date and
+boolean).
 """
 
 from __future__ import annotations
@@ -393,8 +394,7 @@ class FtssWriter(DataSourceArrowWriter):
 
         from flink_table_store_spark.write import (
             arrow_codec,
-            bucket_function_type,
-            bucket_keys,
+            unhashed_bucket_keys,
             unspelled_partition_keys,
         )
 
@@ -452,32 +452,17 @@ class FtssWriter(DataSourceArrowWriter):
                 f"partition keys {unspelled} need Spark's CAST(... AS STRING) "
                 "for their directory names — use table.write()"
             )
-        # bucketed layouts: fixed-bucket PK tables AND bucketed append
-        # tables (bucket-key without PK) — a bucketed-append write that
-        # ignored the hash would break co-location for join_bucketed
-        self._bucketed = bool(schema.primary_keys) or bool(
-            schema.options.get("bucket-key") and n > 0
-        )
-        supported = {
-            "bigint", "long", "int", "integer", "smallint", "short",
-            "tinyint", "byte", "string", "varchar", "char", "boolean",
-            "date", "double", "float", "timestamp",
-        }
-        for k in bucket_keys(schema) if self._bucketed else ():
-            # exact base-token match (DDL up to any '(' or space): a
-            # prefix test would let e.g. `interval day` slip through on
-            # the 'int' prefix and fail mid-task in spark_xxhash64
-            ddl = schema.field(k).type
-            base = ddl.strip().lower().split("(")[0].split(" ")[0].split("<")[0]
-            if base not in supported:
-                # fail at plan time, not mid-task: a misplaced bucket
-                # would corrupt merges
-                raise ValueError(
-                    f"bucket key {k} ({ddl}) needs the Spark-side hash — "
-                    "use table.write() for this table"
-                )
-        if self._bucketed:
-            bucket_function_type(schema)  # refuses a misconfigured mod function
+        # bucketed layouts (fixed-bucket PK tables AND bucketed append
+        # tables, whose co-location join_bucketed relies on): fail at
+        # plan time, not mid-task, on a key the bucket kernel cannot
+        # hash — a misplaced bucket would corrupt merges
+        unhashed = unhashed_bucket_keys(schema)
+        if unhashed:
+            k = unhashed[0]
+            raise ValueError(
+                f"bucket key {k} ({schema.field(k).type}) needs the Spark-side "
+                "hash — use table.write() for this table"
+            )
         latest = t.snapshots.latest()
         self._path = t.path
         self._schema = schema
@@ -492,55 +477,21 @@ class FtssWriter(DataSourceArrowWriter):
         import pyarrow as pa
         from pyspark import TaskContext
 
-        from flink_table_store_spark.schema import (
-            KIND_INSERT,
-            SEQUENCE_NUMBER,
-            VALUE_KIND,
-        )
-        from flink_table_store_spark.write import BUCKET_COL, write_rows
+        from flink_table_store_spark.write import system_columns, write_rows
 
         batches = list(iterator)
         if not batches:
             return FtssCommitMessage()
-        tbl = pa.Table.from_batches(batches)
-        n_rows = tbl.num_rows
-        if self._schema.primary_keys:
-            # unique, order-preserving sequence numbers across tasks — the
-            # monotonically_increasing_id layout (partition id << 33 + row)
-            tid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            seq0 = self._base_seq + (tid << 33)
-            tbl = tbl.append_column(VALUE_KIND, pa.repeat(KIND_INSERT, n_rows))
-            tbl = tbl.append_column(
-                SEQUENCE_NUMBER, pa.array(range(seq0, seq0 + n_rows), pa.int64())
-            )
-        if self._bucketed:
-            tbl = tbl.append_column(BUCKET_COL, pa.array(self._buckets(tbl), pa.int32()))
+        # unique, order-preserving sequence numbers across tasks — the
+        # monotonically_increasing_id layout (partition id << 33 + row)
+        tid = TaskContext.get().partitionId() if TaskContext.get() else 0
+        tbl = system_columns(
+            pa.Table.from_batches(batches), self._schema, self._base_seq + (tid << 33)
+        )
         staging = os.path.join(self._staging, _uuid.uuid4().hex)
         return FtssCommitMessage(
             entries=write_rows(tbl, self._path, self._schema, self._codec, staging)
         )
-
-    def _buckets(self, tbl) -> list[int]:
-        """The bucket of each row: the postpone bucket, or the writers'
-        hash (``write.bucket_of``)."""
-        from flink_table_store_spark.write import POSTPONE_BUCKET, bucket_keys, bucket_of
-
-        schema = self._schema
-        if schema.num_buckets() == POSTPONE_BUCKET:
-            return [POSTPONE_BUCKET] * tbl.num_rows
-        keys = bucket_keys(schema)
-        out = []
-        for vals in zip(*(tbl.column(k).to_pylist() for k in keys)):
-            b = bucket_of(schema, dict(zip(keys, vals)))
-            if b is None:
-                # a misplaced bucket would corrupt merges — the
-                # JVM-side writer handles every key type
-                raise ValueError(
-                    f"bucket-key types of {keys} need the Spark-side "
-                    "hash — use table.write() for this table"
-                )
-            out.append(b)
-        return out
 
     # --- driver side ---
 

@@ -25,7 +25,7 @@ import os
 import shutil
 import urllib.parse
 import uuid
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,10 +44,11 @@ from flink_table_store_spark.schema import (
 )
 from flink_table_store_spark.session import PARQUET_CODEC
 from flink_table_store_spark.snapshot import now_millis
-from flink_table_store_spark.xxh64 import spark_xxhash64
+from flink_table_store_spark.xxh64 import kernel_hashes, spark_xxhash64, spark_xxhash64_columns
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
+    from pyspark.sql.types import StructType
 
 BUCKET_COL = "_bucket"
 DATA_DIR = "data"
@@ -104,12 +105,102 @@ def bucket_expr(schema: TableSchema, num_buckets: int | None = None):
     the bucketed-join layout (SURVEY §4.3 item 6).
     ``bucket-function.type=mod`` uses floorMod of the single numeric
     key instead (NULL keys land in bucket 0 — a defined bucket beats a
-    null directory)."""
+    null directory). ``bucket_column`` is the same function in numpy."""
+    return F.expr(_bucket_sql(schema, num_buckets))
+
+
+def _bucket_sql(
+    schema: TableSchema, num_buckets: int | None = None, keys: list[str] | None = None
+) -> str:
+    """``bucket_expr`` as SQL over the bucket-key values ``keys`` (SQL
+    expressions; the quoted key columns by default)."""
     n = num_buckets if num_buckets is not None else schema.num_buckets()
-    keys = [quote_ident(k) for k in bucket_keys(schema)]
+    keys = keys or [quote_ident(k) for k in bucket_keys(schema)]
     if bucket_function_type(schema) == "mod":
-        return F.expr(f"CAST(coalesce(pmod(CAST({keys[0]} AS BIGINT), {n}), 0) AS INT)")
-    return F.expr(f"CAST(pmod(xxhash64({', '.join(keys)}), {n}) AS INT)")
+        return f"CAST(coalesce(pmod(CAST({keys[0]} AS BIGINT), {n}), 0) AS INT)"
+    return f"CAST(pmod(xxhash64({', '.join(keys)}), {n}) AS INT)"
+
+
+def _bucketed(schema: TableSchema) -> bool:
+    """Whether the table's files sit in buckets: every primary-key table,
+    and append tables with a ``bucket-key`` and a fixed bucket count
+    (BucketMode.BUCKET_APPEND)."""
+    return bool(schema.primary_keys) or bool(
+        schema.options.get("bucket-key") and schema.num_buckets() > 0
+    )
+
+
+def unhashed_bucket_keys(schema: TableSchema) -> list[str]:
+    """The bucket keys whose type ``bucket_column`` cannot hash (any but
+    integral, boolean, date, float, double, timestamp and string); none
+    when the layout is unbucketed or postponed. Refuses a misconfigured
+    ``bucket-key`` or mod function."""
+    if not _bucketed(schema) or schema.num_buckets() == POSTPONE_BUCKET:
+        return []
+    bucket_function_type(schema)
+    return [k for k in bucket_keys(schema) if not kernel_hashes(schema.field(k).type)]
+
+
+def bucket_column(tbl: "pa.Table", schema: TableSchema) -> "pa.Array":
+    """``bucket_expr`` over the rows ``tbl`` in numpy: every row in the
+    postpone bucket, floorMod of the key (``mod``), or Spark's
+    ``xxhash64`` of the bucket keys (``xxh64.spark_xxhash64_columns``,
+    for key types not in ``unhashed_bucket_keys``) modulo the bucket
+    count."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = schema.num_buckets()
+    if n == POSTPONE_BUCKET:
+        return pa.array(np.full(tbl.num_rows, POSTPONE_BUCKET, np.int32))
+    keys = bucket_keys(schema)
+    if bucket_function_type(schema) == "mod":
+        key = tbl.column(keys[0]).cast(pa.int64())
+        out = np.mod(pc.fill_null(key, 0).to_numpy(), n)
+        out[~pc.is_valid(key).to_numpy()] = 0
+    else:
+        columns = [(tbl.column(k), schema.field(k).type) for k in keys]
+        out = np.mod(spark_xxhash64_columns(columns, tbl.num_rows), n)
+    return pa.array(out.astype(np.int32))
+
+
+def system_columns(tbl: "pa.Table", schema: TableSchema, base_sequence: int) -> "pa.Table":
+    """The rows ``tbl`` with the system columns the table's layout
+    stores, built in Arrow: on a primary-key table ``_VALUE_KIND`` (the
+    row-kind column ``tbl`` carries under that name, else ``+I``), the
+    rows the write drops removed (``_dropped_kinds``; a NULL kind too,
+    as SQL's ``NOT IN`` drops it) and ``_SEQUENCE_NUMBER``
+    ``base_sequence`` + the row's position among those kept, unless
+    ``tbl`` carries them; on a bucketed layout ``_bucket``
+    (``bucket_column``), unless ``tbl`` carries it. The columns built
+    here are non-nullable, as Spark types a literal and a cast sequence
+    (parquet ``REQUIRED``, no definition levels). Shared by the Arrow
+    route of ``stage_and_collect`` and the ``format("ftss")`` /
+    ``write_arrow`` tasks."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if schema.primary_keys:
+        if VALUE_KIND not in tbl.column_names:
+            kinds = pa.repeat(KIND_INSERT, tbl.num_rows)
+            tbl = tbl.append_column(pa.field(VALUE_KIND, kinds.type, nullable=False), kinds)
+        dropped = _dropped_kinds(schema)
+        if dropped:
+            kinds = tbl.column(VALUE_KIND)
+            keep = pc.and_(pc.is_valid(kinds), pc.invert(pc.is_in(kinds, pa.array(dropped))))
+            tbl = tbl.filter(keep)
+        if SEQUENCE_NUMBER not in tbl.column_names:
+            seq = np.arange(base_sequence, base_sequence + tbl.num_rows, dtype=np.int64)
+            tbl = tbl.append_column(
+                pa.field(SEQUENCE_NUMBER, pa.int64(), nullable=False), pa.array(seq)
+            )
+    if _bucketed(schema) and BUCKET_COL not in tbl.column_names:
+        tbl = tbl.append_column(
+            pa.field(BUCKET_COL, pa.int32(), nullable=False), bucket_column(tbl, schema)
+        )
+    return tbl
 
 
 def bucket_of(schema: TableSchema, values: dict) -> int | None:
@@ -176,6 +267,15 @@ def parse_default_literal(dv: str):
         return False, None
 
 
+def _field_values(df: DataFrame, schema: TableSchema) -> list[str]:
+    """The SQL value of each table field over ``df``: the column as it
+    is when every field already has its type, else a cast."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    if all(have.get(f.name) == parse_type(f.type) for f in schema.fields):
+        return [quote_ident(f.name) for f in schema.fields]
+    return [f"CAST({quote_ident(f.name)} AS {f.type})" for f in schema.fields]
+
+
 def _cast_to_schema(df: DataFrame, schema: TableSchema, extra: list[str] = ()) -> DataFrame:
     """``df`` as the table's fields (cast, renamed, in order) plus the
     ``extra`` columns it has. Each PySpark ``Column`` costs several JVM
@@ -184,17 +284,12 @@ def _cast_to_schema(df: DataFrame, schema: TableSchema, extra: list[str] = ()) -
     through one SQL string."""
     extra = [c for c in extra if c in df.columns]
     names = schema.field_names() + extra
-    have = {f.name: f.dataType for f in df.schema.fields}
-    if all(have.get(f.name) == parse_type(f.type) for f in schema.fields):
-        if df.columns == names:
-            return df
-        return select_exprs(df, [quote_ident(c) for c in names])
+    values = _field_values(df, schema)
+    if df.columns == names and values == [quote_ident(c) for c in schema.field_names()]:
+        return df
     return select_exprs(
         df,
-        [
-            f"CAST({quote_ident(f.name)} AS {f.type}) AS {quote_ident(f.name)}"
-            for f in schema.fields
-        ]
+        [f"{v} AS {quote_ident(f)}" for v, f in zip(values, schema.field_names())]
         + [quote_ident(c) for c in extra],
     )
 
@@ -220,25 +315,28 @@ def stage_and_collect(
     LSM run, SURVEY §2.1 S16).
 
     Two sinks stage the files, in the same ``<k=v>/_bucket=<n>/``
-    layout. When Catalyst's optimized plan of the frame to write is a
-    ``LocalRelation`` (``createDataFrame`` from pandas, SQL ``VALUES``),
-    its rows, system columns and buckets were all computed on the
-    driver: the Arrow sink takes them as Arrow and pyarrow writes one
-    file per (partition, bucket), with no shuffle and no Spark job
-    beyond the collect (Paimon commits on the coordinator; pypaimon
-    writes Arrow in-process). It writes the Spark sink's codec, zstd
-    level, dictionary choice and timestamp encoding. Every other frame,
-    and every table whose files pyarrow cannot write as Spark does
-    (``_arrow_sink_options``), goes through one Spark file-write job.
-    Everything after staging (file indexes, footer stats, the move into
-    ``data/``) is shared.
+    layout. A frame whose rows already sit on the driver
+    (``createDataFrame`` from pandas, SQL ``VALUES``) runs no Spark job
+    (Paimon commits on the coordinator; pypaimon writes Arrow
+    in-process): it gets one projection (``_local_projection``: the
+    cast to the table's types and Spark's own directory string of each
+    partition key), and when Catalyst's optimized plan of that
+    projection is a ``LocalRelation`` its rows become a pyarrow Table in
+    the driver JVM (``_local_arrow``), their system columns are built in
+    Arrow (``system_columns``) and pyarrow writes one file per
+    (partition, bucket) (``_arrow_sink``), in the Spark sink's codec,
+    zstd level, dictionary choice and timestamp encoding. Every other
+    frame, and every table whose files pyarrow cannot write as Spark
+    does (``_spark_sink_only``, ``arrow_codec``), goes through one Spark
+    file-write job. Everything after staging (file indexes, footer
+    stats, the move into ``data/``) is shared.
 
     ``df`` may also be a pyarrow Table of rows already on the driver,
     with ``spark`` the session: a primary-key rewrite's rows with
     ``preserve_seq``, holding the table's columns, ``_VALUE_KIND``,
     ``_SEQUENCE_NUMBER`` and ``_bucket`` (a driver compaction). The
-    Arrow sink writes them as they stand, with no round trip through
-    the JVM (``_arrow_rows``), unless the table has file indexes (built
+    Arrow sink writes them as they stand, less the row kinds the write
+    drops, with no round trip through the JVM, unless the table has file indexes (built
     by a Spark job over the frame), files only the Spark sink writes
     (``_spark_sink_only``, ``arrow_codec``) or partition keys the Arrow
     sink cannot spell (``unspelled_partition_keys``); then the table
@@ -267,17 +365,29 @@ def stage_and_collect(
             and not fileindex.bitmap_columns(schema.options)
             and not unspelled_partition_keys(schema)
         ):
-            _arrow_sink(_arrow_rows(df, schema), *codec, staging, pt_cols + [BUCKET_COL])
+            rows = _arrow_rows(system_columns(df, schema, base_sequence), schema)
+            _arrow_sink(rows, *codec, staging, pt_cols + [BUCKET_COL])
             return _finish_staged(spark, None, staging, table_path, schema, target_level, fmt)
         df = spark.createDataFrame(df)
 
+    kind = None
     if pk:
         if row_kind_col and row_kind_col in df.columns:
             kind = row_kind_col
         elif ROW_KIND in df.columns:
             kind = ROW_KIND
-        else:
-            kind = None
+    codec = None if _spark_sink_only(schema, fmt) else arrow_codec(schema, df.sparkSession)
+    rows = None if codec is None else _local_rows(df, schema, kind, preserve_seq, keep_cols)
+    if rows is not None:
+        rows = system_columns(rows, schema, base_sequence)
+        partition_by = pt_cols + ([BUCKET_COL] if BUCKET_COL in rows.column_names else [])
+        _arrow_sink(_arrow_rows(rows, schema), *codec, staging, partition_by)
+        return _finish_staged(
+            df.sparkSession, lambda: _frame_schema(rows, schema), staging, table_path, schema,
+            target_level, fmt,
+        )
+
+    if pk:
         if kind != VALUE_KIND:  # maintenance rewrites carry it already
             df = df.withColumn(
                 VALUE_KIND, F.expr(quote_ident(kind) if kind else f"'{KIND_INSERT}'")
@@ -318,7 +428,7 @@ def stage_and_collect(
         # compaction); ordinary reads drop them by projection
         df = _cast_to_schema(df, schema, extra=list(keep_cols or []))
         partition_by = pt_cols
-        shuffle = bool(schema.options.get("bucket-key")) and schema.num_buckets() > 0
+        shuffle = _bucketed(schema)
         if shuffle:
             # bucketed APPEND table (reference BucketMode.BUCKET_APPEND:
             # bucket-key without primary keys, AppendOnlyFileStore.java
@@ -328,20 +438,130 @@ def stage_and_collect(
             df = df.withColumn(BUCKET_COL, bucket_expr(schema))
             partition_by = pt_cols + [BUCKET_COL]
 
-    arrow = _arrow_sink_options(df, schema, fmt)
-    if arrow is not None:
-        frame, *codec = arrow
-        _arrow_sink(frame.toArrow(), *codec, staging, partition_by)
+    if shuffle:
+        df = df.repartition(*[F.expr(quote_ident(c)) for c in partition_by])
+    _spark_sink(df, staging, schema, fmt, partition_by)
+    return _finish_staged(
+        df.sparkSession, lambda: df.schema, staging, table_path, schema, target_level, fmt
+    )
+
+
+def _local_rows(
+    df: DataFrame, schema: TableSchema, kind: str | None, preserve_seq: bool, keep_cols
+) -> "pa.Table | None":
+    """The columns of ``_local_projection`` as a pyarrow Table when
+    ``df``'s rows sit on the driver, else None. When every column is one
+    of the frame's as it stands, the frame's own rows are converted and
+    the columns picked in Arrow; otherwise the projection runs in
+    Catalyst, and ``ConvertToLocalRelation`` evaluates it on the
+    driver. A plan that reads files has no row bound (``maxRows``), so
+    compactions and other rewrites skip the projection and the
+    optimizer pass (10-13 ms on a universal compaction of a 4-bucket q1
+    table); a frame that is a bare ``LocalRelation`` (``createDataFrame``
+    from pandas) skips the optimizer pass too."""
+    import pyarrow as pa
+
+    qe = df._jdf.queryExecution()
+    plan = qe.analyzed()
+    bare = plan.nodeName() == "LocalRelation"
+    if not bare and not plan.maxRows().isDefined():
+        return None
+    cols = _local_projection(df, schema, kind, preserve_seq, keep_cols)
+    picks = [column for _name, column, _sql in cols]
+    if None in picks:
+        df = select_exprs(df, [f"{sql} AS {quote_ident(name)}" for name, _c, sql in cols])
+        qe, bare = df._jdf.queryExecution(), False
+    if not bare:
+        plan = qe.optimizedPlan()
+        if plan.nodeName() != "LocalRelation":
+            return None
+    tbl = _local_arrow(df.sparkSession, plan)
+    if None in picks:
+        return tbl
+    return pa.table([tbl.column(c) for c in picks], names=[name for name, _c, _sql in cols])
+
+
+def _local_projection(
+    df: DataFrame, schema: TableSchema, kind: str | None, preserve_seq: bool, keep_cols
+) -> list[tuple[str, str | None, str]]:
+    """The one projection a frame gets on the way to the Arrow sink, as
+    ``(name, frame column or None, SQL)`` per output column: the
+    table's fields, cast to their types unless the frame has them all
+    already; on a primary-key table the row-kind column ``kind`` as
+    ``_VALUE_KIND``, and the ``_SEQUENCE_NUMBER`` (with
+    ``preserve_seq``) and ``_bucket`` the frame carries; on an append
+    table the ``keep_cols`` it carries; ``bucket_expr`` when
+    ``bucket_column`` cannot hash a bucket key
+    (``unhashed_bucket_keys``); and one directory string per partition
+    key (``_PT_DIR``), Spark's own ``CAST(... AS STRING)`` with ``''``
+    as null, as ``partitionBy`` writes them."""
+    names = schema.field_names()
+    values = dict(zip(names, _field_values(df, schema)))
+    have = set(df.columns)
+    cols = [(c, c if values[c] == quote_ident(c) else None, values[c]) for c in names]
+    if schema.primary_keys:
+        carried = ([SEQUENCE_NUMBER] if preserve_seq else []) + [BUCKET_COL]
+        cols += [(VALUE_KIND, kind, quote_ident(kind))] if kind else []
     else:
-        if shuffle:
-            df = df.repartition(*[F.expr(quote_ident(c)) for c in partition_by])
-        _spark_sink(df, staging, schema, fmt, partition_by)
-    return _finish_staged(df.sparkSession, df, staging, table_path, schema, target_level, fmt)
+        carried = list(keep_cols or ())
+    cols += [(c, c, quote_ident(c)) for c in carried if c in have]
+    if unhashed_bucket_keys(schema) and BUCKET_COL not in {name for name, _c, _s in cols}:
+        keys = [values[k] for k in bucket_keys(schema)]
+        cols.append((BUCKET_COL, None, _bucket_sql(schema, keys=keys)))
+    cols += [
+        (_PT_DIR.format(i), None, f"NULLIF(CAST({values[c]} AS STRING), '')")
+        for i, c in enumerate(schema.partition_keys)
+    ]
+    return cols
+
+
+# the JVM handles _local_arrow calls, per py4j gateway view:
+# [(jvm, ArrowConverters, PythonRDD)]
+_JVM_ARROW: list = []
+
+
+def _local_arrow(spark: SparkSession, plan) -> "pa.Table":
+    """The rows of the optimized ``LocalRelation`` ``plan`` as a pyarrow
+    Table, with no Spark job: ``ArrowConverters`` encodes them as Arrow
+    in the driver JVM, and ``PythonRDD.serveIterator`` streams the bytes
+    over a local socket (a py4j ``byte[]`` return of ~100 KB stalls for
+    tens of ms). The Arrow types are those ``DataFrame.toArrow`` gives,
+    timestamps in UTC."""
+    import pyarrow as pa
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.util import _load_from_socket
+
+    jvm = spark._jvm
+    if not _JVM_ARROW or _JVM_ARROW[0][0] is not jvm:
+        pkg = jvm.org.apache.spark
+        conv = getattr(getattr(pkg.sql.execution.arrow, "ArrowConverters$"), "MODULE$")
+        _JVM_ARROW[:] = [(jvm, conv, pkg.api.python.PythonRDD)]
+    _view, conv, served = _JVM_ARROW[0]
+    schema = plan.schema()
+    # one IPC stream (schema and batch): no row or byte cap per batch
+    batches = conv.toBatchWithSchemaIterator(
+        plan.data().iterator(), schema, 0, (1 << 63) - 1, "UTC", True, False
+    )
+    info = served.serveIterator(batches, "serve local rows as Arrow")
+    streams = list(_load_from_socket((info[0], info[1]), NoOpSerializer()))
+    info[2].getResult()  # raises what the serving thread raised
+    if not streams:
+        streams = [conv.createEmptyArrowBatch(schema, "UTC", True, False)]
+    return pa.concat_tables([pa.ipc.open_stream(s).read_all() for s in streams])
+
+
+def _frame_schema(rows: "pa.Table", schema: TableSchema) -> "StructType":
+    """The Spark schema of the staged rows ``rows`` without the
+    ``_PT_DIR`` strings: the frame the Spark sink would have written."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    pt_dirs = [_PT_DIR.format(i) for i in range(len(schema.partition_keys))]
+    return from_arrow_schema(rows.drop_columns(pt_dirs).schema)
 
 
 def _finish_staged(
     spark: SparkSession,
-    frame: DataFrame | None,
+    frame_schema: "Callable[[], StructType] | None",
     staging: str,
     table_path: str,
     schema: TableSchema,
@@ -350,9 +570,9 @@ def _finish_staged(
 ) -> list[ManifestEntry]:
     """stage_and_collect's tail over the files staged under ``staging``:
     file indexes, per-file stats, the move into ``data/``, the manifest
-    entries. ``frame`` is the frame written, whose schema spares the
-    Spark jobs over the staged files an inference pass; None (rows
-    written from Arrow) lets them infer it."""
+    entries. ``frame_schema`` gives the Spark schema of the rows written,
+    which spares the Spark jobs over the staged files an inference pass;
+    None lets them infer it."""
     # file indexes (P9): ONE distributed job computes every configured
     # column's bloom bitset + bitmap value-set per staged file and writes
     # sidecar `.index` files executor-side; only sub-threshold indexes
@@ -382,7 +602,7 @@ def _finish_staged(
             stats_exclude=stats_exclude,
             # the staged layout is exactly what was just written —
             # passing the schema skips the read-side inference job
-            schema=frame.schema if frame is not None and fmt in ("parquet", "orc") else None,
+            schema=frame_schema() if frame_schema and fmt in ("parquet", "orc") else None,
         )
 
     # per-file stats: fused into the index job when one ran (the driver
@@ -421,7 +641,7 @@ def _finish_staged(
                 # passing the schema skips the read-side inference job
                 # (r12; same as build_indexes). VARIANT columns stay on
                 # inference: Spark must re-derive its own encoding.
-                schema=None if has_variant or frame is None else frame.schema,
+                schema=None if has_variant or not frame_schema else frame_schema(),
             )
     entries = _collect_staged(staging, table_path, schema, target_level, indexes, fmt, stats_by_path)
     shutil.rmtree(staging, ignore_errors=True)
@@ -539,32 +759,6 @@ def arrow_codec(schema: TableSchema, spark: SparkSession | None = None):
     return codec, level
 
 
-def _arrow_sink_options(df: DataFrame, schema: TableSchema, fmt: str):
-    """``(frame, codec, level)`` for the Arrow sink when ``df`` is
-    driver-local (``_driver_local``) and pyarrow can write what the
-    table asks for (``_spark_sink_only``, ``arrow_codec``), else None.
-    ``frame`` is ``df`` plus one directory string per partition key
-    (``_PT_DIR``), Spark's own ``CAST(... AS STRING)`` with ``''`` as
-    null, as ``partitionBy`` writes them."""
-    codec = None if _spark_sink_only(schema, fmt) else arrow_codec(schema, df.sparkSession)
-    if codec is None:
-        return None
-    if schema.partition_keys:
-        # projected before the check, so the collect reuses the
-        # optimized plan instead of folding every row a second time
-        df = select_exprs(
-            df,
-            ["*"]
-            + [
-                f"NULLIF(CAST({quote_ident(c)} AS STRING), '') AS {_PT_DIR.format(i)}"
-                for i, c in enumerate(schema.partition_keys)
-            ],
-        )
-    if not _driver_local(df):
-        return None
-    return (df, *codec)
-
-
 # Spark types whose CAST(... AS STRING) Arrow's cast to string spells alike
 _ARROW_SPELLED = frozenset(
     "tinyint byte smallint short int integer bigint long string varchar char date boolean".split()
@@ -586,21 +780,21 @@ def unspelled_partition_keys(schema: TableSchema) -> list[str]:
 
 
 def _arrow_rows(tbl: "pa.Table", schema: TableSchema) -> "pa.Table":
-    """The rows ``tbl`` ready for the Arrow sink: without the row kinds
-    the write drops (``_dropped_kinds``) and with the ``_PT_DIR``
-    strings of ``_arrow_sink_options``, Arrow's cast to string, which
-    spells the keys ``unspelled_partition_keys`` passes as Spark does."""
+    """The rows ``tbl`` ready for the Arrow sink: with one ``_PT_DIR``
+    string per partition key. Strings ``tbl`` carries (Spark's, from
+    ``_local_projection``) stay; the others are Arrow's cast to string,
+    which spells the keys ``unspelled_partition_keys`` passes as Spark
+    does."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     for i, c in enumerate(schema.partition_keys):
+        if _PT_DIR.format(i) in tbl.column_names:
+            continue
         s = pc.cast(tbl.column(c), pa.string())
         tbl = tbl.append_column(
             _PT_DIR.format(i), pc.if_else(pc.equal(s, ""), pa.scalar(None, pa.string()), s)
         )
-    dropped = _dropped_kinds(schema) if VALUE_KIND in tbl.column_names else ()
-    if dropped:
-        tbl = tbl.filter(pc.invert(pc.is_in(tbl.column(VALUE_KIND), pa.array(dropped))))
     return tbl
 
 
@@ -609,9 +803,8 @@ def write_rows(
 ) -> list[ManifestEntry]:
     """Write the rows ``tbl`` as level-0 files through the Arrow sink,
     with no Spark session: ``format("ftss")`` tasks and
-    ``Table.write_arrow``. ``tbl`` holds the table's columns, plus
-    ``_VALUE_KIND`` and ``_SEQUENCE_NUMBER`` on a primary-key table and
-    ``_bucket`` on a bucketed layout; ``codec`` is ``arrow_codec``'s,
+    ``Table.write_arrow``. ``tbl`` holds the table's columns and the
+    system columns of ``system_columns``; ``codec`` is ``arrow_codec``'s,
     and no partition key may be in ``unspelled_partition_keys``. The
     files are staged under ``staging``, which is removed afterwards,
     and their footers walked into the manifest entries returned; the
@@ -641,22 +834,6 @@ def _type_names(dt) -> set[str]:
     return out
 
 
-def _driver_local(df: DataFrame) -> bool:
-    """True when Catalyst's optimized plan of ``df`` is a
-    ``LocalRelation``: its rows already sit on the driver
-    (``createDataFrame`` from pandas, SQL ``VALUES``), and
-    ``ConvertToLocalRelation`` evaluated every projection and filter
-    above them there, system columns, sequence numbers and buckets
-    included. A plan that reads files has no row bound (``maxRows``), so
-    compactions and other rewrites skip the optimizer pass (10-13 ms on
-    a universal compaction of a 4-bucket q1 table)."""
-    qe = df._jdf.queryExecution()
-    return (
-        qe.analyzed().maxRows().isDefined()
-        and qe.optimizedPlan().nodeName() == "LocalRelation"
-    )
-
-
 # the Arrow sink's directory string of partition key i
 _PT_DIR = "__pt{}"
 # ExternalCatalogUtils.charToEscape (non-Windows): the characters Spark
@@ -677,8 +854,8 @@ def _arrow_sink(
     staging: str,
     partition_by: list[str],
 ) -> None:
-    """The driver-local sink: pyarrow writes the rows ``tbl`` (a
-    collected ``_arrow_sink_options`` frame, or ``_arrow_rows``) as one
+    """The driver-local sink: pyarrow writes the rows ``tbl``
+    (``_arrow_rows``) as one
     parquet file per (partition, bucket) into ``staging``, in
     ``partitionBy``'s layout, with no repartition and no Spark write
     job. Timestamps are stored as Spark stores them by default, as

@@ -8,13 +8,22 @@ field's seed, starting from seed 42). Lets the scan planner compute
 bloom-index positions for predicate literals without launching a Spark
 job; tests/test_fileindex.py property-checks every supported type
 against Spark's own xxhash64 output.
+
+``spark_xxhash64_columns`` is the same hash over whole Arrow columns in
+numpy (the writers' bucket kernel, ``write.bucket_column``): each step
+of the algorithm runs once over every row that reaches it, so strings
+of any length hash in a number of numpy passes bounded by the longest.
 """
 
 from __future__ import annotations
 
 import datetime
 import struct
-from typing import Any
+from typing import TYPE_CHECKING, Any
+
+if TYPE_CHECKING:  # pragma: no cover
+    import numpy as np
+    import pyarrow as pa
 
 _MASK = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -164,3 +173,166 @@ def spark_xxhash64(values_types: list[tuple[Any, str]]) -> int | None:
         else:
             h = hash_bytes(v, h)
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+# the column kernel's input kind per DDL base type: a 4-byte value, an
+# 8-byte value or UTF-8 bytes, as Spark's XxHash64 feeds each type
+_KERNEL_KINDS = {
+    **dict.fromkeys(("int", "integer", "smallint", "short", "tinyint", "byte"), "int"),
+    **dict.fromkeys(("boolean", "date", "float"), "int"),
+    **dict.fromkeys(("bigint", "long", "double", "timestamp"), "long"),
+    **dict.fromkeys(("string", "varchar", "char"), "bytes"),
+}
+
+
+def _base_type(ddl: str) -> str:
+    """The DDL type's base token: ``decimal(10,2)`` → ``decimal``,
+    ``interval day`` → ``interval``, ``array<int>`` → ``array``."""
+    return ddl.strip().lower().split("(")[0].split(" ")[0].split("<")[0]
+
+
+def kernel_hashes(ddl: str) -> bool:
+    """Whether ``spark_xxhash64_columns`` hashes values of the DDL type."""
+    return _base_type(ddl) in _KERNEL_KINDS
+
+
+def _column_input(col: "pa.ChunkedArray | pa.Array", ddl: str):
+    """``(kind, values, valid)``: the Arrow column ``col`` of DDL type
+    ``ddl`` as the kernel's numpy input, normalised as Spark hashes it
+    (-0.0 as 0.0, every NaN as Java's canonical NaN, dates as days,
+    timestamps as microseconds)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    base = _base_type(ddl)
+    kind = _KERNEL_KINDS[base]
+    if kind == "bytes":
+        arr = arr.cast(pa.large_binary())
+        _validity, offsets, data = arr.buffers()
+        offsets = np.frombuffer(offsets, np.int64)[arr.offset : arr.offset + len(arr) + 1]
+        data = np.frombuffer(data, np.uint8) if data is not None else np.zeros(0, np.uint8)
+        return kind, (data, offsets[:-1], np.diff(offsets)), valid
+    if base in ("float", "double"):
+        f = pc.fill_null(arr, 0).to_numpy(zero_copy_only=False)
+        bits = f.view(np.int32 if base == "float" else np.int64).astype(np.int64)
+        bits[f == 0] = 0
+        bits[np.isnan(f)] = 0x7FC00000 if base == "float" else 0x7FF8000000000000
+    elif base == "boolean":
+        bits = pc.fill_null(arr, False).to_numpy(zero_copy_only=False).astype(np.int64)
+    elif base == "date":
+        bits = pc.fill_null(arr.view(pa.int32()), 0).to_numpy().astype(np.int64)
+    elif base == "timestamp":
+        if arr.type.unit != "us":
+            arr = arr.cast(pa.timestamp("us", arr.type.tz))
+        bits = pc.fill_null(arr.view(pa.int64()), 0).to_numpy()
+    else:
+        bits = pc.fill_null(arr.cast(pa.int64()), 0).to_numpy()
+    values = bits.astype(np.int64).view(np.uint64)
+    if kind == "int":
+        values = values & np.uint64(0xFFFFFFFF)
+    return kind, values, valid
+
+
+def _u(*xs: int):
+    import numpy as np
+
+    return [np.uint64(x) for x in xs]
+
+
+def _rotl_v(x, r: int):
+    import numpy as np
+
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix_v(h):
+    import numpy as np
+
+    p2, p3 = _u(_P2, _P3)
+    h = h ^ (h >> np.uint64(33))
+    h = h * p2
+    h ^= h >> np.uint64(29)
+    h = h * p3
+    return h ^ (h >> np.uint64(32))
+
+
+def _hash_int_v(v, seed):
+    p1, p2, p3, p5_4 = _u(_P1, _P2, _P3, (_P5 + 4) & _MASK)
+    h = (seed + p5_4) ^ (v * p1)
+    return _fmix_v(_rotl_v(h, 23) * p2 + p3)
+
+
+def _hash_long_v(v, seed):
+    p1, p2, p4, p5_8 = _u(_P1, _P2, _P4, (_P5 + 8) & _MASK)
+    h = (seed + p5_8) ^ (_rotl_v(v * p2, 31) * p1)
+    return _fmix_v(_rotl_v(h, 27) * p1 + p4)
+
+
+def _hash_bytes_v(data, starts, lengths, seed):
+    """``hash_bytes`` over rows ``data[starts[i]:starts[i] + lengths[i]]``."""
+    import numpy as np
+
+    p1, p2, p3, p4, p5 = _u(_P1, _P2, _P3, _P4, _P5)
+
+    def words(pos, width):
+        # little-endian words at byte offsets ``pos``
+        grid = data[pos[:, None] + np.arange(width)]
+        return np.ascontiguousarray(grid).view(f"<u{width}").ravel().astype(np.uint64)
+
+    h = seed + p5
+    stripes = lengths // 32
+    big = np.flatnonzero(stripes)
+    if len(big):
+        s = seed[big]
+        lanes = [s + p1 + p2, s + p2, s.copy(), s - p1]
+        for n in range(int(stripes[big].max())):
+            live = stripes[big] > n
+            pos = starts[big][live] + 32 * n
+            for i, v in enumerate(lanes):
+                k = words(pos + 8 * i, 8)
+                v[live] = _rotl_v(v[live] + k * p2, 31) * p1
+        hb = sum(_rotl_v(v, r) for v, r in zip(lanes, (1, 7, 12, 18)))
+        for v in lanes:
+            hb = (hb ^ (_rotl_v(v * p2, 31) * p1)) * p1 + p4
+        h[big] = hb
+    h = h + lengths.astype(np.uint64)
+    pos = starts + 32 * stripes
+    rest = lengths - 32 * stripes
+    for n in range(3):
+        at = np.flatnonzero(rest >= 8 * (n + 1))
+        k = words(pos[at] + 8 * n, 8)
+        h[at] = _rotl_v(h[at] ^ (_rotl_v(k * p2, 31) * p1), 27) * p1 + p4
+    pos = pos + (rest & ~7)
+    rest = rest & 7
+    at = np.flatnonzero(rest >= 4)
+    h[at] = _rotl_v(h[at] ^ (words(pos[at], 4) * p1), 23) * p2 + p3
+    pos[at] += 4
+    rest[at] -= 4
+    for n in range(3):
+        at = np.flatnonzero(rest > n)
+        b = data[pos[at] + n].astype(np.uint64)
+        h[at] = _rotl_v(h[at] ^ (b * p5), 11) * p1
+    return _fmix_v(h)
+
+
+def spark_xxhash64_columns(columns: list[tuple["pa.ChunkedArray", str]], n: int) -> "np.ndarray":
+    """Spark ``xxhash64(c1, c2, ...)`` of ``n`` rows, as a signed int64
+    array: ``columns`` are ``(Arrow column, DDL type)`` pairs of types
+    ``kernel_hashes`` covers. A NULL field leaves the running hash as it
+    is, as in Spark."""
+    import numpy as np
+
+    h = np.full(n, SEED, np.uint64)
+    for col, ddl in columns:
+        kind, values, valid = _column_input(col, ddl)
+        rows = np.flatnonzero(valid)
+        seed = h[rows]
+        if kind == "bytes":
+            data, starts, lengths = values
+            h[rows] = _hash_bytes_v(data, starts[rows], lengths[rows], seed)
+        else:
+            h[rows] = (_hash_int_v if kind == "int" else _hash_long_v)(values[rows], seed)
+    return h.view(np.int64)

@@ -40,7 +40,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import types as T
 
-from flink_table_store_spark import write as W
 
 # Only seed 0 of each family runs in the fast tier; the other seeds are
 # slow-tier (run `-m ""` for the full suite).
@@ -167,7 +166,7 @@ def _write(spark, t, rows, ddl, **kwargs):
     ``localCheckpoint()``, which is not local (the Spark sink)."""
     names = T._parse_datatype_string(ddl).names
     df = spark.createDataFrame(pd.DataFrame.from_records(rows, columns=names), ddl)
-    assert W._driver_local(df)
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
     i = _writes[t.path]
     _writes[t.path] += 1
     t.write(df if i % 2 == 0 else df.localCheckpoint(), **kwargs)

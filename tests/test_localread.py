@@ -251,3 +251,63 @@ print("ok")
         with pytest.raises(NoPrivilegeException):
             u.get_table("db.pg").write_arrow(
                 pa.table({"k": [1], "v": ["a"], "pt": ["x"]}))
+
+
+@pytest.mark.parametrize(
+    "ddl, want",
+    [
+        ("struct<a:decimal(10,2),b:int>", "struct<a: decimal128(10, 2), b: int32>"),
+        ("map<decimal(10,2),bigint>", "map<decimal128(10, 2), int64>"),
+        (
+            "struct<a:map<int,decimal(5,1)>,b:array<decimal(4,2)>>",
+            "struct<a: map<int32, decimal128(5, 1)>, b: list<item: decimal128(4, 2)>>",
+        ),
+    ],
+)
+def test_arrow_type_commas_inside_decimal(ddl, want):
+    from flink_table_store_spark.localread import _arrow_type
+
+    assert str(_arrow_type(ddl)) == want
+
+
+def test_decimal_inside_struct_and_map_round_trips_without_spark_job(spark, warehouse):
+    """``write_arrow``, ``to_arrow()`` and the driver branch of
+    ``to_df`` take a table with a decimal inside a struct and as a map
+    key, and start no Spark job."""
+    import decimal
+
+    import pyarrow as pa
+
+    ddl = "k bigint, s struct<a:decimal(10,2),b:int>, m map<decimal(10,2),bigint>"
+    t = warehouse.create_table("db.nested_dec", ddl, primary_keys=["k"], options={"bucket": "2"})
+    d = decimal.Decimal
+    rows = [
+        {"k": 1, "s": {"a": d("1.25"), "b": 7}, "m": [(d("2.50"), 3)]},
+        {"k": 2, "s": None, "m": None},
+        {"k": 3, "s": {"a": None, "b": None}, "m": [(d("-0.01"), 1), (d("9.99"), 2)]},
+    ]
+    schema = pa.schema(
+        [
+            ("k", pa.int64()),
+            ("s", pa.struct([("a", pa.decimal128(10, 2)), ("b", pa.int32())])),
+            ("m", pa.map_(pa.decimal128(10, 2), pa.int64())),
+        ]
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    t.write_arrow(pa.Table.from_pylist(rows, schema))
+    t = t.refresh()
+    got = t.to_arrow()
+    # the driver branch's frame is a LocalRelation: collecting it starts
+    # no job either, where the Spark branch's scan would
+    collected = sorted(
+        (r.asDict(recursive=True) for r in t.to_df(spark).collect()), key=lambda r: r["k"]
+    )
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert sorted(got.to_pylist(), key=lambda r: r["k"]) == rows
+    assert [r["s"] for r in collected] == [
+        {"a": d("1.25"), "b": 7}, None, {"a": None, "b": None}
+    ]
+    assert [r["m"] for r in collected] == [
+        {d("2.50"): 3}, None, {d("-0.01"): 1, d("9.99"): 2}
+    ]

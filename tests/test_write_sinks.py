@@ -8,6 +8,11 @@ rows twice: once as the local frame (Arrow sink) and once behind
 must read back the same rows and hold the same manifest layout:
 ``(partition, bucket, level, row_count)`` per live file.
 
+A local frame's write starts no Spark job: its rows reach Python as
+Arrow from the driver JVM, and its system columns, buckets included,
+are built in Arrow with the sequence numbers a Spark projection would
+give them.
+
 The two local writers, ``Table.write_arrow`` and ``format("ftss")``,
 write their files through the same Arrow sink, so the same rows
 written by ``table.write``, ``write_arrow`` and ``ftss`` give one
@@ -18,13 +23,18 @@ by different writers merge.
 from __future__ import annotations
 
 import collections
+import contextlib
 import datetime as dt
+import decimal
 import os
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.readwriter import DataFrameWriter
 
 from flink_table_store_spark import fileindex
@@ -63,19 +73,39 @@ def _rows(df) -> list[tuple]:
 
 
 def _frame(spark, pdf, ddl, sink):
-    df = spark.createDataFrame(pdf, ddl)
+    if len(pdf):
+        df = spark.createDataFrame(pdf, ddl)
+    else:
+        # pyspark makes an empty pandas frame an RDD; an empty Arrow
+        # table stays a LocalRelation
+        df = spark.createDataFrame(to_arrow_schema(T._parse_datatype_string(ddl)).empty_table())
     return df if sink == "arrow" else df.localCheckpoint()
 
 
-def _both(spark, warehouse, sinks, name, ddl, batches, write_kw=None, **create):
+@contextlib.contextmanager
+def _no_spark_job(spark):
+    """Asserts the block starts no Spark job."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    yield
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+def _both(
+    spark, warehouse, sinks, name, ddl, batches, write_kw=None, jobless=False, **create
+):
     """Writes ``batches`` into one table per sink; asserts both read
-    back the same rows and layout, and returns the two tables."""
+    back the same rows and layout, and returns the two tables. With
+    ``jobless``, the Arrow sink's writes must start no Spark job."""
     tables = {}
     for sink in ("arrow", "spark"):
         t = warehouse.create_table(f"db.{name}_{sink}", ddl, **create)
         for pdf in batches:
             sinks.clear()
-            t.refresh().write(_frame(spark, pdf, ddl, sink), **(write_kw or {}))
+            frame = _frame(spark, pdf, ddl, sink)
+            jobs = _no_spark_job(spark) if jobless and sink == "arrow" else contextlib.nullcontext()
+            with jobs:
+                t.refresh().write(frame, **(write_kw or {}))
             assert sinks == [f"_{sink}_sink"]
         tables[sink] = t.refresh()
     a, s = tables["arrow"], tables["spark"]
@@ -431,3 +461,196 @@ def test_local_writers_refuse_a_codec_pyarrow_writes_unlike_spark(spark, warehou
     )
     with pytest.raises(ValueError, match="lz4.*table\\.write\\(\\)"):
         t.write_arrow(pd.DataFrame({"k": [1], "v": ["a"]}))
+
+
+def _kept_sequence_numbers(t) -> list[tuple]:
+    """``(k, v, _SEQUENCE_NUMBER)`` of every row in the live files."""
+    out = []
+    for e in _entries(t):
+        path = os.path.join(t.path, e.file_name)
+        part = pq.read_table(path, columns=["k", "v", "_SEQUENCE_NUMBER"])
+        out += [tuple(r.values()) for r in part.to_pylist()]
+    return sorted(out)
+
+
+_DOUBLES = [1e20, 0.5, None, -2.0, 1e-7]
+JOBLESS_SHAPES = {
+    "one_row": (
+        "k bigint, v string",
+        [pd.DataFrame({"k": [7], "v": ["x"]}), pd.DataFrame({"k": [7], "v": ["y"]})],
+        {},
+        {"primary_keys": ["k"], "options": {"bucket": "4"}},
+    ),
+    "thousand_rows": (
+        "k bigint, v string, t timestamp",
+        [
+            pd.DataFrame(
+                {
+                    "k": range(1000),
+                    "v": [f"v{i % 7}" for i in range(1000)],
+                    "t": [dt.datetime(2024, 1, 1, i % 24) for i in range(1000)],
+                }
+            ),
+            pd.DataFrame(
+                {"k": range(900, 1200), "v": ["new"] * 300, "t": [dt.datetime(2024, 2, 1)] * 300}
+            ),
+        ],
+        {},
+        {"primary_keys": ["k"], "options": {"bucket": "4"}},
+    ),
+    "row_kinds": (
+        "k bigint, v string, rk string",
+        [
+            pd.DataFrame({"k": [1, 2, 3], "v": ["a", "b", "c"], "rk": ["+I"] * 3}),
+            pd.DataFrame(
+                {"k": [1, 2, 2, 3, 4], "v": ["a0", "b0", "b1", "c0", "d"],
+                 "rk": ["-U", "-U", "+U", "-D", "+I"]}
+            ),
+        ],
+        {"row_kind_col": "rk"},
+        {"primary_keys": ["k"], "options": {"bucket": "2", "ignore-delete": "true"}},
+    ),
+    "empty": (
+        "k bigint, v string",
+        [
+            pd.DataFrame({"k": pd.Series([], dtype="int64"), "v": pd.Series([], dtype=object)}),
+            pd.DataFrame({"k": [1], "v": ["a"]}),
+        ],
+        {},
+        {"primary_keys": ["k"], "options": {"bucket": "2"}},
+    ),
+    "double_partition": (
+        "k bigint, p double, v string",
+        [
+            pd.DataFrame(
+                {"k": range(10), "p": [_DOUBLES[i % 5] for i in range(10)],
+                 "v": [f"v{i}" for i in range(10)]}
+            ),
+            pd.DataFrame({"k": [0, 1], "p": [1e20, 0.5], "v": ["new", "new"]}),
+        ],
+        {},
+        {"primary_keys": ["k", "p"], "partition_keys": ["p"], "options": {"bucket": "2"}},
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", list(JOBLESS_SHAPES))
+def test_local_write_starts_no_spark_job(spark, warehouse, sinks, shape):
+    """A pandas frame's ``t.write`` starts no Spark job, for one row, a
+    thousand rows, retracting row kinds a table drops, no rows, and a
+    ``double`` partition key (whose directory Spark spells ``1.0E20``,
+    Arrow ``1e+20``); its rows and layout match the Spark sink's. The
+    sequence numbers are those a Spark projection gives a
+    one-partition ``LocalRelation``: the snapshot's next sequence plus
+    the row's position among the rows the write keeps."""
+    ddl, batches, write_kw, create = JOBLESS_SHAPES[shape]
+    a, _s = _both(
+        spark, warehouse, sinks, f"jobless_{shape}", ddl, batches,
+        write_kw=write_kw, jobless=True, **create,
+    )
+    dropped = {"-D", "-U"} if create["options"].get("ignore-delete") else set()
+    kept = [
+        (k, v)
+        for pdf in batches
+        for k, v, kind in zip(pdf.k, pdf.v, pdf.get("rk", ["+I"] * len(pdf)))
+        if kind not in dropped
+    ]
+    assert _kept_sequence_numbers(a) == sorted((k, v, n) for n, (k, v) in enumerate(kept))
+    if shape == "double_partition":
+        assert {e.partition["p"] for e in _entries(a)} == {"1.0E20", "0.5", "", "-2.0", "1.0E-7"}
+
+
+def test_local_relation_converts_as_to_arrow(spark):
+    """The driver JVM's Arrow conversion of a ``LocalRelation`` (used by
+    local writes instead of a collect job) equals ``DataFrame.toArrow``
+    in schema and rows, timestamps under a non-UTC session time zone
+    included, and an empty relation keeps its schema."""
+    ddl = (
+        "a bigint, b int, s string, d date, bo boolean, x double, dec decimal(10,2), "
+        "bin binary, arr array<int>, m map<string,bigint>, st struct<p:int,q:string>, t timestamp"
+    )
+    names = [f.split(" ")[0] for f in ddl.split(", ")]
+    row = (
+        1, 2, "é x", dt.date(2024, 1, 2), True, -0.5, decimal.Decimal("3.25"), b"\x00ab",
+        [1, None], {"k": 3}, (1, "z"), dt.datetime(2024, 1, 1, 12, 30),
+    )
+    pdf = pd.DataFrame.from_records([row, (None,) * len(row)], columns=names)
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        for df in (spark.createDataFrame(pdf, ddl), spark.createDataFrame(pdf, ddl).where("a < 0")):
+            plan = df._jdf.queryExecution().optimizedPlan()
+            assert plan.nodeName() == "LocalRelation"
+            got, want = W._local_arrow(spark, plan), df.toArrow()
+            assert got.schema == want.schema
+            assert got.equals(want)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert got.num_rows == 0 and want.num_rows == 0
+
+
+def _draw(typ: str, rng, n: int) -> pa.Array:
+    """``n`` values of the Spark type ``typ``, one in ten NULL, edge
+    values included."""
+    ints = {"bigint": np.int64, "int": np.int32, "smallint": np.int16, "tinyint": np.int8}
+    nulls = rng.random(n) < 0.1
+    if typ in ints:
+        info = np.iinfo(ints[typ])
+        vals = rng.integers(info.min, info.max, n, dtype=ints[typ], endpoint=True)
+        vals[:4] = [0, -1, info.min, info.max]
+        return pa.array(vals, mask=nulls)
+    if typ == "boolean":
+        return pa.array(rng.random(n) < 0.5, mask=nulls)
+    if typ == "date":
+        days = rng.integers(-50_000, 50_000, n).astype(np.int32)
+        return pa.array(days, mask=nulls).view(pa.date32())
+    if typ == "timestamp":
+        micros = rng.integers(-4 * 10**15, 4 * 10**15, n)
+        return pa.array(micros, mask=nulls).view(pa.timestamp("us", tz="UTC"))
+    if typ in ("float", "double"):
+        dtype = np.float32 if typ == "float" else np.float64
+        vals = (rng.standard_normal(n) * 10.0 ** rng.integers(-30, 30, n)).astype(dtype)
+        negative_nan = np.array([np.nan], dtype).view(np.int32 if typ == "float" else np.int64)
+        negative_nan |= np.array(1, negative_nan.dtype) << (8 * negative_nan.itemsize - 1)
+        vals[:6] = [0.0, -0.0, np.nan, np.inf, -np.inf, negative_nan.view(dtype)[0]]
+        return pa.array(vals, mask=nulls)
+    assert typ == "string"
+    alphabet = list("ab z09") + ["é", "€", "😀", "ß"]
+    lengths = rng.integers(0, 80, n)
+    return pa.array(
+        ["".join(rng.choice(alphabet, length)) for length in lengths], mask=nulls
+    )
+
+
+@pytest.mark.parametrize(
+    "typ",
+    "bigint int smallint tinyint boolean date float double timestamp string".split(),
+)
+def test_bucket_kernel_matches_spark(spark, warehouse, typ):
+    """``write.bucket_column``'s numpy xxhash64 gives the bucket
+    ``bucket_expr`` gives in Spark, for every key type the local writers
+    accept, over a two-column key holding NULLs: -0.0 and every NaN
+    hash as Java normalises them, strings as UTF-8 of any length."""
+    rng = np.random.default_rng(sum(map(ord, typ)))
+    n = 5000
+    rows = pa.table({"k": _draw(typ, rng, n), "j": _draw("bigint", rng, n)})
+    t = warehouse.create_table(
+        f"db.kernel_{typ}", f"k {typ}, j bigint", options={"bucket": "7", "bucket-key": "k,j"}
+    )
+    assert W.bucket_column(rows, t.schema).to_pylist() == _spark_buckets(spark, rows, t)
+
+
+def _spark_buckets(spark, rows, t) -> list[int]:
+    frame = spark.createDataFrame(rows).select(W.bucket_expr(t.schema).alias("b"))
+    return [r.b for r in frame.collect()]
+
+
+@pytest.mark.parametrize("typ", ["bigint", "int"])
+def test_mod_bucket_kernel_matches_spark(spark, warehouse, typ):
+    rng = np.random.default_rng(5)
+    rows = pa.table({"k": _draw(typ, rng, 5000)})
+    t = warehouse.create_table(
+        f"db.kernel_mod_{typ}", f"k {typ}, v string", primary_keys=["k"],
+        options={"bucket": "6", "bucket-function.type": "mod"},
+    )
+    assert W.bucket_column(rows, t.schema).to_pylist() == _spark_buckets(spark, rows, t)
